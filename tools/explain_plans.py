@@ -43,6 +43,25 @@ def _n_real_exchanges(plan: str) -> int:
     return n - len(re.findall(r"Arguments: RoundRobinPartitioning", plan))
 
 
+# Tokens that differ between two runs over the same code: expression ids,
+# exchange plan ids, fresh HOF lambda-variable suffixes, RDD ids and JVM
+# object hashes. Masked in the written PLANS.md only (before the length
+# cut, so the cut point is stable too); every assertion reads the raw plan.
+_UNSTABLE = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(\w)@[0-9a-f]{4,}\b"), r"\1@H"),
+]
+
+
+def _masked(plan: str) -> str:
+    for pat, repl in _UNSTABLE:
+        plan = pat.sub(repl, plan)
+    return plan
+
+
 def _marker_count(plan: str, marker: str) -> int:
     """Expression-duplication guard: projection collapse + predicate
     pushdown re-inline an expensive computed column into EVERY downstream
@@ -743,7 +762,7 @@ def main() -> None:
         for n in notes:
             out.write(f"- {n}\n")
         out.write("\n```\n")
-        out.write(plan.strip()[:6000])
+        out.write(_masked(plan.strip())[:6000])
         out.write("\n```\n\n")
     if problems:
         out.write("## PROBLEMS\n\n")

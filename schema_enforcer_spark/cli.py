@@ -852,16 +852,6 @@ def main(argv: list[str] | None = None) -> int:
             sink_violations.write.mode("overwrite").parquet(f"{root}/violations")
             report.verdicts.write.mode("overwrite").parquet(f"{root}/verdicts")
 
-    if cm is not None:
-        if not args.output:
-            # no output sink: materialize before recording so lineage never
-            # claims unfinished work
-            report.violations.count()
-            report.verdicts.count()
-        # lineage row counts come from the PENDING subset this run actually
-        # validated — aggregating the full input would re-scan everything
-        cm.record(cm.last_pending if cm.last_pending is not None else df, eng, report)
-
     if args.stats_columns:
         from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
 
@@ -871,12 +861,25 @@ def main(argv: list[str] | None = None) -> int:
             print(f"ERROR | --stats-columns not in the input: {missing}", file=sys.stderr)
             return 2
         # sketch only what this run validated; earlier partitions' rows are
-        # already in the store — that's the incremental contract
+        # already in the store — that's the incremental contract. Runs
+        # BEFORE cm.record(): last_pending is a lazy anti-join against the
+        # lineage, so once record() marks this run's PASSed partitions done
+        # it no longer holds their rows
         stats_df = cm.last_pending if (cm is not None and cm.last_pending is not None) else df
         write_partition_stats(
             stats_df, cols, stats_store_path(args.checkpoint), eng._instance_col(stats_df)
         )
         _print_merged_stats()
+
+    if cm is not None:
+        if not args.output:
+            # no output sink: materialize before recording so lineage never
+            # claims unfinished work
+            report.violations.count()
+            report.verdicts.count()
+        # lineage row counts come from the PENDING subset this run actually
+        # validated — aggregating the full input would re-scan everything
+        cm.record(cm.last_pending if cm.last_pending is not None else df, eng, report)
 
     # FAIL-line format mirrors ValidationResult.print
     # (/root/reference/schema_enforcer/validation.py:53-91)

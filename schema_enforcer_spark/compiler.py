@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from schema_enforcer_spark.formats import format_predicate
-from schema_enforcer_spark.manifest import Manifest, Rule
+from schema_enforcer_spark.manifest import ENTRY_ARRAYS, Manifest, Rule
 
 
 @dataclass
@@ -365,13 +365,13 @@ def compile_row_rules(df: DataFrame, manifest: Manifest) -> list[CompiledRule]:
     /root/reference/schema_enforcer/instances/file.py:193-195)."""
     compiled = []
     for rule in manifest.row_rules:
-        if rule.kind in ("items", "prefix_items", "pattern_properties", "property_names"):
+        if rule.rule_kind.evaluator == ENTRY_ARRAYS:
             continue  # array-element / map-entry rules emit per-entry violations — engine path
         col_name = rule.get("column")
         # expression rules fail loudly on missing columns (the expr is the
         # contract, `column` only renders) — never the silent skip below
         if col_name and rule.kind != "expression" and not has_column_path(df, col_name):
-            if rule.kind in ("required", "not_empty"):
+            if rule.rule_kind.missing_fails:
                 # Missing column ≡ missing required property for every row.
                 # The rule keeps its OWN kind in the fallback id so a rule's
                 # schema_id never changes with column presence.

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from schema_enforcer_spark.compiler import CompiledRule, compile_row_rule, compile_row_rules, py_repr, _dtype_of
-from schema_enforcer_spark.manifest import Manifest, Rule
+from schema_enforcer_spark.manifest import FUSED_WINDOW, SCHEMA_PASS, SHARED_PATHS, Manifest, Rule
 
 VIOLATION_COLUMNS = [
     "schema_id",
@@ -50,6 +50,16 @@ _VIOLATION_SCHEMA_DDL = (
     "schema_id string, result string, instance_name string, instance_location string, "
     "instance_type string, absolute_path array<string>, failing_value string, message string"
 )
+_VIOLATION_ARRAY_T = (
+    "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
+)
+
+
+def _or_empty(column: Column, violations: Column) -> Column:
+    """*violations*, or an EMPTY violation array when *column* is NULL —
+    concat() with a NULL would otherwise null out every other rule's
+    violations for the row."""
+    return F.when(column.isNull(), F.array().cast(_VIOLATION_ARRAY_T)).otherwise(violations)
 
 
 @dataclass
@@ -209,18 +219,6 @@ class ValidationEngine:
         # (coerce_numbers_to_str, /root/reference/schema_enforcer/validation.py:19).
         return F.array(*elems) if elems else F.array().cast("array<string>")
 
-    def _wrap(self, df: DataFrame, schema_id: Column, path: Column, failing_value: Column, message: Column) -> list[Column]:
-        return [
-            schema_id.alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            self._instance_col(df).alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            path.alias("absolute_path"),
-            failing_value.alias("failing_value"),
-            message.alias("message"),
-        ]
-
     # -- row rules ---------------------------------------------------------
 
     def _compile_conditionals(self, df: DataFrame) -> list[CompiledRule]:
@@ -346,14 +344,7 @@ class ValidationEngine:
 
             viol = make_viol(field, check, label, rid, custom_msg, target_dt, col_name, key_elems, rule)
 
-            # a NULL array must contribute an EMPTY violation array — concat()
-            # with NULL would otherwise null out every other rule's violations
-            # for the row
-            empty = F.array().cast(
-                "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
-            )
-            arr = F.array_compact(F.transform(F.col(col_name), viol))
-            out.append(F.when(F.col(col_name).isNull(), empty).otherwise(arr))
+            out.append(_or_empty(F.col(col_name), F.array_compact(F.transform(F.col(col_name), viol))))
         return out
 
     def _prefix_items_violation_arrays(self, df: DataFrame) -> list[Column]:
@@ -366,11 +357,6 @@ class ValidationEngine:
         one projection over the array column — element_at per position, no
         explode, no shuffle, same single-pass shape as the items rule."""
         from schema_enforcer_spark.compiler import compile_check, has_column_path, py_repr
-
-        _VIOL_T = (
-            "array<struct<schema_id:string,absolute_path:array<string>,"
-            "failing_value:string,message:string>>"
-        )
         out: list[Column] = []
         for rule in self.manifest.row_rules:
             if rule.kind != "prefix_items":
@@ -465,9 +451,7 @@ class ValidationEngine:
                 tail = make_tail_viol(add, rid, custom_msg, elem_dt, col_name, key_elems, n, label)
                 arrays.append(F.array_compact(F.transform(col, tail)))
 
-            combined = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
-            empty = F.array().cast(_VIOL_T)
-            out.append(F.when(col.isNull(), empty).otherwise(combined))
+            out.append(_or_empty(col, arrays[0] if len(arrays) == 1 else F.concat(*arrays)))
         return out
 
     def _pattern_properties_violation_arrays(self, df: DataFrame) -> list[Column]:
@@ -569,11 +553,8 @@ class ValidationEngine:
                 field, check, label, rid, custom_msg, target_dt, col_name,
                 key_elems, rule, pattern, reject_extras,
             )
-            empty = F.array().cast(
-                "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
-            )
             arr = F.array_compact(F.transform(F.map_entries(F.col(col_name)), viol))
-            out.append(F.when(F.col(col_name).isNull(), empty).otherwise(arr))
+            out.append(_or_empty(F.col(col_name), arr))
         return out
 
     def _property_names_violation_arrays(self, df: DataFrame) -> list[Column]:
@@ -623,11 +604,8 @@ class ValidationEngine:
                 return viol
 
             viol = make_viol(check, rid, custom_msg, col_name, key_elems, rule)
-            empty = F.array().cast(
-                "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
-            )
             arr = F.array_compact(F.transform(F.map_keys(F.col(col_name)), viol))
-            out.append(F.when(F.col(col_name).isNull(), empty).otherwise(arr))
+            out.append(_or_empty(F.col(col_name), arr))
         return out
 
     def row_fail_count(self, df: DataFrame) -> Column:
@@ -737,7 +715,7 @@ class ValidationEngine:
 
     # -- table rules -------------------------------------------------------
 
-    def _unique_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
+    def _unique_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
         # Output contract (shared with the fused-window path so adding or
         # removing an unrelated ordering/contiguous rule never changes a
         # unique rule's violations): ONE row per duplicated key, message
@@ -1178,7 +1156,7 @@ class ValidationEngine:
             message.alias("message"),
         )
 
-    def _fd_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
+    def _fd_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
         """Functional-dependency constraint (X -> y): every distinct
         determinant tuple over ``columns`` must map to exactly ONE value of
         ``dependent``. NULL counts as a value on both sides (SQL GROUP BY
@@ -1256,7 +1234,7 @@ class ValidationEngine:
             message.alias("message"),
         )
 
-    def _outlier_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
+    def _outlier_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
         """Tukey-fence outlier flag (profiling-grade anomaly detection —
         the Deequ anomaly-check analogue; the reference's one-document
         walker cannot see distribution-grain constraints): rows whose
@@ -1358,7 +1336,7 @@ class ValidationEngine:
             message.alias("message"),
         )
 
-    def _rate_limit_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
+    def _rate_limit_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
         """Sliding-window rate constraint (burst detection): within each
         partition_by group, the count of rows in the trailing
         ``window_seconds`` (inclusive of the current row's instant) must
@@ -1651,7 +1629,7 @@ class ValidationEngine:
                 finals.append(merge(alias).alias(alias))
         return salted.groupBy(*group, "_salt").agg(*partials).groupBy(*group).agg(*finals)
 
-    def _aggregate_violations(self, df: DataFrame, rule: Rule) -> DataFrame:
+    def _aggregate_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
         group = rule.get("group_by", ["conv_id"])
         rid = rule.get("id") or f"{self.manifest.id}/aggregate/{'+'.join(group)}"
         right_spec = rule.params["right"]
@@ -1697,6 +1675,12 @@ class ValidationEngine:
             left_str.alias("failing_value"),
             message.alias("message"),
         )
+
+    def _drift_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
+        """A8: KS/PSI of the column's histogram against its baseline."""
+        from schema_enforcer_spark.stats import drift_violations
+
+        return drift_violations(self, df, rule)
 
     def _strict_violations(self, df: DataFrame, rule: Rule | None) -> DataFrame | None:
         # additionalProperties:false — compile-time set diff over the SCHEMA,
@@ -1752,13 +1736,6 @@ class ValidationEngine:
 
     # -- orchestration -----------------------------------------------------
 
-    # Rule kinds whose violation DataFrames are built EAGERLY (they run
-    # Spark jobs during construction: equals_table's hash precompare
-    # localCheckpoints digests, drift collects the current histogram) —
-    # memoizing their construction would reuse computed DATA across calls,
-    # not just a plan, so the prepared-plan memo below must skip them.
-    _EAGER_RULE_KINDS = frozenset({"equals_table", "drift"})
-
     def violations(
         self,
         df: DataFrame,
@@ -1775,7 +1752,10 @@ class ValidationEngine:
         (equals_table, drift) are never memoized."""
         ref_tables = ref_tables or {}
         memo_key = None
-        if not any(r.kind in self._EAGER_RULE_KINDS for r in self.manifest.table_rules):
+        # an eager kind's evaluator runs Spark jobs while the plan is built
+        # (equals_table's hash precompare, drift's histogram collect):
+        # memoizing it would reuse computed DATA across calls, not a plan
+        if not any(r.rule_kind.eager for r in self.manifest.table_rules):
             memo_key = (
                 id(df),
                 tuple(sorted((k, id(v)) for k, v in ref_tables.items())),
@@ -1804,7 +1784,7 @@ class ValidationEngine:
         # rules (their own exchanges anyway) stay per-engine here
         if include_row_rules and (rv := self.row_violations(df)) is not None:
             parts.append(rv)
-        strict_rules: list[Rule | None] = [r for r in self.manifest.table_rules if r.kind == "strict_columns"]
+        strict_rules: list[Rule | None] = [r for r in self.manifest.table_rules if r.rule_kind.evaluator == SCHEMA_PASS]
         if self.manifest.strict and not strict_rules:
             strict_rules = [None]
         for strict_rule in strict_rules:
@@ -1815,7 +1795,7 @@ class ValidationEngine:
         # rides the same exchange (ClusteredDistribution satisfied) for free
         window_groups: dict[tuple, list[Rule]] = {}
         for rule in self.manifest.table_rules:
-            if rule.kind in ("ordering", "contiguous", "sequence"):
+            if rule.rule_kind.evaluator == FUSED_WINDOW:
                 window_groups.setdefault(tuple(rule.params["partition_by"]), []).append(rule)
         fused_uniques = set()
         for rule in self.manifest.table_rules:
@@ -1832,36 +1812,16 @@ class ValidationEngine:
         for group in window_groups.values():
             parts.append(self._fused_window_violations(df, group))
         for rule in self.manifest.table_rules:
-            if rule.kind == "unique":
-                if id(rule) not in fused_uniques:
-                    parts.append(self._unique_violations(df, rule))
-            elif rule.kind == "referential":
-                parts.append(self._referential_violations(df, rule, ref_tables))
-            elif rule.kind == "cardinality":
-                parts.append(self._cardinality_violations(df, rule, ref_tables))
-            elif rule.kind == "functional_dependency":
-                parts.append(self._fd_violations(df, rule))
-            elif rule.kind == "outlier":
-                parts.append(self._outlier_violations(df, rule))
-            elif rule.kind == "equals_table":
-                parts.append(self._equals_table_violations(df, rule, ref_tables))
-            elif rule.kind == "rate_limit":
-                parts.append(self._rate_limit_violations(df, rule))
-            elif rule.kind in ("ordering", "contiguous", "sequence"):
-                pass  # handled by the fused window pass above
-            elif rule.kind == "aggregate":
-                parts.append(self._aggregate_violations(df, rule))
-            elif rule.kind == "drift":
-                from schema_enforcer_spark.stats import drift_violations
-
-                parts.append(drift_violations(self, df, rule))
-            elif rule.kind in ("conditional", "strict_columns"):
-                pass  # conditional rides the row-rule projection; strict is schema-grain
-            else:
+            evaluator = rule.rule_kind.evaluator
+            if evaluator in SHARED_PATHS or id(rule) in fused_uniques:
+                continue  # evaluated by the row projection, schema or window passes above
+            fn = getattr(self, evaluator, None)
+            if fn is None:
                 # a registered kind with no evaluator would otherwise
                 # validate NOTHING and report PASS — fail loudly instead
                 # (this exact hole shipped for 'sequence' in round 2)
                 raise NotImplementedError(f"table rule kind {rule.kind!r} has no evaluator")
+            parts.append(fn(df, rule, ref_tables))
         if not parts:
             return df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL)
         return reduce(lambda a, b: a.unionByName(b), parts)
@@ -1904,7 +1864,7 @@ class ValidationEngine:
         # a manifest WITH table-grain rules gets a 'table' verdict row even
         # when clean — otherwise a recorded table FAIL could never be
         # superseded by a PASS in checkpoint lineage
-        if self.manifest.strict or any(r.kind in ("strict_columns", "drift") for r in self.manifest.table_rules):
+        if self.manifest.strict or any(r.rule_kind.table_verdict for r in self.manifest.table_rules):
             universe = universe.unionByName(
                 df.sparkSession.createDataFrame(
                     [("table", "TABLE")], "instance_name string, grain string"
@@ -2007,7 +1967,7 @@ def validate_many(
     memo_host = engines[0]._plan_memo if engines else None
     memo_key = None
     if memo_host is not None and not any(
-        r.kind in ValidationEngine._EAGER_RULE_KINDS for e in engines for r in e.manifest.table_rules
+        r.rule_kind.eager for e in engines for r in e.manifest.table_rules
     ):
         memo_key = (
             "validate_many",

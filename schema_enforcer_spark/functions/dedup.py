@@ -726,34 +726,18 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def _dot_lit(vec: Column, plane: list[float]) -> Column:
-    """Dot product against a LITERAL plane via zip_with+aggregate. HOFs are
-    interpreted (not whole-stage codegen), but the eval cost is linear and
-    modest; the tempting alternative — unrolling to a 64-term multiply-add
-    chain — makes janino's recursive codegen compiler fail outright at
-    n_planes×dim scale (InternalCompilerException), so the HOF form is the
-    ROBUST one. Fold is left-assoc from 0.0 — the order every SQL oracle
-    replica assumes."""
-    return F.aggregate(
-        # F.lit(list) = one py4j call + one Literal node; the element-wise
-        # F.array(*[F.lit(x)...]) form cost 64 round trips per plane and
-        # dominated driver-side plan construction for LSH queries
-        F.zip_with(vec, F.lit([float(x) for x in plane]), lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _multi_dots(vec: Column, planes: list[list[float]]) -> Column:
     """ALL |planes| dot products in ONE traversal of ``vec`` (array<double>,
-    one element per plane). The per-plane _dot_lit form walks the vector
-    once per plane, allocating a zip_with pair array each time — 8 planes
-    = 8 interpreted passes per row (r7 measurement: the dominant cost of
-    LSH bucketing). Here one zip_with pairs each vector element with its
+    one element per plane). A per-plane zip_with+aggregate dot walks the
+    vector once per plane, allocating a zip_with pair array each time — 8
+    planes = 8 interpreted passes per row (r7 measurement: the dominant cost
+    of LSH bucketing). Here one zip_with pairs each vector element with its
     column of the TRANSPOSED plane matrix and one aggregate folds a
-    |planes|-wide accumulator. Each per-plane sum is still left-assoc in
-    dim order from 0.0 — bit-identical to _dot_lit, so buckets (and any
-    oracle replica of the sign pattern) are unchanged."""
+    |planes|-wide accumulator. HOFs stay interpreted on purpose: unrolling
+    the dots to multiply-add chains makes janino's recursive codegen
+    compiler fail at n_planes×dim scale. Each per-plane sum is left-assoc in
+    dim order from 0.0 — the order every oracle replica of the sign pattern
+    assumes."""
     dim = len(planes[0])
     coeffs = F.array(
         *[F.lit([float(p[d]) for p in planes]) for d in range(dim)]

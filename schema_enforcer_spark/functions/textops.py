@@ -95,17 +95,6 @@ def quality_score(text: Column) -> Column:
     return F.round((len_ok + stop_ok + punct_ok) / 3.0, 4)
 
 
-def lang_marker_counts(text: Column) -> dict[str, Column]:
-    low_tokens = tokens(F.lower(text))
-
-    def _count(words: list[str]) -> Column:
-        # single-arg lambda factory: F.filter treats a 2-arg lambda as
-        # (value, index), so a default-arg closure would misbind
-        return F.size(F.filter(low_tokens, lambda t: t.isin(*words)))
-
-    return {lang: _count(words) for lang, words in LANG_MARKERS.items()}
-
-
 def lang_id(text: Column) -> Column:
     """Stopword-marker language heuristic: argmax marker count, 'und'
     (undetermined) when nothing matches; ties pick the earliest language in

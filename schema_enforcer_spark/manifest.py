@@ -36,108 +36,151 @@ class InvalidManifest(Exception):
         super().__init__("\n".join(errors))
 
 
-ROW_RULE_KINDS = {
-    "type",          # P5
-    "required",      # P6
-    "format",        # P7
-    "pattern",       # P8
-    "enum",          # P9
-    "range",         # P10  (minimum/maximum/exclusive*)
-    "length",        # P11  (minLength/maxLength)
-    "multiple_of",   # P11
-    "unique_items",  # P13  (array column: elements distinct within the cell)
-    "not_empty",     # convenience: required + minLength 1
-    "any_of",        # Draft-7 anyOf: value valid under >=1 of the sub-checks
-    "all_of",        # Draft-7 allOf: value valid under every sub-check
-    "one_of",        # Draft-7 oneOf: valid under exactly 1 sub-check
-    "not",           # Draft-7 not: must NOT be valid under the sub-check
-    "const",         # Draft-6 const: value must equal the literal
-    "contains",      # Draft-6 contains: array holds >=1 element passing check
-    "dependent_required",  # Draft-2019 dependentRequired: col present => others present
-    "property_names",  # Draft-7 propertyNames over a MAP column: every key
-                     # must satisfy `check` (length/pattern/enum/...);
-                     # completes the object-keyword family with
-                     # pattern_properties + strict_columns
-    "property_count",  # Draft-7 minProperties/maxProperties over a MAP
-                     # column: entry count within [min_properties,
-                     # max_properties], jsonschema message parity
-                     # ("does not have enough properties" /
-                     # "has too many properties")
-    "pattern_properties",  # Draft-7 patternProperties over a MAP column:
-                     # entries whose key matches `pattern` get `check`
-                     # applied to the value (or value `field`); with
-                     # additional_properties: false, non-matching keys are
-                     # violations (the reference's interface-name maps,
-                     # examples/ansible/schema/schemas/interfaces.yml:9-16)
-    "jmespath",      # X2 literal-string parity: the reference's
-                     # JmesPathModelValidation expressions verbatim
-                     # (validator.py:65-88; fixture check_interfaces.py:15-23)
-                     # — `left` (JMESPath string) compared per ROW against
-                     # `right` literal or `right_expr` (second expression);
-                     # falsy LHS passes, ordering ops compare as ints.
-                     # Compiled to one Catalyst HOF expression (map_values/
-                     # transform/filter/flatten), rides the zero-shuffle
-                     # row-rule projection; unsupported constructs are
-                     # rejected at manifest compile time.
-    "prefix_items",  # Draft-7 TUPLE form of items (`items: [s0, s1, ...]`
-                     # + additionalItems): positional checks on an array
-                     # column — element p validated against checks[p];
-                     # additional_items: false rejects extra elements with
-                     # jsonschema's exact aggregate message, a check dict
-                     # validates every element past the prefix
-    "items",         # P12/P5 nested: per-element check on an array column
-                     # (optionally on a struct field of each element) — the
-                     # reference's items/properties walk re-expressed as one
-                     # transform() over the array, violations carry the
-                     # element index in absolute_path (["dns_servers","0",
-                     # "address"] parity, tests/test_jsonschema.py:84-91)
-    "expression",    # X2 Spark-native twin of the reference's custom
-                     # validators (validator.py:90-117 subclasses write
-                     # arbitrary Python over the row): a declarative SQL
-                     # boolean over any columns of the row (`expr`),
-                     # compiled by Catalyst onto the same zero-shuffle
-                     # row-rule projection. SQL CHECK-constraint null
-                     # semantics: a NULL predicate passes (enforce
-                     # non-null operands with a required rule). `column`
-                     # optionally names which column to render as the
-                     # failing value.
-}
+ROW, TABLE = "row", "table"
 
-TABLE_RULE_KINDS = {
-    "unique",        # U1: (cols...) unique across the table
-    "referential",   # J4: cols must exist in a reference table
-    "ordering",      # W1: order_by strictly monotonic per partition_by
-    "contiguous",    # W1: column must equal 0..n-1 per partition_by
-    "aggregate",     # A1/A2: left <op> right per group
-    "strict_columns",  # P12: additionalProperties false at table grain
-    "conditional",   # tool non-null iff role='tool' style implications
-    "drift",         # A8: KS/PSI vs a baseline histogram
-    "sequence",      # W1 extension: allowed value transitions per partition
-                     # (e.g. role alternation in a transcript: user→assistant)
-    "cardinality",   # J4 extension: FK multiplicity — key must match
-                     # [min_count, max_count] rows of ref_table
-    "rate_limit",    # W1 extension: trailing event-time window count cap
-                     # (burst detection per partition key)
-    "outlier",       # profiling-grade anomaly flag: rows whose numeric
-                     # column falls outside the Tukey IQR fence
-                     # [q1 - k*IQR, q3 + k*IQR]; bounds from the data
-                     # itself (approx_percentile sketch by default — the
-                     # scale path; `exact: true` for the R-7 interpolated
-                     # exact quantile, oracle-portable)
-    "functional_dependency",  # profiling-grade FD: determinant columns
-                     # must map to exactly one value of `dependent`
-                     # (NULL counts as a value, SQL GROUP-BY semantics);
-                     # one violation row per offending determinant group
-    "equals_table",  # north-star per-row invariant (BASELINE.json
-                     # input_hint: per-turn text equality under stable turn
-                     # ordering): full-diff vs a reference table on the key
-                     # columns — value mismatches per compared column, rows
-                     # missing from the reference, reference rows missing
-                     # from the input; direct mode = ONE full-outer value
-                     # join, hash mode = xxhash64 precompare join + broadcast
-                     # fetch-back of the mismatch keys (wide columns)
-}
+# Shared evaluation paths a kind declares instead of an evaluator of its own.
+ROW_PROJECTION = "row projection"  # compiled onto the single-pass row projection
+ENTRY_ARRAYS = "entry arrays"      # per-element/per-entry violation arrays on that projection
+FUSED_WINDOW = "fused window"      # one window pass per partition key
+SCHEMA_PASS = "schema pass"        # set difference over the input schema; reads no data
+SHARED_PATHS = frozenset({ROW_PROJECTION, ENTRY_ARRAYS, FUSED_WINDOW, SCHEMA_PASS})
 
+
+@dataclass(frozen=True)
+class RuleKind:
+    """Everything the loader and the engine know about one rule kind.
+    Adding a kind is adding one record to ``RULE_KIND_TABLE`` (plus its
+    evaluator)."""
+
+    name: str
+    grain: str                 # ROW (Manifest.row_rules) or TABLE (table_rules)
+    required: tuple[str, ...]  # fields meta-validation demands
+    # a shared path above, or the ValidationEngine method
+    # ``(df, rule, ref_tables) -> violations DataFrame``
+    evaluator: str
+    # may be a sub-check of any_of/all_of/one_of/not, prefix_items,
+    # contains, property_names and pattern_properties
+    composable: bool = False
+    # may be the `check` of an items rule (compiler.compile_check handles it)
+    element: bool = False
+    # the evaluator runs Spark jobs while the plan is built, so the engine's
+    # plan memo must never reuse its output
+    eager: bool = False
+    # a missing column fails every row as a missing required property
+    missing_fails: bool = False
+    # violations land on the synthetic 'table' instance, so the verdicts
+    # always carry a 'table' row
+    table_verdict: bool = False
+
+
+_SCALAR = {"composable": True, "element": True}
+
+RULE_KIND_TABLE: dict[str, RuleKind] = {k.name: k for k in (
+    # -- row grain: one projection over the rows, no shuffle -----------------
+    # Draft-7 keywords P5-P13 (SURVEY.md §2.2)
+    RuleKind("type", ROW, ("column", "type"), ROW_PROJECTION, **_SCALAR),
+    RuleKind("required", ROW, ("column",), ROW_PROJECTION, **_SCALAR, missing_fails=True),
+    RuleKind("format", ROW, ("column", "format"), ROW_PROJECTION, **_SCALAR),
+    RuleKind("pattern", ROW, ("column", "pattern"), ROW_PROJECTION, **_SCALAR),
+    RuleKind("enum", ROW, ("column", "values"), ROW_PROJECTION, **_SCALAR),
+    # minimum/maximum/exclusive_*; needs at least one bound
+    RuleKind("range", ROW, ("column",), ROW_PROJECTION, **_SCALAR),
+    # min_length/max_length; needs at least one bound
+    RuleKind("length", ROW, ("column",), ROW_PROJECTION, **_SCALAR),
+    RuleKind("multiple_of", ROW, ("column", "multiple_of"), ROW_PROJECTION, **_SCALAR),
+    # array column: elements distinct within the cell
+    RuleKind("unique_items", ROW, ("column",), ROW_PROJECTION, **_SCALAR),
+    # convenience: required + minLength 1
+    RuleKind("not_empty", ROW, ("column",), ROW_PROJECTION, **_SCALAR, missing_fails=True),
+    # Draft-6 const: value must equal the literal
+    RuleKind("const", ROW, ("column", "value"), ROW_PROJECTION, **_SCALAR),
+    # Draft-7 anyOf/allOf/oneOf/not over scalar sub-checks in `checks`
+    RuleKind("any_of", ROW, ("column", "checks"), ROW_PROJECTION, element=True),
+    RuleKind("all_of", ROW, ("column", "checks"), ROW_PROJECTION, element=True),
+    RuleKind("one_of", ROW, ("column", "checks"), ROW_PROJECTION, element=True),
+    RuleKind("not", ROW, ("column", "checks"), ROW_PROJECTION, element=True),
+    # Draft-6 contains: array holds >=1 element passing `check`
+    RuleKind("contains", ROW, ("column", "check"), ROW_PROJECTION, element=True),
+    # Draft-2019 dependentRequired: column present => `requires` present
+    RuleKind("dependent_required", ROW, ("column", "requires"), ROW_PROJECTION, element=True),
+    # Draft-7 minProperties/maxProperties over a MAP column (jsonschema
+    # "does not have enough properties" / "has too many properties")
+    RuleKind("property_count", ROW, ("column",), ROW_PROJECTION, element=True),
+    # X2 literal-string parity: the reference's JmesPathModelValidation
+    # expressions verbatim (validator.py:65-88) — `left` compared per row
+    # against `right` or `right_expr`, compiled to one Catalyst HOF
+    # expression; unsupported constructs are rejected at load time
+    RuleKind("jmespath", ROW, ("left", "operator"), ROW_PROJECTION),
+    # X2 Spark-native twin of the reference's custom validators
+    # (validator.py:90-117): a declarative SQL boolean over the row (`expr`);
+    # a NULL predicate passes; `column` optionally names the value rendered
+    RuleKind("expression", ROW, ("expr",), ROW_PROJECTION),
+    # P12/P5 nested: per-element `check` on an array column (optionally a
+    # struct `field` of each element), the element index in absolute_path
+    # (["dns_servers","0","address"], tests/test_jsonschema.py:84-91)
+    RuleKind("items", ROW, ("column", "check"), ENTRY_ARRAYS),
+    # Draft-7 tuple items + additionalItems: element p checked against
+    # checks[p]; additional_items false rejects extras with jsonschema's
+    # aggregate message, a check object validates every element past them
+    RuleKind("prefix_items", ROW, ("column", "checks"), ENTRY_ARRAYS),
+    # Draft-7 propertyNames over a MAP column: every key satisfies `check`
+    RuleKind("property_names", ROW, ("column", "check"), ENTRY_ARRAYS),
+    # Draft-7 patternProperties over a MAP column: entries whose key matches
+    # `pattern` get `check` on the value (or value `field`); with
+    # additional_properties: false, non-matching keys are violations (the
+    # reference's interface-name maps, examples/ansible/schema/schemas/
+    # interfaces.yml:9-16)
+    RuleKind("pattern_properties", ROW, ("column", "pattern"), ENTRY_ARRAYS),
+    # -- table grain: groupBy / join / window plans, shuffles on their keys ---
+    # U1: (columns...) unique across the table
+    RuleKind("unique", TABLE, ("columns",), "_unique_violations"),
+    # J4: columns must exist in a reference table
+    RuleKind("referential", TABLE, ("columns", "ref_table", "ref_columns"), "_referential_violations"),
+    # W1: order_by strictly monotonic per partition_by
+    RuleKind("ordering", TABLE, ("column", "partition_by", "order_by"), FUSED_WINDOW),
+    # W1: column must equal 0..n-1 per partition_by
+    RuleKind("contiguous", TABLE, ("column", "partition_by"), FUSED_WINDOW),
+    # W1 extension: allowed value transitions per partition (user→assistant)
+    RuleKind(
+        "sequence", TABLE, ("column", "partition_by", "order_by", "allowed_transitions"), FUSED_WINDOW
+    ),
+    # A1/A2: left <op> right per group
+    RuleKind("aggregate", TABLE, ("left", "operator", "right"), "_aggregate_violations"),
+    # P12: additionalProperties false at table grain
+    RuleKind("strict_columns", TABLE, (), SCHEMA_PASS, table_verdict=True),
+    # tool non-null iff role='tool' style implications (Draft-7
+    # if/then/else); table grain, but rides the row projection
+    RuleKind("conditional", TABLE, ("when", "then"), ROW_PROJECTION),
+    # A8: KS/PSI vs a baseline histogram; the baseline may instead come from
+    # a stored baseline file, so inline baseline or lo+hi bounds are checked
+    # separately
+    RuleKind(
+        "drift", TABLE, ("column", "metric", "threshold"), "_drift_violations",
+        eager=True, table_verdict=True,
+    ),
+    # J4 extension: FK multiplicity — key matches [min_count, max_count]
+    # rows of ref_table
+    RuleKind("cardinality", TABLE, ("columns", "ref_table", "ref_columns"), "_cardinality_violations"),
+    # W1 extension: trailing event-time window count cap per partition key
+    RuleKind(
+        "rate_limit", TABLE, ("partition_by", "order_by", "window_seconds", "max_count"),
+        "_rate_limit_violations",
+    ),
+    # profiling-grade anomaly flag: rows whose numeric column falls outside
+    # the Tukey IQR fence [q1 - k*IQR, q3 + k*IQR]; bounds from the data
+    # (approx_percentile by default, `exact: true` for R-7 exact quantiles)
+    RuleKind("outlier", TABLE, ("column",), "_outlier_violations"),
+    # profiling-grade FD: determinant `columns` map to exactly one value of
+    # `dependent` (NULL counts as a value); one violation per offending group
+    RuleKind("functional_dependency", TABLE, ("columns", "dependent"), "_fd_violations"),
+    # full diff vs a reference table on the key columns: value mismatches
+    # per compared column and rows missing on either side; hash mode runs a
+    # precompare job at plan build
+    RuleKind("equals_table", TABLE, ("columns", "ref_table", "compare"), "_equals_table_violations", eager=True),
+)}
+
+ROW_RULE_KINDS = frozenset(k.name for k in RULE_KIND_TABLE.values() if k.grain == ROW)
+TABLE_RULE_KINDS = frozenset(k.name for k in RULE_KIND_TABLE.values() if k.grain == TABLE)
 RULE_KINDS = ROW_RULE_KINDS | TABLE_RULE_KINDS
 
 _COMPARISON_OPS = {"gt", "gte", "eq", "lt", "lte", "contains"}  # validator.py:70-86 parity
@@ -253,68 +296,6 @@ MANIFEST_META_SCHEMA: dict[str, Any] = {
     "additionalProperties": False,
 }
 
-_PER_KIND_REQUIRED = {
-    "type": ["column", "type"],
-    "required": ["column"],
-    "format": ["column", "format"],
-    "pattern": ["column", "pattern"],
-    "enum": ["column", "values"],
-    "range": ["column"],
-    "length": ["column"],
-    "multiple_of": ["column", "multiple_of"],
-    "unique_items": ["column"],
-    "not_empty": ["column"],
-    "items": ["column", "check"],
-    "prefix_items": ["column", "checks"],
-    "jmespath": ["left", "operator"],
-    "pattern_properties": ["column", "pattern"],
-    "property_names": ["column", "check"],
-    "property_count": ["column"],
-    "unique": ["columns"],
-    "referential": ["columns", "ref_table", "ref_columns"],
-    "ordering": ["column", "partition_by", "order_by"],
-    "contiguous": ["column", "partition_by"],
-    "aggregate": ["left", "operator", "right"],
-    "strict_columns": [],
-    "conditional": ["when", "then"],
-    # baseline may instead come from a stored baseline file (--baseline);
-    # a custom check below requires either inline baseline or lo+hi bounds
-    "drift": ["column", "metric", "threshold"],
-    "sequence": ["column", "partition_by", "order_by", "allowed_transitions"],
-    "any_of": ["column", "checks"],
-    "all_of": ["column", "checks"],
-    "one_of": ["column", "checks"],
-    "not": ["column", "checks"],
-    "const": ["column", "value"],
-    "contains": ["column", "check"],
-    "dependent_required": ["column", "requires"],
-    "expression": ["expr"],
-    "cardinality": ["columns", "ref_table", "ref_columns"],
-    "rate_limit": ["partition_by", "order_by", "window_seconds", "max_count"],
-    "equals_table": ["columns", "ref_table", "compare"],
-    "functional_dependency": ["columns", "dependent"],
-    "outlier": ["column"],
-}
-
-# Sub-schema kinds allowed inside any_of/all_of/one_of/not `checks` entries:
-# scalar row checks only (no nesting, no items/contains — the composition
-# predicate must stay a plain boolean expression over one column).
-_COMPOSABLE_CHECK_KINDS = ROW_RULE_KINDS - {
-    "jmespath",
-    "expression",
-    "items",
-    "pattern_properties",
-    "property_names",
-    "property_count",
-    "contains",
-    "any_of",
-    "all_of",
-    "one_of",
-    "not",
-    "dependent_required",
-}
-
-
 @dataclass(frozen=True)
 class Rule:
     kind: str
@@ -332,6 +313,13 @@ class Rule:
     @property
     def is_row_rule(self) -> bool:
         return self.kind in ROW_RULE_KINDS
+
+    @property
+    def rule_kind(self) -> RuleKind:
+        """This rule's kind record. A kind no record declares gets a
+        table-grain record with no evaluator, so the engine fails loudly on
+        it instead of skipping it."""
+        return RULE_KIND_TABLE.get(self.kind) or RuleKind(self.kind, TABLE, (), "")
 
 
 @dataclass(frozen=True)
@@ -375,6 +363,154 @@ class Manifest:
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
+_RANGE_BOUNDS = {"minimum", "maximum", "exclusive_minimum", "exclusive_maximum"}
+
+# Kinds whose `check` field is one sub-check run on each array element, map
+# key or map entry — inside a Spark lambda, which cannot call a Python UDF
+_CHECK_LAMBDAS = {
+    "items": ("an array-element", "array"),
+    "contains": ("an array-element", "array"),
+    "property_names": ("a map-key", "map"),
+    "pattern_properties": ("a map-entry", "map"),
+}
+
+
+def _bound_errors(head: str, kind: Any, spec: dict[str, Any]) -> list[str]:
+    """range/length checks need at least one bound; *head* names the check."""
+    if kind == "range" and not (_RANGE_BOUNDS & spec.keys()):
+        return [f"{head} needs at least one bound"]
+    if kind == "length" and not ({"min_length", "max_length"} & spec.keys()):
+        return [f"{head} needs min_length or max_length"]
+    return []
+
+
+def _sub_checks(kind: str, rule: dict[str, Any]):
+    """Every sub-check *rule* carries, as (site, sub-kind, params, lambda,
+    rejection message). A site named by the kind alone is the rule's own
+    `check` field and reads the rule's params; the other sites are spec
+    objects in `checks` or `additional_items`."""
+    if kind in _CHECK_LAMBDAS:
+        # a missing check is already a required-field error; items and
+        # contains also report it as a non-scalar kind
+        if rule.get("check") is not None or kind in ("items", "contains"):
+            yield kind, rule.get("check"), rule, _CHECK_LAMBDAS[kind], None
+    elif kind in ("prefix_items", "any_of", "all_of", "one_of", "not"):
+        lam = _CHECK_LAMBDAS["items"] if kind == "prefix_items" else None
+        for j, spec in enumerate(rule["checks"] if isinstance(rule.get("checks"), list) else ()):
+            if isinstance(spec, dict):
+                yield f"{kind} checks/{j}", spec.get("kind"), spec, lam, None
+        if kind == "prefix_items" and isinstance(add := rule.get("additional_items"), dict):
+            yield "prefix_items additional_items", add.get("kind"), add, lam, (
+                "prefix_items additional_items must be false, true, or a scalar row-rule "
+                f"check object, got kind {add.get('kind')!r}"
+            )
+
+
+def _sub_check_errors(at: str, site: str, sub: Any, spec: dict[str, Any], lam, bad: str | None) -> list[str]:
+    """One sub-check: an allowed sub-kind, its required fields, its bounds,
+    and no Python-UDF format inside a lambda."""
+    inline = site in _CHECK_LAMBDAS
+    kind = RULE_KIND_TABLE.get(sub) if isinstance(sub, str) else None
+    if kind is None or not (kind.element if site == "items" else kind.composable):
+        what = f"{site} 'check'" if inline else site
+        return [f"{at}: " + (bad or f"{what} must be a scalar row-rule kind, got {sub!r}")]
+    named = f"{site} check" if inline else f"{site} kind"
+    # the sub-check inherits the rule's column
+    errors = [f"{at}: {named} {sub!r} requires field {r!r}" for r in kind.required if r != "column" and r not in spec]
+    errors += _bound_errors(f"{at}: {sub} rule" if inline else f"{at}: {site} {sub}", sub, spec)
+    if lam and sub == "format" and spec.get("format") == "regex":
+        errors.append(
+            f"{at}: format 'regex' is a Python-UDF check and cannot run inside {lam[0]} "
+            f"lambda; explode the {lam[1]} and use a plain format rule instead"
+        )
+    return errors
+
+
+def _cross_field_errors(at: str, kind: str, rule: dict[str, Any]) -> list[str]:
+    """Kind-specific constraints between a rule's fields."""
+    errors: list[str] = []
+    if kind == "jmespath":
+        if not isinstance(rule.get("left"), str):
+            errors.append(f"{at}: jmespath 'left' must be a JMESPath string")
+        if ("right" in rule) == ("right_expr" in rule):
+            errors.append(
+                f"{at}: jmespath rule needs exactly one of 'right' "
+                "(literal) or 'right_expr' (second JMESPath expression)"
+            )
+        # parse + subset-check the expression strings now — an
+        # unsupported construct must fail at manifest compile, not
+        # mid-job (reference parity: validators are imported/compiled
+        # before any data is read, validator.py:170-190)
+        from schema_enforcer_spark.jmespath_compat import UnsupportedJmesPath, parse_checked
+
+        for fld in ("left", "right_expr"):
+            if isinstance(rule.get(fld), str):
+                try:
+                    parse_checked(rule[fld])
+                except UnsupportedJmesPath as exc:
+                    errors.append(f"{at}: {fld}: {exc}")
+    elif kind == "expression":
+        # full parse/resolution happens at compile time against the
+        # input schema (needs a session); here reject the shapes that
+        # can never compile
+        ex = rule.get("expr")
+        if not isinstance(ex, str) or not ex.strip():
+            errors.append(f"{at}: expression 'expr' must be a non-empty SQL string")
+        elif ";" in ex:
+            errors.append(
+                f"{at}: expression 'expr' must be a single SQL boolean "
+                "expression, not a statement list"
+            )
+    elif kind == "pattern_properties":
+        if rule.get("check") is None and rule.get("additional_properties") is not False:
+            errors.append(
+                f"{at}: pattern_properties needs 'check' (validate matching "
+                "values) and/or 'additional_properties: false' (reject "
+                "non-matching keys) — with neither it checks nothing"
+            )
+        # `pattern` is this rule's KEY-matching regex; a value sub-check
+        # would silently reuse it, validating values against the key regex
+        # — require the dedicated param
+        if rule.get("check") == "pattern" and "value_pattern" not in rule:
+            errors.append(
+                f"{at}: pattern_properties check 'pattern' needs "
+                "'value_pattern' (the rule's own 'pattern' matches KEYS; "
+                "reusing it for values is almost never intended)"
+            )
+    elif kind == "drift" and "baseline" not in rule and not ({"lo", "hi"} <= rule.keys()):
+        errors.append(
+            f"{at}: drift rule needs an inline 'baseline' histogram or "
+            "'lo'+'hi' bucket bounds (for the stored-baseline flow)"
+        )
+    elif kind == "cardinality" and not ({"min_count", "max_count"} & rule.keys()):
+        errors.append(f"{at}: cardinality rule needs min_count and/or max_count")
+    elif kind == "functional_dependency" and rule.get("dependent") in (rule.get("columns") or []):
+        errors.append(
+            f"{at}: functional_dependency dependent column "
+            f"{rule.get('dependent')!r} is part of the determinant — the "
+            "rule would hold trivially and check nothing"
+        )
+    elif kind == "property_count":
+        bounds = {k: rule.get(k) for k in ("min_properties", "max_properties") if k in rule}
+        if not bounds:
+            errors.append(f"{at}: property_count rule needs min_properties and/or max_properties")
+        for k, v in bounds.items():
+            if not isinstance(v, int) or isinstance(v, bool) or v < 0:
+                errors.append(f"{at}: property_count {k} must be a non-negative integer")
+        if (
+            isinstance(bounds.get("min_properties"), int)
+            and isinstance(bounds.get("max_properties"), int)
+            and bounds["min_properties"] > bounds["max_properties"]
+        ):
+            errors.append(f"{at}: property_count min_properties > max_properties can never pass")
+    elif kind == "strict_columns" and rule.get("column") and not rule.get("columns"):
+        errors.append(
+            f"{at}: strict_columns on a struct column needs the declared "
+            "'columns' field set (an empty declaration would silently check nothing)"
+        )
+    return errors
+
+
 def validate_manifest_dict(raw: dict[str, Any]) -> list[str]:
     """Meta-validate; returns error strings (empty = valid)."""
     validator = jsonschema.Draft7Validator(MANIFEST_META_SCHEMA)
@@ -386,233 +522,19 @@ def validate_manifest_dict(raw: dict[str, Any]) -> list[str]:
     if not isinstance(rules, list):
         return errors
     for i, rule in enumerate(rules):
-        if not isinstance(rule, dict):
+        # a non-dict rule or a non-string / unknown kind is already reported
+        # by the meta-schema above (dict.get on an unhashable kind would
+        # raise instead of collecting errors — fuzz find)
+        kind = rule.get("kind") if isinstance(rule, dict) else None
+        spec = RULE_KIND_TABLE.get(kind) if isinstance(kind, str) else None
+        if spec is None:
             continue
-        kind = rule.get("kind")
-        if not isinstance(kind, str):
-            # a non-string kind (list/dict/int) is already reported by the
-            # meta-schema enum check above; dict.get on an unhashable value
-            # would raise TypeError instead of collecting errors (fuzz find)
-            continue
-        for req in _PER_KIND_REQUIRED.get(kind, []):
-            if req not in rule:
-                errors.append(f"rules/{i}: kind {kind!r} requires field {req!r}")
-        if kind == "items":
-            check = rule.get("check")
-            if check not in (ROW_RULE_KINDS - {"items"}):
-                errors.append(f"rules/{i}: items 'check' must be a scalar row-rule kind, got {check!r}")
-            else:
-                # the sub-check's own required params apply to the items rule
-                for req in _PER_KIND_REQUIRED.get(check, []):
-                    if req != "column" and req not in rule:
-                        errors.append(f"rules/{i}: items check {check!r} requires field {req!r}")
-                if check == "format" and rule.get("format") == "regex":
-                    errors.append(
-                        f"rules/{i}: format 'regex' is a Python-UDF check and cannot run "
-                        "inside an array-element lambda; explode the array and use a "
-                        "plain format rule instead"
-                    )
-        if kind == "prefix_items":
-            if isinstance(rule.get("checks"), list):
-                for j, spec in enumerate(rule["checks"]):
-                    if not isinstance(spec, dict):
-                        continue
-                    sub = spec.get("kind")
-                    if sub not in _COMPOSABLE_CHECK_KINDS:
-                        errors.append(
-                            f"rules/{i}: prefix_items checks/{j} must be a scalar row-rule kind, got {sub!r}"
-                        )
-                        continue
-                    for req in _PER_KIND_REQUIRED.get(sub, []):
-                        if req != "column" and req not in spec:
-                            errors.append(
-                                f"rules/{i}: prefix_items checks/{j} kind {sub!r} requires field {req!r}"
-                            )
-                    if sub == "format" and spec.get("format") == "regex":
-                        errors.append(
-                            f"rules/{i}: format 'regex' is a Python-UDF check and cannot run "
-                            "inside an array-element lambda; explode the array and use a "
-                            "plain format rule instead"
-                        )
-            add = rule.get("additional_items")
-            if isinstance(add, dict):
-                sub = add.get("kind")
-                if sub not in _COMPOSABLE_CHECK_KINDS:
-                    errors.append(
-                        f"rules/{i}: prefix_items additional_items must be false, true, or a "
-                        f"scalar row-rule check object, got kind {sub!r}"
-                    )
-                else:
-                    for req in _PER_KIND_REQUIRED.get(sub, []):
-                        if req != "column" and req not in add:
-                            errors.append(
-                                f"rules/{i}: prefix_items additional_items kind {sub!r} requires field {req!r}"
-                            )
-        if kind in ("any_of", "all_of", "one_of", "not") and isinstance(rule.get("checks"), list):
-            for j, spec in enumerate(rule["checks"]):
-                if not isinstance(spec, dict):
-                    continue
-                sub = spec.get("kind")
-                if sub not in _COMPOSABLE_CHECK_KINDS:
-                    errors.append(
-                        f"rules/{i}: {kind} checks/{j} must be a scalar row-rule kind, got {sub!r}"
-                    )
-                    continue
-                for req in _PER_KIND_REQUIRED.get(sub, []):
-                    if req != "column" and req not in spec:
-                        errors.append(f"rules/{i}: {kind} checks/{j} kind {sub!r} requires field {req!r}")
-                if sub == "range" and not (
-                    {"minimum", "maximum", "exclusive_minimum", "exclusive_maximum"} & spec.keys()
-                ):
-                    errors.append(f"rules/{i}: {kind} checks/{j} range needs at least one bound")
-                if sub == "length" and not ({"min_length", "max_length"} & spec.keys()):
-                    errors.append(f"rules/{i}: {kind} checks/{j} length needs min_length or max_length")
-        if kind == "contains":
-            check = rule.get("check")
-            if check not in _COMPOSABLE_CHECK_KINDS:
-                errors.append(f"rules/{i}: contains 'check' must be a scalar row-rule kind, got {check!r}")
-            else:
-                for req in _PER_KIND_REQUIRED.get(check, []):
-                    if req != "column" and req not in rule:
-                        errors.append(f"rules/{i}: contains check {check!r} requires field {req!r}")
-                if check == "format" and rule.get("format") == "regex":
-                    errors.append(
-                        f"rules/{i}: format 'regex' is a Python-UDF check and cannot run "
-                        "inside an array-element lambda; explode the array and use a "
-                        "plain format rule instead"
-                    )
-        if kind == "property_names":
-            check = rule.get("check")
-            if check is not None and check not in _COMPOSABLE_CHECK_KINDS:
-                errors.append(
-                    f"rules/{i}: property_names 'check' must be a scalar row-rule "
-                    f"kind, got {check!r}"
-                )
-            elif check is not None:
-                for req in _PER_KIND_REQUIRED.get(check, []):
-                    if req != "column" and req not in rule:
-                        errors.append(
-                            f"rules/{i}: property_names check {check!r} requires field {req!r}"
-                        )
-                if check == "format" and rule.get("format") == "regex":
-                    errors.append(
-                        f"rules/{i}: format 'regex' is a Python-UDF check and cannot "
-                        "run inside a map-key lambda; explode the map and use a "
-                        "plain format rule instead"
-                    )
-        if kind == "jmespath":
-            if not isinstance(rule.get("left"), str):
-                errors.append(f"rules/{i}: jmespath 'left' must be a JMESPath string")
-            if ("right" in rule) == ("right_expr" in rule):
-                errors.append(
-                    f"rules/{i}: jmespath rule needs exactly one of 'right' "
-                    "(literal) or 'right_expr' (second JMESPath expression)"
-                )
-            # parse + subset-check the expression strings now — an
-            # unsupported construct must fail at manifest compile, not
-            # mid-job (reference parity: validators are imported/compiled
-            # before any data is read, validator.py:170-190)
-            from schema_enforcer_spark.jmespath_compat import UnsupportedJmesPath, parse_checked
-
-            for fld in ("left", "right_expr"):
-                if isinstance(rule.get(fld), str):
-                    try:
-                        parse_checked(rule[fld])
-                    except UnsupportedJmesPath as exc:
-                        errors.append(f"rules/{i}: {fld}: {exc}")
-        if kind == "expression":
-            # full parse/resolution happens at compile time against the
-            # input schema (needs a session); here reject the shapes that
-            # can never compile
-            ex = rule.get("expr")
-            if not isinstance(ex, str) or not ex.strip():
-                errors.append(f"rules/{i}: expression 'expr' must be a non-empty SQL string")
-            elif ";" in ex:
-                errors.append(
-                    f"rules/{i}: expression 'expr' must be a single SQL boolean "
-                    "expression, not a statement list"
-                )
-        if kind == "pattern_properties":
-            check = rule.get("check")
-            if check is None and not (rule.get("additional_properties") is False):
-                errors.append(
-                    f"rules/{i}: pattern_properties needs 'check' (validate matching "
-                    "values) and/or 'additional_properties: false' (reject "
-                    "non-matching keys) — with neither it checks nothing"
-                )
-            if check is not None:
-                if check not in _COMPOSABLE_CHECK_KINDS:
-                    errors.append(
-                        f"rules/{i}: pattern_properties 'check' must be a scalar "
-                        f"row-rule kind, got {check!r}"
-                    )
-                else:
-                    for req in _PER_KIND_REQUIRED.get(check, []):
-                        if req != "column" and req not in rule:
-                            errors.append(
-                                f"rules/{i}: pattern_properties check {check!r} requires field {req!r}"
-                            )
-                    # `pattern` is this rule's KEY-matching regex; a value
-                    # sub-check would silently reuse it, validating values
-                    # against the key regex — require the dedicated param
-                    if check == "pattern" and "value_pattern" not in rule:
-                        errors.append(
-                            f"rules/{i}: pattern_properties check 'pattern' needs "
-                            "'value_pattern' (the rule's own 'pattern' matches KEYS; "
-                            "reusing it for values is almost never intended)"
-                        )
-                    if check == "format" and rule.get("format") == "regex":
-                        errors.append(
-                            f"rules/{i}: format 'regex' is a Python-UDF check and cannot "
-                            "run inside a map-entry lambda; explode the map and use a "
-                            "plain format rule instead"
-                        )
-        # range/length bound requirements apply whether the check is the rule
-        # kind itself or an items/contains/pattern_properties sub-check
-        effective = (
-            rule.get("check")
-            if kind in ("items", "contains", "pattern_properties", "property_names")
-            else kind
-        )
-        if effective == "range" and not ({"minimum", "maximum", "exclusive_minimum", "exclusive_maximum"} & rule.keys()):
-            errors.append(f"rules/{i}: range rule needs at least one bound")
-        if effective == "length" and not ({"min_length", "max_length"} & rule.keys()):
-            errors.append(f"rules/{i}: length rule needs min_length or max_length")
-        if kind == "drift" and "baseline" not in rule and not ({"lo", "hi"} <= rule.keys()):
-            errors.append(
-                f"rules/{i}: drift rule needs an inline 'baseline' histogram or "
-                "'lo'+'hi' bucket bounds (for the stored-baseline flow)"
-            )
-        if kind == "cardinality" and not ({"min_count", "max_count"} & rule.keys()):
-            errors.append(f"rules/{i}: cardinality rule needs min_count and/or max_count")
-        if kind == "functional_dependency" and rule.get("dependent") in (rule.get("columns") or []):
-            errors.append(
-                f"rules/{i}: functional_dependency dependent column "
-                f"{rule.get('dependent')!r} is part of the determinant — the "
-                "rule would hold trivially and check nothing"
-            )
-        if kind == "property_count":
-            bounds = {k: rule.get(k) for k in ("min_properties", "max_properties") if k in rule}
-            if not bounds:
-                errors.append(
-                    f"rules/{i}: property_count rule needs min_properties and/or max_properties"
-                )
-            for k, v in bounds.items():
-                if not isinstance(v, int) or isinstance(v, bool) or v < 0:
-                    errors.append(f"rules/{i}: property_count {k} must be a non-negative integer")
-            if (
-                isinstance(bounds.get("min_properties"), int)
-                and isinstance(bounds.get("max_properties"), int)
-                and bounds["min_properties"] > bounds["max_properties"]
-            ):
-                errors.append(
-                    f"rules/{i}: property_count min_properties > max_properties can never pass"
-                )
-        if kind == "strict_columns" and rule.get("column") and not rule.get("columns"):
-            errors.append(
-                f"rules/{i}: strict_columns on a struct column needs the declared "
-                "'columns' field set (an empty declaration would silently check nothing)"
-            )
+        at = f"rules/{i}"
+        errors += [f"{at}: kind {kind!r} requires field {req!r}" for req in spec.required if req not in rule]
+        errors += _bound_errors(f"{at}: {kind} rule", kind, rule)
+        for site, sub, params, lam, bad in _sub_checks(kind, rule):
+            errors += _sub_check_errors(at, site, sub, params, lam, bad)
+        errors += _cross_field_errors(at, kind, rule)
     return errors
 
 

@@ -534,6 +534,33 @@ def test_cli_stats_columns_lifecycle(spark, data, capsys):
     assert line1 == line2 and line1
 
 
+def test_cli_stats_columns_resume_sketches_passing_pending_partitions(spark, tmp_path, capsys):
+    """A resumed --checkpoint --stats-columns run sketches EVERY pending
+    partition it validates, the ones that PASS included: the stats must be
+    written before the lineage marks those partitions done, or the lazy
+    pending frame they are computed from is empty by then."""
+    from pyspark.sql import functions as F
+
+    from schema_enforcer_spark.stats import merged_column_stats, stats_store_path
+
+    full_path, first_path = str(tmp_path / "full"), str(tmp_path / "first")
+    gen_transcripts(spark, n_convs=40, seed=7, num_buckets=8).write.parquet(full_path)
+    full = spark.read.parquet(full_path)
+    parts = sorted(r[0] for r in full.select("partition_id").distinct().collect())
+    assert len(parts) == 8
+    full.filter(F.col("partition_id").isin(parts[:4])).write.parquet(first_path)
+    ckpt = str(tmp_path / "ckpt")
+    argv = ["--manifest", MANIFEST, "--checkpoint", ckpt, "--stats-columns", "role"]
+    assert main([*argv, "--input", first_path]) == 0
+    assert main([*argv, "--input", full_path]) == 0
+    assert "validated" in capsys.readouterr().out
+    store = stats_store_path(ckpt)
+    sketched = {r[0] for r in spark.read.parquet(store).select("partition_id").distinct().collect()}
+    assert sketched == {str(p) for p in parts}
+    merged = merged_column_stats(spark, store).filter("col_name = 'role'").first()
+    assert (merged["n_rows"], merged["n_partitions"]) == (full.count(), 8)
+
+
 def test_cli_stats_columns_requires_checkpoint(spark, data, capsys):
     rc = main(["--manifest", MANIFEST, "--input", data["clean"], "--stats-columns", "role"])
     assert rc == 2

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from schema_enforcer_spark.manifest import validate_manifest_dict
+from schema_enforcer_spark.manifest import InvalidManifest, manifest_from_dict, validate_manifest_dict
 
 _KINDS = (
     "['aggregate', 'all_of', 'any_of', 'cardinality', 'conditional', 'const', 'contains', "
@@ -177,3 +177,38 @@ def test_error_list_spans_rules_in_order():
         f"rules/1: contains 'check' {_SCALAR} 'bogus'",
         "rules/2: range rule needs at least one bound",
     ]
+
+
+# -- sub-checks that used to pass meta-validation and then fail at plan build
+
+
+@pytest.mark.parametrize("check", ["jmespath", "expression", "prefix_items", "pattern_properties", "property_names"])
+def test_items_rejects_checks_compile_check_cannot_run(check):
+    # each used to pass meta-validation and then fail at plan build with
+    # "not a row rule"
+    rule = {"kind": "items", "column": "a", "check": check, "left": "a", "operator": "eq", "right": 1,
+            "expr": "true", "checks": [{"kind": "required"}], "pattern": "^x"}
+    with pytest.raises(InvalidManifest) as exc:
+        manifest_from_dict({"id": "m", "rules": [rule]})
+    assert exc.value.errors == [f"rules/0: items 'check' must be a scalar row-rule kind, got {check!r}"]
+
+
+@pytest.mark.parametrize(
+    "rule,error",
+    [
+        ({"kind": "any_of", "column": "a", "checks": [{"kind": "prefix_items", "checks": [{"kind": "required"}]}]},
+         "rules/0: any_of checks/0 must be a scalar row-rule kind, got 'prefix_items'"),
+        ({"kind": "prefix_items", "column": "a", "checks": [{"kind": "range"}]},
+         "rules/0: prefix_items checks/0 range needs at least one bound"),
+        ({"kind": "prefix_items", "column": "a", "checks": [{"kind": "required"}],
+          "additional_items": {"kind": "length"}},
+         "rules/0: prefix_items additional_items length needs min_length or max_length"),
+        ({"kind": "prefix_items", "column": "a", "checks": [{"kind": "required"}],
+          "additional_items": {"kind": "format", "format": "regex"}},
+         "rules/0: format 'regex' is a Python-UDF check and cannot run inside an array-element "
+         "lambda; explode the array and use a plain format rule instead"),
+    ],
+)
+def test_sub_checks_that_cannot_build_a_plan_fail_at_load(rule, error):
+    # each used to pass meta-validation and then fail at plan build
+    assert validate_manifest_dict({"id": "m", "rules": [rule]}) == [error]

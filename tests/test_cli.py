@@ -697,7 +697,58 @@ def test_cli_equals_table_via_ref_table(spark, data, tmp_path, capsys):
     assert rc == 0
 
 
-def test_validate_many_fused_one_scan(spark, data):
+_FUSED_PAIRS = {
+    # row rules only: the fused violations plan reads the input once
+    "row_only": [
+        ({
+            "id": "schemas/m1",
+            "table": "transcripts",
+            "rules": [
+                {"kind": "enum", "column": "role", "values": ["system", "user", "assistant", "tool"]},
+                {"kind": "required", "column": "text"},
+            ],
+        }, {}),
+        ({
+            "id": "schemas/m2",
+            "table": "transcripts",
+            "rules": [
+                {"kind": "range", "column": "turn_idx", "minimum": 1},
+                {"kind": "pattern", "column": "conv_id", "pattern": "^conv-"},
+            ],
+        }, {}),
+    ],
+    # table-grain rules (unique fused into the ordering window, referential
+    # against a ref table, contiguous), strict mode, and a HOST engine whose
+    # instance column differs from the PARTITION engine's
+    "table_grain": [
+        ({
+            "id": "schemas/m3",
+            "table": "transcripts",
+            "rules": [
+                {"kind": "enum", "column": "role", "values": ["system", "user", "assistant", "tool"]},
+                {"kind": "unique", "columns": ["conv_id", "turn_idx"]},
+                {"kind": "ordering", "column": "ts", "partition_by": ["conv_id"],
+                 "order_by": ["turn_idx"], "strictly": True},
+                {"kind": "referential", "columns": ["conv_id"], "ref_table": "convs",
+                 "ref_columns": ["conv_id"]},
+            ],
+        }, {}),
+        ({
+            "id": "schemas/m4",
+            "table": "transcripts",
+            "strict": True,
+            "columns": ["conv_id", "turn_idx", "role", "text", "ts"],
+            "rules": [
+                {"kind": "range", "column": "turn_idx", "minimum": 1},
+                {"kind": "contiguous", "column": "turn_idx", "partition_by": ["conv_id"]},
+            ],
+        }, {"instance_expr": "conv_id", "instance_type": "HOST"}),
+    ],
+}
+
+
+@pytest.mark.parametrize("pair", sorted(_FUSED_PAIRS))
+def test_validate_many_fused_one_scan(spark, data, pair):
     """Multi-manifest fusion (engine.validate_many): violations and verdicts
     equal the per-engine union EXACTLY, and for row-rule-only manifests the
     fused violations plan reads the input ONCE — the per-engine path costs
@@ -710,47 +761,40 @@ def test_validate_many_fused_one_scan(spark, data):
     from schema_enforcer_spark.manifest import manifest_from_dict
 
     df = spark.read.parquet(data["bad"])
-    m1 = manifest_from_dict(
-        {
-            "id": "schemas/m1",
-            "table": "transcripts",
-            "rules": [
-                {"kind": "enum", "column": "role", "values": ["system", "user", "assistant", "tool"]},
-                {"kind": "required", "column": "text"},
-            ],
-        }
-    )
-    m2 = manifest_from_dict(
-        {
-            "id": "schemas/m2",
-            "table": "transcripts",
-            "rules": [
-                {"kind": "range", "column": "turn_idx", "minimum": 1},
-                {"kind": "pattern", "column": "conv_id", "pattern": "^conv-"},
-            ],
-        }
-    )
-    engines = [ValidationEngine(m1), ValidationEngine(m2)]
-    fused = validate_many(engines, df, cache_violations=False)
+    ref_tables = {}
+    if pair == "table_grain":
+        # a duplicated key, a disordered ts and orphan conversations make
+        # every table-grain rule fire
+        df = inject(inject(df, "dup_turn"), "disordered")
+        ref_tables = {"convs": spark.read.parquet(data["convs"]).filter("conv_id < 'conv-00000012'")}
+    engines = [ValidationEngine(manifest_from_dict(m), **kw) for m, kw in _FUSED_PAIRS[pair]]
+    fused = validate_many(engines, df, ref_tables, cache_violations=False)
 
     def vkey(rows):
         return sorted(
-            (r["schema_id"], r["instance_name"], tuple(r["absolute_path"]),
-             r["failing_value"], r["message"])
+            (r["schema_id"], r["result"], r["instance_name"], r["instance_location"],
+             r["instance_type"], tuple(r["absolute_path"]), r["failing_value"], r["message"])
             for r in rows
         )
 
-    per = [e.validate(df, cache_violations=False) for e in engines]
+    per_v = [e.violations(df, ref_tables) for e in engines]
+    per_d = [e.verdicts(df, v) for e, v in zip(engines, per_v)]
+    assert fused.violations.columns == per_v[0].columns
     assert vkey(fused.violations.collect()) == vkey(
-        [r for rep in per for r in rep.violations.collect()]
+        [r for v in per_v for r in v.collect()]
     )
     assert sorted(map(tuple, fused.verdicts.collect())) == sorted(
-        tuple(r) for rep in per for r in rep.verdicts.collect()
+        tuple(r) for d in per_d for r in d.collect()
     )
-    # m1 finds enum violations (injected 'operator' roles); m2's range rule
-    # (minimum 1) fires on every turn_idx=0 row — both manifests contribute
-    assert fused.violations.filter("schema_id like 'schemas/m1/%'").count() > 0
-    assert fused.violations.filter("schema_id like 'schemas/m2/%'").count() > 0
+    # both manifests contribute, and every verdict result occurs
+    for m, _ in _FUSED_PAIRS[pair]:
+        assert fused.violations.filter(f"schema_id like '{m['id']}/%'").count() > 0
+    assert {r["result"] for r in fused.verdicts.collect()} == {"PASS", "FAIL"}
+    if pair == "table_grain":
+        kinds = {r["schema_id"].split("/")[2] for r in fused.violations.collect()}
+        assert kinds == {"enum", "unique", "ordering", "referential", "range", "contiguous", "strict_columns"}
+        assert {r["instance_type"] for r in fused.violations.collect()} == {"PARTITION", "HOST", "TABLE"}
+        return
 
     # the one-scan claim, on the plan itself
     import re
@@ -767,9 +811,7 @@ def test_validate_many_fused_one_scan(spark, data):
     # per-engine union reads it twice
     from functools import reduce
 
-    union = reduce(
-        lambda a, b: a.unionByName(b), [rep.violations for rep in per]
-    )
+    union = reduce(lambda a, b: a.unionByName(b), per_v)
     assert n_scans(union) == 2
 
 

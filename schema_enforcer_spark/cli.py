@@ -386,6 +386,7 @@ def _automap_main(args) -> int:
                 print(f"PASS | [{p['grain']}] {p['instance_name']} [SCHEMA ID] {p['schema_id']}")
         if not report.passes():
             any_fail = True
+        report.unpersist()
     if any_fail:
         return 1
     print("ALL SCHEMA VALIDATION CHECKS PASSED")
@@ -505,7 +506,7 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql.functions import lit as F_lit
 
     from schema_enforcer_spark.checkpoint import CheckpointManager
-    from schema_enforcer_spark.engine import ValidationEngine
+    from schema_enforcer_spark.engine import ValidationEngine, validate_many
     from schema_enforcer_spark.manifest import InvalidManifest, load_manifest
 
     import os as _os
@@ -791,23 +792,14 @@ def main(argv: list[str] | None = None) -> int:
             return 0
         print(f"validated {n_pending} pending rows")
     else:
-        if len(engines) > 1:
-            # ONE scan for every bound manifest's row rules: each engine's
-            # violation array rides a single projection and one explode
-            # emits all manifests' rows (engine.validate_many) — the
-            # per-engine path was M full scans of the input for row-local
-            # work. Sinks/verdict logic below operate on the union; verdict
-            # rows carry schema_id, so per-manifest results stay separable.
-            from schema_enforcer_spark.engine import validate_many
-
-            report = validate_many(engines, df, ref_tables)
-        else:
-            report = eng.validate(df, ref_tables)
+        # ONE scan for every bound manifest's row rules; verdict rows carry
+        # schema_id, so per-manifest results stay separable
+        report = validate_many(engines, df, ref_tables)
 
     # the report fans out into several actions below (writes, lineage scan,
-    # FAIL-line collect, passes(), counts) — each would otherwise re-run the
-    # full pending-subset validation DAG from the scan up
-    report.violations.persist()
+    # FAIL-line collect, passes(), counts): its violations are already
+    # persisted (report.cached); persist the verdicts too, or each action
+    # would re-run the verdict aggregation
     report.verdicts.persist()
 
     # the SINK view of violations: optionally capped per (rule, instance).
@@ -921,9 +913,8 @@ def main(argv: list[str] | None = None) -> int:
     n = report.violations.count() if any_fail else 0
     # release the fan-out caches — a long-lived session (tests, notebooks)
     # calling main() repeatedly must not accumulate persisted DataFrames
-    report.violations.unpersist()
     report.verdicts.unpersist()
-    report.unpersist()  # also releases validate_many's tagged parent cache
+    report.unpersist()
     ids = ", ".join(e.manifest.id for e in engines)
     if any_fail:
         print(f"{n} violation(s) [{ids}]")

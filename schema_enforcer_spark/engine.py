@@ -18,6 +18,13 @@ Catalyst rules needed):
    a PASS row (default-PASS semantics, A4 —
    /root/reference/schema_enforcer/schemas/validator.py:39-44).
 
+One validation path: :func:`validate_many` checks an input against every
+engine in one row-rule scan, and ``ValidationEngine.validate`` is its
+one-engine call; the row explode (:func:`_row_violation_rows`) is the one
+place the InferFiltersFromGenerate defense lives. Every plan memo goes
+through :class:`_PlanMemo` (bounded, identity-pinned, never for a manifest
+with an eager rule kind).
+
 Violation-row schema mirrors the reference's ValidationResult
 (/root/reference/schema_enforcer/validation.py:11-32).
 """
@@ -62,14 +69,73 @@ def _or_empty(column: Column, violations: Column) -> Column:
     return F.when(column.isNull(), F.array().cast(_VIOLATION_ARRAY_T)).otherwise(violations)
 
 
+def _violation(schema_id: Column, path: Column, failing: Column, message: Column, tag: list[Column]) -> Column:
+    """One row violation as the struct the fused explode emits: the rule's
+    four fields plus the engine's *tag* (instance_name, instance_location,
+    instance_type and the internal ``_mid`` manifest id)."""
+    return F.struct(
+        schema_id.alias("schema_id"),
+        path.alias("absolute_path"),
+        failing.alias("failing_value"),
+        message.alias("message"),
+        *tag,
+    )
+
+
+class _PlanMemo:
+    """Bounded memo for driver-side plan assembly, keyed on object identity.
+
+    Building a plan costs hundreds of driver↔JVM round trips (0.2-0.5 s
+    for a 10-20-rule manifest, measured r7) and depends only on its inputs'
+    identities, so a repeat call over the same objects (bench trials, a
+    report's several consumers) reuses the built DataFrame or Column. Plans
+    only: the memoized value is lazy, every action still computes from the
+    input, and nothing is cached.
+
+    A hit needs the same *tag* and every pinned object ``is``-identical; the
+    entry holds its pins, so no id() is reused while it lives. At most
+    ``SIZE`` entries, the oldest evicted first. A plan over a manifest with
+    an eager rule kind (its evaluator runs Spark jobs at plan build:
+    equals_table's hash precompare, drift's histogram collect) is never
+    memoized — that would reuse computed DATA, not a plan."""
+
+    SIZE = 8
+
+    def __init__(self) -> None:
+        self._store: dict[tuple, tuple] = {}
+
+    def __len__(self) -> int:
+        return len(self._store)
+
+    def get(self, tag: tuple, pins: tuple, build, manifests: tuple[Manifest, ...] = ()):
+        if any(r.rule_kind.eager for m in manifests for r in m.table_rules):
+            return build()
+        key = (tag, tuple(map(id, pins)))
+        hit = self._store.get(key)
+        if hit is not None and all(a is b for a, b in zip(hit[0], pins)):
+            return hit[1]
+        out = build()
+        if len(self._store) >= self.SIZE:
+            self._store.pop(next(iter(self._store)))
+        self._store[key] = (pins, out)
+        return out
+
+
+def _ref_pins(ref_tables: dict[str, DataFrame]) -> tuple[tuple, tuple]:
+    """(sorted ref-table names, the tables in that order): the memo tag and
+    pins a plan over *ref_tables* is keyed on."""
+    names = tuple(sorted(ref_tables))
+    return names, tuple(ref_tables[k] for k in names)
+
+
 @dataclass
 class ValidationReport:
     violations: DataFrame   # one row per (instance, rule, offending value)
     verdicts: DataFrame     # one row per instance: PASS/FAIL + n_violations
-    # the frame actually persisted, when it differs from `violations` —
-    # validate_many persists the manifest-tagged union and returns a
-    # projection of it; unpersisting the projection would NOT release the
-    # parent cache (Dataset.unpersist is per-plan, not per-lineage)
+    # the one persisted frame: validate_many's manifest-tagged union, of
+    # which `violations` is a projection. Release it through unpersist() —
+    # unpersisting the projection would NOT release it (Dataset.unpersist
+    # is per-plan, not per-lineage)
     cached: DataFrame | None = None
 
     def passes(self) -> bool:
@@ -78,14 +144,12 @@ class ValidationReport:
         return self.violations.limit(1).count() == 0
 
     def unpersist(self) -> None:
-        """Release the cached violations (validate() persists them so the
+        """Release the cached violations (validate_many persists them so the
         verdict aggregation doesn't recompute every rule)."""
-        for frame in (self.violations, self.cached):
-            if frame is None:
-                continue
+        if self.cached is not None:
             try:
-                frame.unpersist()
-            except Exception:  # noqa: BLE001 - not cached / session gone
+                self.cached.unpersist()
+            except Exception:  # noqa: BLE001 - session gone
                 pass
 
     def rule_summary(self) -> DataFrame:
@@ -190,13 +254,10 @@ class ValidationEngine:
         # stored drift baselines (rule id → compute_histogram dict) — the
         # --write-baseline/--baseline lifecycle; inline rule baselines win
         self.drift_baselines = drift_baselines or {}
-        # prepared-plan memo for _row_violation_array, keyed by input
-        # DataFrame identity (see that method); (df, column) pairs — the df
-        # reference pins the id() against reuse after GC
-        self._row_arr_memo: dict[int, tuple[DataFrame, Column | None]] = {}
-        # prepared-plan memo for violations()/verdicts() construction (see
-        # violations() — lazy-plan manifests only, never eager rule kinds)
-        self._plan_memo: dict[tuple, tuple] = {}
+        # prepared-plan memos (see _PlanMemo): row-violation arrays, and
+        # the violations()/verdicts()/validate_many() plans
+        self._row_arr_memo = _PlanMemo()
+        self._plan_memo = _PlanMemo()
 
     # -- helpers -----------------------------------------------------------
 
@@ -625,29 +686,19 @@ class ValidationEngine:
         return out
 
     def _row_violation_array(self, df: DataFrame) -> Column | None:
-        """Every row rule's violations for one row as ONE
-        ``array<struct{schema_id, absolute_path, failing_value, message}>``
-        column — the single-pass building block shared by
-        :meth:`row_violations` (single manifest) and :func:`validate_many`
-        (multi-manifest fused scan). None when the manifest has no row
-        rules.
+        """Every row rule's violations for one row as ONE array of
+        :func:`_violation` structs, each tagged with this engine's instance
+        column, location, instance type and manifest id — the single-pass
+        building block :func:`_row_violation_rows` explodes. None when the
+        manifest has no row rules.
 
-        The built Column is memoized per input-DataFrame identity:
-        assembling it costs hundreds of driver↔JVM round trips (~0.2-0.3 s
-        for a 10-20-rule manifest — measured r7, a third of the whole
-        validate() wall time on a warm 2.3M-row input) and depends only on
-        the manifest and the input's schema, so re-validating the same
-        DataFrame (multiple report consumers, repeated CLI tables, bench
-        trials) shouldn't rebuild it. This is plan PREPARATION reuse only —
-        the expression is lazy, so every action still computes from the
-        input; no data or results are cached. Keyed by id(df) with the df
-        pinned in the entry (never by schema alone: compiled pieces may
-        hold df-bound attribute references, which don't transfer to a
-        different DataFrame of the same shape)."""
-        memo_key = id(df)
-        hit = self._row_arr_memo.get(memo_key)
-        if hit is not None and hit[0] is df:
-            return hit[1]
+        Memoized per input-DataFrame identity: the Column depends only on
+        the manifest and the input (never keyed by schema alone — compiled
+        pieces may hold df-bound attribute references, which don't transfer
+        to a different DataFrame of the same shape)."""
+        return self._row_arr_memo.get((), (df,), lambda: self._row_violation_array_impl(df))
+
+    def _row_violation_array_impl(self, df: DataFrame) -> Column | None:
         compiled = compile_row_rules(df, self.manifest) + self._compile_conditionals(df)
         item_arrays = (
             self._items_violation_arrays(df)
@@ -655,63 +706,36 @@ class ValidationEngine:
             + self._pattern_properties_violation_arrays(df)
             + self._property_names_violation_arrays(df)
         )
-        if not compiled and not item_arrays:
-            combined = None
-        else:
-            structs = [
-                F.when(
-                    ~F.coalesce(cr.predicate, F.lit(True)),
-                    F.struct(
-                        F.lit(cr.rule_id).alias("schema_id"),
-                        self._path(df, cr.column).alias("absolute_path"),
-                        cr.failing_value.alias("failing_value"),
-                        cr.message.alias("message"),
-                    ),
-                )
-                for cr in compiled
-            ]
-            arrays = ([F.array_compact(F.array(*structs))] if structs else []) + item_arrays
-            combined = arrays[0] if len(arrays) == 1 else F.concat(*arrays)
-        if len(self._row_arr_memo) >= 8:  # bounded: drop the oldest entry
-            self._row_arr_memo.pop(next(iter(self._row_arr_memo)))
-        self._row_arr_memo[memo_key] = (df, combined)
-        return combined
-
-    def row_violations(self, df: DataFrame) -> DataFrame | None:
-        combined = self._row_violation_array(df)
-        if combined is None:
-            return None
-        exploded = (
-            df.select(
-                self._instance_col(df).alias("instance_name"),
-                combined.alias("_v"),
-            )
-            # explode_OUTER + a post-generate null filter, NOT a plain
-            # explode: with explode, InferFiltersFromGenerate injects a
-            # `size(_v) > 0` filter that predicate pushdown then sinks
-            # BELOW the projection, re-inlining the entire violation-array
-            # expression (and every expensive input it references — json
-            # parses, array builds) into a second full per-row evaluation
-            # (r7: q19's pushed filter rebuilt its array ~20x per row).
-            # explode_outer keeps empty arrays (one NULL row each) so no
-            # filter is inferred; the null filter runs on the generate
-            # OUTPUT — a cheap IsNotNull on a materialized struct — and
-            # cannot be pushed below the Generate. Result multiset is
-            # identical: _v is never NULL (every branch yields an array),
-            # so outer only adds the null rows the filter removes.
-            .select("instance_name", F.explode_outer("_v").alias("v"))
-            .filter(F.col("v").isNotNull())
-        )
-        return exploded.select(
-            F.col("v.schema_id").alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
+        tag = [
+            self._instance_col(df).alias("instance_name"),
             F.lit(self.manifest.table).alias("instance_location"),
             F.lit(self.instance_type).alias("instance_type"),
-            F.col("v.absolute_path").alias("absolute_path"),
-            F.col("v.failing_value").alias("failing_value"),
-            F.col("v.message").alias("message"),
-        )
+            F.lit(self.manifest.id).alias("_mid"),
+        ]
+        arrays = [
+            F.array_compact(F.array(*[
+                F.when(
+                    ~F.coalesce(cr.predicate, F.lit(True)),
+                    _violation(F.lit(cr.rule_id), self._path(df, cr.column), cr.failing_value, cr.message, tag),
+                )
+                for cr in compiled
+            ]))
+        ] if compiled else []
+        # the entry-array builders emit untagged structs (row_fail_count
+        # sizes them as they are); tag their elements here
+        arrays += [
+            F.transform(a, lambda v: _violation(v["schema_id"], v["absolute_path"], v["failing_value"], v["message"], tag))
+            for a in item_arrays
+        ]
+        if not arrays:
+            return None
+        return arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+
+    def row_violations(self, df: DataFrame) -> DataFrame | None:
+        """Row-rule violations alone: the one-engine call of
+        :func:`_row_violation_rows`."""
+        rows = _row_violation_rows([self], df)
+        return None if rows is None else rows.drop("_mid")
 
     # -- table rules -------------------------------------------------------
 
@@ -1743,34 +1767,16 @@ class ValidationEngine:
         include_row_rules: bool = True,
     ) -> DataFrame:
         """Assemble the full violations frame. Construction is memoized per
-        (input identity, ref-table identities, include_row_rules) when every
-        rule builds lazily — assembling 15+ rule plans costs ~0.3-0.5 s of
-        driver↔JVM round trips (measured r7) and repeat consumers (bench
-        trials, report + quarantine over one input) shouldn't pay it twice.
-        Plan preparation only: actions on the returned frame always
-        recompute from the input; manifests with any eager rule kind
-        (equals_table, drift) are never memoized."""
+        (input identity, ref-table identities, include_row_rules) through
+        :class:`_PlanMemo`; manifests with an eager rule kind never are."""
         ref_tables = ref_tables or {}
-        memo_key = None
-        # an eager kind's evaluator runs Spark jobs while the plan is built
-        # (equals_table's hash precompare, drift's histogram collect):
-        # memoizing it would reuse computed DATA across calls, not a plan
-        if not any(r.rule_kind.eager for r in self.manifest.table_rules):
-            memo_key = (
-                id(df),
-                tuple(sorted((k, id(v)) for k, v in ref_tables.items())),
-                include_row_rules,
-            )
-            hit = self._plan_memo.get(memo_key)
-            # the pinned refs guard id() reuse after GC, like _row_arr_memo
-            if hit is not None and hit[0] is df and all(a is b for a, b in zip(hit[1], ref_tables.values())):
-                return hit[2]
-        out = self._violations_impl(df, ref_tables, include_row_rules)
-        if memo_key is not None:
-            if len(self._plan_memo) >= 8:
-                self._plan_memo.pop(next(iter(self._plan_memo)))
-            self._plan_memo[memo_key] = (df, tuple(ref_tables.values()), out)
-        return out
+        names, refs = _ref_pins(ref_tables)
+        return self._plan_memo.get(
+            ("violations", include_row_rules, names),
+            (df, *refs),
+            lambda: self._violations_impl(df, ref_tables, include_row_rules),
+            (self.manifest,),
+        )
 
     def _violations_impl(
         self,
@@ -1827,18 +1833,9 @@ class ValidationEngine:
         return reduce(lambda a, b: a.unionByName(b), parts)
 
     def verdicts(self, df: DataFrame, violations: DataFrame) -> DataFrame:
-        # construction-only memo, same contract as violations(): the verdict
-        # plan is always lazy, so keying on the exact (df, violations) pair
-        # of inputs reuses pure plan assembly and nothing else
-        memo_key = ("verdicts", id(df), id(violations))
-        hit = self._plan_memo.get(memo_key)
-        if hit is not None and hit[0] is df and hit[1] is violations:
-            return hit[2]
-        out = self._verdicts_impl(df, violations)
-        if len(self._plan_memo) >= 8:
-            self._plan_memo.pop(next(iter(self._plan_memo)))
-        self._plan_memo[memo_key] = (df, violations, out)
-        return out
+        # construction-only memo: the verdict plan is always lazy (no eager
+        # evaluator runs here), so the exact (df, violations) pair keys it
+        return self._plan_memo.get(("verdicts",), (df, violations), lambda: self._verdicts_impl(df, violations))
 
     def _verdicts_impl(self, df: DataFrame, violations: DataFrame) -> DataFrame:
         # The universe is every data partition PLUS any instance name that
@@ -1892,143 +1889,48 @@ class ValidationEngine:
         ref_tables: dict[str, DataFrame] | None = None,
         cache_violations: bool = True,
     ) -> ValidationReport:
-        """Full report. Violations feed BOTH the violations output and the
-        verdict aggregation; without persistence Spark would recompute every
-        rule for each consumer — persist by default (violation sets are
-        tiny relative to input; spill-safe MEMORY_AND_DISK)."""
-        violations = self.violations(df, ref_tables)
-        if cache_violations:
-            from pyspark.storagelevel import StorageLevel
-
-            violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-        return ValidationReport(violations=violations, verdicts=self.verdicts(df, violations))
+        """Full report: the one-engine case of :func:`validate_many`."""
+        return validate_many([self], df, ref_tables, cache_violations)
 
 
-def _tag_element(inst: Column, mid: str, loc: str, itype: str):
-    # PySpark HOF lambdas must be single-arg closures (no default args —
-    # CLAUDE.md), so the per-engine constants ride a factory closure
-    def _tag(v: Column) -> Column:
-        return F.struct(
-            v["schema_id"].alias("schema_id"),
-            v["absolute_path"].alias("absolute_path"),
-            v["failing_value"].alias("failing_value"),
-            v["message"].alias("message"),
-            inst.alias("instance_name"),
-            F.lit(loc).alias("instance_location"),
-            F.lit(itype).alias("instance_type"),
-            F.lit(mid).alias("_mid"),
+def _row_violation_rows(engines: list[ValidationEngine], df: DataFrame) -> DataFrame | None:
+    """Every engine's row-rule violations from ONE projection and ONE
+    explode over the concatenated tagged arrays: VIOLATION_COLUMNS plus the
+    internal ``_mid`` manifest tag. None when no engine has row rules."""
+    arrays = [a for e in engines if (a := e._row_violation_array(df)) is not None]
+    if not arrays:
+        return None
+    return (
+        df.select((arrays[0] if len(arrays) == 1 else F.concat(*arrays)).alias("_v"))
+        # the OUTER explode + a post-generate null filter, NOT a plain
+        # explode: with explode, InferFiltersFromGenerate injects a
+        # `size(_v) > 0` filter that predicate pushdown then sinks BELOW the
+        # projection, re-inlining the entire violation-array expression (and
+        # every expensive input it references — json parses, array builds)
+        # into a second full per-row evaluation (r7: q19's pushed filter
+        # rebuilt its array ~20x per row). The outer form keeps empty arrays
+        # (one NULL row each) so no filter is inferred; the null filter runs
+        # on the generate OUTPUT — a cheap IsNotNull on a materialized
+        # struct — and cannot be pushed below the Generate. Result multiset
+        # is identical: _v is never NULL (every branch yields an array), so
+        # outer only adds the null rows the filter removes.
+        .select(F.explode_outer("_v").alias("v"))
+        .filter(F.col("v").isNotNull())
+        .select(
+            *[F.lit("FAIL").alias(c) if c == "result" else F.col(f"v.{c}").alias(c) for c in VIOLATION_COLUMNS],
+            F.col("v._mid").alias("_mid"),
         )
+    )
 
-    return _tag
 
-
-def validate_many(
-    engines: list[ValidationEngine],
-    df: DataFrame,
-    ref_tables: dict[str, DataFrame] | None = None,
-    cache_violations: bool = True,
-) -> ValidationReport:
-    """Validate one input against MANY manifests in ONE scan for all row
-    rules.
-
-    The per-engine path (``[e.validate(df) for e in engines]``) scans the
-    input once per manifest — at 100 TB with M bound manifests that is M
-    full-table reads for work that is all row-local. Here every engine
-    contributes its combined row-violation array
-    (:meth:`ValidationEngine._row_violation_array`) to a SINGLE projection;
-    one ``explode`` over the concatenated (manifest-tagged) arrays emits
-    every manifest's violation rows from one pass — the same fusion the
-    CLI's ``--quarantine`` flag already uses for its validity flag
-    (``row_fail_count`` summed across engines). Table-grain rules
-    (unique/window/aggregate/referential/drift) keep their own per-engine
-    exchanges — they aggregate on different keys, so a shared scan buys
-    nothing Spark wouldn't shuffle anyway.
-
-    Verdicts stay per-manifest: the fused violations are persisted once and
-    split by the internal ``_mid`` manifest tag (rule ids alone can't
-    attribute a violation — a rule may carry a user-supplied id that doesn't
-    embed the manifest id). The returned report's ``cached`` handle is the
-    tagged parent frame; ``unpersist()`` releases it.
-
-    Reference analogue: one data file is validated against every matching
-    schema in a single pass over the file's contents
-    (/root/reference/schema_enforcer/instances/file.py:178-201, one
-    ``schema.validate`` per matched schema over the same loaded content).
-    """
-    ref_tables = ref_tables or {}
-    if len(engines) == 1:
-        return engines[0].validate(df, ref_tables, cache_violations=cache_violations)
-    # Construction memo, same contract as ValidationEngine.violations():
-    # assembling the fused multi-manifest plan costs ~0.3 s of driver↔JVM
-    # round trips; everything below is lazy plan building when no engine
-    # carries an eager rule kind, so repeat calls over the same inputs
-    # (bench trials, report consumers) reuse the prepared (all_v, verdicts)
-    # pair — persist/unpersist still happens per call, actions recompute.
-    memo_host = engines[0]._plan_memo if engines else None
-    memo_key = None
-    if memo_host is not None and not any(
-        r.rule_kind.eager for e in engines for r in e.manifest.table_rules
-    ):
-        memo_key = (
-            "validate_many",
-            tuple(id(e) for e in engines),
-            id(df),
-            tuple(sorted((k, id(v)) for k, v in ref_tables.items())),
-        )
-        hit = memo_host.get(memo_key)
-        if (
-            hit is not None
-            and hit[0] is df
-            and all(a is b for a, b in zip(hit[1], engines))
-            and len(hit[1]) == len(engines)
-        ):
-            all_v, verdicts = hit[2], hit[3]
-            if cache_violations:
-                from pyspark.storagelevel import StorageLevel
-
-                all_v = all_v.persist(StorageLevel.MEMORY_AND_DISK)
-            return ValidationReport(
-                violations=all_v.drop("_mid"),
-                verdicts=verdicts,
-                cached=all_v if cache_violations else None,
-            )
-    tagged: list[Column] = []
-    for e in engines:
-        arr = e._row_violation_array(df)
-        if arr is not None:
-            tagged.append(
-                F.transform(
-                    arr,
-                    _tag_element(
-                        e._instance_col(df), e.manifest.id, e.manifest.table, e.instance_type
-                    ),
-                )
-            )
+def _validate_plan(
+    engines: list[ValidationEngine], df: DataFrame, ref_tables: dict[str, DataFrame]
+) -> tuple[DataFrame, DataFrame]:
+    """(manifest-tagged violations, verdicts) — the lazy plans behind
+    :func:`validate_many`."""
     parts: list[DataFrame] = []
-    if tagged:
-        combined = tagged[0] if len(tagged) == 1 else F.concat(*tagged)
-        parts.append(
-            df.select(combined.alias("_v"))
-            # explode_outer + null filter, not explode: same
-            # InferFiltersFromGenerate duplicate-evaluation defense as
-            # row_violations — the inferred size() filter would push below
-            # the projection and re-run every manifest's full violation
-            # array a second time per row. _v is never NULL, so the result
-            # multiset is unchanged.
-            .select(F.explode_outer("_v").alias("v"))
-            .filter(F.col("v").isNotNull())
-            .select(
-                F.col("v.schema_id").alias("schema_id"),
-                F.lit("FAIL").alias("result"),
-                F.col("v.instance_name").alias("instance_name"),
-                F.col("v.instance_location").alias("instance_location"),
-                F.col("v.instance_type").alias("instance_type"),
-                F.col("v.absolute_path").alias("absolute_path"),
-                F.col("v.failing_value").alias("failing_value"),
-                F.col("v.message").alias("message"),
-                F.col("v._mid").alias("_mid"),
-            )
-        )
+    if (rows := _row_violation_rows(engines, df)) is not None:
+        parts.append(rows)
     for e in engines:
         # row-rule-only manifests contribute nothing here — skipping them
         # keeps empty-relation unions out of the fused plan
@@ -2046,21 +1948,68 @@ def validate_many(
             )
         )
     all_v = reduce(lambda a, b: a.unionByName(b), parts)
+    # the verdict input is a fresh filter per engine, so _verdicts_impl:
+    # the verdicts() memo could never hit on it
+    verdicts = reduce(
+        lambda a, b: a.unionByName(b),
+        [
+            e._verdicts_impl(df, all_v.filter(F.col("_mid") == e.manifest.id).drop("_mid"))
+            for e in engines
+        ],
+    )
+    return all_v, verdicts
+
+
+def validate_many(
+    engines: list[ValidationEngine],
+    df: DataFrame,
+    ref_tables: dict[str, DataFrame] | None = None,
+    cache_violations: bool = True,
+) -> ValidationReport:
+    """Validate one input against one or MANY manifests in ONE scan for all
+    row rules — the only validation path (``ValidationEngine.validate`` is
+    the one-engine call).
+
+    A per-engine loop (one violations plan per manifest) would scan the
+    input once per manifest — at 100 TB with M bound manifests that is M
+    full-table reads for work that is all row-local. Here every engine
+    contributes its tagged row-violation array
+    (:meth:`ValidationEngine._row_violation_array`) to a SINGLE projection;
+    one ``explode`` over the concatenated arrays emits every manifest's
+    violation rows from one pass (:func:`_row_violation_rows`) — the same
+    fusion the CLI's ``--quarantine`` flag uses for its validity flag
+    (``row_fail_count`` summed across engines). Table-grain rules
+    (unique/window/aggregate/referential/drift) keep their own per-engine
+    exchanges — they aggregate on different keys, so a shared scan buys
+    nothing Spark wouldn't shuffle anyway.
+
+    Verdicts stay per-manifest: the fused violations are persisted once
+    (``cache_violations``, spill-safe MEMORY_AND_DISK — violation sets are
+    tiny relative to the input, and without it every consumer recomputes
+    every rule) and split by the internal ``_mid`` manifest tag (rule ids
+    alone can't attribute a violation — a rule may carry a user-supplied id
+    that doesn't embed the manifest id). The returned report's ``cached``
+    handle is the tagged parent frame; ``unpersist()`` releases it. Plan
+    assembly is memoized on the first engine (:class:`_PlanMemo`); persist
+    still happens per call.
+
+    Reference analogue: one data file is validated against every matching
+    schema in a single pass over the file's contents
+    (/root/reference/schema_enforcer/instances/file.py:178-201, one
+    ``schema.validate`` per matched schema over the same loaded content).
+    """
+    ref_tables = ref_tables or {}
+    names, refs = _ref_pins(ref_tables)
+    all_v, verdicts = engines[0]._plan_memo.get(
+        ("validate_many", names),
+        (df, *engines, *refs),
+        lambda: _validate_plan(engines, df, ref_tables),
+        tuple(e.manifest for e in engines),
+    )
     if cache_violations:
         from pyspark.storagelevel import StorageLevel
 
         all_v = all_v.persist(StorageLevel.MEMORY_AND_DISK)
-    verdicts = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            e.verdicts(df, all_v.filter(F.col("_mid") == e.manifest.id).drop("_mid"))
-            for e in engines
-        ],
-    )
-    if memo_key is not None:
-        if len(memo_host) >= 8:
-            memo_host.pop(next(iter(memo_host)))
-        memo_host[memo_key] = (df, tuple(engines), all_v, verdicts)
     return ValidationReport(
         violations=all_v.drop("_mid"),
         verdicts=verdicts,

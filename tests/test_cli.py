@@ -457,7 +457,14 @@ def test_cli_automap_per_host_binding(spark, tmp_path, capsys):
         "    column: os_version\n"
         "    pattern: '^[0-9]+\\.[0-9]+$'\n"
     )
+    # each manifest's report is released: a long-lived session calling
+    # main() repeatedly must not accumulate persisted frames
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = n_persisted()
     rc = main(["--manifest", str(mdir), "--inventory", str(inv), "--automap", "--show-pass"])
+    assert n_persisted() == before
     out = capsys.readouterr().out
     assert rc == 1  # switch1's enum violation
     assert "FAIL | [ERROR] 'spinny' is not one of ['switch', 'spine', 'leaf'] [HOST] switch1" in out
@@ -471,6 +478,7 @@ def test_cli_automap_per_host_binding(spark, tmp_path, capsys):
     # fix the violation → clean exit
     (inv / "host_vars" / "switch1.yml").write_text("role: spine\n")
     rc = main(["--manifest", str(mdir), "--inventory", str(inv), "--automap"])
+    assert n_persisted() == before
     out = capsys.readouterr().out
     assert rc == 0
     assert "ALL SCHEMA VALIDATION CHECKS PASSED" in out

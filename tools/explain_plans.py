@@ -73,6 +73,15 @@ def _marker_count(plan: str, marker: str) -> int:
     return plan.lower().count(marker.lower())
 
 
+def _size_conditions(plan: str) -> list[str]:
+    """Filter conditions that test an array's size(). On a row-violation
+    plan one means InferFiltersFromGenerate inferred `size(_v) > 0` from a
+    plain explode, and pushdown re-inlined the whole violation array below
+    the projection (a second full evaluation per row); the outer explode +
+    null filter leaves only `isnotnull(v)`."""
+    return [ln.strip() for ln in plan.splitlines() if ln.lstrip().startswith("Condition :") and "size(" in ln]
+
+
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
@@ -111,6 +120,10 @@ def main() -> None:
         notes1.append("OK: exactly one parquet scan for all 11 rules")
     if "WholeStageCodegen" in p1:
         notes1.append("OK: whole-stage codegen covers the projection")
+    if bad1 := _size_conditions(p1):
+        problems.append(f"row-rule pass filters on an array size (inferred from a plain explode): {bad1}")
+    else:
+        notes1.append("OK: no size() filter condition — the violation array is evaluated once per row")
     sections.append(("Row-rule single-pass projection (11 rules, one scan)", p1, notes1))
 
     # 2. fused window pass
@@ -463,6 +476,10 @@ def main() -> None:
         problems.append("fused multi-manifest pass contains an Exchange (should be scan -> project -> explode)")
     else:
         notes21.append("OK: no Exchange — row-local work stays row-local across manifests")
+    if bad21 := _size_conditions(p21):
+        problems.append(f"fused multi-manifest pass filters on an array size (inferred from a plain explode): {bad21}")
+    else:
+        notes21.append("OK: no size() filter condition — the fused violation array is evaluated once per row")
     sections.append(("Fused multi-manifest row rules (validate_many: 2 manifests, one scan)", p21, notes21))
 
     # 22. equals_table at the north-star grain with CO-PARTITIONED staging:

@@ -8,7 +8,10 @@ Checked properties:
 - fused window pass: exactly ONE Exchange for ordering+contiguity+unique;
 - referential: BroadcastHashJoin LeftAnti (never a shuffled join for a
   dim-sized reference);
-- filter pushdown: partition/row-group filters reach the parquet scan.
+- filter pushdown: partition/row-group filters reach the parquet scan;
+- per-evaluator exchange counts (standalone unique, aggregate plain and
+  salted, rate_limit, and zero for the items, prefix_items and
+  property_names entry arrays).
 """
 
 from __future__ import annotations
@@ -770,6 +773,56 @@ def main() -> None:
     if "CartesianProduct" in p27:
         problems.append("outlier rule planned a CartesianProduct")
     sections.append(("outlier rule (q27: bounds broadcast, two scans by design)", p27, notes27))
+
+    # 28. one evaluator per section over a small synthetic frame (no files:
+    # a Range source keeps the plans run-stable), pinning each evaluator's
+    # exchange count — table-grain rules shuffle only on their own keys
+    # (the salted aggregate twice: (group, salt) then group), and the
+    # entry-array kinds ride the row projection with none at all
+    syn28 = spark.range(40).select(
+        F.concat(F.lit("c"), (F.col("id") % 4).cast("string")).alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        (F.col("id") % 5).alias("user_id"),
+        (F.col("id") * 3).alias("ts_epoch"),
+        F.array(F.col("id") % 7, F.col("id") % 3, F.col("id")).alias("nums"),
+        F.create_map(
+            F.concat(F.lit("k"), (F.col("id") % 3).cast("string")), F.col("id").cast("string")
+        ).alias("attrs"),
+    )
+    cases28 = [
+        ("unique rule, standalone (groupBy on the key)", 1,
+         {"kind": "unique", "columns": ["user_id", "turn_idx"]}),
+        ("aggregate rule (one groupBy, both sides in one agg)", 1,
+         {"kind": "aggregate", "group_by": ["conv_id"], "left": {"fn": "count"},
+          "operator": "lte", "right": 5}),
+        ("aggregate rule with salt (two-phase: (group, salt) then group)", 2,
+         {"kind": "aggregate", "group_by": ["conv_id"], "left": {"fn": "sum", "column": "user_id"},
+          "operator": "lte", "right": {"fn": "count", "scale": 2}, "salt": 4}),
+        ("rate_limit rule (one window exchange on the partition key)", 1,
+         {"kind": "rate_limit", "partition_by": ["user_id"], "order_by": ["ts_epoch"],
+          "window_seconds": 10, "max_count": 2}),
+        ("items rule (transform on the row projection)", 0,
+         {"kind": "items", "column": "nums", "check": "range", "maximum": 5}),
+        ("prefix_items rule, additional_items false", 0,
+         {"kind": "prefix_items", "column": "nums",
+          "checks": [{"kind": "range", "maximum": 5}, {"kind": "enum", "values": [0, 1]}],
+          "additional_items": False}),
+        ("prefix_items rule, additional_items check", 0,
+         {"kind": "prefix_items", "column": "nums", "checks": [{"kind": "range", "maximum": 5}],
+          "additional_items": {"kind": "range", "minimum": 10}}),
+        ("property_names rule (transform over map keys)", 0,
+         {"kind": "property_names", "column": "attrs", "check": "pattern", "pattern": "^k[01]$"}),
+    ]
+    for title28, want28, rule28 in cases28:
+        m28 = _mfd26({"id": "schemas/plans_evaluators", "table": "synthetic", "rules": [rule28]})
+        p28 = _formatted(ValidationEngine(m28).violations(syn28))
+        notes28 = []
+        n_ex28 = len(re.findall(r"^\(\d+\) Exchange\s*$", p28, re.M))
+        if n_ex28 == want28:
+            notes28.append(f"OK: {n_ex28} Exchange(s), as pinned")
+        else:
+            problems.append(f"{rule28['kind']} ({title28}): {n_ex28} Exchanges (pinned {want28})")
+        sections.append((title28, p28, notes28))
 
     out = io.StringIO()
     out.write("# PLANS — physical-plan audit (generated by tools/explain_plans.py)\n\n")

@@ -38,6 +38,12 @@ class CompiledRule:
     failing_value: Column   # string-cast offending value (F5 coercion, validation.py:19)
 
 
+def rule_message(rule: Rule, default: Column | str) -> Column:
+    """A violation's message: the rule's own ``message`` when it sets a
+    non-empty one, else *default* (a str becomes a literal)."""
+    return F.lit(rule.message_or(default))
+
+
 def _dtype_of(df: DataFrame, name: str) -> T.DataType:
     """Resolve a (possibly dotted) column path to its data type. A dot means
     struct-field traversal — the nested-document analogue of the reference's
@@ -340,22 +346,22 @@ def compile_row_rule(df: DataFrame, manifest_id: str, rule: Rule) -> CompiledRul
         col_name = rule.get("column")
         if col_name and not has_column_path(df, col_name):
             raise ValueError(f"expression rule renders column {col_name!r}, which the input lacks")
-        msg = F.lit(rule.get("message") or f"does not satisfy {rule.params['expr']!r}")
+        msg = rule_message(rule, f"does not satisfy {rule.params['expr']!r}")
         fv = (
             py_repr(F.col(col_name), _dtype_of(df, col_name)) if col_name else F.lit(None).cast("string")
         )
-        rid = rule.get("id") or f"{manifest_id}/expression/{col_name or '*'}"
+        rid = rule.rule_id(manifest_id, col_name or "*")
         return CompiledRule(rule_id=rid, column=col_name, predicate=pred, message=msg, failing_value=fv)
     col_name = rule.get("column")
     col = F.col(col_name) if col_name else None
     dtype = _dtype_of(df, col_name) if col_name else None
     label = col_name.split(".")[-1] if col_name else "*"
     pred, msg = compile_check(col, dtype, rule.kind, rule.get, label)
-    if custom_msg := rule.get("message"):
-        msg = F.lit(custom_msg)
     fv = col.cast("string") if col_name else F.lit(None).cast("string")
-    rid = rule.get("id") or f"{manifest_id}/{rule.kind}/{col_name or '*'}"
-    return CompiledRule(rule_id=rid, column=col_name, predicate=pred, message=msg, failing_value=fv)
+    return CompiledRule(
+        rule_id=rule.rule_id(manifest_id, col_name or "*"), column=col_name, predicate=pred,
+        message=rule_message(rule, msg), failing_value=fv,
+    )
 
 
 def compile_row_rules(df: DataFrame, manifest: Manifest) -> list[CompiledRule]:
@@ -377,7 +383,7 @@ def compile_row_rules(df: DataFrame, manifest: Manifest) -> list[CompiledRule]:
                 # schema_id never changes with column presence.
                 compiled.append(
                     CompiledRule(
-                        rule_id=rule.get("id") or f"{manifest.id}/{rule.kind}/{col_name}",
+                        rule_id=rule.rule_id(manifest.id, col_name),
                         column=col_name,
                         predicate=F.lit(False),
                         message=F.lit(f"'{col_name.split('.')[-1]}' is a required property"),

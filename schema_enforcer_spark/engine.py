@@ -25,8 +25,16 @@ place the InferFiltersFromGenerate defense lives. Every plan memo goes
 through :class:`_PlanMemo` (bounded, identity-pinned, never for a manifest
 with an eager rule kind).
 
-Violation-row schema mirrors the reference's ValidationResult
-(/root/reference/schema_enforcer/validation.py:11-32).
+One violation shape. The row schema (``VIOLATION_COLUMNS``) mirrors the
+reference's ValidationResult (/root/reference/schema_enforcer/validation.py:11-32),
+the one type every validator's errors go through, and each part of it is
+built in one place: table evaluators project their rows through
+``ValidationEngine._violation_rows``, every violation struct is a
+:func:`_violation`, the schema-level rows of strict_columns and drift come
+from ``_table_violations``, every ``schema_id`` is ``Rule.rule_id`` and
+every custom-message override is ``compiler.rule_message``. The four
+entry-array kinds share one loop (``_entry_violation_arrays``), in a fixed
+kind order.
 """
 
 from __future__ import annotations
@@ -39,7 +47,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from schema_enforcer_spark.compiler import CompiledRule, compile_row_rule, compile_row_rules, py_repr, _dtype_of
+from schema_enforcer_spark.compiler import (
+    CompiledRule, compile_check, compile_row_rules, has_column_path, py_repr, rule_message, _dtype_in, _dtype_of,
+)
 from schema_enforcer_spark.manifest import FUSED_WINDOW, SCHEMA_PASS, SHARED_PATHS, Manifest, Rule
 
 VIOLATION_COLUMNS = [
@@ -62,6 +72,20 @@ _VIOLATION_ARRAY_T = (
 )
 
 
+def _strings(cols: list[str]) -> list[Column]:
+    """The columns cast to string: key paths and key strings of violations."""
+    return [F.col(c).cast("string") for c in cols]
+
+
+def _unique_message(rule: Rule, cols: list[str], n: Column) -> Column:
+    """The unique rule's message, shared by the standalone and fused paths
+    so fusing never changes a unique rule's output."""
+    return rule_message(rule, F.concat(
+        F.lit("("), F.concat_ws("|", *_strings(cols)), F.lit(") appears "), n.cast("string"),
+        F.lit(f" times; ({', '.join(cols)}) must be unique"),
+    ))
+
+
 def _or_empty(column: Column, violations: Column) -> Column:
     """*violations*, or an EMPTY violation array when *column* is NULL —
     concat() with a NULL would otherwise null out every other rule's
@@ -69,12 +93,13 @@ def _or_empty(column: Column, violations: Column) -> Column:
     return F.when(column.isNull(), F.array().cast(_VIOLATION_ARRAY_T)).otherwise(violations)
 
 
-def _violation(schema_id: Column, path: Column, failing: Column, message: Column, tag: list[Column]) -> Column:
-    """One row violation as the struct the fused explode emits: the rule's
-    four fields plus the engine's *tag* (instance_name, instance_location,
-    instance_type and the internal ``_mid`` manifest id)."""
+def _violation(schema_id: Column | str, path: Column, failing: Column, message: Column, tag: tuple | list = ()) -> Column:
+    """One violation as a struct: the rule's four fields, plus the engine's
+    *tag* (instance_name, instance_location, instance_type and the internal
+    ``_mid`` manifest id) for the row explode. Untagged structs are the
+    elements of the entry arrays and of the fused window pass."""
     return F.struct(
-        schema_id.alias("schema_id"),
+        F.lit(schema_id).alias("schema_id"),
         path.alias("absolute_path"),
         failing.alias("failing_value"),
         message.alias("message"),
@@ -272,13 +297,41 @@ class ValidationEngine:
         return F.lit("0")
 
     def _path(self, df: DataFrame, leaf: str | None) -> Column:
-        elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
+        elems = _strings([k for k in self.key_columns if k in df.columns])
         if leaf:
             # a dotted path is a struct traversal: one path element per level
             elems.extend(F.lit(p) for p in leaf.split("."))
         # Number→string coercion is required for violation-row parity
         # (coerce_numbers_to_str, /root/reference/schema_enforcer/validation.py:19).
         return F.array(*elems) if elems else F.array().cast("array<string>")
+
+    def _violation_rows(
+        self, frame: DataFrame, schema_id: Column | str, instance: Column, path: Column, failing: Column, message: Column
+    ) -> DataFrame:
+        """*frame* projected to VIOLATION_COLUMNS — every table evaluator's
+        rows take their shape here: the caller's schema_id, instance,
+        absolute_path, failing_value and message, plus ``result`` FAIL, the
+        manifest's table as instance_location and the engine's
+        instance_type."""
+        return frame.select(
+            F.lit(schema_id).alias("schema_id"),
+            F.lit("FAIL").alias("result"),
+            instance.alias("instance_name"),
+            F.lit(self.manifest.table).alias("instance_location"),
+            F.lit(self.instance_type).alias("instance_type"),
+            path.alias("absolute_path"),
+            failing.alias("failing_value"),
+            message.alias("message"),
+        )
+
+    def _table_violations(self, df: DataFrame, rid: str, rows: list[tuple[list[str], str, str]]) -> DataFrame:
+        """Violations of the input's schema or distribution as a whole
+        (strict_columns, drift), built on the driver from (absolute_path,
+        failing_value, message) rows, on the synthetic 'table' instance at
+        grain TABLE."""
+        return df.sparkSession.createDataFrame(
+            [(rid, "FAIL", "table", self.manifest.table, "TABLE", *row) for row in rows], _VIOLATION_SCHEMA_DDL
+        )
 
     # -- row rules ---------------------------------------------------------
 
@@ -334,350 +387,196 @@ class ValidationEngine:
                 pred = ~cond | inner
                 failing = tc.cast("string")
                 col_name = tc_name
-            if m := rule.get("message"):
-                msg = F.lit(m)
             out.append(
                 CompiledRule(
-                    rule_id=rule.get("id") or f"{self.manifest.id}/conditional/{col_name}",
+                    rule_id=rule.rule_id(self.manifest.id, col_name),
                     column=tc_name,
                     predicate=pred,
-                    message=msg,
+                    message=rule_message(rule, msg),
                     failing_value=failing,
                 )
             )
         return out
 
-    def _items_violation_arrays(self, df: DataFrame) -> list[Column]:
-        """Per-element nested validation (P12/P5 items): for each ``items``
-        rule, ONE transform() over the array column emits an array of
-        violation structs with the element index in absolute_path
+    # the entry-array kinds, in the fixed order their arrays join the row
+    # projection: emitting them in manifest order would reorder the
+    # violation array and move every plan
+    _ENTRY_KINDS = ("items", "prefix_items", "pattern_properties", "property_names")
+
+    def _entry_violation_arrays(self, df: DataFrame) -> list[Column]:
+        """One untagged violation array per array-element / map-entry rule:
+        a transform() over the column that rides the single-pass row
+        projection — no explode-join, no second scan, no Python. A rule on a
+        column the input lacks is skipped; a NULL column yields an empty
+        array. Each kind's ``_<kind>_entries`` builds the array itself."""
+        keys = _strings([k for k in self.key_columns if k in df.columns])
+        out: list[Column] = []
+        for kind in self._ENTRY_KINDS:
+            for rule in self.manifest.row_rules:
+                if rule.kind != kind:
+                    continue
+                col_name = rule.params["column"]
+                if not has_column_path(df, col_name):
+                    continue
+                dtype = _dtype_of(df, col_name)
+                want, noun = (T.ArrayType, "an array") if kind in ("items", "prefix_items") else (T.MapType, "a map")
+                if not isinstance(dtype, want):
+                    raise ValueError(f"{kind} rule column {col_name!r} is {dtype.simpleString()}, not {noun}")
+                field = rule.get("field") if kind == "items" else None
+                rid = rule.rule_id(self.manifest.id, col_name + (f"/{field}" if field else ""))
+                body = getattr(self, f"_{kind}_entries")
+                out.append(_or_empty(F.col(col_name), body(rule, col_name, dtype, rid, keys)))
+        return out
+
+    def _items_entries(self, rule: Rule, col_name: str, dtype: T.ArrayType, rid: str, keys: list[Column]) -> Column:
+        """items (P12/P5): each element, or its struct ``field``, against
+        ``check``, with the element index in absolute_path
         (["dns_servers","0","address"] — reference parity,
-        /root/reference/tests/test_jsonschema.py:84-91). Rides the same
-        single-pass projection as scalar row rules: no explode-join, no
-        second scan, no Python."""
-        from schema_enforcer_spark.compiler import _dtype_in, compile_check, has_column_path
+        /root/reference/tests/test_jsonschema.py:84-91)."""
+        field = rule.get("field")
+        parts = field.split(".") if field else []
+        target_dt = _dtype_in(dtype.elementType, field, []) if field else dtype.elementType
+        check = rule.params["check"]
+        label = (field or col_name).split(".")[-1]
+        # 'required' anchors at the element object (jsonschema names the
+        # missing key, the path stops at the index)
+        tail = [] if check == "required" else parts
 
-        out: list[Column] = []
-        for rule in self.manifest.row_rules:
-            if rule.kind != "items":
-                continue
-            col_name = rule.params["column"]
-            if not has_column_path(df, col_name):
-                continue
-            arr_dt = _dtype_of(df, col_name)
-            if not isinstance(arr_dt, T.ArrayType):
-                raise ValueError(f"items rule column {col_name!r} is {arr_dt.simpleString()}, not an array")
-            field = rule.get("field")
-            elem_dt = arr_dt.elementType
-            target_dt = _dtype_in(elem_dt, field, []) if field else elem_dt
-            check = rule.params["check"]
-            label = (field or col_name).split(".")[-1]
-            rid = rule.get("id") or f"{self.manifest.id}/items/{col_name}" + (f"/{field}" if field else "")
-            custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
-
-            # Spark HOF lambdas must take exactly the declared arity with no
-            # extra/default parameters — capture rule context via a factory
-            # closure instead (fresh per loop iteration, so no late binding).
-            def make_viol(_field, _check, _label, _rid, _cm, _tdt, _col, _keys, _rule):
-                def viol(x, i):
-                    elem = x
-                    for part in (_field.split(".") if _field else []):
-                        elem = elem[part]
-                    pred, msg = compile_check(elem, _tdt, _check, _rule.get, _label)
-                    if _cm:
-                        msg = F.lit(_cm)
-                    # 'required' anchors at the element object (jsonschema
-                    # names the missing key, the path stops at the index)
-                    path_tail = [] if _check in ("required",) else ([F.lit(p) for p in _field.split(".")] if _field else [])
-                    path = F.array(*_keys, F.lit(_col), i.cast("string"), *path_tail)
-                    return F.when(
-                        ~F.coalesce(pred, F.lit(True)),
-                        F.struct(
-                            F.lit(_rid).alias("schema_id"),
-                            path.alias("absolute_path"),
-                            elem.cast("string").alias("failing_value"),
-                            msg.alias("message"),
-                        ),
-                    )
-
-                return viol
-
-            viol = make_viol(field, check, label, rid, custom_msg, target_dt, col_name, key_elems, rule)
-
-            out.append(_or_empty(F.col(col_name), F.array_compact(F.transform(F.col(col_name), viol))))
-        return out
-
-    def _prefix_items_violation_arrays(self, df: DataFrame) -> list[Column]:
-        """Draft-7 TUPLE items (`items: [s0, s1, ...]` + additionalItems):
-        element p checked against checks[p] (absent positions skip — Draft-7
-        validates only what exists), and the tail past the prefix either
-        rejected wholesale (additional_items: false — jsonschema emits ONE
-        aggregate error naming every extra, was/were pluralized) or checked
-        per element (additional_items: {check}). All positional checks ride
-        one projection over the array column — element_at per position, no
-        explode, no shuffle, same single-pass shape as the items rule."""
-        from schema_enforcer_spark.compiler import compile_check, has_column_path, py_repr
-        out: list[Column] = []
-        for rule in self.manifest.row_rules:
-            if rule.kind != "prefix_items":
-                continue
-            col_name = rule.params["column"]
-            if not has_column_path(df, col_name):
-                continue
-            arr_dt = _dtype_of(df, col_name)
-            if not isinstance(arr_dt, T.ArrayType):
-                raise ValueError(
-                    f"prefix_items rule column {col_name!r} is {arr_dt.simpleString()}, not an array"
-                )
-            elem_dt = arr_dt.elementType
-            checks = rule.params["checks"]
-            add = rule.get("additional_items")
-            rid = rule.get("id") or f"{self.manifest.id}/prefix_items/{col_name}"
-            custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
-            col = F.col(col_name)
-            n = len(checks)
-            label = col_name.split(".")[-1]
-
-            structs: list[Column] = []
-            for p, spec in enumerate(checks):
-                elem = F.element_at(col, p + 1)
-                pred, msg = compile_check(elem, elem_dt, spec["kind"], spec.get, label)
-                if custom_msg:
-                    msg = F.lit(custom_msg)
-                structs.append(
-                    F.when(
-                        (F.size(col) > p) & ~F.coalesce(pred, F.lit(True)),
-                        F.struct(
-                            F.lit(rid).alias("schema_id"),
-                            F.array(*key_elems, F.lit(col_name), F.lit(str(p))).alias("absolute_path"),
-                            elem.cast("string").alias("failing_value"),
-                            msg.alias("message"),
-                        ),
-                    )
-                )
-
-            arrays = [F.array_compact(F.array(*structs))] if structs else []
-            if add is False:
-                extras = F.slice(col, n + 1, F.greatest(F.size(col) - n, F.lit(0)))
-                reprs = F.array_join(
-                    F.transform(extras, lambda x: py_repr(x, elem_dt)), ", "
-                )
-                add_msg = F.concat(
-                    F.lit("Additional items are not allowed ("),
-                    reprs,
-                    F.when(F.size(col) - n == 1, F.lit(" was unexpected)")).otherwise(
-                        F.lit(" were unexpected)")
-                    ),
-                )
-                if custom_msg:
-                    add_msg = F.lit(custom_msg)
-                arrays.append(
-                    F.array_compact(
-                        F.array(
-                            F.when(
-                                F.size(col) > n,
-                                F.struct(
-                                    F.lit(rid).alias("schema_id"),
-                                    # jsonschema anchors this error at the
-                                    # array itself, not an index
-                                    F.array(*key_elems, F.lit(col_name)).alias("absolute_path"),
-                                    reprs.alias("failing_value"),
-                                    add_msg.alias("message"),
-                                ),
-                            )
-                        )
-                    )
-                )
-            elif isinstance(add, dict):
-
-                def make_tail_viol(_spec, _rid, _cm, _edt, _col, _keys, _n, _label):
-                    def viol(x, i):
-                        pred, msg = compile_check(x, _edt, _spec["kind"], _spec.get, _label)
-                        if _cm:
-                            msg = F.lit(_cm)
-                        return F.when(
-                            (i >= _n) & ~F.coalesce(pred, F.lit(True)),
-                            F.struct(
-                                F.lit(_rid).alias("schema_id"),
-                                F.array(*_keys, F.lit(_col), i.cast("string")).alias("absolute_path"),
-                                x.cast("string").alias("failing_value"),
-                                msg.alias("message"),
-                            ),
-                        )
-
-                    return viol
-
-                tail = make_tail_viol(add, rid, custom_msg, elem_dt, col_name, key_elems, n, label)
-                arrays.append(F.array_compact(F.transform(col, tail)))
-
-            out.append(_or_empty(col, arrays[0] if len(arrays) == 1 else F.concat(*arrays)))
-        return out
-
-    def _pattern_properties_violation_arrays(self, df: DataFrame) -> list[Column]:
-        """Draft-7 patternProperties over a MAP column (the reference's
-        interface-name maps, examples/ansible/schema/schemas/
-        interfaces.yml:9-16, validated through jsonschema patternProperties_
-        draft3 in _validators.py): ONE transform() over map_entries() emits
-        a violation struct per offending entry — entries whose key matches
-        ``pattern`` get ``check`` applied to the value (or its ``field``);
-        with ``additional_properties: false``, keys matching nothing are
-        rejected with jsonschema's exact additionalProperties message. Same
-        single-projection, zero-shuffle shape as the items rule."""
-        from schema_enforcer_spark.compiler import _dtype_in, compile_check, has_column_path
-
-        out: list[Column] = []
-        for rule in self.manifest.row_rules:
-            if rule.kind != "pattern_properties":
-                continue
-            col_name = rule.params["column"]
-            if not has_column_path(df, col_name):
-                continue
-            map_dt = _dtype_of(df, col_name)
-            if not isinstance(map_dt, T.MapType):
-                raise ValueError(
-                    f"pattern_properties rule column {col_name!r} is "
-                    f"{map_dt.simpleString()}, not a map"
-                )
-            pattern = rule.params["pattern"]
-            field = rule.get("field")
-            check = rule.get("check")
-            reject_extras = rule.get("additional_properties") is False
-            val_dt = map_dt.valueType
-            target_dt = _dtype_in(val_dt, field, []) if field else val_dt
-            label = (field or col_name).split(".")[-1]
-            rid = rule.get("id") or f"{self.manifest.id}/pattern_properties/{col_name}"
-            custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
-
-            def make_viol(_field, _check, _label, _rid, _cm, _tdt, _col, _keys, _rule, _pat, _rej):
-                def viol(e):
-                    matched = e["key"].rlike(_pat)
-                    branches = []
-                    if _rej:
-                        # jsonschema message parity (_validators.py
-                        # additionalProperties: "Additional properties are
-                        # not allowed ('%s' %s unexpected)")
-                        branches.append(
-                            (
-                                ~matched,
-                                F.struct(
-                                    F.lit(_rid).alias("schema_id"),
-                                    F.array(*_keys, F.lit(_col), e["key"]).alias("absolute_path"),
-                                    e["key"].alias("failing_value"),
-                                    F.concat(
-                                        F.lit("Additional properties are not allowed ('"),
-                                        e["key"],
-                                        F.lit("' was unexpected)"),
-                                    ).alias("message"),
-                                ),
-                            )
-                        )
-                    if _check is not None:
-                        val = e["value"]
-                        for part in (_field.split(".") if _field else []):
-                            val = val[part]
-                        # the rule's own `pattern` matches KEYS; a `pattern`
-                        # value sub-check reads the dedicated value_pattern
-                        # param (manifest meta-validation requires it)
-                        if _check == "pattern":
-                            vp = _rule.params["value_pattern"]
-                            getter = lambda k, d=None: vp if k == "pattern" else _rule.get(k, d)  # noqa: E731
-                        else:
-                            getter = _rule.get
-                        pred, msg = compile_check(val, _tdt, _check, getter, _label)
-                        if _cm:
-                            msg = F.lit(_cm)
-                        path_tail = [] if _check in ("required",) else (
-                            [F.lit(p) for p in _field.split(".")] if _field else []
-                        )
-                        branches.append(
-                            (
-                                matched & ~F.coalesce(pred, F.lit(True)),
-                                F.struct(
-                                    F.lit(_rid).alias("schema_id"),
-                                    F.array(*_keys, F.lit(_col), e["key"], *path_tail).alias("absolute_path"),
-                                    val.cast("string").alias("failing_value"),
-                                    msg.alias("message"),
-                                ),
-                            )
-                        )
-                    expr = F.when(*branches[0])
-                    for cond, struct in branches[1:]:
-                        expr = expr.when(cond, struct)
-                    return expr
-
-                return viol
-
-            viol = make_viol(
-                field, check, label, rid, custom_msg, target_dt, col_name,
-                key_elems, rule, pattern, reject_extras,
+        def viol(x, i):
+            elem = x
+            for part in parts:
+                elem = elem[part]
+            pred, msg = compile_check(elem, target_dt, check, rule.get, label)
+            path = F.array(*keys, F.lit(col_name), i.cast("string"), *map(F.lit, tail))
+            return F.when(
+                ~F.coalesce(pred, F.lit(True)), _violation(rid, path, elem.cast("string"), rule_message(rule, msg))
             )
-            arr = F.array_compact(F.transform(F.map_entries(F.col(col_name)), viol))
-            out.append(_or_empty(F.col(col_name), arr))
-        return out
 
-    def _property_names_violation_arrays(self, df: DataFrame) -> list[Column]:
-        """Draft-7 propertyNames over a MAP column (jsonschema
-        _validators.py propertyNames: the sub-schema validates each KEY
-        string): one transform() over map_keys() emits a violation per
-        offending key, message straight from the compiled sub-check
-        ("'ab' is too short" etc.). With pattern_properties and
-        strict_columns this completes the object-keyword family;
-        min/maxProperties is a `length` rule on the map (F.size counts
-        entries)."""
-        from schema_enforcer_spark.compiler import compile_check, has_column_path
+        return F.array_compact(F.transform(F.col(col_name), viol))
 
-        out: list[Column] = []
-        for rule in self.manifest.row_rules:
-            if rule.kind != "property_names":
-                continue
-            col_name = rule.params["column"]
-            if not has_column_path(df, col_name):
-                continue
-            map_dt = _dtype_of(df, col_name)
-            if not isinstance(map_dt, T.MapType):
-                raise ValueError(
-                    f"property_names rule column {col_name!r} is "
-                    f"{map_dt.simpleString()}, not a map"
+    def _prefix_items_entries(self, rule: Rule, col_name: str, dtype: T.ArrayType, rid: str, keys: list[Column]) -> Column:
+        """prefix_items (Draft-7 tuple items + additionalItems): element p
+        against checks[p] (absent positions skip — Draft-7 validates only
+        what exists), and the tail past the prefix either rejected wholesale
+        (additional_items: false — jsonschema emits ONE aggregate error
+        naming every extra, was/were pluralized) or checked per element
+        (additional_items: {check}). element_at per position, no explode."""
+        col = F.col(col_name)
+        elem_dt = dtype.elementType
+        checks = rule.params["checks"]
+        add = rule.get("additional_items")
+        n = len(checks)
+        label = col_name.split(".")[-1]
+
+        structs: list[Column] = []
+        for p, spec in enumerate(checks):
+            elem = F.element_at(col, p + 1)
+            pred, msg = compile_check(elem, elem_dt, spec["kind"], spec.get, label)
+            path = F.array(*keys, F.lit(col_name), F.lit(str(p)))
+            structs.append(
+                F.when(
+                    (F.size(col) > p) & ~F.coalesce(pred, F.lit(True)),
+                    _violation(rid, path, elem.cast("string"), rule_message(rule, msg)),
                 )
-            check = rule.params["check"]
-            rid = rule.get("id") or f"{self.manifest.id}/property_names/{col_name}"
-            custom_msg = rule.get("message")
-            key_elems = [F.col(k).cast("string") for k in self.key_columns if k in df.columns]
+            )
+        arrays = [F.array_compact(F.array(*structs))] if structs else []
+        if add is False:
+            extras = F.slice(col, n + 1, F.greatest(F.size(col) - n, F.lit(0)))
+            reprs = F.array_join(F.transform(extras, lambda x: py_repr(x, elem_dt)), ", ")
+            msg = F.concat(
+                F.lit("Additional items are not allowed ("),
+                reprs,
+                F.when(F.size(col) - n == 1, F.lit(" was unexpected)")).otherwise(F.lit(" were unexpected)")),
+            )
+            # jsonschema anchors this error at the array itself, not an index
+            path = F.array(*keys, F.lit(col_name))
+            arrays.append(
+                F.array_compact(F.array(F.when(F.size(col) > n, _violation(rid, path, reprs, rule_message(rule, msg)))))
+            )
+        elif isinstance(add, dict):
 
-            def make_viol(_check, _rid, _cm, _col, _keys, _rule):
-                def viol(k):
-                    pred, msg = compile_check(k, T.StringType(), _check, _rule.get, _col)
-                    if _cm:
-                        msg = F.lit(_cm)
-                    return F.when(
-                        ~F.coalesce(pred, F.lit(True)),
-                        F.struct(
-                            F.lit(_rid).alias("schema_id"),
-                            F.array(*_keys, F.lit(_col), k).alias("absolute_path"),
-                            k.alias("failing_value"),
-                            msg.alias("message"),
-                        ),
+            def tail(x, i):
+                pred, msg = compile_check(x, elem_dt, add["kind"], add.get, label)
+                path = F.array(*keys, F.lit(col_name), i.cast("string"))
+                return F.when(
+                    (i >= n) & ~F.coalesce(pred, F.lit(True)),
+                    _violation(rid, path, x.cast("string"), rule_message(rule, msg)),
+                )
+
+            arrays.append(F.array_compact(F.transform(col, tail)))
+        return arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+
+    def _pattern_properties_entries(self, rule: Rule, col_name: str, dtype: T.MapType, rid: str, keys: list[Column]) -> Column:
+        """pattern_properties (Draft-7 patternProperties over a MAP column —
+        the reference's interface-name maps, examples/ansible/schema/schemas/
+        interfaces.yml:9-16): entries whose key matches ``pattern`` get
+        ``check`` on the value (or its ``field``); with
+        ``additional_properties: false``, keys matching nothing are rejected
+        with jsonschema's exact additionalProperties message."""
+        pattern = rule.params["pattern"]
+        field = rule.get("field")
+        parts = field.split(".") if field else []
+        check = rule.get("check")
+        target_dt = _dtype_in(dtype.valueType, field, []) if field else dtype.valueType
+        label = (field or col_name).split(".")[-1]
+        tail = [] if check == "required" else parts
+        # the rule's own `pattern` matches KEYS; a `pattern` value sub-check
+        # reads the dedicated value_pattern param (manifest meta-validation
+        # requires it)
+        if check == "pattern":
+            vp = rule.params["value_pattern"]
+            getter = lambda k, d=None: vp if k == "pattern" else rule.get(k, d)  # noqa: E731
+        else:
+            getter = rule.get
+
+        def viol(e):
+            matched = e["key"].rlike(pattern)
+            branches = []
+            if rule.get("additional_properties") is False:
+                # jsonschema message parity (_validators.py
+                # additionalProperties: "Additional properties are not
+                # allowed ('%s' %s unexpected)")
+                msg = F.concat(F.lit("Additional properties are not allowed ('"), e["key"], F.lit("' was unexpected)"))
+                branches.append((~matched, _violation(rid, F.array(*keys, F.lit(col_name), e["key"]), e["key"], msg)))
+            if check is not None:
+                val = e["value"]
+                for part in parts:
+                    val = val[part]
+                pred, msg = compile_check(val, target_dt, check, getter, label)
+                path = F.array(*keys, F.lit(col_name), e["key"], *map(F.lit, tail))
+                branches.append(
+                    (
+                        matched & ~F.coalesce(pred, F.lit(True)),
+                        _violation(rid, path, val.cast("string"), rule_message(rule, msg)),
                     )
+                )
+            expr = F.when(*branches[0])
+            for cond, struct in branches[1:]:
+                expr = expr.when(cond, struct)
+            return expr
 
-                return viol
+        return F.array_compact(F.transform(F.map_entries(F.col(col_name)), viol))
 
-            viol = make_viol(check, rid, custom_msg, col_name, key_elems, rule)
-            arr = F.array_compact(F.transform(F.map_keys(F.col(col_name)), viol))
-            out.append(_or_empty(F.col(col_name), arr))
-        return out
+    def _property_names_entries(self, rule: Rule, col_name: str, dtype: T.MapType, rid: str, keys: list[Column]) -> Column:
+        """property_names (Draft-7 propertyNames over a MAP column — the
+        sub-schema validates each KEY string): the message straight from the
+        compiled sub-check ("'ab' is too short" etc.). min/maxProperties is
+        a `length` rule on the map (F.size counts entries)."""
+        check = rule.params["check"]
+
+        def viol(k):
+            pred, msg = compile_check(k, T.StringType(), check, rule.get, col_name)
+            path = F.array(*keys, F.lit(col_name), k)
+            return F.when(~F.coalesce(pred, F.lit(True)), _violation(rid, path, k, rule_message(rule, msg)))
+
+        return F.array_compact(F.transform(F.map_keys(F.col(col_name)), viol))
 
     def row_fail_count(self, df: DataFrame) -> Column:
         """Number of row rules the row fails — the streaming-verdict
         building block (windowed sum of this = per-window fail count)."""
         compiled = compile_row_rules(df, self.manifest) + self._compile_conditionals(df)
         flags = [(~F.coalesce(cr.predicate, F.lit(True))).cast("int") for cr in compiled]
-        flags.extend(F.size(arr) for arr in self._items_violation_arrays(df))
-        flags.extend(F.size(arr) for arr in self._prefix_items_violation_arrays(df))
-        flags.extend(F.size(arr) for arr in self._pattern_properties_violation_arrays(df))
-        flags.extend(F.size(arr) for arr in self._property_names_violation_arrays(df))
+        flags.extend(F.size(arr) for arr in self._entry_violation_arrays(df))
         if not flags:
             return F.lit(0)
         out = flags[0]
@@ -700,12 +599,6 @@ class ValidationEngine:
 
     def _row_violation_array_impl(self, df: DataFrame) -> Column | None:
         compiled = compile_row_rules(df, self.manifest) + self._compile_conditionals(df)
-        item_arrays = (
-            self._items_violation_arrays(df)
-            + self._prefix_items_violation_arrays(df)
-            + self._pattern_properties_violation_arrays(df)
-            + self._property_names_violation_arrays(df)
-        )
         tag = [
             self._instance_col(df).alias("instance_name"),
             F.lit(self.manifest.table).alias("instance_location"),
@@ -716,7 +609,7 @@ class ValidationEngine:
             F.array_compact(F.array(*[
                 F.when(
                     ~F.coalesce(cr.predicate, F.lit(True)),
-                    _violation(F.lit(cr.rule_id), self._path(df, cr.column), cr.failing_value, cr.message, tag),
+                    _violation(cr.rule_id, self._path(df, cr.column), cr.failing_value, cr.message, tag),
                 )
                 for cr in compiled
             ]))
@@ -725,7 +618,7 @@ class ValidationEngine:
         # sizes them as they are); tag their elements here
         arrays += [
             F.transform(a, lambda v: _violation(v["schema_id"], v["absolute_path"], v["failing_value"], v["message"], tag))
-            for a in item_arrays
+            for a in self._entry_violation_arrays(df)
         ]
         if not arrays:
             return None
@@ -747,31 +640,14 @@ class ValidationEngine:
         # is min() over the group — F.first() would be nondeterministic when
         # a duplicated key spans instances.
         cols = rule.params["columns"]
-        rid = rule.get("id") or f"{self.manifest.id}/unique/{'+'.join(cols)}"
-        key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
         dups = (
             df.groupBy(*cols)
             .agg(F.count(F.lit(1)).alias("_n"), F.min(self._instance_col(df)).alias("instance_name"))
             .filter(F.col("_n") > 1)
         )
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("("), key_str, F.lit(f") appears "), F.col("_n").cast("string"),
-                F.lit(f" times; ({', '.join(cols)}) must be unique"),
-            )
-        )
-        return dups.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            key_str.alias("failing_value"),
-            message.alias("message"),
+        return self._violation_rows(
+            dups, rule.rule_id(self.manifest.id, "+".join(cols)), F.col("instance_name"),
+            F.array(*_strings(cols)), F.concat_ws("|", *_strings(cols)), _unique_message(rule, cols, F.col("_n")),
         )
 
     def _referential_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -782,7 +658,6 @@ class ValidationEngine:
         ref_name, ref_cols = rule.params["ref_table"], rule.params["ref_columns"]
         if ref_name not in ref_tables:
             raise KeyError(f"referential rule needs ref table {ref_name!r} in ref_tables")
-        rid = rule.get("id") or f"{self.manifest.id}/referential/{'+'.join(cols)}"
         # normalize_keys: '-'↔'_' key normalization before the join (F1 —
         # the reference normalizes hostnames both ways before its peer
         # lookup, check_peers.py:44-51); without it referential rules on
@@ -815,24 +690,13 @@ class ValidationEngine:
             .agg(F.min(self._instance_col(df)).alias("instance_name"))
         )
         orphans = orphan_keys.join(F.broadcast(ref_keys) if rule.get("broadcast", True) else ref_keys, on=cols, how="left_anti")
-        key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str, F.lit(f"' is not present in {ref_name}({', '.join(ref_cols)})")
-            )
+        key_str = F.concat_ws("|", *_strings(cols))
+        message = rule_message(
+            rule, F.concat(F.lit("'"), key_str, F.lit(f"' is not present in {ref_name}({', '.join(ref_cols)})"))
         )
-        return orphans.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            key_str.alias("failing_value"),
-            message.alias("message"),
+        return self._violation_rows(
+            orphans, rule.rule_id(self.manifest.id, "+".join(cols)), F.col("instance_name"),
+            F.array(*_strings(cols)), key_str, message,
         )
 
     def _equals_table_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -870,29 +734,8 @@ class ValidationEngine:
         If the mismatch key set exceeds ``max_fetch_keys`` (default 2e6 —
         past any plausible drift, the tables are simply different), hash
         mode abandons the detour and falls back to the direct join."""
-        keys = list(rule.params["columns"])
-        comp = list(rule.params["compare"])
-        ref_name = rule.params["ref_table"]
-        if ref_name not in ref_tables:
-            raise KeyError(f"equals_table rule needs ref table {ref_name!r} in ref_tables")
-        ref = ref_tables[ref_name]
-        for c in keys + comp:
-            if c not in df.columns:
-                raise ValueError(f"equals_table: input lacks column {c!r}")
-            if c not in ref.columns:
-                raise ValueError(f"equals_table: ref table {ref_name!r} lacks column {c!r}")
-            # dtype alignment must hold: a string-vs-double compare column
-            # would join/compare through implicit casts and render the ref
-            # repr with the wrong quoting — fail loudly instead
-            lt, rt = _dtype_of(df, c), _dtype_of(ref, c)
-            if lt != rt:
-                raise ValueError(
-                    f"equals_table: column {c!r} dtype mismatch — input is {lt}, "
-                    f"{ref_name} is {rt}; cast the tables to agree before validating"
-                )
-        rid = rule.get("id") or f"{self.manifest.id}/equals_table/{ref_name}"
-        custom_msg = rule.get("message")
-
+        ref = self._equals_table_ref(df, rule, ref_tables)
+        keys, comp = list(rule.params["columns"]), list(rule.params["compare"])
         mode = rule.get("compare_mode", "auto")
         if mode == "auto":
             mode = (
@@ -907,14 +750,39 @@ class ValidationEngine:
         if mode == "hash":
             j = self._equals_table_hash_join(df, ref, keys, comp, rule)
         else:
-            left = df.select(
-                *keys, *comp, self._instance_col(df).alias("_inst"), F.lit(1).alias("_l")
-            )
-            right = ref.select(
-                *keys, *[F.col(c).alias(f"_r_{c}") for c in comp], F.lit(1).alias("_r")
-            )
-            j = left.join(right, on=keys, how="full_outer")
-        return self._equals_table_emit(j, df, ref, keys, comp, ref_name, rid, custom_msg)
+            j = self._equals_table_join(df, ref, keys, comp, "full_outer")
+        return self._equals_table_emit(j, df, ref, rule)
+
+    def _equals_table_ref(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
+        """The rule's reference table, once the checks the batch rule and
+        its streaming twin share hold: the table is given, and both sides
+        carry every key and compared column with the same dtype."""
+        ref_name = rule.params["ref_table"]
+        if ref_name not in ref_tables:
+            raise KeyError(f"equals_table rule needs ref table {ref_name!r} in ref_tables")
+        ref = ref_tables[ref_name]
+        for c in [*rule.params["columns"], *rule.params["compare"]]:
+            if c not in df.columns:
+                raise ValueError(f"equals_table: input lacks column {c!r}")
+            if c not in ref.columns:
+                raise ValueError(f"equals_table: ref table {ref_name!r} lacks column {c!r}")
+            # dtype alignment must hold: a string-vs-double compare column
+            # would join/compare through implicit casts and render the ref
+            # repr with the wrong quoting — fail loudly instead
+            lt, rt = _dtype_of(df, c), _dtype_of(ref, c)
+            if lt != rt:
+                raise ValueError(
+                    f"equals_table: column {c!r} dtype mismatch — input is {lt}, "
+                    f"{ref_name} is {rt}; cast the tables to agree before validating"
+                )
+        return ref
+
+    def _equals_table_join(self, df: DataFrame, ref: DataFrame, keys: list[str], comp: list[str], how: str) -> DataFrame:
+        """The value join of equals_table: keys, compared values and their
+        ``_r_*`` twins, ``_inst`` and the ``_l``/``_r`` side markers."""
+        left = df.select(*keys, *comp, self._instance_col(df).alias("_inst"), F.lit(1).alias("_l"))
+        right = ref.select(*keys, *[F.col(c).alias(f"_r_{c}") for c in comp], F.lit(1).alias("_r"))
+        return left.join(right, on=keys, how=how)
 
     def _equals_table_hash_join(
         self, df: DataFrame, ref: DataFrame, keys: list[str], comp: list[str], rule: Rule
@@ -976,13 +844,7 @@ class ValidationEngine:
         )
         _stats = obs.get
         if _stats["_n"] > max_fetch:
-            left = df.select(
-                *keys, *comp, self._instance_col(df).alias("_inst"), F.lit(1).alias("_l")
-            )
-            right = ref.select(
-                *keys, *[F.col(c).alias(f"_r_{c}") for c in comp], F.lit(1).alias("_r")
-            )
-            return left.join(right, on=keys, how="full_outer")
+            return self._equals_table_join(df, ref, keys, comp, "full_outer")
 
         null_comp = [F.lit(None).cast(_dtype_of(df, c)).alias(c) for c in comp]
         null_rcomp = [F.lit(None).cast(_dtype_of(ref, c)).alias(f"_r_{c}") for c in comp]
@@ -1036,51 +898,36 @@ class ValidationEngine:
         )
         return miss_side.unionByName(pairs)
 
-    def _equals_table_emit(
-        self,
-        j: DataFrame,
-        df: DataFrame,
-        ref: DataFrame,
-        keys: list[str],
-        comp: list[str],
-        ref_name: str,
-        rid: str,
-        custom_msg: str | None,
-    ) -> DataFrame:
-        """Shared violation-shaping tail of equals_table: ``j`` carries
-        keys, compared values + ``_r_*`` twins, ``_inst`` and the
-        ``_l``/``_r`` side markers (from either the direct full-outer join
-        or the hash-precompare fetch-back)."""
-        from schema_enforcer_spark.compiler import py_repr
-
-        key_cols = [F.col(c).cast("string") for c in keys]
+    def _equals_table_emit(self, j: DataFrame, df: DataFrame, ref: DataFrame, rule: Rule) -> DataFrame:
+        """Shared violation-shaping tail of equals_table and its streaming
+        twin: ``j`` carries keys, compared values + ``_r_*`` twins, ``_inst``
+        and the ``_l``/``_r`` side markers (from the direct join or the
+        hash-precompare fetch-back)."""
+        ref_name = rule.params["ref_table"]
+        key_cols = _strings(rule.params["columns"])
         key_str = F.concat_ws("|", *key_cols)
         _VIOL_T = (
             "array<struct<absolute_path:array<string>,failing_value:string,message:string>>"
         )
+
+        def viol(path: Column, failing: Column, message: Column) -> Column:
+            return F.struct(
+                path.alias("absolute_path"), failing.alias("failing_value"), rule_message(rule, message).alias("message")
+            )
+
         structs: list[Column] = [
             F.when(
                 F.col("_r").isNull(),
-                F.struct(
-                    F.array(*key_cols).alias("absolute_path"),
-                    key_str.alias("failing_value"),
-                    (F.lit(custom_msg) if custom_msg else F.concat(
-                        F.lit("'"), key_str, F.lit(f"' is missing from {ref_name}")
-                    )).alias("message"),
-                ),
+                viol(F.array(*key_cols), key_str, F.concat(F.lit("'"), key_str, F.lit(f"' is missing from {ref_name}"))),
             ),
             F.when(
                 F.col("_l").isNull(),
-                F.struct(
-                    F.array(*key_cols).alias("absolute_path"),
-                    key_str.alias("failing_value"),
-                    (F.lit(custom_msg) if custom_msg else F.concat(
-                        F.lit("'"), key_str, F.lit(f"' is missing from the input (present in {ref_name})")
-                    )).alias("message"),
-                ),
+                viol(F.array(*key_cols), key_str, F.concat(
+                    F.lit("'"), key_str, F.lit(f"' is missing from the input (present in {ref_name})")
+                )),
             ),
         ]
-        for c in comp:
+        for c in rule.params["compare"]:
             dtype = _dtype_of(df, c)
             lrep = py_repr(F.col(c), dtype)
             # ref dtype equals the input dtype (checked above) — but source
@@ -1092,12 +939,9 @@ class ValidationEngine:
                     F.col("_l").isNotNull()
                     & F.col("_r").isNotNull()
                     & ~F.col(c).eqNullSafe(F.col(f"_r_{c}")),
-                    F.struct(
-                        F.array(*key_cols, F.lit(c)).alias("absolute_path"),
-                        F.col(c).cast("string").alias("failing_value"),
-                        (F.lit(custom_msg) if custom_msg else F.concat(
-                            lrep, F.lit(f" does not equal {ref_name}.{c} "), rrep
-                        )).alias("message"),
+                    viol(
+                        F.array(*key_cols, F.lit(c)), F.col(c).cast("string"),
+                        F.concat(lrep, F.lit(f" does not equal {ref_name}.{c} "), rrep),
                     ),
                 )
             )
@@ -1107,15 +951,9 @@ class ValidationEngine:
             F.coalesce(F.col("_inst"), key_str).alias("instance_name"),
             F.explode(F.array_compact(F.array(*structs).cast(_VIOL_T))).alias("v"),
         )
-        return exploded.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.col("v.absolute_path").alias("absolute_path"),
-            F.col("v.failing_value").alias("failing_value"),
-            F.col("v.message").alias("message"),
+        return self._violation_rows(
+            exploded, rule.rule_id(self.manifest.id, ref_name), F.col("instance_name"),
+            F.col("v.absolute_path"), F.col("v.failing_value"), F.col("v.message"),
         )
 
     def _cardinality_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1134,7 +972,6 @@ class ValidationEngine:
         hi = rule.get("max_count")
         if ref_name not in ref_tables:
             raise KeyError(f"cardinality rule needs ref table {ref_name!r} in ref_tables")
-        rid = rule.get("id") or f"{self.manifest.id}/cardinality/{'+'.join(cols)}"
         ref_counts = (
             ref_tables[ref_name]
             .filter(reduce(lambda a, b: a & b, [F.col(rc).isNotNull() for rc in ref_cols]))
@@ -1159,25 +996,13 @@ class ValidationEngine:
             f"between {lo} and {hi}" if lo is not None and hi is not None
             else (f"at least {lo}" if lo is not None else f"at most {hi}")
         )
-        key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str, F.lit(f"' matches "), F.col("_rc").cast("string"),
-                F.lit(f" row(s) in {ref_name}({', '.join(ref_cols)}); expected {bounds}"),
-            )
-        )
-        return joined.filter(fail).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            F.col("_rc").cast("string").alias("failing_value"),
-            message.alias("message"),
+        message = rule_message(rule, F.concat(
+            F.lit("'"), F.concat_ws("|", *_strings(cols)), F.lit(f"' matches "), F.col("_rc").cast("string"),
+            F.lit(f" row(s) in {ref_name}({', '.join(ref_cols)}); expected {bounds}"),
+        ))
+        return self._violation_rows(
+            joined.filter(fail), rule.rule_id(self.manifest.id, "+".join(cols)), F.col("instance_name"),
+            F.array(*_strings(cols)), F.col("_rc").cast("string"), message,
         )
 
     def _fd_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1210,10 +1035,6 @@ class ValidationEngine:
                 f"functional_dependency rule: determinant columns {sorted(clash)} "
                 "collide with the FD staging columns — rename them before validating"
             )
-        rid = (
-            rule.get("id")
-            or f"{self.manifest.id}/functional_dependency/{'+'.join(cols)}->{dep}"
-        )
         depc = F.col(dep)
         g = df.groupBy(*cols).agg(
             # exact per-group distinct (skips NULLs) + a did-we-see-NULL
@@ -1225,7 +1046,6 @@ class ValidationEngine:
             F.min(self._instance_col(df)).alias("instance_name"),
         )
         n_values = F.col("_nd") + F.col("_hn")
-        key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
         # example conflicting pair: two non-null values when we have them,
         # else NULL vs the single non-null value (n_values > 1 guarantees
         # one of the two shapes)
@@ -1236,26 +1056,15 @@ class ValidationEngine:
                 F.lit("' vs '"), F.col("_hi").cast("string"), F.lit("'"),
             ),
         ).otherwise(F.concat(F.lit("NULL vs '"), F.col("_lo").cast("string"), F.lit("'")))
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str,
-                F.lit("' maps to "), n_values.cast("string"),
-                F.lit(f" distinct values of {dep} ("), example,
-                F.lit("); expected exactly 1"),
-            )
-        )
-        return g.filter(n_values > 1).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-            n_values.cast("string").alias("failing_value"),
-            message.alias("message"),
+        message = rule_message(rule, F.concat(
+            F.lit("'"), F.concat_ws("|", *_strings(cols)),
+            F.lit("' maps to "), n_values.cast("string"),
+            F.lit(f" distinct values of {dep} ("), example,
+            F.lit("); expected exactly 1"),
+        ))
+        return self._violation_rows(
+            g.filter(n_values > 1), rule.rule_id(self.manifest.id, f"{'+'.join(cols)}->{dep}"), F.col("instance_name"),
+            F.array(*_strings(cols)), n_values.cast("string"), message,
         )
 
     def _outlier_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1323,7 +1132,6 @@ class ValidationEngine:
         col = rule.params["column"]
         k = float(rule.get("k", 1.5))
         group = list(rule.get("group_by") or [])
-        rid = rule.get("id") or f"{self.manifest.id}/outlier/{col}"
         c = F.col(col)
         if group:
             joined = df.join(bounds, on=group, how="left")
@@ -1338,26 +1146,15 @@ class ValidationEngine:
             # ANSI overflow error
             return F.coalesce(x.try_cast("decimal(18,6)").cast("string"), x.cast("string"))
 
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit(f"value "), _dec(c),
-                F.lit(f" of {col} is outside the IQR fence ["),
-                _dec(F.col("_lo")), F.lit(", "), _dec(F.col("_hi")),
-                F.lit(f"] (k={k:g})"),
-            )
-        )
-        return joined.filter(fail).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            self._instance_col(df).alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            self._path(df, col).alias("absolute_path"),
-            _dec(c).alias("failing_value"),
-            message.alias("message"),
+        message = rule_message(rule, F.concat(
+            F.lit(f"value "), _dec(c),
+            F.lit(f" of {col} is outside the IQR fence ["),
+            _dec(F.col("_lo")), F.lit(", "), _dec(F.col("_hi")),
+            F.lit(f"] (k={k:g})"),
+        ))
+        return self._violation_rows(
+            joined.filter(fail), rule.rule_id(self.manifest.id, col), self._instance_col(df),
+            self._path(df, col), _dec(c), message,
         )
 
     def _rate_limit_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1375,7 +1172,6 @@ class ValidationEngine:
         oc = order if isinstance(order, str) else order[0]
         wsec = int(rule.params["window_seconds"])
         mx = int(rule.params["max_count"])
-        rid = rule.get("id") or f"{self.manifest.id}/rate_limit/{'+'.join(part)}"
         w = (
             Window.partitionBy(*part)
             .orderBy(F.col(oc).cast("long"))
@@ -1387,27 +1183,13 @@ class ValidationEngine:
             self._instance_col(df).alias("instance_name"),
             F.count(F.lit(1)).over(w).alias("_c"),
         )
-        key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in part])
-        msg = rule.get("message")
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit("'"), key_str, F.lit("' saw "), F.col("_c").cast("string"),
-                F.lit(f" rows within {wsec}s; at most {mx} allowed"),
-            )
-        )
-        return staged.filter(F.col("_c") > mx).select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(
-                *[F.col(c).cast("string") for c in part], F.col(oc).cast("string")
-            ).alias("absolute_path"),
-            F.col("_c").cast("string").alias("failing_value"),
-            message.alias("message"),
+        message = rule_message(rule, F.concat(
+            F.lit("'"), F.concat_ws("|", *_strings(part)), F.lit("' saw "), F.col("_c").cast("string"),
+            F.lit(f" rows within {wsec}s; at most {mx} allowed"),
+        ))
+        return self._violation_rows(
+            staged.filter(F.col("_c") > mx), rule.rule_id(self.manifest.id, "+".join(part)), F.col("instance_name"),
+            F.array(*_strings([*part, oc])), F.col("_c").cast("string"), message,
         )
 
     def _fused_window_violations(self, df: DataFrame, rules: list[Rule]) -> DataFrame:
@@ -1504,25 +1286,12 @@ class ValidationEngine:
                 first_of_dup_group = (F.col(f"_cnt_{i}") > 1) & (
                     (F.col(f"_rn_{i}") == 1) | ~F.col(cols[-1]).eqNullSafe(F.col(aux_name))
                 )
-                key_str = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.concat(
-                        F.lit("("), key_str, F.lit(") appears "), F.col(f"_cnt_{i}").cast("string"),
-                        F.lit(f" times; ({', '.join(cols)}) must be unique"),
-                    )
-                )
-                rid = rule.get("id") or f"{self.manifest.id}/unique/{'+'.join(cols)}"
                 structs.append(
                     F.when(
                         first_of_dup_group,
-                        F.struct(
-                            F.lit(rid).alias("schema_id"),
-                            F.array(*[F.col(c).cast("string") for c in cols]).alias("absolute_path"),
-                            key_str.alias("failing_value"),
-                            msg.alias("message"),
+                        _violation(
+                            rule.rule_id(self.manifest.id, "+".join(cols)), F.array(*_strings(cols)),
+                            F.concat_ws("|", *_strings(cols)), _unique_message(rule, cols, F.col(f"_cnt_{i}")),
                         ),
                     )
                 )
@@ -1545,85 +1314,49 @@ class ValidationEngine:
                 bad = F.when(is_first, ~ok_start).otherwise(~ok_trans)
                 rep = F.coalesce(cur.cast("string"), F.lit("None"))
                 prev_rep = F.coalesce(prev.cast("string"), F.lit("None"))
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.when(
-                        is_first,
-                        F.concat(F.lit("'"), rep, F.lit(f"' is not an allowed start value for '{col_name}'")),
-                    ).otherwise(
-                        F.concat(F.lit("'"), rep, F.lit("' cannot follow '"), prev_rep, F.lit(f"' in '{col_name}'"))
-                    )
+                msg = F.when(
+                    is_first,
+                    F.concat(F.lit("'"), rep, F.lit(f"' is not an allowed start value for '{col_name}'")),
+                ).otherwise(
+                    F.concat(F.lit("'"), rep, F.lit("' cannot follow '"), prev_rep, F.lit(f"' in '{col_name}'"))
                 )
-                rid = rule.get("id") or f"{self.manifest.id}/sequence/{col_name}"
-                order = list(rule.params["order_by"])
+                path = F.array(*_strings([*part, *rule.params["order_by"]]), F.lit(col_name))
                 structs.append(
                     F.when(
                         bad,
-                        F.struct(
-                            F.lit(rid).alias("schema_id"),
-                            F.array(
-                                *[F.col(c).cast("string") for c in part],
-                                *[F.col(c).cast("string") for c in order],
-                                F.lit(col_name),
-                            ).alias("absolute_path"),
-                            cur.cast("string").alias("failing_value"),
-                            msg.alias("message"),
-                        ),
+                        _violation(rule.rule_id(self.manifest.id, col_name), path, cur.cast("string"), rule_message(rule, msg)),
                     )
                 )
                 continue
-            strictly = extra
             col, ref = F.col(col_name), F.col(aux_name)
             if kind == "ordering":
-                bad = (col <= ref) if strictly else (col < ref)
-                word = "strictly increasing" if strictly else "non-decreasing"
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.concat(
-                        F.lit(f"'{col_name}' value "), col.cast("string"),
-                        F.lit(f" is not {word} (previous "), ref.cast("string"), F.lit(")"),
-                    )
+                bad = (col <= ref) if extra else (col < ref)
+                word = "strictly increasing" if extra else "non-decreasing"
+                msg = F.concat(
+                    F.lit(f"'{col_name}' value "), col.cast("string"),
+                    F.lit(f" is not {word} (previous "), ref.cast("string"), F.lit(")"),
                 )
-                rid = rule.get("id") or f"{self.manifest.id}/ordering/{col_name}"
             else:
                 bad = col != ref
-                message = rule.get("message")
-                msg = (
-                    F.lit(message)
-                    if message
-                    else F.concat(
-                        F.lit(f"'{col_name}' value "), col.cast("string"),
-                        F.lit(" breaks contiguity (expected "), ref.cast("string"), F.lit(")"),
-                    )
+                msg = F.concat(
+                    F.lit(f"'{col_name}' value "), col.cast("string"),
+                    F.lit(" breaks contiguity (expected "), ref.cast("string"), F.lit(")"),
                 )
-                rid = rule.get("id") or f"{self.manifest.id}/contiguous/{col_name}"
             structs.append(
                 F.when(
                     F.coalesce(bad, F.lit(False)),
-                    F.struct(
-                        F.lit(rid).alias("schema_id"),
-                        self._path(base, col_name).alias("absolute_path"),
-                        col.cast("string").alias("failing_value"),
-                        msg.alias("message"),
+                    _violation(
+                        rule.rule_id(self.manifest.id, col_name), self._path(base, col_name), col.cast("string"),
+                        rule_message(rule, msg),
                     ),
                 )
             )
         exploded = base.select(
             "instance_name", F.explode(F.array_compact(F.array(*structs))).alias("v")
         )
-        return exploded.select(
-            F.col("v.schema_id").alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.col("v.absolute_path").alias("absolute_path"),
-            F.col("v.failing_value").alias("failing_value"),
-            F.col("v.message").alias("message"),
+        return self._violation_rows(
+            exploded, F.col("v.schema_id"), F.col("instance_name"),
+            F.col("v.absolute_path"), F.col("v.failing_value"), F.col("v.message"),
         )
 
     def _salted_group(self, df: DataFrame, rule: Rule, group: list[str], specs: list) -> DataFrame:
@@ -1655,7 +1388,6 @@ class ValidationEngine:
 
     def _aggregate_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
         group = rule.get("group_by", ["conv_id"])
-        rid = rule.get("id") or f"{self.manifest.id}/aggregate/{'+'.join(group)}"
         right_spec = rule.params["right"]
         # Both sides compile into ONE agg() — no second scan (SURVEY.md §4.2 #4,
         # rhs-as-expression parity with check_interfaces_ipv4.py:30-38).
@@ -1675,29 +1407,18 @@ class ValidationEngine:
             grouped = df.groupBy(*group).agg(*aggs)
         right = F.col("_right") if isinstance(right_spec, dict) else F.lit(right_spec)
         failing = grouped.filter(~F.coalesce(_comparison(rule.params["operator"], F.col("_left"), right), F.lit(False)))
-        msg = rule.get("message")
         # coalesce the interpolated sides: a NULL aggregate (e.g. sum over an
         # empty filter) must not null-propagate through concat and erase the
         # whole diagnostic
         left_str = F.coalesce(F.col("_left").cast("string"), F.lit("NULL"))
         right_str = F.coalesce(right.cast("string"), F.lit("NULL"))
-        message = (
-            F.lit(msg)
-            if msg
-            else F.concat(
-                F.lit(f"aggregate check failed: left="), left_str,
-                F.lit(f" {rule.params['operator']} right="), right_str, F.lit(" is false"),
-            )
-        )
-        return failing.select(
-            F.lit(rid).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            F.col("_inst").alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.array(*[F.col(g).cast("string") for g in group]).alias("absolute_path"),
-            left_str.alias("failing_value"),
-            message.alias("message"),
+        message = rule_message(rule, F.concat(
+            F.lit(f"aggregate check failed: left="), left_str,
+            F.lit(f" {rule.params['operator']} right="), right_str, F.lit(" is false"),
+        ))
+        return self._violation_rows(
+            failing, rule.rule_id(self.manifest.id, "+".join(group)), F.col("_inst"),
+            F.array(*_strings(group)), left_str, message,
         )
 
     def _drift_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1717,8 +1438,6 @@ class ValidationEngine:
         path_prefix: list[str] = []
         actual = set(df.columns) - {"partition_id"}
         if rule is not None and rule.get("column"):
-            from schema_enforcer_spark.compiler import _dtype_of
-
             target = rule.params["column"]
             dt = _dtype_of(df, target)
             if isinstance(dt, T.ArrayType):
@@ -1747,16 +1466,8 @@ class ValidationEngine:
         extras = sorted(actual - declared)
         if not extras:
             return None
-        spark = df.sparkSession
-        rid = (rule.get("id") if rule else None) or f"{self.manifest.id}/strict_columns"
-        rows = [
-            (
-                rid, "FAIL", "table", self.manifest.table, "TABLE",
-                [*path_prefix, c], c, f"Additional properties are not allowed ('{c}' was unexpected)",
-            )
-            for c in extras
-        ]
-        return spark.createDataFrame(rows, _VIOLATION_SCHEMA_DDL)
+        rows = [([*path_prefix, c], c, f"Additional properties are not allowed ('{c}' was unexpected)") for c in extras]
+        return self._table_violations(df, (rule or Rule("strict_columns")).rule_id(self.manifest.id), rows)
 
     # -- orchestration -----------------------------------------------------
 

@@ -310,6 +310,16 @@ class Rule:
     def get(self, name: str, default: Any = None) -> Any:
         return self.params.get(name, default)
 
+    def rule_id(self, manifest_id: str, suffix: str = "") -> str:
+        """The ``schema_id`` of this rule's violations: its own ``id``, else
+        ``{manifest_id}/{kind}``, plus ``/{suffix}`` when one is given."""
+        return self.get("id") or f"{manifest_id}/{self.kind}" + (f"/{suffix}" if suffix else "")
+
+    def message_or(self, default: Any) -> Any:
+        """The rule's own ``message`` when it sets a non-empty one, else
+        *default*."""
+        return self.get("message") or default
+
     @property
     def is_row_rule(self) -> bool:
         return self.kind in ROW_RULE_KINDS

@@ -23,7 +23,6 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -404,20 +403,6 @@ def psi(p_counts: list[int], q_counts: list[int]) -> float:
     return sum((a - b) * math.log(a / b) for a, b in zip(p, q))
 
 
-_DRIFT_SCHEMA = T.StructType(
-    [
-        T.StructField("schema_id", T.StringType()),
-        T.StructField("result", T.StringType()),
-        T.StructField("instance_name", T.StringType()),
-        T.StructField("instance_location", T.StringType()),
-        T.StructField("instance_type", T.StringType()),
-        T.StructField("absolute_path", T.ArrayType(T.StringType())),
-        T.StructField("failing_value", T.StringType()),
-        T.StructField("message", T.StringType()),
-    ]
-)
-
-
 # ---------------------------------------------------------------------------
 # Stored drift baselines (the --write-baseline/--baseline CLI lifecycle):
 # one JSON file under the checkpoint dir mapping rule id → the
@@ -431,11 +416,6 @@ def baseline_store_path(checkpoint_dir: str) -> str:
     # root, and Spark's file index skips `_`/`.`-prefixed names (the
     # _SUCCESS convention) — any other name would corrupt lineage reads
     return f"{checkpoint_dir.rstrip('/')}/_drift_baselines.json"
-
-
-def drift_rule_id(manifest, rule) -> str:
-    """The baseline-store key — identical to the violation schema_id."""
-    return rule.get("id") or f"{manifest.id}/drift/{rule.params['column']}"
 
 
 def write_drift_baselines(spark, df: DataFrame, manifest, path: str) -> dict[str, dict]:
@@ -453,7 +433,8 @@ def write_drift_baselines(spark, df: DataFrame, manifest, path: str) -> dict[str
         lo = float(rule.get("lo", spec.get("lo", 0.0)))
         hi = float(rule.get("hi", spec.get("hi", 0.0)))
         bins = int(rule.get("bins", spec.get("bins", 32)))
-        baselines[drift_rule_id(manifest, rule)] = compute_histogram(
+        # keyed by the violation schema_id
+        baselines[rule.rule_id(manifest.id, rule.params["column"])] = compute_histogram(
             df, rule.params["column"], lo, hi, bins
         )
     _hadoop_write_text(spark, path, json.dumps(baselines, indent=2))
@@ -501,11 +482,11 @@ def drift_violations(engine, df: DataFrame, rule) -> DataFrame:
     computed on ≤ bins+2 numbers. At 10^12 rows the scan dominates and
     parallelizes perfectly; nothing row-sized ever reaches the driver.
     """
-    rid_key = drift_rule_id(engine.manifest, rule)
-    base = rule.get("baseline") or getattr(engine, "drift_baselines", {}).get(rid_key)
+    rid = rule.rule_id(engine.manifest.id, rule.params["column"])
+    base = rule.get("baseline") or getattr(engine, "drift_baselines", {}).get(rid)
     if base is None:
         raise RuntimeError(
-            f"drift rule {rid_key!r} has no baseline: inline one in the "
+            f"drift rule {rid!r} has no baseline: inline one in the "
             "manifest or run the CLI with --checkpoint + --write-baseline "
             "first, then validate with --baseline"
         )
@@ -514,15 +495,7 @@ def drift_violations(engine, df: DataFrame, rule) -> DataFrame:
     expr = rule.params["column"]
     cur = compute_histogram(df, expr, float(base["lo"]), float(base["hi"]), int(base["bins"]))
     stat = ks_statistic(base["counts"], cur["counts"]) if metric == "ks" else psi(base["counts"], cur["counts"])
-    spark = df.sparkSession
-    rid = rid_key
     if stat <= threshold:
-        return spark.createDataFrame([], _DRIFT_SCHEMA)
-    msg = rule.get("message") or (
-        f"distribution drift on {expr}: {metric}={stat:.6f} exceeds threshold {threshold}"
-    )
-    row = (
-        rid, "FAIL", "table", engine.manifest.table, "TABLE",
-        [expr], f"{stat:.6f}", msg,
-    )
-    return spark.createDataFrame([row], _DRIFT_SCHEMA)
+        return engine._table_violations(df, rid, [])
+    message = rule.message_or(f"distribution drift on {expr}: {metric}={stat:.6f} exceeds threshold {threshold}")
+    return engine._table_violations(df, rid, [([expr], f"{stat:.6f}", message)])

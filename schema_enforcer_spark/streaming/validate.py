@@ -243,39 +243,13 @@ def stream_equals_table(
             f"manifest, found {len(eq_rules)}"
         )
     rule = eq_rules[0]
-    keys = list(rule.params["columns"])
-    comp = list(rule.params["compare"])
-    ref_name = rule.params["ref_table"]
-    if ref_name not in ref_tables:
-        raise KeyError(f"equals_table rule needs ref table {ref_name!r} in ref_tables")
-    ref = ref_tables[ref_name]
+    eng = ValidationEngine(manifest, **engine_kw)
+    # the batch rule's checks: ref table given, columns present, dtypes agree
+    ref = eng._equals_table_ref(stream_df, rule, ref_tables)
     if ref.isStreaming:
         raise ValueError("the reference side must be a static table")
-    eng = ValidationEngine(manifest, **engine_kw)
-    # same dtype fail-fast as the batch rule
-    from schema_enforcer_spark.compiler import _dtype_of
-
-    for c in keys + comp:
-        for side, d in (("input", stream_df), (ref_name, ref)):
-            if c not in d.columns:
-                raise ValueError(f"equals_table: {side} lacks column {c!r}")
-        lt, rt = _dtype_of(stream_df, c), _dtype_of(ref, c)
-        if lt != rt:
-            raise ValueError(
-                f"equals_table: column {c!r} dtype mismatch — input is {lt}, "
-                f"{ref_name} is {rt}; cast the tables to agree before validating"
-            )
-    rid = rule.get("id") or f"{manifest.id}/equals_table/{ref_name}"
-    left = stream_df.select(
-        *keys, *comp, eng._instance_col(stream_df).alias("_inst"), F.lit(1).alias("_l")
-    )
-    right = ref.select(
-        *keys, *[F.col(c).alias(f"_r_{c}") for c in comp], F.lit(1).alias("_r")
-    )
-    j = left.join(right, on=keys, how="left_outer")
-    return eng._equals_table_emit(
-        j, stream_df, ref, keys, comp, ref_name, rid, rule.get("message")
-    )
+    j = eng._equals_table_join(stream_df, ref, list(rule.params["columns"]), list(rule.params["compare"]), "left_outer")
+    return eng._equals_table_emit(j, stream_df, ref, rule)
 
 
 def stream_outlier(
@@ -317,8 +291,7 @@ def stream_outlier(
     eng = ValidationEngine(manifest, **engine_kw)
     parts = []
     for rule in rules:
-        rid = rule.get("id") or f"{manifest.id}/outlier/{rule.params['column']}"
-        b = (bounds or {}).get(rid)
+        b = (bounds or {}).get(rule.rule_id(manifest.id, rule.params["column"]))
         if b is None:
             b = eng.outlier_bounds(reference_df, rule)
         parts.append(eng._outlier_emit(stream_df, rule, b))

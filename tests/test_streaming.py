@@ -615,6 +615,50 @@ def test_stream_equals_table(spark, tmp_path):
     assert sum("is missing from reference" in m_ for m_ in msgs) == 1
 
 
+_EQ_FULL = "conv_id string, turn_idx int, text string"
+
+
+@pytest.mark.parametrize("side", ["batch", "stream"])
+@pytest.mark.parametrize(
+    "input_schema,ref_schema,error",
+    [
+        pytest.param("conv_id string, turn_idx int", _EQ_FULL,
+                     "equals_table: input lacks column 'text'", id="missing_input_column"),
+        pytest.param(_EQ_FULL, "conv_id string, turn_idx int",
+                     "equals_table: ref table 'reference' lacks column 'text'", id="missing_ref_column"),
+        pytest.param(_EQ_FULL, "conv_id string, turn_idx long, text string",
+                     "equals_table: column 'turn_idx' dtype mismatch — input is IntegerType(), "
+                     "reference is LongType(); cast the tables to agree before validating",
+                     id="dtype_mismatch"),
+    ],
+)
+def test_equals_table_misconfiguration_same_error(spark, tmp_path, side, input_schema, ref_schema, error):
+    """The batch rule and its streaming twin run one check, so the same
+    misconfiguration raises the same ValueError text on both paths."""
+    from schema_enforcer_spark.engine import ValidationEngine
+    from schema_enforcer_spark.streaming import stream_equals_table
+
+    m = manifest_from_dict(
+        {
+            "id": "schemas/eq_check",
+            "rules": [
+                {"kind": "equals_table", "columns": ["conv_id", "turn_idx"], "ref_table": "reference",
+                 "compare": ["text"]}
+            ],
+        }
+    )
+    inp = spark.createDataFrame([], input_schema)
+    ref = spark.createDataFrame([], ref_schema)
+    with pytest.raises(ValueError) as ei:
+        if side == "batch":
+            ValidationEngine(m).violations(inp, ref_tables={"reference": ref})
+        else:
+            path = str(tmp_path / "eq_check")
+            inp.write.parquet(path)
+            stream_equals_table(spark.readStream.schema(inp.schema).parquet(path), m, {"reference": ref})
+    assert str(ei.value) == error
+
+
 def test_stream_outlier_frozen_fences(spark, tmp_path):
     """Streaming outlier twin: fences frozen from a static reference slice
     (the batch bounds pass), each micro-batch emits the batch rule's exact

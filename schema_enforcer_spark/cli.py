@@ -262,6 +262,53 @@ def _manifest_paths(path: str) -> list[str]:
     return [find_manifest_file(path)]
 
 
+def _session(args, name: str):
+    """The SparkSession of one CLI mode, named ``schema-enforcer-spark:<name>``,
+    on ``--master`` when given (else the spark-submit master)."""
+    from pyspark.sql import SparkSession
+
+    builder = SparkSession.builder.appName(f"schema-enforcer-spark:{name}")
+    if args.master:
+        builder = builder.master(args.master)
+    return builder.getOrCreate()
+
+
+def _print_report(report, args) -> list:
+    """Print a report's FAIL lines, and its PASS lines with --show-pass, in
+    the format of the reference's ValidationResult.print
+    (/root/reference/schema_enforcer/validation.py:53-91), at most
+    --show-failures of each. Returns the FAIL rows printed."""
+    from pyspark.sql.functions import col
+
+    failures = report.violations.orderBy("message").limit(args.show_failures).collect()
+    for v in failures:
+        # a NULL key column yields a NULL path element (cast preserves it);
+        # print it as 'None' (py_repr parity) instead of crashing the join
+        prop = ":".join(p if p is not None else "None" for p in (v["absolute_path"] or []))
+        if v["instance_type"] == "HOST":
+            # reference print_failed HOST form (validation.py:68): no
+            # location prefix, just the hostname
+            print(f"FAIL | [ERROR] {v['message']} [HOST] {v['instance_name']} [PROPERTY] {prop}")
+        else:
+            print(f"FAIL | [ERROR] {v['message']} [{v['instance_type']}] {v['instance_location']}/{v['instance_name']} [PROPERTY] {prop}")
+    if args.show_pass:
+        # reference print_passed (validation.py:82-91): PASS | [TYPE] name
+        # [SCHEMA ID] id. Verdicts are partition-grain so the collect is
+        # bounded by (#partitions × #schemas), capped like the FAIL lines.
+        passed = (
+            report.verdicts.filter(col("result") == "PASS")
+            .orderBy("schema_id", "instance_name")
+            .limit(args.show_failures)
+            .collect()
+        )
+        for p in passed:
+            # verdicts carry their own grain (TABLE for the synthetic
+            # table-grain row, HOST/PARTITION for data rows) — no name
+            # matching, so a host literally named 'table' labels correctly
+            print(f"PASS | [{p['grain']}] {p['instance_name']} [SCHEMA ID] {p['schema_id']}")
+    return failures
+
+
 def _schema_tools(args) -> int:
     """--list-manifests / --dump-manifest: pure driver-side manifest
     inspection (no Spark session unless --dump-manifest needs an --input
@@ -315,14 +362,9 @@ def _schema_tools(args) -> int:
     if args.input:
         # debugging aid: the Catalyst expression each row rule compiled to
         # against the actual input schema (table rules print their kind/grain)
-        from pyspark.sql import SparkSession
-
         from schema_enforcer_spark.compiler import compile_row_rules
 
-        builder = SparkSession.builder.appName("schema-enforcer-spark:dump")
-        if args.master:
-            builder = builder.master(args.master)
-        spark = builder.getOrCreate()
+        spark = _session(args, "dump")
         df = spark.read.parquet(args.input)
         print("\nCompiled rules:")
         for _, m in loaded:
@@ -339,9 +381,6 @@ def _automap_main(args) -> int:
     cli.py:227-265). Each manifest validates only the hosts that carry at
     least one of its properties; FAIL/[HOST] PASS lines per manifest;
     exit 1 on any failure."""
-    from pyspark.sql import SparkSession
-    from pyspark.sql.functions import col as F_col
-
     from schema_enforcer_spark.binding import ManifestRegistry
     from schema_enforcer_spark.engine import ValidationEngine
     from schema_enforcer_spark.manifest import InvalidManifest, load_manifest
@@ -358,10 +397,7 @@ def _automap_main(args) -> int:
         for err in e.errors:
             print(f"ERROR | invalid manifest | {err}", file=sys.stderr)
         return 1
-    builder = SparkSession.builder.appName("schema-enforcer-spark:automap")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
+    spark = _session(args, "automap")
     df = load_inventory(spark, args.inventory, key="host")
     if args.limit:
         df = df.filter(df["host"] == args.limit)
@@ -373,17 +409,7 @@ def _automap_main(args) -> int:
     for m, sub in bound:
         eng = ValidationEngine(m, key_columns=["host"], instance_expr="host", instance_type="HOST")
         report = eng.validate(sub)
-        for v in report.violations.orderBy("message").limit(args.show_failures).collect():
-            prop = ":".join(v["absolute_path"] or [])
-            print(f"FAIL | [ERROR] {v['message']} [HOST] {v['instance_name']} [PROPERTY] {prop}")
-        if args.show_pass:
-            for p in (
-                report.verdicts.filter(F_col("result") == "PASS")
-                .orderBy("instance_name")
-                .limit(args.show_failures)
-                .collect()
-            ):
-                print(f"PASS | [{p['grain']}] {p['instance_name']} [SCHEMA ID] {p['schema_id']}")
+        _print_report(report, args)
         if not report.passes():
             any_fail = True
         report.unpersist()
@@ -394,17 +420,12 @@ def _automap_main(args) -> int:
 
 
 def _infer_main(args) -> int:
-    from pyspark.sql import SparkSession
-
     from schema_enforcer_spark.infer import write_inferred_manifest
 
     if not args.input:
         print("ERROR | --infer-manifest requires --input", file=sys.stderr)
         return 2
-    builder = SparkSession.builder.appName("schema-enforcer-spark:infer")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
+    spark = _session(args, "infer")
     df = spark.read.parquet(args.input)
     draft = write_inferred_manifest(
         df, args.infer_id, args.infer_manifest,
@@ -439,17 +460,12 @@ def _diff_main(args) -> int:
 
 
 def _profile_main(args) -> int:
-    from pyspark.sql import SparkSession
-
     from schema_enforcer_spark.infer import profile_for_inference
 
     if not args.input:
         print("ERROR | --profile requires --input", file=sys.stderr)
         return 2
-    builder = SparkSession.builder.appName("schema-enforcer-spark:profile")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
+    spark = _session(args, "profile")
     df = spark.read.parquet(args.input)
     prof = profile_for_inference(df, enum_max=args.infer_enum_max)
     print(f"{'Column':<24} {'type':<10} {'rows':>10} {'nulls':>8} {'~distinct':>10}  detail")
@@ -499,7 +515,6 @@ def main(argv: list[str] | None = None) -> int:
         return _schema_tools(args)
     if args.automap:
         return _automap_main(args)
-    from pyspark.sql import SparkSession
     from pyspark.sql.functions import col as F_col
     from pyspark.sql.functions import count as F_count
     from pyspark.sql.functions import coalesce as F_coalesce
@@ -578,10 +593,7 @@ def main(argv: list[str] | None = None) -> int:
         manifests = strictened
     manifest = manifests[0]
 
-    builder = SparkSession.builder.appName(f"schema-enforcer-spark:{manifest.id}")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = builder.getOrCreate()
+    spark = _session(args, manifest.id)
 
     eng_kw = dict(
         key_columns=[c for c in args.key_columns.split(",") if c],
@@ -873,35 +885,7 @@ def main(argv: list[str] | None = None) -> int:
         # validated — aggregating the full input would re-scan everything
         cm.record(cm.last_pending if cm.last_pending is not None else df, eng, report)
 
-    # FAIL-line format mirrors ValidationResult.print
-    # (/root/reference/schema_enforcer/validation.py:53-91)
-    failures = report.violations.orderBy("message").limit(args.show_failures).collect()
-    for v in failures:
-        # a NULL key column yields a NULL path element (cast preserves it);
-        # print it as 'None' (py_repr parity) instead of crashing the join
-        prop = ":".join(p if p is not None else "None" for p in (v["absolute_path"] or []))
-        if v["instance_type"] == "HOST":
-            # reference print_failed HOST form (validation.py:68): no
-            # location prefix, just the hostname
-            print(f"FAIL | [ERROR] {v['message']} [HOST] {v['instance_name']} [PROPERTY] {prop}")
-        else:
-            print(f"FAIL | [ERROR] {v['message']} [{v['instance_type']}] {v['instance_location']}/{v['instance_name']} [PROPERTY] {prop}")
-
-    if args.show_pass:
-        # reference print_passed (validation.py:82-91): PASS | [TYPE] name
-        # [SCHEMA ID] id. Verdicts are partition-grain so the collect is
-        # bounded by (#partitions × #schemas), capped like the FAIL lines.
-        passed = (
-            report.verdicts.filter(F_col("result") == "PASS")
-            .orderBy("schema_id", "instance_name")
-            .limit(args.show_failures)
-            .collect()
-        )
-        for p in passed:
-            # verdicts carry their own grain (TABLE for the synthetic
-            # table-grain row, HOST/PARTITION for data rows) — no name
-            # matching, so a host literally named 'table' labels correctly
-            print(f"PASS | [{p['grain']}] {p['instance_name']} [SCHEMA ID] {p['schema_id']}")
+    failures = _print_report(report, args)
 
     if args.summary:
         print(f"{'Rule':<60} {'Violations':>10} {'Instances':>10}")

@@ -1,10 +1,14 @@
 """Resumable per-partition checkpoint lineage (SURVEY.md §4.2 #3).
 
 A lineage manifest table records, per (partition, rule_set_hash): verdict,
-row/violation counts, and completion time. A resumed run anti-joins the
-input's partitions against completed lineage and validates ONLY pending
-partitions — the engine-level analogue of Iceberg partition pruning; an
-interrupted 10^12-turn run skips everything already validated.
+row/violation counts, and completion time. A resumed run reads the lineage
+ONCE, collects the newest verdict per partition (a partition-count-sized
+result) and validates ONLY the rows whose partition is not done — a plain
+filter over the input with the done ids as a literal set, the engine-level
+analogue of Iceberg partition pruning; an interrupted 10^12-turn run skips
+everything already validated. No frame the run builds reads the lineage
+path: the run appends to it, and Spark re-plans a persisted frame whose
+source files change under it.
 
 Correctness note: partition-grain resume is sound because every
 conversation-grain rule (uniqueness on (conv_id, turn_idx), ordering,
@@ -32,14 +36,28 @@ LINEAGE_SCHEMA_DDL = (
 )
 
 
+def _instance_counts(df: DataFrame, engine: ValidationEngine) -> dict:
+    """Row count of *df* per engine instance (NULL included): one groupBy
+    collect, partition-count-sized."""
+    inst = engine._instance_col(df).alias("_inst")
+    return {r[0]: r[1] for r in df.groupBy(inst).agg(F.count(F.lit(1))).collect()}
+
+
+def _table_failed(latest: dict) -> bool:
+    """Is the newest verdict of the synthetic 'table' instance FAIL, in a
+    :meth:`CheckpointManager.latest_verdicts` result?"""
+    return latest.get("table", (None, None))[0] == "FAIL"
+
+
 class CheckpointManager:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        # the pending subset of the most recent run() — callers using
-        # defer_record pass it back to record() so lineage row counts don't
-        # re-aggregate the full input
+        # the pending subset of the most recent run() and its row count per
+        # instance — callers using defer_record pass both back to record(),
+        # so lineage row counts never re-aggregate the input
         self.last_pending: DataFrame | None = None
+        self.last_counts: dict | None = None
 
     def lineage(self) -> DataFrame:
         # probe through Spark, not the driver's local filesystem — a
@@ -49,48 +67,38 @@ class CheckpointManager:
         # mismatch, or storage/credential error must FAIL LOUDLY — swallowing
         # it would silently disable resume, re-validate everything, and
         # append duplicate lineage with no signal the checkpoint was
-        # unreadable.
+        # unreadable. The declared read schema costs no inference job, and
+        # an existing directory with no parquet yet (pre-created by ops, or
+        # a first run that died before any commit) reads as empty.
         from pyspark.errors import AnalysisException
 
         try:
-            df = self.spark.read.parquet(self.path)
+            df = self.spark.read.schema(LINEAGE_SCHEMA_DDL).parquet(self.path)
         except AnalysisException as e:
             cls = e.getCondition() if hasattr(e, "getCondition") else None
-            # UNABLE_TO_INFER_SCHEMA = the directory exists but holds no
-            # parquet yet (ops pre-created it, or a first run died before any
-            # commit) — semantically identical to first-run, not corruption
-            if cls in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA") or any(
-                f"[{c}]" in str(e) for c in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-            ):
+            if cls == "PATH_NOT_FOUND" or "[PATH_NOT_FOUND]" in str(e):
                 return self.spark.createDataFrame([], LINEAGE_SCHEMA_DDL)
             raise
-        if "run_ns" not in df.columns:  # lineage written before run_ns existed
-            df = df.withColumn("run_ns", F.lit(0).cast("bigint"))
-        return df
+        # a file written before run_ns existed reads it as NULL
+        return df.withColumn("run_ns", F.coalesce(F.col("run_ns"), F.lit(0).cast("bigint")))
 
-    def completed_partitions(self, rule_set_hash: str) -> DataFrame:
-        """Partitions whose validation is DONE: a recorded PASS verdict under
-        this rule-set hash. FAILed partitions are deliberately NOT complete —
-        treating them as done would let a resumed run find nothing pending
-        and exit 0 while violations exist (masking the CLI's 'exit 1 iff any
-        violation' contract). A FAILed partition re-validates on resume: same
-        data → same FAIL → nonzero exit; fixed data → PASS and the lineage
-        gains the newer PASS row."""
-        # the NEWEST verdict decides: a partition with an old PASS and a
-        # newer FAIL (re-validated after a data change) is NOT complete
-        latest = (
+    def latest_verdicts(self, rule_set_hash: str) -> dict:
+        """partition_id → (verdict, n_rows) of the NEWEST lineage row under
+        this rule-set hash: one lineage read, one partition-count-sized
+        collect. A partition with an old PASS and a newer FAIL (re-validated
+        after a data change) maps to FAIL."""
+        rows = (
             self.lineage()
             .filter(F.col("rule_set_hash") == rule_set_hash)
             .groupBy("partition_id")
             .agg(
                 # run_ns breaks ties between two record() calls landing in
-                # the same current_timestamp() microsecond
+                # the same validated_at microsecond
                 F.max_by(F.struct("verdict", "n_rows"), F.struct("validated_at", "run_ns")).alias("_latest")
             )
+            .collect()
         )
-        return latest.filter(F.col("_latest.verdict") == "PASS").select(
-            "partition_id", F.col("_latest.n_rows").alias("n_rows")
-        )
+        return {r["partition_id"]: (r["_latest"]["verdict"], r["_latest"]["n_rows"]) for r in rows}
 
     def table_grain_failed(self, rule_set_hash: str) -> bool:
         """True iff the NEWEST 'table'-instance verdict under this rule-set
@@ -98,71 +106,75 @@ class CheckpointManager:
         instance 'table', which no data row carries — partition-level resume
         can never clear them, so an unresolved table FAIL forces a full
         re-validation instead of a nothing-pending success."""
-        rows = (
-            self.lineage()
-            .filter((F.col("rule_set_hash") == rule_set_hash) & (F.col("partition_id") == "table"))
-            .orderBy(F.col("validated_at").desc())
-            .limit(1)
-            .collect()
-        )
-        return bool(rows) and rows[0]["verdict"] == "FAIL"
+        return _table_failed(self.latest_verdicts(rule_set_hash))
 
     def pending(self, df: DataFrame, engine: ValidationEngine, verify_counts: bool = False) -> DataFrame:
         """Rows of *df* in partitions NOT yet validated under the engine's
-        current rule-set hash. Broadcast anti-join: the lineage key set is
-        partition-count-sized (thousands), never row-sized.
+        current rule-set hash: ``inst IS NULL OR NOT inst IN (<done ids>)``
+        over *df*, the done ids a literal set collected from one lineage
+        read — no join, no exchange, no lineage scan in the plan.
+
+        A partition is done when its newest verdict is PASS. FAILed
+        partitions are deliberately NOT done — treating them as done would
+        let a resumed run find nothing pending and exit 0 while violations
+        exist (masking the CLI's 'exit 1 iff any violation' contract). A
+        FAILed partition re-validates on resume: same data → same FAIL →
+        nonzero exit; fixed data → PASS and the lineage gains the newer PASS
+        row. Rows whose instance is NULL are always pending (a bare NOT IN
+        would drop them).
 
         verify_counts=True additionally re-validates any PASSed partition
         whose current row count differs from the recorded one — the Parquet-
-        mode stand-in for Iceberg snapshot-id lineage (one extra count
-        aggregation over the input; with Iceberg, snapshot comparison makes
-        it free)."""
-        h = engine.manifest.rule_set_hash()
-        if self.table_grain_failed(h):
+        mode stand-in for Iceberg snapshot-id lineage (one per-instance count
+        collect over the input; with Iceberg, snapshot comparison makes it
+        free)."""
+        latest = self.latest_verdicts(engine.manifest.rule_set_hash())
+        if _table_failed(latest):
             return df  # unresolved table-grain FAIL: everything re-validates
-        done = self.completed_partitions(h).withColumnRenamed("partition_id", "_inst")
-        keyed = df.withColumn("_inst", engine._instance_col(df))
-        if verify_counts:
-            current = keyed.groupBy("_inst").agg(F.count(F.lit(1)).alias("_cur_rows"))
-            unchanged = (
-                done.join(F.broadcast(current), "_inst")
-                .filter(F.col("n_rows") == F.col("_cur_rows"))
-                .select("_inst")
-            )
-            return keyed.join(F.broadcast(unchanged), "_inst", "left_anti").drop("_inst")
-        return keyed.join(F.broadcast(done.select("_inst")), "_inst", "left_anti").drop("_inst")
+        done = {p for p, (verdict, _) in latest.items() if verdict == "PASS" and p is not None}
+        if verify_counts and done:
+            current = _instance_counts(df, engine)
+            done = {p for p in done if current.get(p) == latest[p][1]}
+        if not done:
+            return df
+        inst = engine._instance_col(df)
+        return df.filter(inst.isNull() | ~inst.isin(sorted(done)))
 
-    def record(self, df: DataFrame, engine: ValidationEngine, report: ValidationReport) -> None:
-        """Append lineage rows for every partition in this run. Call AFTER
-        the report's outputs are materialized/written — recording first would
+    def record(
+        self,
+        df: DataFrame,
+        engine: ValidationEngine,
+        report: ValidationReport,
+        counts: dict | None = None,
+        verdicts: list | None = None,
+    ) -> None:
+        """Append one lineage row per verdict of *report*. Call AFTER the
+        report's outputs are materialized/written — recording first would
         mark partitions complete whose results never landed (see run()'s
-        defer_record). `df` may be the full input: lineage rows come from the
-        report's verdicts (left-joined for counts), so partitions outside
-        this run's verdict set never gain rows."""
+        defer_record). ``counts`` is the row count per instance (run()'s
+        ``last_counts``); without it one groupBy over *df* computes it, and
+        *df* may be the full input — partitions outside the report's
+        verdicts never gain rows. ``verdicts`` are the report's collected
+        verdict rows when the caller already holds them. The rows are built
+        on the driver and written as one frame."""
         import time
+        from datetime import datetime, timezone
 
+        if counts is None:
+            counts = _instance_counts(df, engine)
+        if verdicts is None:
+            verdicts = report.verdicts.collect()
         h = engine.manifest.rule_set_hash()
-        rows_per_part = (
-            df.groupBy(engine._instance_col(df).alias("instance_name"))
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-        )
-        lineage = (
-            report.verdicts.join(rows_per_part, "instance_name", "left")
-            .select(
-                F.col("instance_name").alias("partition_id"),
-                F.lit(h).alias("rule_set_hash"),
-                F.col("schema_id"),
-                F.col("result").alias("verdict"),
-                F.coalesce(F.col("n_rows"), F.lit(0)).cast("bigint").alias("n_rows"),
-                F.col("n_violations").cast("bigint").alias("n_violations"),
-                F.lit(None).cast("string").alias("snapshot_id"),
-                F.current_timestamp().alias("validated_at"),
-                # driver-side monotonic stamp: two record() calls can share a
-                # current_timestamp() microsecond; max_by needs a total order
-                F.lit(time.time_ns()).cast("bigint").alias("run_ns"),
-            )
-        )
-        lineage.write.mode("append").parquet(self.path)
+        # driver-side monotonic stamp: two record() calls can share a
+        # validated_at microsecond; max_by needs a total order
+        run_ns = time.time_ns()
+        at = datetime.fromtimestamp(run_ns / 1e9, timezone.utc)
+        rows = [
+            (v["instance_name"], h, v["schema_id"], v["result"], counts.get(v["instance_name"], 0),
+             v["n_violations"], None, at, run_ns)
+            for v in verdicts
+        ]
+        self.spark.createDataFrame(rows, LINEAGE_SCHEMA_DDL).write.mode("append").parquet(self.path)
 
     def run(
         self,
@@ -179,18 +191,20 @@ class CheckpointManager:
 
         defer_record=True skips the lineage append so the caller can
         materialize its own outputs FIRST and then call
-        ``record(df, engine, report)`` — otherwise a failed downstream write
-        would leave partitions marked complete whose violation rows never
-        landed anywhere (the next resume would skip them forever)."""
+        ``record(last_pending, engine, report, last_counts)`` — otherwise a
+        failed downstream write would leave partitions marked complete whose
+        violation rows never landed anywhere (the next resume would skip
+        them forever)."""
         pend = self.pending(df, engine, verify_counts=verify_counts)
-        self.last_pending = pend
-        n = pend.count()
+        counts = _instance_counts(pend, engine)
+        self.last_pending, self.last_counts = pend, counts
+        n = sum(counts.values())
         if n == 0:
             return None, 0
         report = engine.validate(pend, ref_tables)
         if not defer_record:
-            # materialize before recording so lineage never claims un-finished work
-            report.violations.count()
-            report.verdicts.count()
-            self.record(pend, engine, report)
+            # record() collects the verdicts, which materializes the report
+            # before lineage claims the work done
+            self.record(pend, engine, report, counts)
         return report, n
+

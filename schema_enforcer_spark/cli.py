@@ -273,13 +273,12 @@ def _session(args, name: str):
     return builder.getOrCreate()
 
 
-def _print_report(report, args) -> list:
+def _print_report(report, args, verdicts: list) -> None:
     """Print a report's FAIL lines, and its PASS lines with --show-pass, in
     the format of the reference's ValidationResult.print
     (/root/reference/schema_enforcer/validation.py:53-91), at most
-    --show-failures of each. Returns the FAIL rows printed."""
-    from pyspark.sql.functions import col
-
+    --show-failures of each. *verdicts* are the report's collected verdict
+    rows."""
     failures = report.violations.orderBy("message").limit(args.show_failures).collect()
     for v in failures:
         # a NULL key column yields a NULL path element (cast preserves it);
@@ -293,20 +292,17 @@ def _print_report(report, args) -> list:
             print(f"FAIL | [ERROR] {v['message']} [{v['instance_type']}] {v['instance_location']}/{v['instance_name']} [PROPERTY] {prop}")
     if args.show_pass:
         # reference print_passed (validation.py:82-91): PASS | [TYPE] name
-        # [SCHEMA ID] id. Verdicts are partition-grain so the collect is
-        # bounded by (#partitions × #schemas), capped like the FAIL lines.
-        passed = (
-            report.verdicts.filter(col("result") == "PASS")
-            .orderBy("schema_id", "instance_name")
-            .limit(args.show_failures)
-            .collect()
+        # [SCHEMA ID] id, ordered by (schema_id, instance_name) with a NULL
+        # name first, capped like the FAIL lines
+        passed = sorted(
+            (p for p in verdicts if p["result"] == "PASS"),
+            key=lambda p: (p["schema_id"], p["instance_name"] is not None, p["instance_name"] or ""),
         )
-        for p in passed:
+        for p in passed[: args.show_failures]:
             # verdicts carry their own grain (TABLE for the synthetic
             # table-grain row, HOST/PARTITION for data rows) — no name
             # matching, so a host literally named 'table' labels correctly
             print(f"PASS | [{p['grain']}] {p['instance_name']} [SCHEMA ID] {p['schema_id']}")
-    return failures
 
 
 def _schema_tools(args) -> int:
@@ -409,9 +405,9 @@ def _automap_main(args) -> int:
     for m, sub in bound:
         eng = ValidationEngine(m, key_columns=["host"], instance_expr="host", instance_type="HOST")
         report = eng.validate(sub)
-        _print_report(report, args)
-        if not report.passes():
-            any_fail = True
+        verdicts = report.verdicts.collect()
+        _print_report(report, args, verdicts)
+        any_fail |= any(v["result"] == "FAIL" for v in verdicts)
         report.unpersist()
     if any_fail:
         return 1
@@ -808,11 +804,10 @@ def main(argv: list[str] | None = None) -> int:
         # schema_id, so per-manifest results stay separable
         report = validate_many(engines, df, ref_tables)
 
-    # the report fans out into several actions below (writes, lineage scan,
-    # FAIL-line collect, passes(), counts): its violations are already
-    # persisted (report.cached); persist the verdicts too, or each action
-    # would re-run the verdict aggregation
-    report.verdicts.persist()
+    # ONE action fills the persisted report (report.cached): the verdict
+    # rows, one per instance and manifest. The sink deletes, the verdict
+    # sink, the PASS lines, the lineage rows and the exit code all read them
+    verdicts = report.verdicts.collect()
 
     # the SINK view of violations: optionally capped per (rule, instance).
     # Verdicts/rule_summary/exit code keep reading the full persisted set —
@@ -831,6 +826,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.output:
         root = args.output.rstrip("/")
+        verdict_sink = spark.createDataFrame(verdicts, report.verdicts.schema)
         if args.checkpoint:
             # a resumed run covers only the PENDING subset, and a FAILed
             # partition re-validates on EVERY resume — plain append would
@@ -843,7 +839,7 @@ def main(argv: list[str] | None = None) -> int:
             # names use Spark's Hive path escaping — deleting the RAW
             # instance value would silently miss any name with ':'/'/'/'%'
             # etc. and re-append duplicates on every resume.
-            insts = [r["instance_name"] for r in report.verdicts.select("instance_name").distinct().collect()]
+            insts = {v["instance_name"] for v in verdicts}
             jvm = spark._jvm
             hpath = jvm.org.apache.hadoop.fs.Path
             fs = hpath(root).getFileSystem(spark._jsc.hadoopConfiguration())
@@ -851,10 +847,10 @@ def main(argv: list[str] | None = None) -> int:
                 for inst in insts:
                     fs.delete(hpath(f"{root}/{sub}/instance_name={escape_partition_value(inst)}"), True)
             sink_violations.write.mode("append").partitionBy("instance_name").parquet(f"{root}/violations")
-            report.verdicts.write.mode("append").partitionBy("instance_name").parquet(f"{root}/verdicts")
+            verdict_sink.write.mode("append").partitionBy("instance_name").parquet(f"{root}/verdicts")
         else:
             sink_violations.write.mode("overwrite").parquet(f"{root}/violations")
-            report.verdicts.write.mode("overwrite").parquet(f"{root}/verdicts")
+            verdict_sink.write.mode("overwrite").parquet(f"{root}/verdicts")
 
     if args.stats_columns:
         from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
@@ -866,26 +862,21 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         # sketch only what this run validated; earlier partitions' rows are
         # already in the store — that's the incremental contract. Runs
-        # BEFORE cm.record(): last_pending is a lazy anti-join against the
-        # lineage, so once record() marks this run's PASSed partitions done
-        # it no longer holds their rows
-        stats_df = cm.last_pending if (cm is not None and cm.last_pending is not None) else df
+        # BEFORE cm.record(), so a bad column name exits 2 with no lineage
+        # claiming the run's partitions done
+        stats_df = cm.last_pending if cm is not None else df
         write_partition_stats(
             stats_df, cols, stats_store_path(args.checkpoint), eng._instance_col(stats_df)
         )
         _print_merged_stats()
 
     if cm is not None:
-        if not args.output:
-            # no output sink: materialize before recording so lineage never
-            # claims unfinished work
-            report.violations.count()
-            report.verdicts.count()
-        # lineage row counts come from the PENDING subset this run actually
-        # validated — aggregating the full input would re-scan everything
-        cm.record(cm.last_pending if cm.last_pending is not None else df, eng, report)
+        # the verdict collect materialized the report, so lineage never
+        # claims unfinished work; row counts come from the PENDING subset
+        # run() already counted
+        cm.record(cm.last_pending, eng, report, cm.last_counts, verdicts)
 
-    failures = _print_report(report, args)
+    _print_report(report, args, verdicts)
 
     if args.summary:
         print(f"{'Rule':<60} {'Violations':>10} {'Instances':>10}")
@@ -893,14 +884,13 @@ def main(argv: list[str] | None = None) -> int:
         for r in report.rule_summary().collect():
             print(f"{r['schema_id']:<60} {r['n_violations']:>10} {r['n_instances']:>10}")
 
-    any_fail = bool(failures) or not report.passes()
-    n = report.violations.count() if any_fail else 0
-    # release the fan-out caches — a long-lived session (tests, notebooks)
+    # every violation counts in exactly one verdict
+    n = sum(v["n_violations"] for v in verdicts)
+    # release the persisted report — a long-lived session (tests, notebooks)
     # calling main() repeatedly must not accumulate persisted DataFrames
-    report.verdicts.unpersist()
     report.unpersist()
     ids = ", ".join(e.manifest.id for e in engines)
-    if any_fail:
+    if n:
         print(f"{n} violation(s) [{ids}]")
         return 1
     print(f"ALL SCHEMA VALIDATION CHECKS PASSED [{ids}]")

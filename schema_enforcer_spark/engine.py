@@ -1579,10 +1579,13 @@ class ValidationEngine:
                 )
             ).dropDuplicates()
         fails = violations.groupBy(
-            "instance_name", F.col("instance_type").alias("grain")
+            F.col("instance_name").alias("_v_inst"), F.col("instance_type").alias("_v_grain")
         ).agg(F.count(F.lit(1)).alias("n_violations"))
+        # null-safe on the name: a NULL instance's violations must count in
+        # the NULL instance's verdict, so the verdicts account for every row
+        on = F.col("instance_name").eqNullSafe(F.col("_v_inst")) & (F.col("grain") == F.col("_v_grain"))
         return (
-            universe.join(fails, ["instance_name", "grain"], "left")
+            universe.join(fails, on, "left")
             .select(
                 F.lit(self.manifest.id).alias("schema_id"),
                 F.col("instance_name"),

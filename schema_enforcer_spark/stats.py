@@ -120,6 +120,15 @@ def merge_hll_estimate(sketches: DataFrame, columns: list[str]) -> DataFrame:
 # of the store path itself work normally.
 
 
+# the shape of one store row, as write_partition_stats writes it (the
+# partition id as a string, whatever the instance column's type); the
+# store is read with it, so a read costs no schema-inference job
+STATS_SCHEMA_DDL = (
+    "partition_id string, col_name string, hll binary, n_nulls bigint, n_rows bigint, "
+    "min_s string, max_s string, min_n double, max_n double, run_ns bigint"
+)
+
+
 def stats_store_path(checkpoint_dir: str) -> str:
     return checkpoint_dir.rstrip("/") + "/_column_stats"
 
@@ -150,7 +159,7 @@ def write_partition_stats(
             F.min(F.col(c).try_cast("double")).alias(f"{c}__min_n"),
             F.max(F.col(c).try_cast("double")).alias(f"{c}__max_n"),
         ]
-    wide = df.groupBy(instance_col.alias("partition_id")).agg(
+    wide = df.groupBy(instance_col.cast("string").alias("partition_id")).agg(
         F.count(F.lit(1)).alias("__n"), *aggs
     )
     structs = F.array(
@@ -193,7 +202,7 @@ def merged_column_stats(spark, store_path: str) -> DataFrame:
     extremes (double form preferred, string form as display fallback)."""
     from pyspark.sql.window import Window
 
-    st_df = spark.read.parquet(store_path)
+    st_df = spark.read.schema(STATS_SCHEMA_DDL).parquet(store_path)
     w = Window.partitionBy("partition_id", "col_name").orderBy(F.col("run_ns").desc())
     latest = st_df.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1).drop("_rk")
     return (

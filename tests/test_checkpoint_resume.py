@@ -143,3 +143,31 @@ def test_null_instance_violation_fails_its_verdict(spark, days):
         assert sum(r["n_violations"] for r in rows) == report.violations.count() == 1
     finally:
         report.unpersist()
+
+
+# Spark jobs of the day-2 resume below, measured when the pending set became
+# a driver-side literal filter (43 while it was a broadcast anti-join against
+# the lineage path): the input read, one lineage collect, one pending-count
+# collect, one verdict collect that fills the persisted report, the two sink
+# writes, the stats write and merge, one lineage append and one FAIL-line
+# collect, some of them several jobs under adaptive execution.
+RESUME_JOBS = 22
+
+
+def test_resume_job_count(spark, days, tmp_path, capsys):
+    """Guard on the Spark jobs of a two-day resume with every output the
+    benchmark's resume writes: a job that comes back (a lineage re-read, a
+    re-validation after the lineage append) shows here first."""
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    args = ["--manifest", MANIFEST, "--checkpoint", ckpt, "--output", out, "--stats-columns", "conv_id,role"]
+    assert main([*args, "--input", days["day1"]]) == 0
+    sc = spark.sparkContext
+    sc.setJobGroup("resume-job-guard", "day-2 resume")
+    try:
+        assert main([*args, "--input", days["day2"]]) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    capsys.readouterr()
+    n = len(sc.statusTracker().getJobIdsForGroup("resume-job-guard"))
+    assert n <= RESUME_JOBS, f"day-2 resume ran {n} Spark jobs (guard {RESUME_JOBS})"

@@ -11,7 +11,9 @@ Checked properties:
 - filter pushdown: partition/row-group filters reach the parquet scan;
 - per-evaluator exchange counts (standalone unique, aggregate plain and
   salted, rate_limit, and zero for the items, prefix_items and
-  property_names entry arrays).
+  property_names entry arrays);
+- checkpoint pending set: a literal filter over the input, with no join,
+  no broadcast and no scan of the lineage path.
 """
 
 from __future__ import annotations
@@ -823,6 +825,43 @@ def main() -> None:
         else:
             problems.append(f"{rule28['kind']} ({title28}): {n_ex28} Exchanges (pinned {want28})")
         sections.append((title28, p28, notes28))
+
+    # 29. checkpoint resume: the pending set over a lineage whose newest
+    # verdicts mark half the partitions PASS is a literal filter over the
+    # input — no join, no broadcast, and no scan of the lineage path (the
+    # run appends to it, and a persisted frame reading it would be
+    # re-planned by that append)
+    import shutil
+    import tempfile
+
+    from schema_enforcer_spark.checkpoint import CheckpointManager
+    from schema_enforcer_spark.engine import ValidationReport
+
+    ckpt29 = tempfile.mkdtemp(prefix="plans_lineage_")
+    try:
+        done29 = spark.createDataFrame(
+            [(m.id, str(q), "PARTITION", "PASS", 0) for q in range(16)],
+            "schema_id string, instance_name string, grain string, result string, n_violations bigint",
+        )
+        cm29 = CheckpointManager(spark, ckpt29)
+        cm29.record(tdf, eng, ValidationReport(None, done29))
+        p29 = _formatted(cm29.pending(tdf, eng))
+    finally:
+        shutil.rmtree(ckpt29, ignore_errors=True)
+    notes29 = []
+    bad29 = [op for op in ("Join", "BroadcastExchange") if op in p29]
+    if os.path.basename(ckpt29) in p29:
+        bad29.append("a scan of the lineage path")
+    if bad29:
+        problems.append(f"checkpoint pending set plans {bad29}")
+    else:
+        notes29.append("OK: no Join, no BroadcastExchange, no scan of the lineage path")
+    n_scan29 = len(re.findall(r"\(\d+\) Scan parquet", p29))
+    if n_scan29 == 1:
+        notes29.append("OK: exactly one parquet scan (the input), filtered by the done ids as literals")
+    else:
+        problems.append(f"checkpoint pending set: {n_scan29} parquet scans (want 1: the input)")
+    sections.append(("Checkpoint pending set (done partitions as a literal filter)", p29, notes29))
 
     out = io.StringIO()
     out.write("# PLANS — physical-plan audit (generated by tools/explain_plans.py)\n\n")

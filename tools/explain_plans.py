@@ -21,7 +21,9 @@ from __future__ import annotations
 import io
 import os
 import re
+import shutil
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -90,7 +92,8 @@ def _size_conditions(plan: str) -> list[str]:
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
-    from schema_enforcer_spark.engine import ValidationEngine
+    from schema_enforcer_spark.checkpoint import CheckpointManager
+    from schema_enforcer_spark.engine import ValidationEngine, ValidationReport
     from schema_enforcer_spark.manifest import Manifest, Rule, load_manifest
     from schema_enforcer_spark.synth import gen_transcripts, gen_conversations
 
@@ -831,12 +834,6 @@ def main() -> None:
     # input — no join, no broadcast, and no scan of the lineage path (the
     # run appends to it, and a persisted frame reading it would be
     # re-planned by that append)
-    import shutil
-    import tempfile
-
-    from schema_enforcer_spark.checkpoint import CheckpointManager
-    from schema_enforcer_spark.engine import ValidationReport
-
     ckpt29 = tempfile.mkdtemp(prefix="plans_lineage_")
     try:
         done29 = spark.createDataFrame(

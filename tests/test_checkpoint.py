@@ -142,7 +142,7 @@ def test_table_grain_fail_clears_after_fix(spark, transcripts):
         # data fixed: clean run passes AND records the 'table' PASS
         rep2, n2 = cm.run(transcripts, eng)
         assert rep2 is not None and rep2.passes()
-        assert not cm.table_grain_failed(eng.manifest.rule_set_hash())
+        assert cm.latest_verdicts(eng.manifest.rule_set_hash())["table"][0] == "PASS"
         rep3, n3 = cm.run(transcripts, eng)
         assert rep3 is None and n3 == 0, "fixed table-grain FAIL must clear"
 

@@ -201,7 +201,6 @@ def test_textops(spark):
             textops.punct_count(F.col("text")).alias("n_punct"),
             textops.lang_id(F.col("text")).alias("lang"),
             textops.fingerprint(F.col("text")).alias("fp"),
-            textops.quality_score(F.col("text")).alias("q"),
         ).collect()
     }
     assert out[1]["n_tok"] == 6
@@ -209,7 +208,6 @@ def test_textops(spark):
     assert out[1]["lang"] == "en"
     assert out[2]["n_tok"] == 0
     assert out[3]["lang"] == "de"
-    assert out[1]["q"] > out[2]["q"]
 
 
 def test_fingerprint_normalization(spark):
@@ -255,20 +253,21 @@ def test_minhash_permutations_are_independent(spark):
     """Regression: (a·h+b) without a modulus is monotonic in h, so every
     'permutation' picks the same argmin shingle — two sets at Jaccard 0.9
     then agree on ~0/K positions instead of ~0.9·K. With the mod-p fix the
-    per-position agreement must estimate the true Jaccard."""
-    from schema_enforcer_spark.functions.dedup import minhash_signature, word_shingles
+    per-position agreement must estimate the true Jaccard. With one minhash
+    per band, a band's bucket agrees exactly when its minhash does; a
+    collapsed permutation family agrees on every band or on none, so the
+    agreement must also stay below 1."""
+    from schema_enforcer_spark.functions.dedup import _banded_buckets
 
     a = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     b = a + " nu"  # adds one trailing shingle: Jaccard = 10/11 ≈ 0.91
     df = spark.createDataFrame([(0, a), (1, b)], "doc_id long, text string")
-    sigs = {
-        r["doc_id"]: list(r["sig"])
-        for r in df.select(
-            "doc_id", minhash_signature(word_shingles(F.col("text"), 3), 128, 42).alias("sig")
-        ).collect()
-    }
-    agree = sum(1 for x, y in zip(sigs[0], sigs[1]) if x == y) / 128
-    assert 0.75 <= agree <= 1.0, f"signature agreement {agree} should estimate Jaccard ~0.91"
+    sigs = {0: {}, 1: {}}
+    for r in _banded_buckets(df, "text", "doc_id", 128, 128, 3, 42).collect():
+        sigs[r["_id"]][r["band"]] = r["bucket"]
+    assert len(sigs[0]) == len(sigs[1]) == 128
+    agree = sum(1 for band, x in sigs[0].items() if sigs[1][band] == x) / 128
+    assert 0.75 <= agree < 1.0, f"band agreement {agree} should estimate Jaccard ~0.91"
 
 
 def test_lsh_bucket_cap_bounds_boilerplate(spark):
@@ -425,9 +424,6 @@ def test_pii_counts_and_redact(spark):
     out = {r["id"]: r for r in df.select("id", c["email"].alias("e"), c["ssn_like"].alias("s")).collect()}
     assert out[1]["e"] == 2 and out[1]["s"] == 1
     assert out[2]["e"] == 0 and out[2]["s"] == 0
-    red = df.select("id", textops.redact(F.col("text")).alias("t")).collect()
-    r1 = next(r["t"] for r in red if r["id"] == 1)
-    assert "example.com" not in r1 and "123-45-6789" not in r1 and "[REDACTED]" in r1
 
 
 def test_hash_split_boundary_and_validation(spark):

@@ -93,9 +93,12 @@ def test_validation_on_bucketed_table_no_exchange(spark, transcripts, base_manif
     from schema_enforcer_spark.engine import ValidationEngine
     from schema_enforcer_spark.manifest import Manifest
 
-    io = TableIO(spark, str(tmp_path), num_buckets=8)
-    io.write_bucketed(transcripts.drop("partition_id"), "bt_val", "conv_id", "turn_idx")
-    t = io.read_bucketed("bt_val")
+    (
+        transcripts.drop("partition_id").write.mode("overwrite")
+        .bucketBy(8, "conv_id").sortBy("turn_idx")
+        .option("path", str(tmp_path / "bt_val")).saveAsTable("bt_val")
+    )
+    t = spark.table("bt_val")
     win_m = Manifest(
         id=base_manifest.id,
         rules=tuple(r for r in base_manifest.rules if r.kind in ("ordering", "contiguous", "unique")),

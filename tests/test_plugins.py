@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from schema_enforcer_spark.plugins import PandasValidator, load_validators, run_validator, run_validators
+from schema_enforcer_spark.plugins import PandasValidator, load_validators, run_validator
 from schema_enforcer_spark.synth import inject
 
 
@@ -72,12 +72,16 @@ def test_apply_in_pandas_validator(spark, transcripts):
 
 
 def test_run_validators_union(spark, transcripts):
-    out = run_validators(transcripts, [ToolNameLen(), ConversationGapCheck()])
-    assert out.count() == 0
-    assert out.columns == [
-        "schema_id", "result", "instance_name", "instance_location",
-        "instance_type", "absolute_path", "failing_value", "message",
-    ]
+    """Both plugin shapes (mapInPandas and grouped applyInPandas) return the
+    engine's 8 violation columns in the engine's order, so their output
+    unions by position with any violations frame."""
+    for v in (ToolNameLen(), ConversationGapCheck()):
+        out = run_validator(transcripts, v)
+        assert out.count() == 0
+        assert out.columns == [
+            "schema_id", "result", "instance_name", "instance_location",
+            "instance_type", "absolute_path", "failing_value", "message",
+        ]
 
 
 def test_load_validators_from_file(tmp_path):

@@ -115,10 +115,16 @@ def test_q64_hll_within_epsilon_of_exact(spark):
 
 
 def test_drift_on_ts_gaps(spark, transcripts):
-    """North-star parity: KS/PSI drift on per-conversation ts GAPS — gaps
-    materialize via with_ts_gaps (window lag), then the ordinary drift rule
+    """North-star parity: KS/PSI drift on per-conversation ts GAPS — the gap
+    materializes as a column (window lag), then the ordinary drift rule
     applies; stretched inter-turn times must fire, identical data must not."""
-    gapped = stats.with_ts_gaps(transcripts)
+    from pyspark.sql.window import Window
+
+    def with_ts_gaps(df):
+        t = F.unix_timestamp("ts")
+        return df.withColumn("ts_gap", t - F.lag(t).over(Window.partitionBy("conv_id").orderBy("turn_idx")))
+
+    gapped = with_ts_gaps(transcripts)
     baseline = stats.compute_histogram(gapped, "ts_gap", lo=0.0, hi=600.0, bins=12)
     m = Manifest(
         id="schemas/drift_gap",
@@ -131,8 +137,6 @@ def test_drift_on_ts_gaps(spark, transcripts):
     )
     assert ValidationEngine(m).violations(gapped).count() == 0
     # stretch inter-turn gaps 4x: ts' = ts + 3 * (ts - first_ts) per conv
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("conv_id")
     stretched = transcripts.withColumn(
         "ts",
@@ -141,7 +145,7 @@ def test_drift_on_ts_gaps(spark, transcripts):
             + 3 * (F.unix_timestamp("ts") - F.min(F.unix_timestamp("ts")).over(w))
         ).cast("timestamp"),
     )
-    viols = ValidationEngine(m).violations(stats.with_ts_gaps(stretched)).collect()
+    viols = ValidationEngine(m).violations(with_ts_gaps(stretched)).collect()
     assert len(viols) == 1
     assert "distribution drift on ts_gap" in viols[0]["message"]
 

@@ -100,14 +100,6 @@ class CheckpointManager:
         )
         return {r["partition_id"]: (r["_latest"]["verdict"], r["_latest"]["n_rows"]) for r in rows}
 
-    def table_grain_failed(self, rule_set_hash: str) -> bool:
-        """True iff the NEWEST 'table'-instance verdict under this rule-set
-        hash is FAIL. Table-grain rules (strict_columns, drift) attribute to
-        instance 'table', which no data row carries — partition-level resume
-        can never clear them, so an unresolved table FAIL forces a full
-        re-validation instead of a nothing-pending success."""
-        return _table_failed(self.latest_verdicts(rule_set_hash))
-
     def pending(self, df: DataFrame, engine: ValidationEngine, verify_counts: bool = False) -> DataFrame:
         """Rows of *df* in partitions NOT yet validated under the engine's
         current rule-set hash: ``inst IS NULL OR NOT inst IN (<done ids>)``

@@ -110,11 +110,12 @@ def _shingle_hashes(text: Column, n: int = 3, seed: int = 42) -> Column:
     Jaccard values computed over these longs are identical to the string
     form's — asserted by the oracle gate (exact DuckDB all-pairs twins) and
     the v0-vs-hashed multiset diff run at adoption (0 diffs, sf0.01+sf0.1).
-    The minhash/banding recall argument is unchanged (miss prob ~1e-23 at
-    J=0.9 with 64 hashes / 32 bands) but the dice are re-rolled: signatures
-    built from these hashes differ from minhash_signature(word_shingles)'s,
-    so candidate sets can differ in false positives only — the exact verify
-    keeps every emitted result identical."""
+    The minhash/banding recall argument is the same as over the
+    word_shingles strings (miss prob ~1e-23 at J=0.9 with 64 hashes / 32
+    bands) but the dice are rolled differently: signatures differ from the
+    ones hashing those strings would give, so candidate sets can differ in
+    false positives only — the exact verify keeps every emitted result
+    identical."""
 
     def build(toks: Column) -> Column:
         cnt = F.size(toks)
@@ -155,35 +156,6 @@ def _perm_consts(num_hashes: int, seed: int) -> list[tuple[int, int]]:
         b = ((seed + i) * _MH_MIX + 0x94D049BB133111EB) & 0xFFFFFFFF
         out.append((a, b))
     return out
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 64, seed: int = 42) -> Column:
-    """K minhashes via universal hashing in a SINGLE fold.
-
-    Shape matters: building K separate ``array_min(transform(...))``
-    expressions re-inlines the shingle + hash computation into every
-    element after projection collapse (no CSE across array elements for
-    higher-order functions) — measured ~10× slower. Instead: one
-    ``transform`` hashes each shingle once (xxhash64, masked to 32 bits so
-    ANSI long arithmetic can't overflow), then one ``aggregate`` folds the
-    hash array into the K-wide minimum vector via zip_with against a
-    literal (a_i, b_i) constant array. Work: |shingles| string hashes +
-    K·|shingles| multiply-adds, all codegen, no UDF."""
-    consts = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in _perm_consts(num_hashes, seed)
-        ]
-    )
-    hashes = F.transform(shingles, lambda s: F.xxhash64(s, F.lit(seed)).bitwiseAND(F.lit(0xFFFFFFFF)))
-    init = F.array_repeat(F.lit(1 << 62), num_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, consts, lambda m, c: F.least(m, F.pmod(h * c["a"] + c["b"], F.lit(_MH_PRIME)))
-        ),
-    )
 
 
 def _banded_buckets(df, text_col, id_col, num_hashes, bands, shingle_n, seed) -> DataFrame:
@@ -248,10 +220,9 @@ def _cap_buckets(banded: DataFrame, keys: list[str], max_bucket_size: int | None
     signature pipeline for the counts branch. An oversized bucket still
     lands on one reducer (either form) and WindowExec spills it to disk
     while counting — but it is dropped before the O(b²) pair emission,
-    which is the hazard the cap exists for. Dropped buckets are observable
-    via
-    lsh_bucket_stats()/simhash_bucket_stats() — dropping is lossy by
-    design, the cap should sit well above the true near-dup group size."""
+    which is the hazard the cap exists for. lsh_bucket_stats() shows the
+    minhash bucket sizes the cap acts on — dropping is lossy by design, the
+    cap should sit well above the true near-dup group size."""
     if max_bucket_size is None:
         return banded
     from pyspark.sql.window import Window
@@ -517,9 +488,6 @@ def match_against_index(
 # implementation hashed per-token in a pandas UDF (blake2b) — correct but
 # Python-bound (~17 s for 500k docs); this one is whole-stage codegen.
 
-_HEX = "0123456789abcdef"
-
-
 def _simhash_sums(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, _votes array<int>): the frequency-weighted vote vector, computed
     as explode_outer(tokens) → per-token 32-bit halves → 64 conditional SUM
@@ -643,21 +611,6 @@ def _simhash_chunk_keys(sigs: DataFrame) -> DataFrame:
 _SIMHASH_KEYS = ["chunk", "val", "sub", "subval"]
 
 
-def simhash_bucket_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Bucket-size histogram (bucket_size, n_buckets) over the two-level
-    simhash join keys — the skew diagnostic for choosing max_bucket_size
-    (mirror of lsh_bucket_stats for the minhash path)."""
-    sigs = simhash(df, text_col, id_col).withColumnsRenamed({id_col: "_id"})
-    return (
-        _simhash_chunk_keys(sigs)
-        .groupBy(*_SIMHASH_KEYS)
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy("bucket_size")
-        .agg(F.count(F.lit(1)).alias("n_buckets"))
-        .orderBy("bucket_size")
-    )
-
-
 def simhash_pairs_from_sigs(
     sigs: DataFrame, max_hamming: int = 3, max_bucket_size: int | None = None
 ) -> DataFrame:
@@ -666,7 +619,7 @@ def simhash_pairs_from_sigs(
     lossless for max_hamming ≤ 3). Buckets larger than max_bucket_size are
     dropped BEFORE pair emission (same _cap_buckets as minhash/embedding
     LSH) so no task ever materializes an unbounded O(b²) pair set; dropping
-    is lossy by design and observable via simhash_bucket_stats."""
+    is lossy by design."""
     if max_hamming > 3:
         raise ValueError(
             f"simhash pigeonhole bucketing guarantees recall only for "
@@ -699,8 +652,7 @@ def simhash_near_dups(
     two-level pigeonhole join (chunk + sub-chunk — see _simhash_chunk_keys).
     Buckets are capped at 5000 rows by default (minhash precedent): a bucket
     that large means ≥5000 docs agreeing on the same 28 signature bits —
-    run exact_dedup first and inspect simhash_bucket_stats before raising
-    the cap. At the test corpora (≤ corpus size 5000) the cap never fires,
+    run exact_dedup first before raising the cap. At the test corpora (≤ corpus size 5000) the cap never fires,
     so results equal the exact all-pairs oracle."""
     sigs = simhash(df, text_col, id_col).withColumnsRenamed({id_col: "_id"})
     return simhash_pairs_from_sigs(sigs, max_hamming, max_bucket_size)

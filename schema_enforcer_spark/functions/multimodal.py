@@ -1,14 +1,12 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary``
-columns with typed metadata.
+"""Multimodal column plumbing: media as opaque ``binary`` columns with
+typed metadata.
 
-The Spark-side machinery (schemas, partition-aware batching, Arrow UDF
-signatures, deterministic sampling) is real and tested; the actual codec
-work is STUBBED — image/audio libraries are not in this container, so
-``decode_image``/``decode_audio`` either raise ``NotImplementedError``
-(default) or produce a deterministic fake (``fake=True``) whose shape
-matches what a real decoder would emit. Swap the `_decode_*_impl`
-functions for Pillow/soundfile calls in a real deployment; nothing else
-changes.
+The Spark-side machinery (partition-aware batching, Arrow UDF signatures)
+is real and tested; the actual codec work is STUBBED — the package depends on
+no imaging library, so ``image_features`` either raises ``NotImplementedError``
+(default) or produces a deterministic fake (``fake=True``) whose shape
+matches what a real decoder would emit. Swap ``_decode_image_impl`` for a
+Pillow call in a real deployment; nothing else changes.
 
 Scale notes: media bytes stay in executor-side Arrow buffers end-to-end
 (mapInPandas iterator API → no full-partition materialization); metadata
@@ -23,21 +21,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
 
 IMAGE_FEATURES_DDL = "media_id long, mime string, n_bytes int, feat array<float>"
-FRAME_SAMPLE_DDL = "media_id long, frame_idx int, frame_bytes binary"
 
 
 def gen_fake_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
@@ -91,105 +76,3 @@ def image_features(df: DataFrame, fake: bool = False, feat_dim: int = 8) -> Data
         .mapInPandas(_extract, IMAGE_FEATURES_DDL)
     )
 
-
-def frame_sample(df: DataFrame, every_ms: int = 1000, fake: bool = False) -> DataFrame:
-    """Sample frames from video rows: one output row per sampled frame.
-    Frame positions are computed JVM-side from metadata (duration_ms) so
-    the Python stage receives an exact work list."""
-    withplan = (
-        df.filter(F.col("mime").startswith("video/") & F.col("duration_ms").isNotNull())
-        .select(
-            "media_id",
-            "content",
-            F.explode(F.sequence(F.lit(0), (F.col("duration_ms") / every_ms).cast("int"))).alias("frame_idx"),
-        )
-    )
-
-    def _grab(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "video decoding requires a codec library not present in "
-                    "this container; run with fake=True"
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "frame_idx": pdf["frame_idx"].astype("int32"),
-                    # deterministic fake frame: slice of source bytes
-                    "frame_bytes": [
-                        bytes(c[i % max(len(c) - 4, 1): i % max(len(c) - 4, 1) + 4])
-                        for c, i in zip(pdf["content"], pdf["frame_idx"])
-                    ],
-                }
-            )
-
-    return withplan.mapInPandas(_grab, FRAME_SAMPLE_DDL)
-
-
-def resize_stub(df: DataFrame, width: int, height: int, fake: bool = False) -> DataFrame:
-    """Resize plumbing: passes bytes through the Arrow boundary with the
-    target dims recorded; the codec call is the stub."""
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("resize requires an imaging library; run with fake=True")
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "content": pdf["content"],
-                }
-            )
-
-    return df.filter(F.col("mime").startswith("image/")).select("media_id", "content").mapInPandas(
-        _resize, "media_id long, width int, height int, content binary"
-    )
-
-
-AUDIO_FEATURES_DDL = "media_id long, n_bytes int, duration_ms int, rms double, zero_crossings int"
-
-
-def audio_features(df: DataFrame, fake: bool = False) -> DataFrame:
-    """Decode + feature-extract per audio/video row (RMS amplitude + zero
-    crossings), Arrow-batched. Same stub contract as image_features: the
-    codec call raises unless fake=True (no audio libs in this container);
-    the fake path derives a deterministic pseudo-waveform from the bytes so
-    the Spark-side plumbing (metadata pushdown before decode, iterator
-    batching, typed output) is fully real and testable."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError(
-                    "audio decoding requires an audio library not present in "
-                    "this container; run with fake=True or swap the decode "
-                    "for a soundfile/librosa implementation"
-                )
-            rms, zc = [], []
-            for content in pdf["content"]:
-                # deterministic fake waveform: centered byte values
-                samples = [(b - 128) / 128.0 for b in (content or b"")[:256]]
-                if not samples:
-                    rms.append(0.0)
-                    zc.append(0)
-                    continue
-                rms.append((sum(s * s for s in samples) / len(samples)) ** 0.5)
-                zc.append(sum(1 for a, b in zip(samples, samples[1:]) if (a < 0) != (b < 0)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": pdf["content"].map(lambda b: len(b) if b is not None else 0).astype("int32"),
-                    "duration_ms": pdf["duration_ms"].astype("int32"),
-                    "rms": rms,
-                    "zero_crossings": pd.Series(zc, index=pdf.index, dtype="int32"),
-                }
-            )
-
-    return (
-        df.filter(F.col("duration_ms").isNotNull())  # metadata pushdown BEFORE decode
-        .select("media_id", "duration_ms", "content")
-        .mapInPandas(_extract, AUDIO_FEATURES_DDL)
-    )

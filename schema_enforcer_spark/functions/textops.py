@@ -70,31 +70,6 @@ def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
 
 
-def quality_features(text: Column) -> dict[str, Column]:
-    """Length / token / punct / stopword features for quality scoring."""
-    n_tok = token_count(text)
-    return {
-        "n_chars": F.length(text),
-        "n_tokens": n_tok,
-        "n_stopwords": stopword_count(text),
-        "n_punct": punct_count(text),
-        "mean_token_len": F.when(n_tok > 0, (F.length(F.regexp_replace(text, r"\s+", "")) / n_tok)),
-    }
-
-
-def quality_score(text: Column) -> Column:
-    """Heuristic [0,1] quality score: penalize too-short/too-long docs, low
-    stopword ratio, high punctuation density."""
-    f = quality_features(text)
-    len_ok = F.when((f["n_chars"] >= 50) & (f["n_chars"] <= 20000), 1.0).otherwise(0.3)
-    tok = f["n_tokens"]
-    stop_ratio = F.when(tok > 0, f["n_stopwords"] / tok).otherwise(F.lit(0.0))
-    stop_ok = F.when(stop_ratio >= 0.05, 1.0).otherwise(0.5)
-    punct_ratio = F.when(f["n_chars"] > 0, f["n_punct"] / f["n_chars"]).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio <= 0.2, 1.0).otherwise(0.4)
-    return F.round((len_ok + stop_ok + punct_ok) / 3.0, 4)
-
-
 def lang_id(text: Column) -> Column:
     """Stopword-marker language heuristic: argmax marker count, 'und'
     (undetermined) when nothing matches; ties pick the earliest language in
@@ -147,20 +122,6 @@ def fingerprint(text: Column, normalize: bool = True) -> Column:
     return F.md5(F.trim(t))
 
 
-def rolling_fingerprints(text: Column, window: int = 8) -> Column:
-    """Winnowing-style rolling fingerprints: md5 of each `window`-token
-    shingle — the building block for near-dup shingle sets."""
-    toks = tokens(F.lower(text))
-    n = F.size(toks)
-    return F.when(
-        n >= window,
-        F.transform(
-            F.sequence(F.lit(0), n - window),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i + 1, window))),
-        ),
-    ).otherwise(F.array(F.md5(F.concat_ws(" ", toks))))
-
-
 # public, simple PII-ish surface patterns (counting only — redaction is a
 # regexp_replace away); deliberately conservative/documented, not a claim of
 # complete PII detection
@@ -174,18 +135,6 @@ PII_PATTERNS: dict[str, str] = {
 def pii_counts(text: Column) -> dict[str, Column]:
     """Per-kind PII-surface match counts — pure regexp_count expressions."""
     return {kind: F.regexp_count(text, F.lit(pat)) for kind, pat in PII_PATTERNS.items()}
-
-
-def redact(text: Column, kinds: list[str] | None = None, token: str = "[REDACTED]") -> Column:
-    """Replace PII-surface matches with a token — chained regexp_replace,
-    still one projection. kinds=None means all patterns; an explicit empty
-    list means redact nothing."""
-    if kinds is None:
-        kinds = list(PII_PATTERNS)
-    out = text
-    for kind in kinds:
-        out = F.regexp_replace(out, PII_PATTERNS[kind], token)
-    return out
 
 
 def word_ngrams(text: Column, n: int = 4) -> Column:
@@ -212,20 +161,6 @@ def _ratio_of_grams(grams: Column) -> Column:
     return F.when(
         grams.isNull() | (total <= 0), F.lit(0.0)
     ).otherwise(F.round(F.lit(1.0) - F.size(F.array_distinct(grams)) / total, 6))
-
-
-def repetition_ratio(text: Column, n: int = 4) -> Column:
-    """Fraction of duplicated word n-grams within the document — the
-    standard intra-document repetition quality signal (high ⇒ boilerplate /
-    looping generation). 1 - distinct_ngrams/total_ngrams, 0.0 for docs
-    shorter than n tokens; pure expressions.
-
-    PERF: this single-Column form re-evaluates the n-gram HOF 2-3× per row
-    (Spark does no CSE across higher-order functions, and the grams array
-    feeds size + array_distinct + the null guard). Prefer
-    ``with_repetition_ratio`` in any hot path — it materializes the grams
-    array once behind a projection barrier."""
-    return _ratio_of_grams(word_ngrams(text, n))
 
 
 def exploded_distinct_ngrams(df, text_col: str = "text", id_col: str = "doc_id", n: int = 4):
@@ -398,10 +333,16 @@ def top_terms(df, text_col: str = "text", id_col: str = "doc_id", k: int = 3):
 
 
 def with_repetition_ratio(df, text_col: str = "text", out_col: str = "rep_ratio", n: int = 4):
-    """DataFrame-level repetition ratio that evaluates the n-gram transform
-    ONCE per row: the grams array is materialized in an inner projection,
-    and because the ratio references it 3× (size, array_distinct, null
-    guard) CollapseProject keeps the two projections separate — a real
-    projection barrier, ~3× less expression work than the Column form."""
+    """Fraction of duplicated word n-grams within each document — the
+    standard intra-document repetition quality signal (high ⇒ boilerplate /
+    looping generation): 1 - distinct_ngrams/total_ngrams, 0.0 for docs
+    shorter than n tokens.
+
+    Evaluates the n-gram transform ONCE per row: the grams array is
+    materialized in an inner projection, and because the ratio references
+    it 3× (size, array_distinct, null guard) CollapseProject keeps the two
+    projections separate — a real projection barrier. A single-Column form
+    re-evaluates the n-gram HOF 2-3× per row (Spark does no CSE across
+    higher-order functions)."""
     staged = df.withColumn("_grams", word_ngrams(F.col(text_col), n))
     return staged.withColumn(out_col, _ratio_of_grams(F.col("_grams"))).drop("_grams")

@@ -140,6 +140,8 @@ def run_validator(
         if instance_expr
         else F.pmod(F.hash(anchor), F.lit(num_buckets)).cast("string")
     )
+    # not ValidationEngine._violation_rows: a plugin runs without a
+    # manifest or engine, so table and instance type come from the caller
     return raw.select(
         F.lit(validator.schema_id).alias("schema_id"),
         F.lit("FAIL").alias("result"),
@@ -150,13 +152,6 @@ def run_validator(
         F.col("failing_value"),
         F.col("message"),
     )
-
-
-def run_validators(df: DataFrame, validators: list[PandasValidator], **kw) -> DataFrame:
-    from functools import reduce
-
-    parts = [run_validator(df, v, **kw) for v in validators]
-    return reduce(lambda a, b: a.unionByName(b), parts)
 
 
 class PydanticBatchValidator(PandasValidator):

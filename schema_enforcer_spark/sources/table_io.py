@@ -67,30 +67,6 @@ class TableIO:
         # discovery ("Conflicting directory structures")
         self.write(df, name, bucket_col=bucket_col, mode="append")
 
-    # -- bucketed tables (co-located joins) ---------------------------------
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_col: str = "conv_id",
-        sort_col: str | None = "turn_idx",
-        mode: str = "overwrite",
-    ) -> None:
-        """Write as a BUCKETED managed table: joins/groupBys between tables
-        bucketed on the same key with the same bucket count need NO exchange
-        (Catalyst sees HashPartitioning from the bucket spec). This is the
-        on-disk analogue of the engine's one-exchange window pass — at
-        100 TB, pre-bucketing transcripts and conversations on conv_id makes
-        every conv-keyed join/window shuffle-free."""
-        writer = df.write.mode(mode).bucketBy(self.num_buckets, bucket_col)
-        if sort_col:
-            writer = writer.sortBy(sort_col)
-        writer.option("path", self._path(name)).saveAsTable(name.replace("/", "_"))
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        return self.spark.table(name.replace("/", "_"))
-
 
 def with_json_column(df: DataFrame, column: str, schema_ddl: str, target: str | None = None) -> DataFrame:
     """S2 nested ingestion: parse a JSON-string column into a typed struct so

@@ -6,15 +6,17 @@ the reference validates one document at a time and has no stats layer):
 - ``column_stats``: min/max/null-rate/approx-distinct per column, ONE
   aggregation pass over the table (all columns' aggregates in a single
   ``agg()`` ⇒ one scan + one reduce).
-- ``hll_sketches``: mergeable HyperLogLog sketches per column via Spark's
-  built-in ``hll_sketch_agg`` — persisted per partition so later runs merge
-  with ``hll_union_agg`` instead of rescanning.
+- ``write_partition_stats`` / ``merged_column_stats``: mergeable
+  HyperLogLog sketches per (partition, column) via Spark's built-in
+  ``hll_sketch_agg``, persisted under the checkpoint dir so a resumed run
+  merges them with ``hll_union_agg`` instead of rescanning.
 - ``compute_histogram`` / ``ks_statistic`` / ``psi``: fixed-edge histograms
   via ``width_bucket`` + groupBy (distributed), drift math on the tiny
   histogram itself (driver or single-stage — never on raw rows).
 - ``drift_violations``: manifest rule adapter — KS/PSI of the current table
   vs a stored baseline histogram on e.g. ``length(text)`` (turn length) or
-  ts-gaps, emitting violation rows compatible with the engine.
+  a ts-gap column the caller adds with a ``lag`` window, emitting violation
+  rows compatible with the engine.
 """
 
 from __future__ import annotations
@@ -87,21 +89,6 @@ def exact_column_stats(df: DataFrame, columns: list[str] | None = None) -> DataF
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def hll_sketches(df: DataFrame, columns: list[str], group_by: str | None = "partition_id") -> DataFrame:
-    """Per-partition HLL sketches (binary, mergeable with hll_union_agg) —
-    the persistence format for incremental distinct counting at 10^12 rows."""
-    aggs = [F.hll_sketch_agg(F.col(c).cast("string")).alias(f"{c}__hll") for c in columns]
-    if group_by and group_by in df.columns:
-        return df.groupBy(group_by).agg(*aggs)
-    return df.agg(*aggs)
-
-
-def merge_hll_estimate(sketches: DataFrame, columns: list[str]) -> DataFrame:
-    """Merge per-partition sketches → one distinct estimate per column."""
-    merged = sketches.agg(*[F.hll_union_agg(F.col(f"{c}__hll")).alias(f"{c}__hll") for c in columns])
-    return merged.select(*[F.hll_sketch_estimate(f"{c}__hll").alias(f"{c}__distinct") for c in columns])
 
 
 # ---------------------------------------------------------------------------
@@ -308,38 +295,6 @@ def quantile_accuracy_report(
     return wide.select(F.explode(structs).alias("s")).select("s.*")
 
 
-def numeric_profile(df: DataFrame, columns: list[str], percentiles: list[float] | None = None) -> DataFrame:
-    """Approximate percentile profile per numeric column — one pass via
-    approx_percentile (t-digest-backed, mergeable across partitions).
-    Complements column_stats for distribution-aware quality gates."""
-    pcts = percentiles or [0.01, 0.25, 0.5, 0.75, 0.99]
-    # round, don't truncate (int(0.29*100) == 28), and reject label
-    # collisions (0.99 and 0.995 would both render p99)
-    labels = [f"p{round(p * 100):02d}" for p in pcts]
-    if len(set(labels)) != len(labels):
-        raise ValueError(f"percentiles {pcts} collide at integer-percent labels {labels}")
-    aggs = []
-    for c in columns:
-        aggs.append(
-            F.percentile_approx(F.col(c).cast("double"), pcts, 10000).alias(f"{c}__p")
-        )
-        aggs.append(F.avg(F.col(c).cast("double")).alias(f"{c}__mean"))
-        aggs.append(F.stddev_pop(F.col(c).cast("double")).alias(f"{c}__std"))
-    wide = df.agg(*aggs)
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"{c}__mean").alias("mean"),
-                F.col(f"{c}__std").alias("std"),
-                *[F.col(f"{c}__p")[i].alias(labels[i]) for i in range(len(pcts))],
-            )
-            for c in columns
-        ]
-    )
-    return wide.select(F.explode(structs).alias("s")).select("s.*")
-
-
 # ---------------------------------------------------------------------------
 # Histograms + drift
 # ---------------------------------------------------------------------------
@@ -355,26 +310,6 @@ def histogram_df(df: DataFrame, expr: str, lo: float, hi: float, bins: int = 32)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def with_ts_gaps(
-    df: DataFrame,
-    partition_by: list[str] | str = "conv_id",
-    order_by: str = "turn_idx",
-    ts_col: str = "ts",
-    out_col: str = "ts_gap",
-) -> DataFrame:
-    """Add the inter-row event-time gap in seconds (NULL for each
-    partition's first row) — the preprocessing step for the north star's
-    ts-gap drift check: ``drift`` rules take a column expression, so the
-    window-derived gap materializes here first. One exchange on the
-    partition key (the same shuffle the ordering pass uses)."""
-    from pyspark.sql.window import Window
-
-    part = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-    w = Window.partitionBy(*part).orderBy(order_by)
-    t = F.unix_timestamp(ts_col) if dict(df.dtypes).get(ts_col) == "timestamp" else F.col(ts_col).cast("long")
-    return df.withColumn(out_col, t - F.lag(t).over(w))
 
 
 def compute_histogram(df: DataFrame, expr: str, lo: float, hi: float, bins: int = 32) -> dict:

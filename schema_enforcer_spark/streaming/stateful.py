@@ -198,90 +198,6 @@ def stream_rate_limit(
     )
 
 
-_SEQ_OUT_DDL = "key string, ts_epoch long, value string, prev_value string, message string"
-# two SCALAR columns (string + long flag), never an array — see the
-# _RATE_STATE_DDL note on the array-typed-state commit hang. last_value may
-# legitimately be NULL (eqNullSafe transitions), so `started` disambiguates
-# "no state yet" from "last value was NULL".
-_SEQ_STATE_DDL = "last_value string, started long"
-
-
-def stream_sequence_rule(
-    stream_df: DataFrame,
-    key_col: str,
-    value_col: str,
-    ts_col: str,
-    allowed_transitions: list[tuple],
-    allowed_start: list | None = None,
-    idle_timeout_ms: int = _IDLE_TIMEOUT_MS,
-) -> DataFrame:
-    """Streaming twin of the batch ``sequence`` rule (engine.py sequence
-    kind): per key, each value must follow its predecessor via an allowed
-    (prev, cur) transition — ACROSS micro-batch boundaries — and the first
-    value ever seen must be in ``allowed_start`` (when given). Completes the
-    batch/streaming parity story begun with stream_rate_limit and the
-    cross-batch ts-regression check.
-
-    State is the last value per key (one string + a started flag — scalars
-    only, per the documented array-state store hang), evicted after
-    ``idle_timeout_ms`` of processing-time idleness like the other stateful
-    ops, so the store is bounded by recently-active keys. Events inside a
-    batch are processed in ``ts_col`` order, matching the batch rule's
-    window sort; messages mirror the batch formats exactly."""
-    trans = {(a, b) for a, b in (tuple(t) for t in allowed_transitions)}
-    start_set = set(allowed_start) if allowed_start is not None else None
-
-    def _fn(key, batches: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last, started = state.get if state.exists else (None, 0)
-        out_rows = []
-        pdfs = [pdf for pdf in batches]
-        if pdfs:
-            allb = pd.concat(pdfs, ignore_index=True).sort_values("_ts_e")
-            for t, v in zip(allb["_ts_e"], allb["_v"]):
-                cur = None if pd.isna(v) else str(v)
-                rep = "None" if cur is None else cur
-                if not started:
-                    if start_set is not None and cur not in start_set:
-                        out_rows.append(
-                            (k, int(t), cur, None,
-                             f"'{rep}' is not an allowed start value for '{value_col}'")
-                        )
-                elif (last, cur) not in trans:
-                    prev_rep = "None" if last is None else last
-                    out_rows.append(
-                        (k, int(t), cur, last,
-                         f"'{rep}' cannot follow '{prev_rep}' in '{value_col}'")
-                    )
-                last, started = cur, 1
-        state.update((last, started))
-        state.setTimeoutDuration(idle_timeout_ms)
-        if out_rows:
-            yield pd.DataFrame(
-                out_rows, columns=["key", "ts_epoch", "value", "prev_value", "message"]
-            )
-
-    return (
-        stream_df.select(
-            F.col(key_col).cast("string").alias("_k"),
-            F.col(ts_col).cast("long").alias("_ts_e"),
-            F.col(value_col).cast("string").alias("_v"),
-        )
-        .filter(F.col("_k").isNotNull() & F.col("_ts_e").isNotNull())
-        .groupBy("_k")
-        .applyInPandasWithState(
-            _fn,
-            outputStructType=_SEQ_OUT_DDL,
-            stateStructType=_SEQ_STATE_DDL,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
 def stream_stateful_contiguity(stream_df: DataFrame) -> DataFrame:
     """Per-conversation stateful duplicate/regression + cross-batch
     ts-monotonicity detection across micro-batches. Shuffles on conv_id (the

@@ -220,13 +220,6 @@ def test_fingerprint_normalization(spark):
     assert fps[1] != fps[3]
 
 
-def test_rolling_fingerprints(spark):
-    df = spark.createDataFrame([(1, " ".join(f"w{i}" for i in range(12)))], "doc_id long, text string")
-    row = df.select(textops.rolling_fingerprints(F.col("text"), window=8).alias("fp")).collect()[0]
-    assert len(row["fp"]) == 5  # 12 - 8 + 1
-    assert len(set(row["fp"])) == 5
-
-
 def test_ivf_ann(spark):
     import math
 
@@ -442,12 +435,6 @@ def test_hash_split_boundary_and_validation(spark):
         hash_split(df, "doc_id", {"a": 0.9, "b": 0.2})
 
 
-def test_redact_empty_kinds_is_noop(spark):
-    df = spark.createDataFrame([(1, "a@b.com")], "id long, text string")
-    out = df.select(textops.redact(F.col("text"), kinds=[]).alias("t")).collect()[0]["t"]
-    assert out == "a@b.com"
-
-
 def test_connected_components_nonconvergence_raises(spark):
     from schema_enforcer_spark.functions.dedup import connected_components
     import pytest
@@ -481,21 +468,6 @@ def test_lsh_topk_dim_mismatch_raises(spark):
     import pytest
     with pytest.raises(ValueError, match="dims"):
         lsh_topk(df, [1.0] * 128, k=5, dim=64)
-
-
-def test_repetition_ratio(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "spam spam spam spam spam spam spam spam"),   # one distinct 4-gram, 5 total
-            (2, "each word here appears exactly once in text"),
-            (3, "too short"),
-        ],
-        "id long, text string",
-    )
-    out = {r["id"]: r["r"] for r in df.select("id", textops.repetition_ratio(F.col("text")).alias("r")).collect()}
-    assert out[1] == 0.8     # 1 distinct of 5 grams
-    assert out[2] == 0.0
-    assert out[3] == 0.0     # shorter than n tokens
 
 
 def test_contamination_scores(spark):

@@ -6,12 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
 
-from schema_enforcer_spark.functions.multimodal import (
-    gen_fake_media,
-    image_features,
-    frame_sample,
-    resize_stub,
-)
+from schema_enforcer_spark.functions.multimodal import gen_fake_media, image_features
 from schema_enforcer_spark.sources import TableIO
 
 
@@ -36,21 +31,6 @@ def test_image_features_stub_raises(spark, media):
         image_features(media, fake=False).collect()
 
 
-def test_frame_sample(spark, media):
-    out = frame_sample(media, every_ms=1000, fake=True)
-    rows = out.collect()
-    vids = media.filter("mime like 'video/%' and duration_ms is not null")
-    # one row per (video, sampled frame); frame count = duration/1000 + 1
-    expected = vids.select(F.sum((F.col("duration_ms") / 1000).cast("int") + 1)).collect()[0][0]
-    assert len(rows) == expected
-    assert all(isinstance(r["frame_bytes"], (bytes, bytearray)) for r in rows)
-
-
-def test_resize_plumbing(spark, media):
-    out = resize_stub(media, 224, 224, fake=True).collect()
-    assert all(r["width"] == 224 and r["height"] == 224 for r in out)
-
-
 def test_table_io_roundtrip(spark, transcripts, tmp_path):
     io = TableIO(spark, str(tmp_path), num_buckets=8)
     assert io.mode == "parquet"  # no iceberg jar in sandbox
@@ -62,25 +42,6 @@ def test_table_io_roundtrip(spark, transcripts, tmp_path):
     # partition pruning: filter on partition_id hits the directory layout
     one = back.filter(F.col("partition_id") == back.select("partition_id").first()[0])
     assert "PartitionFilters" in one._jdf.queryExecution().executedPlan().toString() or one.count() > 0
-
-
-def test_bucketed_join_no_shuffle(spark, transcripts, conversations, tmp_path):
-    """Two tables bucketed on conv_id with equal bucket counts join with
-    ZERO exchanges — the co-located-join path for 100TB conv-keyed work."""
-    import re
-
-    io = TableIO(spark, str(tmp_path), num_buckets=8)
-    io.write_bucketed(transcripts.drop("partition_id"), "bt_transcripts", "conv_id", "turn_idx")
-    io.write_bucketed(conversations, "bt_conversations", "conv_id", sort_col=None)
-    t = io.read_bucketed("bt_transcripts")
-    c = io.read_bucketed("bt_conversations")
-    joined = t.join(c, "conv_id")
-    plan = joined._sc._jvm.PythonSQLUtils.explainString(joined._jdf.queryExecution(), "formatted")
-    n_ex = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
-    assert n_ex == 0, f"bucketed join produced {n_ex} exchanges:\n{plan[:1500]}"
-    assert joined.count() == transcripts.count()
-    spark.sql("DROP TABLE IF EXISTS bt_transcripts")
-    spark.sql("DROP TABLE IF EXISTS bt_conversations")
 
 
 def test_validation_on_bucketed_table_no_exchange(spark, transcripts, base_manifest, tmp_path):
@@ -110,22 +71,6 @@ def test_validation_on_bucketed_table_no_exchange(spark, transcripts, base_manif
     assert n_ex == 0, f"window pass on bucketed table produced {n_ex} exchanges"
     assert v.count() == 0
     spark.sql("DROP TABLE IF EXISTS bt_val")
-
-
-def test_audio_features_stub(spark):
-    from schema_enforcer_spark.functions.multimodal import audio_features, gen_fake_media
-
-    media = gen_fake_media(spark, n=60)
-    out = audio_features(media, fake=True).collect()
-    n_with_duration = media.filter("duration_ms is not null").count()
-    assert len(out) == n_with_duration > 0
-    for r in out:
-        assert r["rms"] >= 0.0 and r["zero_crossings"] >= 0 and r["n_bytes"] > 0
-    # real-decode path is a declared stub
-    import pytest
-
-    with pytest.raises(Exception, match="audio"):
-        audio_features(media, fake=False).collect()
 
 
 def test_iceberg_write_contract(spark):

@@ -29,14 +29,6 @@ def test_exact_stats_native_type_order(spark):
     assert row["min"] == "9" and row["max"] == "149"  # numeric, not lexicographic
 
 
-def test_hll_sketch_merge(spark, transcripts):
-    sketches = stats.hll_sketches(transcripts, ["conv_id"], group_by="partition_id")
-    assert sketches.count() > 1  # one sketch per partition
-    est = stats.merge_hll_estimate(sketches, ["conv_id"]).collect()[0]["conv_id__distinct"]
-    n = transcripts.select("conv_id").distinct().count()
-    assert abs(est - n) / n < 0.05
-
-
 def test_histogram_and_ks_psi(spark, transcripts):
     hist = stats.compute_histogram(transcripts, "length(text)", lo=0.0, hi=400.0, bins=16)
     assert sum(hist["counts"]) == transcripts.count()
@@ -82,13 +74,6 @@ def test_drift_ks_metric(spark, transcripts):
         ),
     )
     assert ValidationEngine(m).violations(transcripts).count() == 0
-
-
-def test_numeric_profile(spark, transcripts):
-    out = {r["column"]: r for r in stats.numeric_profile(transcripts, ["turn_idx"]).collect()}
-    r = out["turn_idx"]
-    assert r["p01"] <= r["p25"] <= r["p50"] <= r["p75"] <= r["p99"]
-    assert r["mean"] > 0 and r["std"] > 0
 
 
 def test_q64_hll_within_epsilon_of_exact(spark):

@@ -333,67 +333,6 @@ def test_stateful_contiguity_long_epoch_ts_with_nulls(spark, tmp_path):
     assert len(regs) == 1 and regs[0]["turn_idx"] == 3
 
 
-def test_stream_sequence_rule_across_batches(spark, tmp_path):
-    """Streaming twin of the batch sequence rule: the allowed-transition
-    check must span micro-batch boundaries (the predecessor of batch two's
-    first event is batch one's last event, carried in state)."""
-    import shutil
-
-    from schema_enforcer_spark.streaming.stateful import stream_sequence_rule
-
-    schema = "user_id long, ts_epoch long, status string"
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-
-    def _copy(rows, tag):
-        p = str(tmp_path / tag)
-        spark.createDataFrame(rows, schema).write.parquet(p)
-        for f in os.listdir(p):
-            if f.endswith(".parquet"):
-                shutil.copy(os.path.join(p, f), os.path.join(src_dir, f"{tag}_{f}"))
-
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    src = spark.readStream.schema(schema).parquet(src_dir)
-
-    def run_once():
-        q = (
-            stream_sequence_rule(
-                src, "user_id", "status", "ts_epoch",
-                allowed_transitions=[("start", "mid"), ("mid", "end"), ("end", "start")],
-                allowed_start=["start"],
-                # WALL-time timeout must outlive both availableNow runs
-                idle_timeout_ms=30 * 60 * 1000,
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        assert q.awaitTermination(120), "streaming query failed to terminate (noDataMicroBatches regression?)"
-        q.stop()  # defensive: never leak a live query into later tests
-        return spark.read.parquet(out_dir).collect()
-
-    # batch 1: user 1 runs start→mid (clean, in-batch order by ts); user 2
-    # OPENS with 'mid' — an allowed_start violation fired within batch one
-    _copy([(1, 101, "mid"), (1, 100, "start"), (2, 200, "mid")], "b1")
-    rows = run_once()
-    assert [(r["key"], r["ts_epoch"], r["message"]) for r in rows] == [
-        ("2", 200, "'mid' is not an allowed start value for 'status'")
-    ]
-    # batch 2: user 1's 'start' follows batch-1's 'mid' (cross-batch
-    # violation, prev carried in state); user 2's mid→end is allowed AND
-    # must not re-trigger the start check (started flag persisted)
-    _copy([(1, 102, "start"), (2, 201, "end")], "b2")
-    rows = run_once()
-    fired = sorted((r["key"], r["ts_epoch"], r["value"], r["prev_value"], r["message"]) for r in rows)
-    assert fired == [
-        ("1", 102, "start", "mid", "'start' cannot follow 'mid' in 'status'"),
-        ("2", 200, "mid", None, "'mid' is not an allowed start value for 'status'"),
-    ]
-
-
 def test_stream_drift_against_stored_baseline(spark, tmp_path):
     """A8 batch/stream parity: baseline written batch-side
     (write_drift_baselines → _drift_baselines.json), then a micro-batch

@@ -14,7 +14,7 @@ name keeps it.
 Reachability is a least fixed point, so a helper whose only callers are
 themselves unreached is listed too. Dunder methods are never listed.
 
-Usage: python tools/unreached.py   (from the repo root)
+Usage: python tools/unreached.py
 Prints one ``path:line qualname`` per unreached definition that is not in
 KEEP, and exits 1 if there is any.
 """
@@ -97,26 +97,23 @@ def references(tree: ast.Module) -> list[tuple[str, int]]:
     return refs
 
 
-def _parse(path: str) -> ast.Module:
-    with open(path, encoding="utf-8") as fh:
+def _files(root: str, pattern: str) -> list[str]:
+    return sorted(glob.glob(pattern, root_dir=root, recursive=True))
+
+
+def _parse(root: str, path: str) -> ast.Module:
+    with open(os.path.join(root, path), encoding="utf-8") as fh:
         return ast.parse(fh.read(), path)
 
 
 def unreached(root: str = ".") -> list[_Def]:
-    cwd = os.getcwd()
-    os.chdir(root)
-    try:
-        pkg_files = sorted(glob.glob(f"{PACKAGE}/**/*.py", recursive=True))
-        entry_files = sorted({p for g in ENTRY_GLOBS for p in glob.glob(g, recursive=True)})
-        defs, pkg_refs, entry_names = [], [], set()
-        for path in pkg_files:
-            tree = _parse(path)
-            defs.extend(definitions(path, tree))
-            pkg_refs.extend((path, name, line) for name, line in references(tree))
-        for path in entry_files:
-            entry_names.update(name for name, _ in references(_parse(path)))
-    finally:
-        os.chdir(cwd)
+    defs, pkg_refs, entry_names = [], [], set()
+    for path in _files(root, f"{PACKAGE}/**/*.py"):
+        tree = _parse(root, path)
+        defs.extend(definitions(path, tree))
+        pkg_refs.extend((path, name, line) for name, line in references(tree))
+    for path in {p for g in ENTRY_GLOBS for p in _files(root, g)}:
+        entry_names.update(name for name, _ in references(_parse(root, path)))
 
     keep = re.compile("|".join(f"(?:{k})" for k in KEEP))
     reached = {id(d) for d in defs if keep.fullmatch(d.key()) or d.name in entry_names}
@@ -138,7 +135,7 @@ def unreached(root: str = ".") -> list[_Def]:
 
 
 def main() -> int:
-    found = unreached()
+    found = unreached(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     for d in found:
         print(f"{d.path}:{d.start} {d.qualname}")
     print(f"{len(found)} unreached definition(s)", file=sys.stderr)

@@ -319,7 +319,7 @@ def minhash_lsh_candidates(
     )
 
 
-def jaccard(a: Column, b: Column) -> Column:
+def _jaccard(a: Column, b: Column) -> Column:
     """Set Jaccard of two DISTINCT-element arrays. Precondition (held by
     every caller — shingle sets are array_distinct by construction):
     elements are unique, so |union| = |a| + |b| - |inter| and the second
@@ -358,7 +358,7 @@ def minhash_near_dups(
     verified = (
         cands.join(sh.withColumnsRenamed({"_id": "a_id", "_sh": "_sha"}), "a_id")
         .join(sh.withColumnsRenamed({"_id": "b_id", "_sh": "_shb"}), "b_id")
-        .select("a_id", "b_id", F.round(jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"))
+        .select("a_id", "b_id", F.round(_jaccard(F.col("_sha"), F.col("_shb")), 6).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
     return verified
@@ -374,7 +374,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         .select(
             F.col("a._id").alias("a_id"),
             F.col("b._id").alias("b_id"),
-            F.round(jaccard(F.col("a._sh"), F.col("b._sh")), 6).alias("jaccard"),
+            F.round(_jaccard(F.col("a._sh"), F.col("b._sh")), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -470,7 +470,7 @@ def match_against_index(
         .select(
             "new_id",
             "corpus_id",
-            F.round(jaccard(F.col("_shn"), F.col("_shc")), 6).alias("jaccard"),
+            F.round(_jaccard(F.col("_shn"), F.col("_shc")), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

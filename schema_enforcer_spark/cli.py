@@ -718,10 +718,12 @@ def main(argv: list[str] | None = None) -> int:
     def _print_merged_stats() -> None:
         from schema_enforcer_spark.stats import merged_column_stats, stats_store_path
 
-        merged = merged_column_stats(spark, stats_store_path(args.checkpoint)).orderBy("col_name")
+        # one row per stats column: sorted on the driver, as a Spark sort
+        # would cost its own jobs
+        merged = merged_column_stats(spark, stats_store_path(args.checkpoint)).collect()
         print(f"{'Column':<24} {'~distinct':>10} {'nulls':>10} {'rows':>12} {'parts':>6}  min..max")
         print("-" * 92)
-        for r in merged.collect():  # one row per stats column — bounded
+        for r in sorted(merged, key=lambda r: r["col_name"]):
             lo = r["min_numeric"] if r["min_numeric"] is not None else r["min_display"]
             hi = r["max_numeric"] if r["max_numeric"] is not None else r["max_display"]
             print(

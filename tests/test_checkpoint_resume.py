@@ -145,13 +145,14 @@ def test_null_instance_violation_fails_its_verdict(spark, days):
         report.unpersist()
 
 
-# Spark jobs of the day-2 resume below, measured when the pending set became
-# a driver-side literal filter (43 while it was a broadcast anti-join against
-# the lineage path): the input read, one lineage collect, one pending-count
-# collect, one verdict collect that fills the persisted report, the two sink
-# writes, the stats write and merge, one lineage append and one FAIL-line
-# collect, some of them several jobs under adaptive execution.
-RESUME_JOBS = 22
+# Spark jobs of the day-2 resume below, as measured (43 while the pending set
+# was a broadcast anti-join against the lineage path, 22 while the merged
+# stats were sorted by Spark): the input read, one lineage collect, one
+# pending-count collect, one verdict collect that fills the persisted
+# report, the two sink writes, the stats write and merge collect, one
+# lineage append and one FAIL-line collect, some of them several jobs under
+# adaptive execution.
+RESUME_JOBS = 20
 
 
 def test_resume_job_count(spark, days, tmp_path, capsys):

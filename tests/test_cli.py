@@ -542,6 +542,18 @@ def test_cli_stats_columns_lifecycle(spark, data, capsys):
     assert line1 == line2 and line1
 
 
+def test_cli_stats_columns_print_in_name_order(spark, data, capsys):
+    """The merged stats table prints one line per stats column, sorted by
+    column name whatever order --stats-columns lists them in."""
+    ckpt = data["root"] + "/ckpt_stats_order"
+    rc = main(["--manifest", MANIFEST, "--input", data["clean"], "--checkpoint", ckpt,
+               "--stats-columns", "turn_idx,role,conv_id"])
+    assert rc == 0
+    lines = capsys.readouterr().out.splitlines()
+    table = lines[lines.index("-" * 92) + 1:][:3]
+    assert [l.split()[0] for l in table] == ["conv_id", "role", "turn_idx"]
+
+
 def test_cli_stats_columns_resume_sketches_passing_pending_partitions(spark, tmp_path, capsys):
     """A resumed --checkpoint --stats-columns run sketches EVERY pending
     partition it validates, the ones that PASS included: the stats must be

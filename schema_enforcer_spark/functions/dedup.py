@@ -652,8 +652,9 @@ def simhash_near_dups(
     two-level pigeonhole join (chunk + sub-chunk — see _simhash_chunk_keys).
     Buckets are capped at 5000 rows by default (minhash precedent): a bucket
     that large means ≥5000 docs agreeing on the same 28 signature bits —
-    run exact_dedup first before raising the cap. At the test corpora (≤ corpus size 5000) the cap never fires,
-    so results equal the exact all-pairs oracle."""
+    run exact_dedup first before raising the cap. At the test corpora
+    (≤ corpus size 5000) the cap never fires, so results equal the exact
+    all-pairs oracle."""
     sigs = simhash(df, text_col, id_col).withColumnsRenamed({id_col: "_id"})
     return simhash_pairs_from_sigs(sigs, max_hamming, max_bucket_size)
 

@@ -35,9 +35,9 @@ ENTRY_GLOBS = ["tools/*.py", "perfbench/**/*.py", "__spark_entry__.py", "bench*.
 KEEP = {
     r"engine:ValidationEngine\._\w+_entries": "called through getattr(self, f'_{kind}_entries')",
     r"plugins:(PandasValidator|PydanticBatchValidator|load_validators|run_validator)":
-        "the custom-validator plugin API that README documents",
-    r"engine:ValidationReport\.passes": "public report API that README documents",
-    r"synth:(inject|CASES)": "defect injection the verify notes drive by hand",
+        "the custom-validator plugin API (the reference's validator plugins)",
+    r"engine:ValidationReport\.passes": "the report's pass/fail answer for library callers",
+    r"synth:(inject|CASES)": "defect injection for end-to-end checks run by hand",
     r"binding:ManifestRegistry\.validate_all":
         "the only non-test path into bind's static-map, declared and applies_to mappings",
     r"__init__:__version__": "package version",
@@ -57,17 +57,13 @@ class _Def:
         return path == self.path and self.start <= line <= self.end
 
 
-def _module_name(path: str) -> str:
-    return os.path.relpath(path, PACKAGE)[:-3].replace(os.sep, ".")
-
-
 def _assigned_names(node: ast.stmt) -> list[str]:
     targets = node.targets if isinstance(node, ast.Assign) else [node.target]
     return [t.id for t in targets if isinstance(t, ast.Name)]
 
 
 def definitions(path: str, tree: ast.Module) -> list[_Def]:
-    mod = _module_name(path)
+    mod = os.path.relpath(path, PACKAGE)[:-3].replace(os.sep, ".")
     out = []
     for node in tree.body:
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -106,7 +102,7 @@ def _parse(root: str, path: str) -> ast.Module:
         return ast.parse(fh.read(), path)
 
 
-def unreached(root: str = ".") -> list[_Def]:
+def unreached(root: str) -> list[_Def]:
     defs, pkg_refs, entry_names = [], [], set()
     for path in _files(root, f"{PACKAGE}/**/*.py"):
         tree = _parse(root, path)

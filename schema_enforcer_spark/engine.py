@@ -13,9 +13,9 @@ Catalyst rules needed):
 2. **Table-grain rules** (uniqueness, referential, ordering, aggregate)
    each compile to a groupBy / join / window plan — shuffles only on their
    keys; referential uses a broadcast-able distinct key set.
-3. **Verdicts**: per-instance (partition) PASS/FAIL via one aggregation,
-   right-outer against the partition universe so clean partitions still get
-   a PASS row (default-PASS semantics, A4 —
+3. **Verdicts**: per-instance (partition) PASS/FAIL via one aggregation
+   over the union of the input's instances and the violations, so clean
+   partitions still get a PASS row (default-PASS semantics, A4 —
    /root/reference/schema_enforcer/schemas/validator.py:39-44).
 
 One validation path: :func:`validate_many` checks an input against every
@@ -1400,7 +1400,7 @@ class ValidationEngine:
             left = _agg_side(rule.params["left"]).alias("_left")
             aggs = [left] if not isinstance(right_spec, dict) else [left, _agg_side(right_spec).alias("_right")]
             # carry the instance through the aggregation so violation rows
-            # land on the same instance names the verdict universe uses
+            # land on the same instance names the verdicts group the input by
             # (recomputing from hash(group[0]) would ignore an explicit
             # partition_id column)
             aggs.append(F.min(self._instance_col(df)).alias("_inst"))
@@ -1549,51 +1549,46 @@ class ValidationEngine:
         return self._plan_memo.get(("verdicts",), (df, violations), lambda: self._verdicts_impl(df, violations))
 
     def _verdicts_impl(self, df: DataFrame, violations: DataFrame) -> DataFrame:
-        # The universe is every data partition PLUS any instance name that
-        # appears only in violations — table-grain rules (strict_columns,
-        # drift) attribute to instance 'table', which no data row carries; a
-        # plain left join from the data universe would silently drop those
-        # FAILs and report a passing run.
-        # `grain` rides along so a real host/partition literally named
-        # 'table' (grain HOST/PARTITION) never collides with the synthetic
-        # table-grain verdict row (grain TABLE) — table-grain rules
-        # (strict_columns, drift) stamp their violations instance_type TABLE
-        universe = (
-            df.select(self._instance_col(df).alias("instance_name"))
-            .dropDuplicates()
-            .withColumn("grain", F.lit(self.instance_type))
-            .unionByName(
-                violations.select(
-                    "instance_name", F.col("instance_type").alias("grain")
-                ).dropDuplicates()
-            )
-            .dropDuplicates()
-        )
+        # ONE groupBy over a union: every input row's instance (marker NULL)
+        # and every violation (marker 1), so count(marker) is the violation
+        # count and a clean instance still gets its PASS row: one partially
+        # aggregated exchange and no join. The violations bring their own
+        # instances, since table-grain rules (strict_columns, drift)
+        # attribute to instance 'table', which no data row carries, and a
+        # verdict set built from the input alone would drop those FAILs and
+        # report a passing run. `grain` is part of the key so a real
+        # host/partition literally named 'table' (grain HOST/PARTITION) never
+        # collides with the table-grain row (grain TABLE), and groupBy keeps
+        # NULL names in one group, so a NULL instance's violations count in
+        # the NULL instance's verdict.
+        parts = [
+            df.select(
+                self._instance_col(df).alias("instance_name"),
+                F.lit(self.instance_type).alias("grain"),
+                F.lit(None).cast("int").alias("_marker"),
+            ),
+            violations.select("instance_name", F.col("instance_type").alias("grain"), F.lit(1).alias("_marker")),
+        ]
         # a manifest WITH table-grain rules gets a 'table' verdict row even
         # when clean — otherwise a recorded table FAIL could never be
         # superseded by a PASS in checkpoint lineage
         if self.manifest.strict or any(r.rule_kind.table_verdict for r in self.manifest.table_rules):
-            universe = universe.unionByName(
+            parts.append(
                 df.sparkSession.createDataFrame(
-                    [("table", "TABLE")], "instance_name string, grain string"
+                    [("table", "TABLE", None)], "instance_name string, grain string, _marker int"
                 )
-            ).dropDuplicates()
-        fails = violations.groupBy(
-            F.col("instance_name").alias("_v_inst"), F.col("instance_type").alias("_v_grain")
-        ).agg(F.count(F.lit(1)).alias("n_violations"))
-        # null-safe on the name: a NULL instance's violations must count in
-        # the NULL instance's verdict, so the verdicts account for every row
-        on = F.col("instance_name").eqNullSafe(F.col("_v_inst")) & (F.col("grain") == F.col("_v_grain"))
+            )
+        n = F.col("n_violations")
         return (
-            universe.join(fails, on, "left")
+            reduce(lambda a, b: a.unionByName(b), parts)
+            .groupBy("instance_name", "grain")
+            .agg(F.count("_marker").alias("n_violations"))
             .select(
                 F.lit(self.manifest.id).alias("schema_id"),
-                F.col("instance_name"),
-                F.col("grain"),
-                F.when(F.coalesce(F.col("n_violations"), F.lit(0)) > 0, F.lit("FAIL"))
-                .otherwise(F.lit("PASS"))
-                .alias("result"),
-                F.coalesce(F.col("n_violations"), F.lit(0)).alias("n_violations"),
+                "instance_name",
+                "grain",
+                F.when(n > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("result"),
+                n,
             )
         )
 

@@ -147,12 +147,13 @@ def test_null_instance_violation_fails_its_verdict(spark, days):
 
 # Spark jobs of the day-2 resume below, as measured (43 while the pending set
 # was a broadcast anti-join against the lineage path, 22 while the merged
-# stats were sorted by Spark): the input read, one lineage collect, one
-# pending-count collect, one verdict collect that fills the persisted
-# report, the two sink writes, the stats write and merge collect, one
-# lineage append and one FAIL-line collect, some of them several jobs under
-# adaptive execution.
-RESUME_JOBS = 20
+# stats were sorted by Spark, 20 while the verdicts deduplicated their
+# universe and joined it to the violation counts): the input read, one
+# lineage collect, one pending-count collect, one verdict collect that
+# fills the persisted report, the two sink writes, the stats write and
+# merge collect, one lineage append and one FAIL-line collect, some of them
+# several jobs under adaptive execution.
+RESUME_JOBS = 17
 
 
 def test_resume_job_count(spark, days, tmp_path, capsys):

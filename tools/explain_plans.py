@@ -13,7 +13,9 @@ Checked properties:
   salted, rate_limit, and zero for the items, prefix_items and
   property_names entry arrays);
 - checkpoint pending set: a literal filter over the input, with no join,
-  no broadcast and no scan of the lineage path.
+  no broadcast and no scan of the lineage path;
+- verdicts: one aggregate over the union of the input's instances and the
+  persisted violations, with no join and one Exchange.
 """
 
 from __future__ import annotations
@@ -80,6 +82,24 @@ def _marker_count(plan: str, marker: str) -> int:
     return plan.lower().count(marker.lower())
 
 
+def _tree_above_cache(plan: str) -> list[str]:
+    """Operator names of a formatted plan's tree, leaving out the cached plan
+    below each InMemoryRelation: the operators a read of a persisted frame
+    runs, not the ones that filled it."""
+    tree = plan.split("\n\n", 1)[0].splitlines()[1:]
+    ops, cut = [], None
+    for ln in tree:
+        m = re.match(r"^([ :+|-]*)(.+?) \(\d+\)$", ln)
+        if not m:
+            continue
+        depth = len(m.group(1))
+        if cut is not None and depth > cut:
+            continue
+        cut = depth if m.group(2) == "InMemoryRelation" else None
+        ops.append(m.group(2).strip())
+    return ops
+
+
 def _size_conditions(plan: str) -> list[str]:
     """Filter conditions that test an array's size(). On a row-violation
     plan one means InferFiltersFromGenerate inferred `size(_v) > 0` from a
@@ -94,7 +114,7 @@ def main() -> None:
 
     from schema_enforcer_spark.checkpoint import CheckpointManager
     from schema_enforcer_spark.engine import ValidationEngine, ValidationReport
-    from schema_enforcer_spark.manifest import Manifest, Rule, load_manifest
+    from schema_enforcer_spark.manifest import Manifest, load_manifest
     from schema_enforcer_spark.synth import gen_transcripts, gen_conversations
 
     spark = (
@@ -684,8 +704,6 @@ def main() -> None:
     # only Exchange is the single-row final-aggregate reduce — the pass is
     # a pure map-side-combine profile, so its cost at 100 TB is the floor
     # cost of reading the table once
-    from schema_enforcer_spark.infer import profile_for_inference  # noqa: F401
-
     ev25 = spark.read.parquet(os.path.join(sf, "events.parquet"))
     aggs25 = []
     from pyspark.sql import functions as F25
@@ -859,6 +877,34 @@ def main() -> None:
     else:
         problems.append(f"checkpoint pending set: {n_scan29} parquet scans (want 1: the input)")
     sections.append(("Checkpoint pending set (done partitions as a literal filter)", p29, notes29))
+
+    # 30. verdicts over a persisted report: one groupBy(instance, grain)
+    # over the union of the input's instances and the violations (count of
+    # a marker that is NULL on input rows), so the read runs one partially
+    # aggregated exchange and no join; dedup-the-universe plus a left join
+    # to the violation counts shuffled every input
+    rep30 = eng.validate(tdf)
+    try:
+        p30 = _formatted(rep30.verdicts)
+    finally:
+        rep30.unpersist()
+    notes30 = []
+    ops30 = _tree_above_cache(p30)
+    if joins30 := [op for op in ops30 if "Join" in op]:
+        problems.append(f"verdicts plan a join: {joins30}")
+    else:
+        notes30.append("OK: no Join above the persisted violations")
+    n_ex30 = ops30.count("Exchange")
+    if n_ex30 == 1:
+        notes30.append("OK: exactly one Exchange, between the partial and the final count")
+    else:
+        problems.append(f"verdicts: {n_ex30} Exchanges above the leaves (want 1)")
+    leaves30 = sorted(op for op in ops30 if op in ("InMemoryTableScan", "Scan parquet"))
+    if leaves30 == ["InMemoryTableScan", "Scan parquet"]:
+        notes30.append("OK: the leaves are the persisted violations and one scan of the input")
+    else:
+        problems.append(f"verdicts read {leaves30} (want the persisted violations and one input scan)")
+    sections.append(("Verdicts (one union-aggregate over the persisted violations)", p30, notes30))
 
     out = io.StringIO()
     out.write("# PLANS — physical-plan audit (generated by tools/explain_plans.py)\n\n")

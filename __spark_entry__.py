@@ -24,9 +24,9 @@ from pyspark.sql import functions as F
 from schema_enforcer_spark.engine import ValidationEngine, _PlanMemo
 from schema_enforcer_spark.manifest import manifest_from_dict
 from schema_enforcer_spark.functions import textops
-from schema_enforcer_spark.functions.dedup import simhash, minhash_near_dups, embedding_near_dups
+from schema_enforcer_spark.functions.dedup import minhash_near_dups, embedding_near_dups
 from schema_enforcer_spark.functions.similarity import brute_force_topk, lsh_topk
-from schema_enforcer_spark.stats import exact_column_stats, column_stats
+from schema_enforcer_spark.stats import exact_column_stats
 
 
 # Identity-stable plan handles: repeated calls for the same table return the

@@ -3,9 +3,6 @@
 Greenfield operators mandated by the north star (no reference counterpart —
 the reference validates one document at a time and has no stats layer):
 
-- ``column_stats``: min/max/null-rate/approx-distinct per column, ONE
-  aggregation pass over the table (all columns' aggregates in a single
-  ``agg()`` ⇒ one scan + one reduce).
 - ``write_partition_stats`` / ``merged_column_stats``: mergeable
   HyperLogLog sketches per (partition, column) via Spark's built-in
   ``hll_sketch_agg``, persisted under the checkpoint dir so a resumed run
@@ -27,37 +24,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """One row per column: min/max/null_rate/approx_distinct — single scan."""
-    columns = columns or df.columns
-    aggs = []
-    for c in columns:
-        aggs += [
-            F.min(F.col(c)).cast("string").alias(f"{c}__min"),
-            F.max(F.col(c)).cast("string").alias(f"{c}__max"),
-            F.avg(F.col(c).isNull().cast("double")).alias(f"{c}__null_rate"),
-            F.approx_count_distinct(c).alias(f"{c}__distinct"),
-        ]
-    wide = df.agg(*aggs)
-    # unpivot the single wide row into (column, min, max, null_rate, distinct)
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"{c}__min").alias("min"),
-                F.col(f"{c}__max").alias("max"),
-                F.round(F.col(f"{c}__null_rate"), 6).alias("null_rate"),
-                F.col(f"{c}__distinct").alias("approx_distinct"),
-            )
-            for c in columns
-        ]
-    )
-    return wide.select(F.explode(structs).alias("s")).select("s.*")
-
-
 def exact_column_stats(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Like column_stats but exact COUNT(DISTINCT) — used where a SQL oracle
-    must reproduce the numbers bit-for-bit.
+    """One row per column: min/max/null_rate and an exact COUNT(DISTINCT),
+    so a SQL oracle can reproduce the numbers bit-for-bit.
 
     Plan shape (r7): one single-column aggregation subtree PER column,
     unioned — not one wide agg with N count_distincts. The wide form plans

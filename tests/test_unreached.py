@@ -34,12 +34,21 @@ def test_scan_follows_callers_not_tests(tmp_path):
         "def used():\n    return used()\n"
         "def recursive_orphan():\n    return recursive_orphan()\n"
         "class Box:\n    def get(self):\n        return 1\n    def __len__(self):\n        return 0\n"
+        "def imported_unused():\n    return 1\n"
+        "def imported_exported():\n    return 1\n"
         "__all__ = ['Box']\n"
     )
-    (tmp_path / "tools" / "run.py").write_text("from schema_enforcer_spark.mod import used\nused()\n")
+    (pkg / "api.py").write_text(
+        "from schema_enforcer_spark.mod import imported_exported as exported\n__all__ = ['exported']\n"
+    )
+    (tmp_path / "tools" / "run.py").write_text(
+        "from schema_enforcer_spark.mod import used, imported_unused\nused()\n"
+    )
     (tmp_path / "tests" / "test_mod.py").write_text(
         "from schema_enforcer_spark.mod import orphan, Box\norphan(); Box().get()\n"
     )
     found = sorted(d.qualname for d in unreached.unreached(str(tmp_path)))
-    # orphan is called only by a test; _helper and LIMIT only through orphan
-    assert found == ["Box.get", "LIMIT", "_helper", "orphan", "recursive_orphan"]
+    # orphan is called only by a test; _helper and LIMIT only through orphan;
+    # an import the importing module never uses reaches nothing, one it
+    # re-exports through __all__ does
+    assert found == ["Box.get", "LIMIT", "_helper", "imported_unused", "orphan", "recursive_orphan"]

@@ -5,11 +5,12 @@ a module-level class, in ``schema_enforcer_spark/``. It is reached when a
 reference to its name appears outside its own body in code that is itself
 reached: module-level code and reached definitions of the package, and all
 of ``tools/``, ``perfbench/``, ``__spark_entry__.py`` and ``bench*.py``.
-Tests never count. A reference is a name, attribute or ``from ... import``
-with the same identifier, or a string constant equal to it (``__all__``
-entries and the rule-kind table's evaluator names). The scan is by name,
-so it errs towards "reached": a local variable that shares a definition's
-name keeps it.
+Tests never count. A reference is a name or attribute with the same
+identifier, a string constant equal to it (``__all__`` entries and the
+rule-kind table's evaluator names), or a ``from ... import`` of it in a
+module that uses the name the import binds or lists it in ``__all__`` (an
+unused import reaches nothing). The scan is by name, so it errs towards
+"reached": a local variable that shares a definition's name keeps it.
 
 Reachability is a least fixed point, so a helper whose only callers are
 themselves unreached is listed too. Dunder methods are never listed.
@@ -79,7 +80,18 @@ def definitions(path: str, tree: ast.Module) -> list[_Def]:
     return out
 
 
+def _exported(tree: ast.Module) -> set[str]:
+    """The string entries of the module's ``__all__``."""
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)) and "__all__" in _assigned_names(node):
+            return {e.value for e in getattr(node.value, "elts", ()) if isinstance(e, ast.Constant)}
+    return set()
+
+
 def references(tree: ast.Module) -> list[tuple[str, int]]:
+    used = _exported(tree) | {
+        n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+    }
     refs = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
@@ -89,7 +101,7 @@ def references(tree: ast.Module) -> list[tuple[str, int]]:
         elif isinstance(node, ast.Constant) and isinstance(node.value, str) and node.value.isidentifier():
             refs.append((node.value, node.lineno))
         elif isinstance(node, ast.ImportFrom):
-            refs.extend((a.name, node.lineno) for a in node.names)
+            refs.extend((a.name, node.lineno) for a in node.names if (a.asname or a.name) in used)
     return refs
 
 

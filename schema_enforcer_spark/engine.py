@@ -35,6 +35,13 @@ from ``_table_violations``, every ``schema_id`` is ``Rule.rule_id`` and
 every custom-message override is ``compiler.rule_message``. The four
 entry-array kinds share one loop (``_entry_violation_arrays``), in a fixed
 kind order.
+
+Plans from SQL text. The row projection, the entry arrays, the fused window
+pass, every violation row and the verdicts are SQL text (``F.expr``,
+``selectExpr``) whose literals and identifiers go through
+``compiler._sql_lit`` and ``compiler._sql_ident``: a pyspark call costs ~16
+py4j commands whatever its size, so one validate of the 15-rule transcripts
+manifest sends 134 of them instead of 5,043 (``tests/test_round_trips.py``).
 """
 
 from __future__ import annotations
@@ -48,7 +55,8 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from schema_enforcer_spark.compiler import (
-    CompiledRule, compile_check, compile_row_rules, has_column_path, py_repr, rule_message, _dtype_in, _dtype_of,
+    _Q, CompiledRule, _case, _concat, _dtype_in, _dtype_of, _failed, _lambda_var, _sql_ident, _sql_lit, compile_check,
+    compile_row_rules, has_column_path, py_repr, rule_message,
 )
 from schema_enforcer_spark.manifest import FUSED_WINDOW, SCHEMA_PASS, SHARED_PATHS, Manifest, Rule
 
@@ -67,53 +75,66 @@ _VIOLATION_SCHEMA_DDL = (
     "schema_id string, result string, instance_name string, instance_location string, "
     "instance_type string, absolute_path array<string>, failing_value string, message string"
 )
-_VIOLATION_ARRAY_T = (
-    "array<struct<schema_id:string,absolute_path:array<string>,failing_value:string,message:string>>"
-)
 
 
-def _strings(cols: list[str]) -> list[Column]:
-    """The columns cast to string: key paths and key strings of violations."""
-    return [F.col(c).cast("string") for c in cols]
+def _strings(cols: list[str]) -> list[str]:
+    """The columns cast to string (SQL): key paths and key strings of
+    violations."""
+    return [f"CAST({_sql_ident(c)} AS STRING)" for c in cols]
 
 
-def _unique_message(rule: Rule, cols: list[str], n: Column) -> Column:
+def _key_string(cols: list[str]) -> str:
+    """The '|'-joined key of a violation (SQL)."""
+    return f"concat_ws('|', {', '.join(_strings(cols))})"
+
+
+def _unique_message(rule: Rule, cols: list[str], n: str) -> str:
     """The unique rule's message, shared by the standalone and fused paths
     so fusing never changes a unique rule's output."""
-    return rule_message(rule, F.concat(
-        F.lit("("), F.concat_ws("|", *_strings(cols)), F.lit(") appears "), n.cast("string"),
-        F.lit(f" times; ({', '.join(cols)}) must be unique"),
+    return rule_message(rule, _concat(
+        "'('", _key_string(cols), "') appears '", f"CAST({n} AS STRING)",
+        _sql_lit(f" times; ({', '.join(cols)}) must be unique"),
     ))
 
 
-def _or_empty(column: Column, violations: Column) -> Column:
+def _struct(fields: list[tuple[str, str]]) -> str:
+    """named_struct over (field name, SQL) pairs."""
+    return f"named_struct({', '.join(f'{_sql_lit(n)}, {v}' for n, v in fields)})"
+
+
+def _violation(schema_id: str, path: str, failing: str, message: str, tag: tuple | list = ()) -> str:
+    """One violation as a struct (SQL): the rule's four fields, plus the
+    engine's *tag* — (field, SQL) pairs for instance_name,
+    instance_location, instance_type and the internal ``_mid`` manifest id
+    — on the elements of the row-violation array. Untagged structs are the
+    elements :meth:`ValidationEngine.row_fail_count` sizes."""
+    return _struct([
+        ("schema_id", schema_id), ("absolute_path", path), ("failing_value", failing), ("message", message), *tag,
+    ])
+
+
+def _or_empty(column: str, violations: str) -> str:
     """*violations*, or an EMPTY violation array when *column* is NULL —
     concat() with a NULL would otherwise null out every other rule's
     violations for the row."""
-    return F.when(column.isNull(), F.array().cast(_VIOLATION_ARRAY_T)).otherwise(violations)
+    return f"CASE WHEN {column} IS NULL THEN array() ELSE {violations} END"
 
 
-def _violation(schema_id: Column | str, path: Column, failing: Column, message: Column, tag: tuple | list = ()) -> Column:
-    """One violation as a struct: the rule's four fields, plus the engine's
-    *tag* (instance_name, instance_location, instance_type and the internal
-    ``_mid`` manifest id) for the row explode. Untagged structs are the
-    elements of the entry arrays and of the fused window pass."""
-    return F.struct(
-        F.lit(schema_id).alias("schema_id"),
-        path.alias("absolute_path"),
-        failing.alias("failing_value"),
-        message.alias("message"),
-        *tag,
-    )
+def _when(cond: str, value: str) -> str:
+    return f"CASE WHEN {cond} THEN {value} END"
+
+
+def _column(x: str | Column) -> Column:
+    return x if isinstance(x, Column) else F.expr(x)
 
 
 class _PlanMemo:
     """Bounded memo for driver-side plan assembly, keyed on object identity.
 
-    Building a plan costs hundreds of driver↔JVM round trips (0.2-0.5 s
-    for a 10-20-rule manifest, measured r7) and depends only on its inputs'
-    identities, so a repeat call over the same objects (bench trials, a
-    report's several consumers) reuses the built DataFrame or Column. Plans
+    Building a plan costs driver↔JVM round trips and Catalyst analysis,
+    and depends only on its inputs' identities, so a repeat call over the
+    same objects (bench trials, a report's several consumers) reuses the
+    built DataFrame or Column. Plans
     only: the memoized value is lazy, every action still computes from the
     input, and nothing is cached.
 
@@ -286,42 +307,52 @@ class ValidationEngine:
 
     # -- helpers -----------------------------------------------------------
 
-    def _instance_col(self, df: DataFrame) -> Column:
+    def _instance_sql(self, df: DataFrame) -> str:
+        """The instance (partition) a row belongs to, as SQL text."""
         if self.instance_expr:
-            return F.expr(self.instance_expr).cast("string")
+            # the caller's SQL, parenthesized on lines of its own so a
+            # trailing `--` comment ends before the generated text resumes
+            return f"CAST((\n{self.instance_expr}\n) AS STRING)"
         if "partition_id" in df.columns:
-            return F.col("partition_id").cast("string")
+            return "CAST(`partition_id` AS STRING)"
         anchor = self.key_columns[0]
         if anchor in df.columns:
-            return F.pmod(F.hash(F.col(anchor)), F.lit(self.num_buckets)).cast("string")
-        return F.lit("0")
+            return f"CAST(pmod(hash({_sql_ident(anchor)}), {_sql_lit(self.num_buckets)}) AS STRING)"
+        return "'0'"
 
-    def _path(self, df: DataFrame, leaf: str | None) -> Column:
-        elems = _strings([k for k in self.key_columns if k in df.columns])
+    def _instance_col(self, df: DataFrame) -> Column:
+        return F.expr(self._instance_sql(df))
+
+    def _path(self, columns: list[str], leaf: str | None, *tail: str) -> str:
+        """absolute_path (SQL): the key columns among *columns* as strings,
+        then each level of the dotted *leaf*, then *tail* (SQL)."""
+        elems = _strings([k for k in self.key_columns if k in columns])
         if leaf:
             # a dotted path is a struct traversal: one path element per level
-            elems.extend(F.lit(p) for p in leaf.split("."))
+            elems.extend(_sql_lit(p) for p in leaf.split("."))
+        elems.extend(tail)
         # Number→string coercion is required for violation-row parity
         # (coerce_numbers_to_str, /root/reference/schema_enforcer/validation.py:19).
-        return F.array(*elems) if elems else F.array().cast("array<string>")
+        return f"array({', '.join(elems)})" if elems else "CAST(array() AS ARRAY<STRING>)"
+
+    def _violation_fields(self, schema_id: str, instance: str, path: str, failing: str, message: str) -> list:
+        """VIOLATION_COLUMNS as (name, SQL) pairs: the caller's schema_id,
+        instance, absolute_path, failing_value and message, plus ``result``
+        FAIL, the manifest's table as instance_location and the engine's
+        instance_type."""
+        return [
+            ("schema_id", schema_id), ("result", "'FAIL'"), ("instance_name", instance),
+            ("instance_location", _sql_lit(self.manifest.table)), ("instance_type", _sql_lit(self.instance_type)),
+            ("absolute_path", path), ("failing_value", failing), ("message", message),
+        ]
 
     def _violation_rows(
-        self, frame: DataFrame, schema_id: Column | str, instance: Column, path: Column, failing: Column, message: Column
+        self, frame: DataFrame, schema_id: str, instance: str, path: str, failing: str, message: str
     ) -> DataFrame:
-        """*frame* projected to VIOLATION_COLUMNS — every table evaluator's
-        rows take their shape here: the caller's schema_id, instance,
-        absolute_path, failing_value and message, plus ``result`` FAIL, the
-        manifest's table as instance_location and the engine's
-        instance_type."""
-        return frame.select(
-            F.lit(schema_id).alias("schema_id"),
-            F.lit("FAIL").alias("result"),
-            instance.alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            path.alias("absolute_path"),
-            failing.alias("failing_value"),
-            message.alias("message"),
+        """*frame* projected to VIOLATION_COLUMNS (every argument SQL text)
+        — every table evaluator's rows take their shape here."""
+        return frame.selectExpr(
+            *[f"{v} AS {n}" for n, v in self._violation_fields(schema_id, instance, path, failing, message)]
         )
 
     def _table_violations(self, df: DataFrame, rid: str, rows: list[tuple[list[str], str, str]]) -> DataFrame:
@@ -339,21 +370,20 @@ class ValidationEngine:
         out = []
         def _branch(df, spec, label):
             """Compile one then/else branch spec → (inner_pred, msg,
-            column_name, column)."""
+            column_name, column), all SQL."""
             tc_name = spec["column"]
-            tc = F.col(tc_name)
-            dtype = _dtype_of(df, tc_name)
-            rep = py_repr(tc, dtype)
+            tc = _sql_ident(tc_name)
+            rep = py_repr(tc, _dtype_of(df, tc_name))
             if spec.get("required"):
-                inner, msg = tc.isNotNull(), F.lit(f"'{tc_name}' is a required property")
+                inner, msg = f"({tc} IS NOT NULL)", _sql_lit(f"'{tc_name}' is a required property")
             elif spec.get("is_null"):
-                inner, msg = tc.isNull(), F.concat(rep, F.lit(f" is not of type 'null'"))
+                inner, msg = f"({tc} IS NULL)", _concat(rep, _sql_lit(" is not of type 'null'"))
             elif "pattern" in spec:
-                inner = tc.isNull() | tc.rlike(spec["pattern"])
-                msg = F.concat(rep, F.lit(f" does not match {spec['pattern']!r}"))
+                inner = f"({tc} IS NULL OR {tc} RLIKE {_sql_lit(spec['pattern'])})"
+                msg = _concat(rep, _sql_lit(f" does not match {spec['pattern']!r}"))
             elif "equals" in spec:
-                inner = tc.eqNullSafe(F.lit(spec["equals"]))
-                msg = F.concat(rep, F.lit(f" is not equal to {spec['equals']!r}"))
+                inner = f"({tc} <=> {_sql_lit(spec['equals'])})"
+                msg = _concat(rep, _sql_lit(f" is not equal to {spec['equals']!r}"))
             else:
                 raise ValueError(f"conditional '{label}' needs required/is_null/pattern/equals: {spec}")
             return inner, msg, tc_name, tc
@@ -362,13 +392,13 @@ class ValidationEngine:
             if rule.kind != "conditional":
                 continue
             when, then = rule.params["when"], rule.params["then"]
-            wc = F.col(when["column"])
+            wc = _sql_ident(when["column"])
             if "equals" in when:
-                cond = wc.eqNullSafe(F.lit(when["equals"]))
+                cond = f"({wc} <=> {_sql_lit(when['equals'])})"
             elif "in" in when:
-                cond = wc.isin(*when["in"])
+                cond = f"({wc} IN ({', '.join(map(_sql_lit, when['in']))}))" if when["in"] else "false"
             elif when.get("is_null"):
-                cond = wc.isNull()
+                cond = f"({wc} IS NULL)"
             else:
                 raise ValueError(f"conditional 'when' needs equals/in/is_null: {when}")
             inner, msg, tc_name, tc = _branch(df, then, "then")
@@ -379,13 +409,13 @@ class ValidationEngine:
             # projection builds paths at compile time.
             if other := rule.params.get("otherwise"):
                 e_inner, e_msg, e_name, e_col = _branch(df, other, "otherwise")
-                pred = F.when(cond, inner).otherwise(e_inner)
-                msg = F.when(cond, msg).otherwise(e_msg)
-                failing = F.when(cond, tc.cast("string")).otherwise(e_col.cast("string"))
+                pred = _case([(cond, inner)], e_inner)
+                msg = _case([(cond, msg)], e_msg)
+                failing = _case([(cond, f"CAST({tc} AS STRING)")], f"CAST({e_col} AS STRING)")
                 col_name = tc_name if tc_name == e_name else f"{tc_name}|{e_name}"
             else:
-                pred = ~cond | inner
-                failing = tc.cast("string")
+                pred = f"(NOT {cond} OR {inner})"
+                failing = f"CAST({tc} AS STRING)"
                 col_name = tc_name
             out.append(
                 CompiledRule(
@@ -403,14 +433,14 @@ class ValidationEngine:
     # violation array and move every plan
     _ENTRY_KINDS = ("items", "prefix_items", "pattern_properties", "property_names")
 
-    def _entry_violation_arrays(self, df: DataFrame) -> list[Column]:
-        """One untagged violation array per array-element / map-entry rule:
-        a transform() over the column that rides the single-pass row
+    def _entry_violation_arrays(self, df: DataFrame, tag: list) -> list[str]:
+        """One violation array (SQL) per array-element / map-entry rule: a
+        transform() over the column that rides the single-pass row
         projection — no explode-join, no second scan, no Python. A rule on a
         column the input lacks is skipped; a NULL column yields an empty
-        array. Each kind's ``_<kind>_entries`` builds the array itself."""
-        keys = _strings([k for k in self.key_columns if k in df.columns])
-        out: list[Column] = []
+        array. Each kind's ``_<kind>_entries`` builds the array itself; its
+        elements carry *tag*."""
+        out: list[str] = []
         for kind in self._ENTRY_KINDS:
             for rule in self.manifest.row_rules:
                 if rule.kind != kind:
@@ -423,12 +453,20 @@ class ValidationEngine:
                 if not isinstance(dtype, want):
                     raise ValueError(f"{kind} rule column {col_name!r} is {dtype.simpleString()}, not {noun}")
                 field = rule.get("field") if kind == "items" else None
-                rid = rule.rule_id(self.manifest.id, col_name + (f"/{field}" if field else ""))
+                rid = _sql_lit(rule.rule_id(self.manifest.id, col_name + (f"/{field}" if field else "")))
                 body = getattr(self, f"_{kind}_entries")
-                out.append(_or_empty(F.col(col_name), body(rule, col_name, dtype, rid, keys)))
+
+                def viol(path_tail, failing, message, override=True, rule=rule, col_name=col_name, rid=rid):
+                    """One element's violation struct; the rule's own message
+                    replaces *message* unless *override* is off."""
+                    path = self._path(df.columns, None, _sql_lit(col_name), *path_tail)
+                    return _violation(rid, path, failing, rule_message(rule, message) if override else message, tag)
+
+                out.append(_or_empty(_sql_ident(col_name), body(rule, _sql_ident(col_name), dtype, viol, df.columns)))
         return out
 
-    def _items_entries(self, rule: Rule, col_name: str, dtype: T.ArrayType, rid: str, keys: list[Column]) -> Column:
+    @staticmethod
+    def _items_entries(rule: Rule, col: str, dtype: T.ArrayType, viol, taken) -> str:
         """items (P12/P5): each element, or its struct ``field``, against
         ``check``, with the element index in absolute_path
         (["dns_servers","0","address"] — reference parity,
@@ -437,88 +475,67 @@ class ValidationEngine:
         parts = field.split(".") if field else []
         target_dt = _dtype_in(dtype.elementType, field, []) if field else dtype.elementType
         check = rule.params["check"]
-        label = (field or col_name).split(".")[-1]
+        label = (field or rule.params["column"]).split(".")[-1]
         # 'required' anchors at the element object (jsonschema names the
         # missing key, the path stops at the index)
         tail = [] if check == "required" else parts
+        x, i = _lambda_var("x", taken), _lambda_var("i", taken)
+        elem = ".".join([x, *map(_sql_ident, parts)])
+        pred, msg = compile_check(elem, target_dt, check, rule.get, label, taken)
+        v = viol([f"CAST({i} AS STRING)", *map(_sql_lit, tail)], f"CAST({elem} AS STRING)", msg)
+        return f"array_compact(transform({col}, ({x}, {i}) -> {_when(_failed(pred), v)}))"
 
-        def viol(x, i):
-            elem = x
-            for part in parts:
-                elem = elem[part]
-            pred, msg = compile_check(elem, target_dt, check, rule.get, label)
-            path = F.array(*keys, F.lit(col_name), i.cast("string"), *map(F.lit, tail))
-            return F.when(
-                ~F.coalesce(pred, F.lit(True)), _violation(rid, path, elem.cast("string"), rule_message(rule, msg))
-            )
-
-        return F.array_compact(F.transform(F.col(col_name), viol))
-
-    def _prefix_items_entries(self, rule: Rule, col_name: str, dtype: T.ArrayType, rid: str, keys: list[Column]) -> Column:
+    @staticmethod
+    def _prefix_items_entries(rule: Rule, col: str, dtype: T.ArrayType, viol, taken) -> str:
         """prefix_items (Draft-7 tuple items + additionalItems): element p
         against checks[p] (absent positions skip — Draft-7 validates only
         what exists), and the tail past the prefix either rejected wholesale
         (additional_items: false — jsonschema emits ONE aggregate error
         naming every extra, was/were pluralized) or checked per element
         (additional_items: {check}). element_at per position, no explode."""
-        col = F.col(col_name)
         elem_dt = dtype.elementType
         checks = rule.params["checks"]
         add = rule.get("additional_items")
         n = len(checks)
-        label = col_name.split(".")[-1]
+        label = rule.params["column"].split(".")[-1]
 
-        structs: list[Column] = []
+        structs: list[str] = []
         for p, spec in enumerate(checks):
-            elem = F.element_at(col, p + 1)
-            pred, msg = compile_check(elem, elem_dt, spec["kind"], spec.get, label)
-            path = F.array(*keys, F.lit(col_name), F.lit(str(p)))
-            structs.append(
-                F.when(
-                    (F.size(col) > p) & ~F.coalesce(pred, F.lit(True)),
-                    _violation(rid, path, elem.cast("string"), rule_message(rule, msg)),
-                )
-            )
-        arrays = [F.array_compact(F.array(*structs))] if structs else []
+            elem = f"element_at({col}, {p + 1})"
+            pred, msg = compile_check(elem, elem_dt, spec["kind"], spec.get, label, taken)
+            v = viol([_sql_lit(str(p))], f"CAST({elem} AS STRING)", msg)
+            structs.append(_when(f"size({col}) > {p} AND {_failed(pred)}", v))
+        arrays = [f"array_compact(array({', '.join(structs)}))"] if structs else []
         if add is False:
-            extras = F.slice(col, n + 1, F.greatest(F.size(col) - n, F.lit(0)))
-            reprs = F.array_join(F.transform(extras, lambda x: py_repr(x, elem_dt)), ", ")
-            msg = F.concat(
-                F.lit("Additional items are not allowed ("),
-                reprs,
-                F.when(F.size(col) - n == 1, F.lit(" was unexpected)")).otherwise(F.lit(" were unexpected)")),
+            y = _lambda_var("y", taken)
+            extras = f"slice({col}, {n + 1}, greatest(size({col}) - {n}, 0))"
+            reprs = f"array_join(transform({extras}, {y} -> {py_repr(y, elem_dt)}), ', ')"
+            msg = _concat(
+                "'Additional items are not allowed ('", reprs,
+                _case([(f"size({col}) - {n} = 1", "' was unexpected)'")], "' were unexpected)'"),
             )
             # jsonschema anchors this error at the array itself, not an index
-            path = F.array(*keys, F.lit(col_name))
-            arrays.append(
-                F.array_compact(F.array(F.when(F.size(col) > n, _violation(rid, path, reprs, rule_message(rule, msg)))))
-            )
+            arrays.append(f"array_compact(array({_when(f'size({col}) > {n}', viol([], reprs, msg))}))")
         elif isinstance(add, dict):
+            x, i = _lambda_var("x", taken), _lambda_var("i", taken)
+            pred, msg = compile_check(x, elem_dt, add["kind"], add.get, label, taken)
+            v = viol([f"CAST({i} AS STRING)"], f"CAST({x} AS STRING)", msg)
+            arrays.append(f"array_compact(transform({col}, ({x}, {i}) -> {_when(f'{i} >= {n} AND {_failed(pred)}', v)}))")
+        return arrays[0] if len(arrays) == 1 else _concat(*arrays)
 
-            def tail(x, i):
-                pred, msg = compile_check(x, elem_dt, add["kind"], add.get, label)
-                path = F.array(*keys, F.lit(col_name), i.cast("string"))
-                return F.when(
-                    (i >= n) & ~F.coalesce(pred, F.lit(True)),
-                    _violation(rid, path, x.cast("string"), rule_message(rule, msg)),
-                )
-
-            arrays.append(F.array_compact(F.transform(col, tail)))
-        return arrays[0] if len(arrays) == 1 else F.concat(*arrays)
-
-    def _pattern_properties_entries(self, rule: Rule, col_name: str, dtype: T.MapType, rid: str, keys: list[Column]) -> Column:
+    @staticmethod
+    def _pattern_properties_entries(rule: Rule, col: str, dtype: T.MapType, viol, taken) -> str:
         """pattern_properties (Draft-7 patternProperties over a MAP column —
         the reference's interface-name maps, examples/ansible/schema/schemas/
         interfaces.yml:9-16): entries whose key matches ``pattern`` get
         ``check`` on the value (or its ``field``); with
         ``additional_properties: false``, keys matching nothing are rejected
         with jsonschema's exact additionalProperties message."""
-        pattern = rule.params["pattern"]
         field = rule.get("field")
         parts = field.split(".") if field else []
         check = rule.get("check")
         target_dt = _dtype_in(dtype.valueType, field, []) if field else dtype.valueType
-        label = (field or col_name).split(".")[-1]
+        label = (field or rule.params["column"]).split(".")[-1]
         tail = [] if check == "required" else parts
         # the rule's own `pattern` matches KEYS; a `pattern` value sub-check
         # reads the dedicated value_pattern param (manifest meta-validation
@@ -528,60 +545,50 @@ class ValidationEngine:
             getter = lambda k, d=None: vp if k == "pattern" else rule.get(k, d)  # noqa: E731
         else:
             getter = rule.get
+        e = _lambda_var("e", taken)
+        key = f"{e}.key"
+        matched = f"{key} RLIKE {_sql_lit(rule.params['pattern'])}"
+        branches = []
+        if rule.get("additional_properties") is False:
+            # jsonschema message parity (_validators.py
+            # additionalProperties: "Additional properties are not
+            # allowed ('%s' %s unexpected)")
+            msg = _concat("'Additional properties are not allowed ('", _Q, key, _Q, "' was unexpected)'")
+            branches.append((f"NOT {matched}", viol([key], key, msg, override=False)))
+        if check is not None:
+            val = ".".join([f"{e}.value", *map(_sql_ident, parts)])
+            pred, msg = compile_check(val, target_dt, check, getter, label, taken)
+            branches.append((f"{matched} AND {_failed(pred)}", viol([key, *map(_sql_lit, tail)], f"CAST({val} AS STRING)", msg)))
+        return f"array_compact(transform(map_entries({col}), {e} -> {_case(branches)}))"
 
-        def viol(e):
-            matched = e["key"].rlike(pattern)
-            branches = []
-            if rule.get("additional_properties") is False:
-                # jsonschema message parity (_validators.py
-                # additionalProperties: "Additional properties are not
-                # allowed ('%s' %s unexpected)")
-                msg = F.concat(F.lit("Additional properties are not allowed ('"), e["key"], F.lit("' was unexpected)"))
-                branches.append((~matched, _violation(rid, F.array(*keys, F.lit(col_name), e["key"]), e["key"], msg)))
-            if check is not None:
-                val = e["value"]
-                for part in parts:
-                    val = val[part]
-                pred, msg = compile_check(val, target_dt, check, getter, label)
-                path = F.array(*keys, F.lit(col_name), e["key"], *map(F.lit, tail))
-                branches.append(
-                    (
-                        matched & ~F.coalesce(pred, F.lit(True)),
-                        _violation(rid, path, val.cast("string"), rule_message(rule, msg)),
-                    )
-                )
-            expr = F.when(*branches[0])
-            for cond, struct in branches[1:]:
-                expr = expr.when(cond, struct)
-            return expr
-
-        return F.array_compact(F.transform(F.map_entries(F.col(col_name)), viol))
-
-    def _property_names_entries(self, rule: Rule, col_name: str, dtype: T.MapType, rid: str, keys: list[Column]) -> Column:
+    @staticmethod
+    def _property_names_entries(rule: Rule, col: str, dtype: T.MapType, viol, taken) -> str:
         """property_names (Draft-7 propertyNames over a MAP column — the
         sub-schema validates each KEY string): the message straight from the
         compiled sub-check ("'ab' is too short" etc.). min/maxProperties is
         a `length` rule on the map (F.size counts entries)."""
-        check = rule.params["check"]
+        k = _lambda_var("k", taken)
+        pred, msg = compile_check(k, T.StringType(), rule.params["check"], rule.get, rule.params["column"], taken)
+        return f"array_compact(transform(map_keys({col}), {k} -> {_when(_failed(pred), viol([k], k, msg))}))"
 
-        def viol(k):
-            pred, msg = compile_check(k, T.StringType(), check, rule.get, col_name)
-            path = F.array(*keys, F.lit(col_name), k)
-            return F.when(~F.coalesce(pred, F.lit(True)), _violation(rid, path, k, rule_message(rule, msg)))
-
-        return F.array_compact(F.transform(F.map_keys(F.col(col_name)), viol))
+    def _compiled(self, df: DataFrame) -> tuple[list[CompiledRule], list[CompiledRule]]:
+        """Every compiled row rule, split into (all-SQL rules, rules with a
+        Column part)."""
+        text, cols = [], []
+        for cr in compile_row_rules(df, self.manifest) + self._compile_conditionals(df):
+            has_col = any(isinstance(x, Column) for x in (cr.predicate, cr.message, cr.failing_value))
+            (cols if has_col else text).append(cr)
+        return text, cols
 
     def row_fail_count(self, df: DataFrame) -> Column:
         """Number of row rules the row fails — the streaming-verdict
         building block (windowed sum of this = per-window fail count)."""
-        compiled = compile_row_rules(df, self.manifest) + self._compile_conditionals(df)
-        flags = [(~F.coalesce(cr.predicate, F.lit(True))).cast("int") for cr in compiled]
-        flags.extend(F.size(arr) for arr in self._entry_violation_arrays(df))
-        if not flags:
-            return F.lit(0)
-        out = flags[0]
-        for f_ in flags[1:]:
-            out = out + f_
+        text, cols = self._compiled(df)
+        flags = [f"CAST({_failed(cr.predicate)} AS INT)" for cr in text]
+        flags += [f"size({a})" for a in self._entry_violation_arrays(df, [])]
+        out = F.expr(" + ".join(flags)) if flags else F.lit(0)
+        for cr in cols:
+            out = out + (~F.coalesce(_column(cr.predicate), F.lit(True))).cast("int")
         return out
 
     def _row_violation_array(self, df: DataFrame) -> Column | None:
@@ -598,31 +605,34 @@ class ValidationEngine:
         return self._row_arr_memo.get((), (df,), lambda: self._row_violation_array_impl(df))
 
     def _row_violation_array_impl(self, df: DataFrame) -> Column | None:
-        compiled = compile_row_rules(df, self.manifest) + self._compile_conditionals(df)
+        text, cols = self._compiled(df)
         tag = [
-            self._instance_col(df).alias("instance_name"),
-            F.lit(self.manifest.table).alias("instance_location"),
-            F.lit(self.instance_type).alias("instance_type"),
-            F.lit(self.manifest.id).alias("_mid"),
+            ("instance_name", self._instance_sql(df)),
+            ("instance_location", _sql_lit(self.manifest.table)),
+            ("instance_type", _sql_lit(self.instance_type)),
+            ("_mid", _sql_lit(self.manifest.id)),
         ]
-        arrays = [
-            F.array_compact(F.array(*[
+
+        def fields(cr: CompiledRule) -> tuple:
+            return _sql_lit(cr.rule_id), self._path(df.columns, cr.column), cr.failing_value, cr.message
+
+        arrays = [f"array_compact(array({', '.join(_when(_failed(cr.predicate), _violation(*fields(cr), tag)) for cr in text)}))"] if text else []
+        arrays += self._entry_violation_arrays(df, tag)
+        out = [F.expr(arrays[0] if len(arrays) == 1 else _concat(*arrays))] if arrays else []
+        if cols:
+            # rules with a Column part (user SQL, JMESPath, the regex UDF)
+            # build their structs as Columns and join the array after
+            names = ("schema_id", "absolute_path", "failing_value", "message")
+            out.append(F.array_compact(F.array(*[
                 F.when(
-                    ~F.coalesce(cr.predicate, F.lit(True)),
-                    _violation(cr.rule_id, self._path(df, cr.column), cr.failing_value, cr.message, tag),
+                    ~F.coalesce(_column(cr.predicate), F.lit(True)),
+                    F.struct(*[_column(v).alias(n) for n, v in [*zip(names, fields(cr)), *tag]]),
                 )
-                for cr in compiled
-            ]))
-        ] if compiled else []
-        # the entry-array builders emit untagged structs (row_fail_count
-        # sizes them as they are); tag their elements here
-        arrays += [
-            F.transform(a, lambda v: _violation(v["schema_id"], v["absolute_path"], v["failing_value"], v["message"], tag))
-            for a in self._entry_violation_arrays(df)
-        ]
-        if not arrays:
+                for cr in cols
+            ])))
+        if not out:
             return None
-        return arrays[0] if len(arrays) == 1 else F.concat(*arrays)
+        return out[0] if len(out) == 1 else F.concat(*out)
 
     def row_violations(self, df: DataFrame) -> DataFrame | None:
         """Row-rule violations alone: the one-engine call of
@@ -642,12 +652,12 @@ class ValidationEngine:
         cols = rule.params["columns"]
         dups = (
             df.groupBy(*cols)
-            .agg(F.count(F.lit(1)).alias("_n"), F.min(self._instance_col(df)).alias("instance_name"))
-            .filter(F.col("_n") > 1)
+            .agg(F.expr("count(1) AS _n"), F.expr(f"min({self._instance_sql(df)}) AS instance_name"))
+            .filter("_n > 1")
         )
         return self._violation_rows(
-            dups, rule.rule_id(self.manifest.id, "+".join(cols)), F.col("instance_name"),
-            F.array(*_strings(cols)), F.concat_ws("|", *_strings(cols)), _unique_message(rule, cols, F.col("_n")),
+            dups, _sql_lit(rule.rule_id(self.manifest.id, "+".join(cols))), "instance_name",
+            f"array({', '.join(_strings(cols))})", _key_string(cols), _unique_message(rule, cols, "_n"),
         )
 
     def _referential_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -690,13 +700,13 @@ class ValidationEngine:
             .agg(F.min(self._instance_col(df)).alias("instance_name"))
         )
         orphans = orphan_keys.join(F.broadcast(ref_keys) if rule.get("broadcast", True) else ref_keys, on=cols, how="left_anti")
-        key_str = F.concat_ws("|", *_strings(cols))
+        key_str = _key_string(cols)
         message = rule_message(
-            rule, F.concat(F.lit("'"), key_str, F.lit(f"' is not present in {ref_name}({', '.join(ref_cols)})"))
+            rule, _concat(_Q, key_str, _sql_lit(f"' is not present in {ref_name}({', '.join(ref_cols)})"))
         )
         return self._violation_rows(
-            orphans, rule.rule_id(self.manifest.id, "+".join(cols)), F.col("instance_name"),
-            F.array(*_strings(cols)), key_str, message,
+            orphans, _sql_lit(rule.rule_id(self.manifest.id, "+".join(cols))), "instance_name",
+            f"array({', '.join(_strings(cols))})", key_str, message,
         )
 
     def _equals_table_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -904,56 +914,39 @@ class ValidationEngine:
         and the ``_l``/``_r`` side markers (from the direct join or the
         hash-precompare fetch-back)."""
         ref_name = rule.params["ref_table"]
-        key_cols = _strings(rule.params["columns"])
-        key_str = F.concat_ws("|", *key_cols)
-        _VIOL_T = (
-            "array<struct<absolute_path:array<string>,failing_value:string,message:string>>"
-        )
+        key_cols = ", ".join(_strings(rule.params["columns"]))
+        key_str = _key_string(rule.params["columns"])
 
-        def viol(path: Column, failing: Column, message: Column) -> Column:
-            return F.struct(
-                path.alias("absolute_path"), failing.alias("failing_value"), rule_message(rule, message).alias("message")
-            )
+        def viol(cond: str, path: str, failing: str, message: str) -> str:
+            return _when(cond, _struct([
+                ("absolute_path", f"array({path})"), ("failing_value", failing),
+                ("message", rule_message(rule, message)),
+            ]))
 
-        structs: list[Column] = [
-            F.when(
-                F.col("_r").isNull(),
-                viol(F.array(*key_cols), key_str, F.concat(F.lit("'"), key_str, F.lit(f"' is missing from {ref_name}"))),
-            ),
-            F.when(
-                F.col("_l").isNull(),
-                viol(F.array(*key_cols), key_str, F.concat(
-                    F.lit("'"), key_str, F.lit(f"' is missing from the input (present in {ref_name})")
-                )),
-            ),
+        structs = [
+            viol("_r IS NULL", key_cols, key_str, _concat(_Q, key_str, _sql_lit(f"' is missing from {ref_name}"))),
+            viol("_l IS NULL", key_cols, key_str, _concat(
+                _Q, key_str, _sql_lit(f"' is missing from the input (present in {ref_name})"))),
         ]
         for c in rule.params["compare"]:
-            dtype = _dtype_of(df, c)
-            lrep = py_repr(F.col(c), dtype)
+            lc, rc = _sql_ident(c), _sql_ident(f"_r_{c}")
             # ref dtype equals the input dtype (checked above) — but source
             # the repr from the ref schema so the message stays honest if
             # the check is ever relaxed to compatible casts
-            rrep = py_repr(F.col(f"_r_{c}"), _dtype_of(ref, c))
-            structs.append(
-                F.when(
-                    F.col("_l").isNotNull()
-                    & F.col("_r").isNotNull()
-                    & ~F.col(c).eqNullSafe(F.col(f"_r_{c}")),
-                    viol(
-                        F.array(*key_cols, F.lit(c)), F.col(c).cast("string"),
-                        F.concat(lrep, F.lit(f" does not equal {ref_name}.{c} "), rrep),
-                    ),
-                )
-            )
-        exploded = j.select(
-            # a reference-only row has no input instance: attribute it to
-            # its key so the verdict grain still isolates the failure
-            F.coalesce(F.col("_inst"), key_str).alias("instance_name"),
-            F.explode(F.array_compact(F.array(*structs).cast(_VIOL_T))).alias("v"),
+            structs.append(viol(
+                f"_l IS NOT NULL AND _r IS NOT NULL AND NOT {lc} <=> {rc}", f"{key_cols}, {_sql_lit(c)}",
+                f"CAST({lc} AS STRING)",
+                _concat(py_repr(lc, _dtype_of(df, c)), _sql_lit(f" does not equal {ref_name}.{c} "),
+                        py_repr(rc, _dtype_of(ref, c))),
+            ))
+        # a reference-only row has no input instance: attribute it to its
+        # key so the verdict grain still isolates the failure
+        exploded = j.selectExpr(
+            f"coalesce(_inst, {key_str}) AS instance_name", f"explode(array_compact(array({', '.join(structs)}))) AS v"
         )
         return self._violation_rows(
-            exploded, rule.rule_id(self.manifest.id, ref_name), F.col("instance_name"),
-            F.col("v.absolute_path"), F.col("v.failing_value"), F.col("v.message"),
+            exploded, _sql_lit(rule.rule_id(self.manifest.id, ref_name)), "instance_name",
+            "v.absolute_path", "v.failing_value", "v.message",
         )
 
     def _cardinality_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -996,13 +989,13 @@ class ValidationEngine:
             f"between {lo} and {hi}" if lo is not None and hi is not None
             else (f"at least {lo}" if lo is not None else f"at most {hi}")
         )
-        message = rule_message(rule, F.concat(
-            F.lit("'"), F.concat_ws("|", *_strings(cols)), F.lit(f"' matches "), F.col("_rc").cast("string"),
-            F.lit(f" row(s) in {ref_name}({', '.join(ref_cols)}); expected {bounds}"),
+        message = rule_message(rule, _concat(
+            _Q, _key_string(cols), _sql_lit("' matches "), "CAST(_rc AS STRING)",
+            _sql_lit(f" row(s) in {ref_name}({', '.join(ref_cols)}); expected {bounds}"),
         ))
         return self._violation_rows(
-            joined.filter(fail), rule.rule_id(self.manifest.id, "+".join(cols)), F.col("instance_name"),
-            F.array(*_strings(cols)), F.col("_rc").cast("string"), message,
+            joined.filter(fail), _sql_lit(rule.rule_id(self.manifest.id, "+".join(cols))), "instance_name",
+            f"array({', '.join(_strings(cols))})", "CAST(_rc AS STRING)", message,
         )
 
     def _fd_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1045,26 +1038,21 @@ class ValidationEngine:
             F.max(depc).alias("_hi"),
             F.min(self._instance_col(df)).alias("instance_name"),
         )
-        n_values = F.col("_nd") + F.col("_hn")
+        n_values = "(_nd + _hn)"
         # example conflicting pair: two non-null values when we have them,
         # else NULL vs the single non-null value (n_values > 1 guarantees
         # one of the two shapes)
-        example = F.when(
-            F.col("_nd") >= 2,
-            F.concat(
-                F.lit("'"), F.col("_lo").cast("string"),
-                F.lit("' vs '"), F.col("_hi").cast("string"), F.lit("'"),
-            ),
-        ).otherwise(F.concat(F.lit("NULL vs '"), F.col("_lo").cast("string"), F.lit("'")))
-        message = rule_message(rule, F.concat(
-            F.lit("'"), F.concat_ws("|", *_strings(cols)),
-            F.lit("' maps to "), n_values.cast("string"),
-            F.lit(f" distinct values of {dep} ("), example,
-            F.lit("); expected exactly 1"),
+        example = _case(
+            [("_nd >= 2", _concat(_Q, "CAST(_lo AS STRING)", _sql_lit("' vs '"), "CAST(_hi AS STRING)", _Q))],
+            _concat(_sql_lit("NULL vs '"), "CAST(_lo AS STRING)", _Q),
+        )
+        message = rule_message(rule, _concat(
+            _Q, _key_string(cols), _sql_lit("' maps to "), f"CAST({n_values} AS STRING)",
+            _sql_lit(f" distinct values of {dep} ("), example, "'); expected exactly 1'",
         ))
         return self._violation_rows(
-            g.filter(n_values > 1), rule.rule_id(self.manifest.id, f"{'+'.join(cols)}->{dep}"), F.col("instance_name"),
-            F.array(*_strings(cols)), n_values.cast("string"), message,
+            g.filter(f"{n_values} > 1"), _sql_lit(rule.rule_id(self.manifest.id, f"{'+'.join(cols)}->{dep}")),
+            "instance_name", f"array({', '.join(_strings(cols))})", f"CAST({n_values} AS STRING)", message,
         )
 
     def _outlier_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1139,22 +1127,21 @@ class ValidationEngine:
             joined = df.join(F.broadcast(bounds))  # 1-row build side, no condition
         fail = c.isNotNull() & ((c < F.col("_lo")) | (c > F.col("_hi")))
 
-        def _dec(x: Column) -> Column:
+        def _dec(x: str) -> str:
             # engine-portable float rendering: fixed DECIMAL(18,6) scale
             # (raw double→string differs across engines); values past the
             # decimal range fall back to the plain cast instead of an
             # ANSI overflow error
-            return F.coalesce(x.try_cast("decimal(18,6)").cast("string"), x.cast("string"))
+            return f"coalesce(CAST(TRY_CAST({x} AS DECIMAL(18,6)) AS STRING), CAST({x} AS STRING))"
 
-        message = rule_message(rule, F.concat(
-            F.lit(f"value "), _dec(c),
-            F.lit(f" of {col} is outside the IQR fence ["),
-            _dec(F.col("_lo")), F.lit(", "), _dec(F.col("_hi")),
-            F.lit(f"] (k={k:g})"),
+        ident = _sql_ident(col)
+        message = rule_message(rule, _concat(
+            "'value '", _dec(ident), _sql_lit(f" of {col} is outside the IQR fence ["),
+            _dec("_lo"), "', '", _dec("_hi"), _sql_lit(f"] (k={k:g})"),
         ))
         return self._violation_rows(
-            joined.filter(fail), rule.rule_id(self.manifest.id, col), self._instance_col(df),
-            self._path(df, col), _dec(c), message,
+            joined.filter(fail), _sql_lit(rule.rule_id(self.manifest.id, col)), self._instance_sql(df),
+            self._path(df.columns, col), _dec(ident), message,
         )
 
     def _rate_limit_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1183,13 +1170,13 @@ class ValidationEngine:
             self._instance_col(df).alias("instance_name"),
             F.count(F.lit(1)).over(w).alias("_c"),
         )
-        message = rule_message(rule, F.concat(
-            F.lit("'"), F.concat_ws("|", *_strings(part)), F.lit("' saw "), F.col("_c").cast("string"),
-            F.lit(f" rows within {wsec}s; at most {mx} allowed"),
+        message = rule_message(rule, _concat(
+            _Q, _key_string(part), _sql_lit("' saw "), "CAST(_c AS STRING)",
+            _sql_lit(f" rows within {wsec}s; at most {mx} allowed"),
         ))
         return self._violation_rows(
-            staged.filter(F.col("_c") > mx), rule.rule_id(self.manifest.id, "+".join(part)), F.col("instance_name"),
-            F.array(*_strings([*part, oc])), F.col("_c").cast("string"), message,
+            staged.filter(F.col("_c") > mx), _sql_lit(rule.rule_id(self.manifest.id, "+".join(part))),
+            "instance_name", f"array({', '.join(_strings([*part, oc]))})", "CAST(_c AS STRING)", message,
         )
 
     def _fused_window_violations(self, df: DataFrame, rules: list[Rule]) -> DataFrame:
@@ -1212,67 +1199,25 @@ class ValidationEngine:
           standalone groupBy.) Output is normalized to the standalone
           contract: one violation per duplicated key, "appears N times".
 
-        Violations are emitted as an array → explode, the same single-scan
-        trick as the row-rule projection."""
-        from pyspark.sql.window import Window
-
+        Violations are emitted as an array → inline, the same single-scan
+        trick as the row-rule projection. The plan is two ``selectExpr``
+        calls: the window columns, then the violation structs."""
         part = rules[0].params["partition_by"] if rules[0].kind != "unique" else list(rules[0].params["columns"][:1])
         for r in rules:
             if r.kind != "unique":
                 part = r.params["partition_by"]
                 break
-        aux: list[Column] = []
-        specs = []  # (rule, kind, col_name, aux_name, extra)
+
+        def over(keys: list[str], order: list[str], frame: str = "") -> str:
+            by = f"PARTITION BY {', '.join(map(_sql_ident, keys))} " if keys else ""
+            return f"OVER ({by}ORDER BY {', '.join(f'{_sql_ident(o)} ASC' for o in order)}{frame})"
+
+        aux: list[str] = []
+        structs: list[str] = []
         unique_cols_all: list[str] = []
+        fields = self._violation_fields
         for i, rule in enumerate(rules):
             if rule.kind == "unique":
-                cols = rule.params["columns"]
-                unique_cols_all.extend(cols)
-                wu = Window.partitionBy(*cols[:-1]).orderBy(F.col(cols[-1]).asc())
-                aux.append(F.lag(F.col(cols[-1])).over(wu).alias(f"_dup_{i}"))
-                # row_number disambiguates "no previous row" from "previous
-                # value is NULL": NULLs sort first, so a duplicated-NULL
-                # group's first row has lag=NULL too and eqNullSafe alone
-                # would never mark a first-of-group row
-                aux.append(F.row_number().over(wu).alias(f"_rn_{i}"))
-                # group size via a ties frame (rangeBetween(0,0) counts rows
-                # with the SAME order value) — rides the identical window
-                # spec, so no extra exchange, sort, or WindowExec group
-                aux.append(
-                    F.count(F.lit(1))
-                    .over(wu.rangeBetween(Window.currentRow, Window.currentRow))
-                    .alias(f"_cnt_{i}")
-                )
-                specs.append((rule, "unique", cols[-1], f"_dup_{i}", cols))
-                continue
-            col_name = rule.params["column"]
-            col = F.col(col_name)
-            if rule.kind == "ordering":
-                w = Window.partitionBy(*part).orderBy(*rule.params["order_by"])
-                aux_name = f"_prev_{i}"
-                aux.append(F.lag(col).over(w).alias(aux_name))
-                specs.append((rule, "ordering", col_name, aux_name, rule.get("strictly", True)))
-            elif rule.kind == "sequence":
-                # allowed-transition lag rides the group's exchange like
-                # ordering; row_number distinguishes the allowed_start check
-                w = Window.partitionBy(*part).orderBy(*rule.params["order_by"])
-                aux_name = f"_sprev_{i}"
-                aux.append(F.lag(col).over(w).alias(aux_name))
-                aux.append(F.row_number().over(w).alias(f"_srn_{i}"))
-                specs.append((rule, "sequence", col_name, aux_name, f"_srn_{i}"))
-            else:  # contiguous
-                w = Window.partitionBy(*part).orderBy(col.asc())
-                aux_name = f"_exp_{i}"
-                aux.append((F.row_number().over(w) - 1).alias(aux_name))
-                specs.append((rule, "contiguous", col_name, aux_name, None))
-        needed = list(dict.fromkeys([*part, *[s[2] for s in specs if s[1] != "unique"], *unique_cols_all,
-                                     *[k for k in self.key_columns if k in df.columns],
-                                     *[o for r in rules if r.kind in ("ordering", "sequence") for o in r.params["order_by"] if o in df.columns]]))
-        base = df.select(*needed, self._instance_col(df).alias("instance_name"), *aux)
-
-        structs = []
-        for i, (rule, kind, col_name, aux_name, extra) in enumerate(specs):
-            if kind == "unique":
                 # Same contract as _unique_violations: ONE row per duplicated
                 # key (emitted at the group's first occurrence under the
                 # window sort) with the identical "appears N times" message,
@@ -1282,82 +1227,83 @@ class ValidationEngine:
                 # the instance derives from the key prefix (the fuse
                 # precondition cols[:-1] == partition key makes that the
                 # norm).
-                cols = extra
-                first_of_dup_group = (F.col(f"_cnt_{i}") > 1) & (
-                    (F.col(f"_rn_{i}") == 1) | ~F.col(cols[-1]).eqNullSafe(F.col(aux_name))
-                )
-                structs.append(
-                    F.when(
-                        first_of_dup_group,
-                        _violation(
-                            rule.rule_id(self.manifest.id, "+".join(cols)), F.array(*_strings(cols)),
-                            F.concat_ws("|", *_strings(cols)), _unique_message(rule, cols, F.col(f"_cnt_{i}")),
-                        ),
-                    )
-                )
+                cols = rule.params["columns"]
+                unique_cols_all.extend(cols)
+                wu = over(cols[:-1], cols[-1:])
+                last = _sql_ident(cols[-1])
+                aux += [
+                    f"lag({last}) {wu} AS _dup_{i}",
+                    # row_number disambiguates "no previous row" from
+                    # "previous value is NULL": NULLs sort first, so a
+                    # duplicated-NULL group's first row has lag=NULL too and
+                    # a null-safe compare alone would never mark a
+                    # first-of-group row
+                    f"row_number() {wu} AS _rn_{i}",
+                    # group size via a ties frame (rangeBetween(0,0) counts
+                    # rows with the SAME order value) — rides the identical
+                    # window spec, so no extra exchange, sort, or WindowExec
+                    # group
+                    f"count(1) {over(cols[:-1], cols[-1:], ' RANGE BETWEEN CURRENT ROW AND CURRENT ROW')} AS _cnt_{i}",
+                ]
+                first_of_dup_group = f"_cnt_{i} > 1 AND (_rn_{i} = 1 OR NOT {last} <=> _dup_{i})"
+                structs.append(_when(first_of_dup_group, _struct(fields(
+                    _sql_lit(rule.rule_id(self.manifest.id, "+".join(cols))), "instance_name",
+                    f"array({', '.join(_strings(cols))})", _key_string(cols), _unique_message(rule, cols, f"_cnt_{i}"),
+                ))))
                 continue
-            if kind == "sequence":
-                rn_name = extra
-                trans = [tuple(t) for t in rule.params["allowed_transitions"]]
+            col_name = rule.params["column"]
+            col = _sql_ident(col_name)
+            sid = _sql_lit(rule.rule_id(self.manifest.id, col_name))
+            if rule.kind == "sequence":
+                # allowed-transition lag rides the group's exchange like
+                # ordering; row_number distinguishes the allowed_start
+                # check. Allowed-transition pairs are null-safe boolean
+                # algebra on the lag.
+                w = over(part, rule.params["order_by"])
+                aux += [f"lag({col}) {w} AS _sprev_{i}", f"row_number() {w} AS _srn_{i}"]
+                prev = f"_sprev_{i}"
+                ok_trans = " OR ".join(
+                    f"({prev} <=> {_sql_lit(a)} AND {col} <=> {_sql_lit(b)})" for a, b in rule.params["allowed_transitions"]
+                )
                 start = rule.get("allowed_start")
-                cur, prev = F.col(col_name), F.col(aux_name)
-                ok_trans = reduce(
-                    lambda a, b: a | b,
-                    [prev.eqNullSafe(F.lit(a)) & cur.eqNullSafe(F.lit(b)) for a, b in trans],
+                ok_start = " OR ".join(f"{col} <=> {_sql_lit(v)}" for v in start) if start is not None else "true"
+                is_first = f"_srn_{i} = 1"
+                rep, prev_rep = f"coalesce(CAST({col} AS STRING), 'None')", f"coalesce(CAST({prev} AS STRING), 'None')"
+                msg = _case(
+                    [(is_first, _concat(_Q, rep, _sql_lit(f"' is not an allowed start value for '{col_name}'")))],
+                    _concat(_Q, rep, _sql_lit("' cannot follow '"), prev_rep, _sql_lit(f"' in '{col_name}'")),
                 )
-                ok_start = (
-                    reduce(lambda a, b: a | b, [cur.eqNullSafe(F.lit(s)) for s in start])
-                    if start is not None
-                    else F.lit(True)
-                )
-                is_first = F.col(rn_name) == 1
-                bad = F.when(is_first, ~ok_start).otherwise(~ok_trans)
-                rep = F.coalesce(cur.cast("string"), F.lit("None"))
-                prev_rep = F.coalesce(prev.cast("string"), F.lit("None"))
-                msg = F.when(
-                    is_first,
-                    F.concat(F.lit("'"), rep, F.lit(f"' is not an allowed start value for '{col_name}'")),
-                ).otherwise(
-                    F.concat(F.lit("'"), rep, F.lit("' cannot follow '"), prev_rep, F.lit(f"' in '{col_name}'"))
-                )
-                path = F.array(*_strings([*part, *rule.params["order_by"]]), F.lit(col_name))
-                structs.append(
-                    F.when(
-                        bad,
-                        _violation(rule.rule_id(self.manifest.id, col_name), path, cur.cast("string"), rule_message(rule, msg)),
-                    )
-                )
+                bad = _case([(is_first, f"NOT ({ok_start})")], f"NOT ({ok_trans})")
+                path = f"array({', '.join(_strings([*part, *rule.params['order_by']]))}, {_sql_lit(col_name)})"
+                structs.append(_when(bad, _struct(fields(sid, "instance_name", path, f"CAST({col} AS STRING)",
+                                                         rule_message(rule, msg)))))
                 continue
-            col, ref = F.col(col_name), F.col(aux_name)
-            if kind == "ordering":
-                bad = (col <= ref) if extra else (col < ref)
-                word = "strictly increasing" if extra else "non-decreasing"
-                msg = F.concat(
-                    F.lit(f"'{col_name}' value "), col.cast("string"),
-                    F.lit(f" is not {word} (previous "), ref.cast("string"), F.lit(")"),
+            if rule.kind == "ordering":
+                ref = f"_prev_{i}"
+                aux.append(f"lag({col}) {over(part, rule.params['order_by'])} AS {ref}")
+                strictly = rule.get("strictly", True)
+                bad = f"{col} <= {ref}" if strictly else f"{col} < {ref}"
+                msg = _concat(
+                    _sql_lit(f"'{col_name}' value "), f"CAST({col} AS STRING)",
+                    _sql_lit(f" is not {'strictly increasing' if strictly else 'non-decreasing'} (previous "),
+                    f"CAST({ref} AS STRING)", "')'",
                 )
-            else:
-                bad = col != ref
-                msg = F.concat(
-                    F.lit(f"'{col_name}' value "), col.cast("string"),
-                    F.lit(" breaks contiguity (expected "), ref.cast("string"), F.lit(")"),
+            else:  # contiguous
+                ref = f"_exp_{i}"
+                aux.append(f"(row_number() {over(part, [col_name])} - 1) AS {ref}")
+                bad = f"{col} != {ref}"
+                msg = _concat(
+                    _sql_lit(f"'{col_name}' value "), f"CAST({col} AS STRING)", "' breaks contiguity (expected '",
+                    f"CAST({ref} AS STRING)", "')'",
                 )
-            structs.append(
-                F.when(
-                    F.coalesce(bad, F.lit(False)),
-                    _violation(
-                        rule.rule_id(self.manifest.id, col_name), self._path(base, col_name), col.cast("string"),
-                        rule_message(rule, msg),
-                    ),
-                )
-            )
-        exploded = base.select(
-            "instance_name", F.explode(F.array_compact(F.array(*structs))).alias("v")
-        )
-        return self._violation_rows(
-            exploded, F.col("v.schema_id"), F.col("instance_name"),
-            F.col("v.absolute_path"), F.col("v.failing_value"), F.col("v.message"),
-        )
+            structs.append(_when(f"coalesce({bad}, false)", _struct(fields(
+                sid, "instance_name", self._path(df.columns, col_name), f"CAST({col} AS STRING)", rule_message(rule, msg),
+            ))))
+        needed = list(dict.fromkeys([*part, *[r.params["column"] for r in rules if r.kind != "unique"], *unique_cols_all,
+                                     *[k for k in self.key_columns if k in df.columns],
+                                     *[o for r in rules if r.kind in ("ordering", "sequence") for o in r.params["order_by"] if o in df.columns]]))
+        base = df.selectExpr(*map(_sql_ident, needed), f"{self._instance_sql(df)} AS instance_name", *aux)
+        return base.selectExpr(f"inline(array_compact(array({', '.join(structs)})))")
 
     def _salted_group(self, df: DataFrame, rule: Rule, group: list[str], specs: list) -> DataFrame:
         """Two-phase salted aggregation for hot-key skew (north_rule):
@@ -1410,15 +1356,15 @@ class ValidationEngine:
         # coalesce the interpolated sides: a NULL aggregate (e.g. sum over an
         # empty filter) must not null-propagate through concat and erase the
         # whole diagnostic
-        left_str = F.coalesce(F.col("_left").cast("string"), F.lit("NULL"))
-        right_str = F.coalesce(right.cast("string"), F.lit("NULL"))
-        message = rule_message(rule, F.concat(
-            F.lit(f"aggregate check failed: left="), left_str,
-            F.lit(f" {rule.params['operator']} right="), right_str, F.lit(" is false"),
+        left_str = "coalesce(CAST(_left AS STRING), 'NULL')"
+        right_sql = "_right" if isinstance(right_spec, dict) else _sql_lit(right_spec)
+        message = rule_message(rule, _concat(
+            "'aggregate check failed: left='", left_str, _sql_lit(f" {rule.params['operator']} right="),
+            f"coalesce(CAST({right_sql} AS STRING), 'NULL')", "' is false'",
         ))
         return self._violation_rows(
-            failing, rule.rule_id(self.manifest.id, "+".join(group)), F.col("_inst"),
-            F.array(*_strings(group)), left_str, message,
+            failing, _sql_lit(rule.rule_id(self.manifest.id, "+".join(group))), "_inst",
+            f"array({', '.join(_strings(group))})", left_str, message,
         )
 
     def _drift_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
@@ -1546,51 +1492,26 @@ class ValidationEngine:
     def verdicts(self, df: DataFrame, violations: DataFrame) -> DataFrame:
         # construction-only memo: the verdict plan is always lazy (no eager
         # evaluator runs here), so the exact (df, violations) pair keys it
-        return self._plan_memo.get(("verdicts",), (df, violations), lambda: self._verdicts_impl(df, violations))
+        return self._plan_memo.get(("verdicts",), (df, violations), lambda: _verdicts(
+            [self], df, violations.selectExpr("*", f"{_sql_lit(self.manifest.id)} AS _mid")
+        ))
 
     def _verdicts_impl(self, df: DataFrame, violations: DataFrame) -> DataFrame:
-        # ONE groupBy over a union: every input row's instance (marker NULL)
-        # and every violation (marker 1), so count(marker) is the violation
-        # count and a clean instance still gets its PASS row: one partially
-        # aggregated exchange and no join. The violations bring their own
-        # instances, since table-grain rules (strict_columns, drift)
-        # attribute to instance 'table', which no data row carries, and a
-        # verdict set built from the input alone would drop those FAILs and
-        # report a passing run. `grain` is part of the key so a real
-        # host/partition literally named 'table' (grain HOST/PARTITION) never
-        # collides with the table-grain row (grain TABLE), and groupBy keeps
-        # NULL names in one group, so a NULL instance's violations count in
-        # the NULL instance's verdict.
-        parts = [
-            df.select(
-                self._instance_col(df).alias("instance_name"),
-                F.lit(self.instance_type).alias("grain"),
-                F.lit(None).cast("int").alias("_marker"),
-            ),
-            violations.select("instance_name", F.col("instance_type").alias("grain"), F.lit(1).alias("_marker")),
-        ]
-        # a manifest WITH table-grain rules gets a 'table' verdict row even
-        # when clean — otherwise a recorded table FAIL could never be
-        # superseded by a PASS in checkpoint lineage
-        if self.manifest.strict or any(r.rule_kind.table_verdict for r in self.manifest.table_rules):
-            parts.append(
-                df.sparkSession.createDataFrame(
-                    [("table", "TABLE", None)], "instance_name string, grain string, _marker int"
-                )
-            )
-        n = F.col("n_violations")
-        return (
-            reduce(lambda a, b: a.unionByName(b), parts)
-            .groupBy("instance_name", "grain")
-            .agg(F.count("_marker").alias("n_violations"))
-            .select(
-                F.lit(self.manifest.id).alias("schema_id"),
-                "instance_name",
-                "grain",
-                F.when(n > 0, F.lit("FAIL")).otherwise(F.lit("PASS")).alias("result"),
-                n,
-            )
+        """This engine's marked rows of the verdict aggregate
+        (:func:`_verdicts`): its violations (marker 1) and, for a manifest
+        WITH table-grain rules, a ('table', 'TABLE') row (marker NULL), so
+        the table gets a verdict row even when clean — otherwise a recorded
+        table FAIL could never be superseded by a PASS in checkpoint
+        lineage."""
+        mid = self.manifest.id
+        rows = violations.filter(f"_mid = {_sql_lit(mid)}").selectExpr(
+            "_mid", "instance_name", "instance_type AS grain", "1 AS _marker"
         )
+        if self.manifest.strict or any(r.rule_kind.table_verdict for r in self.manifest.table_rules):
+            rows = rows.unionByName(df.sparkSession.createDataFrame(
+                [(mid, "table", "TABLE", None)], "_mid string, instance_name string, grain string, _marker int"
+            ))
+        return rows
 
     def validate(
         self,
@@ -1623,13 +1544,49 @@ def _row_violation_rows(engines: list[ValidationEngine], df: DataFrame) -> DataF
         # struct — and cannot be pushed below the Generate. Result multiset
         # is identical: _v is never NULL (every branch yields an array), so
         # outer only adds the null rows the filter removes.
-        .select(F.explode_outer("_v").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .select(
-            *[F.lit("FAIL").alias(c) if c == "result" else F.col(f"v.{c}").alias(c) for c in VIOLATION_COLUMNS],
-            F.col("v._mid").alias("_mid"),
-        )
+        .selectExpr("explode_outer(_v) AS v")
+        .filter("v IS NOT NULL")
+        .selectExpr(*["'FAIL' AS result" if c == "result" else f"v.{c} AS {c}" for c in VIOLATION_COLUMNS], "v._mid AS _mid")
     )
+
+
+def _verdicts(engines: list[ValidationEngine], df: DataFrame, violations: DataFrame) -> DataFrame:
+    """Every engine's per-instance PASS/FAIL over *violations* (tagged with
+    the internal ``_mid`` manifest id).
+
+    Engines that share an instance expression and grain share ONE
+    ``groupBy(_mid, instance_name, grain)`` over a union: every input row's
+    instance once per manifest (marker NULL) and every violation (marker
+    1), so count(marker) is the violation count and a clean instance still
+    gets its PASS row: one input scan, one partially aggregated exchange
+    and no join. The violations bring their own instances, since
+    table-grain rules (strict_columns, drift) attribute to instance
+    'table', which no data row carries, and a verdict set built from the
+    input alone would drop those FAILs and report a passing run. `grain`
+    is part of the key so a real host/partition literally named 'table'
+    (grain HOST/PARTITION) never collides with the table-grain row (grain
+    TABLE), and groupBy keeps NULL names in one group, so a NULL
+    instance's violations count in the NULL instance's verdict."""
+    groups: dict[tuple[str, str], dict[str, ValidationEngine]] = {}
+    for e in engines:
+        groups.setdefault((e._instance_sql(df), e.instance_type), {}).setdefault(e.manifest.id, e)
+    out = []
+    for (inst, grain), group in groups.items():
+        mids = ", ".join(map(_sql_lit, group))
+        universe = df.selectExpr(
+            f"{mids if len(group) == 1 else f'explode(array({mids}))'} AS _mid",
+            f"{inst} AS instance_name", f"{_sql_lit(grain)} AS grain", "CAST(NULL AS INT) AS _marker",
+        )
+        out.append(
+            reduce(lambda a, b: a.unionByName(b), [universe, *[e._verdicts_impl(df, violations) for e in group.values()]])
+            .groupBy("_mid", "instance_name", "grain")
+            .agg(F.expr("count(_marker) AS n_violations"))
+            .selectExpr(
+                "_mid AS schema_id", "instance_name", "grain",
+                "CASE WHEN n_violations > 0 THEN 'FAIL' ELSE 'PASS' END AS result", "n_violations",
+            )
+        )
+    return reduce(lambda a, b: a.unionByName(b), out)
 
 
 def _validate_plan(
@@ -1646,27 +1603,14 @@ def _validate_plan(
         if not e.manifest.table_rules and not e.manifest.strict:
             continue
         parts.append(
-            e.violations(df, ref_tables, include_row_rules=False).withColumn(
-                "_mid", F.lit(e.manifest.id)
+            e.violations(df, ref_tables, include_row_rules=False).selectExpr(
+                "*", f"{_sql_lit(e.manifest.id)} AS _mid"
             )
         )
     if not parts:
-        parts.append(
-            df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL).withColumn(
-                "_mid", F.lit(None).cast("string")
-            )
-        )
+        parts.append(df.sparkSession.createDataFrame([], f"{_VIOLATION_SCHEMA_DDL}, _mid string"))
     all_v = reduce(lambda a, b: a.unionByName(b), parts)
-    # the verdict input is a fresh filter per engine, so _verdicts_impl:
-    # the verdicts() memo could never hit on it
-    verdicts = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            e._verdicts_impl(df, all_v.filter(F.col("_mid") == e.manifest.id).drop("_mid"))
-            for e in engines
-        ],
-    )
-    return all_v, verdicts
+    return all_v, _verdicts(engines, df, all_v)
 
 
 def validate_many(
@@ -1695,9 +1639,10 @@ def validate_many(
     Verdicts stay per-manifest: the fused violations are persisted once
     (``cache_violations``, spill-safe MEMORY_AND_DISK — violation sets are
     tiny relative to the input, and without it every consumer recomputes
-    every rule) and split by the internal ``_mid`` manifest tag (rule ids
+    every rule) and grouped by the internal ``_mid`` manifest tag (rule ids
     alone can't attribute a violation — a rule may carry a user-supplied id
-    that doesn't embed the manifest id). The returned report's ``cached``
+    that doesn't embed the manifest id), in one aggregate per instance
+    expression and grain (:func:`_verdicts`). The returned report's ``cached``
     handle is the tagged parent frame; ``unpersist()`` releases it. Plan
     assembly is memoized on the first engine (:class:`_PlanMemo`); persist
     still happens per call.

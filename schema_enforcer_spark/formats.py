@@ -5,7 +5,7 @@ The reference enables jsonschema's Draft-7 FORMAT_CHECKER
 exercises exactly ten formats (/root/reference/tests/conftest.py:9-20):
 ipv4, ipv6, hostname, date, time, date-time, uri, email, json-pointer, regex.
 
-Each format maps to a pure-SQL predicate builder so the check stays inside
+Each format maps to a pure-SQL predicate (SQL text) so the check stays inside
 whole-stage codegen (no Python UDF). Error message template matches
 jsonschema's FormatChecker phrasing: ``'<value>' is not a '<format>'``.
 """
@@ -13,9 +13,6 @@ jsonschema's FormatChecker phrasing: ``'<value>' is not a '<format>'``.
 from __future__ import annotations
 
 from typing import TYPE_CHECKING
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 if TYPE_CHECKING:  # pandas is imported lazily in _regex_valid_udf — the
     import pandas as pd  # only format needing it; keeps `import
@@ -122,32 +119,30 @@ def _regex_valid_udf():
     return pandas_udf(_regex_valid_batch, "boolean")
 
 
-def format_predicate(col: Column, fmt: str) -> Column:
-    """True iff *col* satisfies *fmt*. NULL inputs return True (jsonschema
-    format checks only apply to present string values; nullability is a
-    separate `required` rule)."""
-    if fmt == "regex":
-        # 'is a valid regex' has no SQL-expressible form (it's a compiler
-        # check, /root/reference/tests/conftest.py:19 uses re.compile) — the
-        # ONE format that drops to Python, Arrow-batched with per-batch
-        # memoization, exact on pathological cases ('a{2,1}', lone '[').
-        return col.isNull() | _regex_valid_udf()(col)
+def format_sql(c: str, fmt: str) -> str:
+    """SQL that is true iff the value *c* (SQL text) satisfies *fmt*. NULL
+    inputs are true (jsonschema format checks only apply to present string
+    values; nullability is a separate `required` rule). The ``regex``
+    format has no SQL form: 'is a valid regex' is a compiler check
+    (/root/reference/tests/conftest.py:19 uses re.compile), so it is the ONE
+    format that drops to Python — :func:`_regex_valid_udf`, Arrow-batched
+    with per-batch memoization, exact on pathological cases ('a{2,1}', lone
+    '[') — and the row-rule compiler applies it as a Column."""
+    from schema_enforcer_spark.compiler import _sql_lit
+
     try:
         pattern = FORMAT_REGEX[fmt]
     except KeyError:
         raise ValueError(f"unsupported format {fmt!r}; supported: {SUPPORTED_FORMATS}") from None
-    shape = col.rlike(pattern)
+    shape = f"{c} RLIKE {_sql_lit(pattern)}"
     if fmt in ("date", "date-time"):
         # jsonschema's checkers are calendar-aware (date.fromisoformat /
         # rfc3339: 2021-02-30 is invalid); a shape regex alone passes it
         # (caught by the round-5 property fuzz). Day-in-month check stays
         # pure codegen: regex guarantees the YYYY-MM-DD prefix positions
         # and month 01-12, so make_date(y, m, 1) is safe inside the
-        # when(shape, ...) branch (CaseWhen evaluates lazily per row —
-        # ANSI make_date never sees an invalid month).
-        y = F.substring(col, 1, 4).cast("int")
-        m = F.substring(col, 6, 2).cast("int")
-        d = F.substring(col, 9, 2).cast("int")
-        cal = d <= F.dayofmonth(F.last_day(F.make_date(y, m, F.lit(1))))
-        shape = F.when(shape, cal).otherwise(F.lit(False))
-    return col.isNull() | shape
+        # CASE WHEN shape branch (CaseWhen evaluates lazily per row — ANSI
+        # make_date never sees an invalid month).
+        y, m, d = (f"CAST(substring({c}, {pos}, {n}) AS INT)" for pos, n in ((1, 4), (6, 2), (9, 2)))
+        shape = f"CASE WHEN {shape} THEN {d} <= dayofmonth(last_day(make_date({y}, {m}, 1))) ELSE false END"
+    return f"({c} IS NULL OR {shape})"

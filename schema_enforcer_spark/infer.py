@@ -86,7 +86,8 @@ def profile_for_inference(
     (exact, sorted) and ``n_distinct`` (exact). Format probing adds
     ~5 codegen regex aggregates per string column to the one full scan;
     pass ``formats=False`` to skip it."""
-    from schema_enforcer_spark.formats import format_predicate
+    from schema_enforcer_spark.compiler import _sql_ident
+    from schema_enforcer_spark.formats import format_sql
     columns = columns or df.columns
     dtypes = {f.name: f.dataType for f in df.schema.fields if f.name in columns}
 
@@ -104,12 +105,10 @@ def profile_for_inference(
             ]
             if formats:
                 # one boolean agg per distinctive format: min(pred) == 1 iff
-                # every value matches (format_predicate is True on NULL, so
-                # an all-null column is excluded separately via n_nulls)
+                # every value matches (format_sql is true on NULL, so an
+                # all-null column is excluded separately via n_nulls)
                 aggs += [
-                    F.min(format_predicate(col, fmt).cast("long")).alias(
-                        f"{c}__fmt{i}"
-                    )
+                    F.expr(f"min(CAST({format_sql(_sql_ident(c), fmt)} AS BIGINT))").alias(f"{c}__fmt{i}")
                     for i, fmt in enumerate(_DISTINCTIVE_FORMATS)
                 ]
     row1 = df.agg(*aggs).collect()[0]  # single row — bounded driver data

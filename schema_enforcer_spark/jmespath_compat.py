@@ -618,7 +618,7 @@ def compile_jmespath_rule(df: DataFrame, manifest_id: str, rule):
     against ``right`` (literal) or ``right_expr`` (second expression) with
     gt/gte/eq/lt/lte/contains — ordering ops compare as integers
     (``int(r) > int(v)``)."""
-    from schema_enforcer_spark.compiler import CompiledRule, rule_message
+    from schema_enforcer_spark.compiler import CompiledRule, _sql_lit, rule_message
 
     lhs, ldt = jmespath_to_column(rule.params["left"], df)
     right_expr = rule.get("right_expr")
@@ -646,6 +646,6 @@ def compile_jmespath_rule(df: DataFrame, manifest_id: str, rule):
         raise ValueError(f"unknown jmespath operator {op!r}")
     # falsy LHS ⇒ PASS (reference `if lhs:` gate)
     pred = F.when(~truthy(lhs, ldt), F.lit(True)).otherwise(F.coalesce(cmp, F.lit(False)))
-    msg = rule_message(rule, f"jmespath check failed: {rule.params['left']} {op}")
+    msg = rule_message(rule, _sql_lit(f"jmespath check failed: {rule.params['left']} {op}"))
     fv = lhs.cast("string") if isinstance(ldt, (T.NumericType, T.StringType, T.BooleanType)) else F.to_json(lhs)
     return CompiledRule(rule_id=rule.rule_id(manifest_id), column=None, predicate=pred, message=msg, failing_value=fv)

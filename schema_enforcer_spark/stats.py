@@ -104,49 +104,25 @@ def write_partition_stats(
     shuffle is #partitions × #columns × KB regardless of table size)."""
     import time
 
+    from schema_enforcer_spark.compiler import _sql_ident, _sql_lit
+
     run_ns = run_ns if run_ns is not None else time.time_ns()
-    aggs = []
-    for c in columns:
-        aggs += [
-            F.hll_sketch_agg(F.col(c).cast("string")).alias(f"{c}__hll"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"),
-            F.min(F.col(c)).cast("string").alias(f"{c}__min_s"),
-            F.max(F.col(c)).cast("string").alias(f"{c}__max_s"),
-            F.min(F.col(c).try_cast("double")).alias(f"{c}__min_n"),
-            F.max(F.col(c).try_cast("double")).alias(f"{c}__max_n"),
-        ]
-    wide = df.groupBy(instance_col.cast("string").alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("__n"), *aggs
-    )
-    structs = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("col_name"),
-                F.col(f"{c}__hll").alias("hll"),
-                F.col(f"{c}__nulls").alias("n_nulls"),
-                F.col(f"{c}__min_s").alias("min_s"),
-                F.col(f"{c}__max_s").alias("max_s"),
-                F.col(f"{c}__min_n").alias("min_n"),
-                F.col(f"{c}__max_n").alias("max_n"),
-            )
-            for c in columns
-        ]
-    )
-    long_rows = (
-        wide.select("partition_id", F.col("__n").alias("n_rows"), F.explode(structs).alias("s"))
-        .select(
-            "partition_id",
-            F.col("s.col_name").alias("col_name"),
-            F.col("s.hll").alias("hll"),
-            F.col("s.n_nulls").alias("n_nulls"),
-            F.col("n_rows"),
-            F.col("s.min_s").alias("min_s"),
-            F.col("s.max_s").alias("max_s"),
-            F.col("s.min_n").alias("min_n"),
-            F.col("s.max_n").alias("max_n"),
-            F.lit(run_ns).cast("bigint").alias("run_ns"),
+    # one aggregate expression: an array with one struct per column, each
+    # struct holding that column's aggregates; inline() then turns it into
+    # the store's long rows (SQL text: two pyspark calls, not ~30 per column)
+    structs = []
+    for name in columns:
+        c = _sql_ident(name)
+        structs.append(
+            f"named_struct('col_name', {_sql_lit(name)}, 'hll', hll_sketch_agg(CAST({c} AS STRING)), "
+            f"'n_nulls', sum(CAST({c} IS NULL AS BIGINT)), 'n_rows', count(1), "
+            f"'min_s', CAST(min({c}) AS STRING), 'max_s', CAST(max({c}) AS STRING), "
+            f"'min_n', min(TRY_CAST({c} AS DOUBLE)), 'max_n', max(TRY_CAST({c} AS DOUBLE)))"
         )
+    wide = df.groupBy(instance_col.cast("string").alias("partition_id")).agg(
+        F.expr(f"array({', '.join(structs)}) AS s")
     )
+    long_rows = wide.selectExpr("partition_id", "inline(s)", f"CAST({run_ns} AS BIGINT) AS run_ns")
     long_rows.write.mode("append").parquet(store_path)
 
 

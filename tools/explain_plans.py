@@ -15,7 +15,9 @@ Checked properties:
 - checkpoint pending set: a literal filter over the input, with no join,
   no broadcast and no scan of the lineage path;
 - verdicts: one aggregate over the union of the input's instances and the
-  persisted violations, with no join and one Exchange.
+  persisted violations, with no join and one Exchange; two manifests with
+  the same instance expression and grain share that aggregate and its one
+  input scan.
 """
 
 from __future__ import annotations
@@ -905,6 +907,32 @@ def main() -> None:
     else:
         problems.append(f"verdicts read {leaves30} (want the persisted violations and one input scan)")
     sections.append(("Verdicts (one union-aggregate over the persisted violations)", p30, notes30))
+
+    # 30b. two manifests with the same instance expression and grain share
+    # that aggregate: groupBy(_mid, instance, grain) over ONE read of the
+    # input's instances (one per manifest aggregate scanned it M times)
+    rep30b = validate_many([eng, ValidationEngine(quality)], tdf)
+    try:
+        p30b = _formatted(rep30b.verdicts)
+    finally:
+        rep30b.unpersist()
+    notes30b = []
+    ops30b = _tree_above_cache(p30b)
+    if joins30b := [op for op in ops30b if "Join" in op]:
+        problems.append(f"two-manifest verdicts plan a join: {joins30b}")
+    else:
+        notes30b.append("OK: no Join above the persisted violations")
+    n_ex30b = ops30b.count("Exchange")
+    if n_ex30b == 1:
+        notes30b.append("OK: exactly one Exchange for both manifests' verdicts")
+    else:
+        problems.append(f"two-manifest verdicts: {n_ex30b} Exchanges above the leaves (want 1)")
+    n_scan30b = ops30b.count("Scan parquet")
+    if n_scan30b == 1:
+        notes30b.append("OK: one scan of the input serves both manifests")
+    else:
+        problems.append(f"two-manifest verdicts: {n_scan30b} input scans (want 1)")
+    sections.append(("Verdicts of two manifests (one shared aggregate, one input scan)", p30b, notes30b))
 
     out = io.StringIO()
     out.write("# PLANS — physical-plan audit (generated by tools/explain_plans.py)\n\n")

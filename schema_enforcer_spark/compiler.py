@@ -177,7 +177,9 @@ def _type_check(want: str, c: str, dt: T.DataType) -> str:
     if want == "integer":
         if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
             return "true"
-        return f"({c} IS NULL OR (TRY_CAST({c} AS BIGINT) IS NOT NULL AND NOT {c} RLIKE {_NOT_INT}))" if is_str else "false"
+        if not is_str:
+            return "false"
+        return f"({c} IS NULL OR (TRY_CAST({c} AS BIGINT) IS NOT NULL AND NOT {c} RLIKE {_NOT_INT}))"
     if want == "number":
         if isinstance(dt, T.NumericType):
             return "true"

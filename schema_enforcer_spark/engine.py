@@ -120,10 +120,6 @@ def _or_empty(column: str, violations: str) -> str:
     return f"CASE WHEN {column} IS NULL THEN array() ELSE {violations} END"
 
 
-def _when(cond: str, value: str) -> str:
-    return f"CASE WHEN {cond} THEN {value} END"
-
-
 def _column(x: str | Column) -> Column:
     return x if isinstance(x, Column) else F.expr(x)
 
@@ -483,7 +479,7 @@ class ValidationEngine:
         elem = ".".join([x, *map(_sql_ident, parts)])
         pred, msg = compile_check(elem, target_dt, check, rule.get, label, taken)
         v = viol([f"CAST({i} AS STRING)", *map(_sql_lit, tail)], f"CAST({elem} AS STRING)", msg)
-        return f"array_compact(transform({col}, ({x}, {i}) -> {_when(_failed(pred), v)}))"
+        return f"array_compact(transform({col}, ({x}, {i}) -> {_case([(_failed(pred), v)])}))"
 
     @staticmethod
     def _prefix_items_entries(rule: Rule, col: str, dtype: T.ArrayType, viol, taken) -> str:
@@ -504,7 +500,7 @@ class ValidationEngine:
             elem = f"element_at({col}, {p + 1})"
             pred, msg = compile_check(elem, elem_dt, spec["kind"], spec.get, label, taken)
             v = viol([_sql_lit(str(p))], f"CAST({elem} AS STRING)", msg)
-            structs.append(_when(f"size({col}) > {p} AND {_failed(pred)}", v))
+            structs.append(_case([(f"size({col}) > {p} AND {_failed(pred)}", v)]))
         arrays = [f"array_compact(array({', '.join(structs)}))"] if structs else []
         if add is False:
             y = _lambda_var("y", taken)
@@ -515,12 +511,13 @@ class ValidationEngine:
                 _case([(f"size({col}) - {n} = 1", "' was unexpected)'")], "' were unexpected)'"),
             )
             # jsonschema anchors this error at the array itself, not an index
-            arrays.append(f"array_compact(array({_when(f'size({col}) > {n}', viol([], reprs, msg))}))")
+            arrays.append(f"array_compact(array({_case([(f'size({col}) > {n}', viol([], reprs, msg))])}))")
         elif isinstance(add, dict):
             x, i = _lambda_var("x", taken), _lambda_var("i", taken)
             pred, msg = compile_check(x, elem_dt, add["kind"], add.get, label, taken)
             v = viol([f"CAST({i} AS STRING)"], f"CAST({x} AS STRING)", msg)
-            arrays.append(f"array_compact(transform({col}, ({x}, {i}) -> {_when(f'{i} >= {n} AND {_failed(pred)}', v)}))")
+            tail = _case([(f"{i} >= {n} AND {_failed(pred)}", v)])
+            arrays.append(f"array_compact(transform({col}, ({x}, {i}) -> {tail}))")
         return arrays[0] if len(arrays) == 1 else _concat(*arrays)
 
     @staticmethod
@@ -558,7 +555,8 @@ class ValidationEngine:
         if check is not None:
             val = ".".join([f"{e}.value", *map(_sql_ident, parts)])
             pred, msg = compile_check(val, target_dt, check, getter, label, taken)
-            branches.append((f"{matched} AND {_failed(pred)}", viol([key, *map(_sql_lit, tail)], f"CAST({val} AS STRING)", msg)))
+            v = viol([key, *map(_sql_lit, tail)], f"CAST({val} AS STRING)", msg)
+            branches.append((f"{matched} AND {_failed(pred)}", v))
         return f"array_compact(transform(map_entries({col}), {e} -> {_case(branches)}))"
 
     @staticmethod
@@ -569,7 +567,7 @@ class ValidationEngine:
         a `length` rule on the map (F.size counts entries)."""
         k = _lambda_var("k", taken)
         pred, msg = compile_check(k, T.StringType(), rule.params["check"], rule.get, rule.params["column"], taken)
-        return f"array_compact(transform(map_keys({col}), {k} -> {_when(_failed(pred), viol([k], k, msg))}))"
+        return f"array_compact(transform(map_keys({col}), {k} -> {_case([(_failed(pred), viol([k], k, msg))])}))"
 
     def _compiled(self, df: DataFrame) -> tuple[list[CompiledRule], list[CompiledRule]]:
         """Every compiled row rule, split into (all-SQL rules, rules with a
@@ -616,7 +614,8 @@ class ValidationEngine:
         def fields(cr: CompiledRule) -> tuple:
             return _sql_lit(cr.rule_id), self._path(df.columns, cr.column), cr.failing_value, cr.message
 
-        arrays = [f"array_compact(array({', '.join(_when(_failed(cr.predicate), _violation(*fields(cr), tag)) for cr in text)}))"] if text else []
+        elems = [_case([(_failed(cr.predicate), _violation(*fields(cr), tag))]) for cr in text]
+        arrays = [f"array_compact(array({', '.join(elems)}))"] if elems else []
         arrays += self._entry_violation_arrays(df, tag)
         out = [F.expr(arrays[0] if len(arrays) == 1 else _concat(*arrays))] if arrays else []
         if cols:
@@ -918,10 +917,10 @@ class ValidationEngine:
         key_str = _key_string(rule.params["columns"])
 
         def viol(cond: str, path: str, failing: str, message: str) -> str:
-            return _when(cond, _struct([
+            return _case([(cond, _struct([
                 ("absolute_path", f"array({path})"), ("failing_value", failing),
                 ("message", rule_message(rule, message)),
-            ]))
+            ]))])
 
         structs = [
             viol("_r IS NULL", key_cols, key_str, _concat(_Q, key_str, _sql_lit(f"' is missing from {ref_name}"))),
@@ -1213,7 +1212,7 @@ class ValidationEngine:
             return f"OVER ({by}ORDER BY {', '.join(f'{_sql_ident(o)} ASC' for o in order)}{frame})"
 
         aux: list[str] = []
-        structs: list[str] = []
+        viols: list[tuple[str, list]] = []  # (failing condition, violation fields)
         unique_cols_all: list[str] = []
         fields = self._violation_fields
         for i, rule in enumerate(rules):
@@ -1246,10 +1245,10 @@ class ValidationEngine:
                     f"count(1) {over(cols[:-1], cols[-1:], ' RANGE BETWEEN CURRENT ROW AND CURRENT ROW')} AS _cnt_{i}",
                 ]
                 first_of_dup_group = f"_cnt_{i} > 1 AND (_rn_{i} = 1 OR NOT {last} <=> _dup_{i})"
-                structs.append(_when(first_of_dup_group, _struct(fields(
+                viols.append((first_of_dup_group, fields(
                     _sql_lit(rule.rule_id(self.manifest.id, "+".join(cols))), "instance_name",
                     f"array({', '.join(_strings(cols))})", _key_string(cols), _unique_message(rule, cols, f"_cnt_{i}"),
-                ))))
+                )))
                 continue
             col_name = rule.params["column"]
             col = _sql_ident(col_name)
@@ -1263,7 +1262,8 @@ class ValidationEngine:
                 aux += [f"lag({col}) {w} AS _sprev_{i}", f"row_number() {w} AS _srn_{i}"]
                 prev = f"_sprev_{i}"
                 ok_trans = " OR ".join(
-                    f"({prev} <=> {_sql_lit(a)} AND {col} <=> {_sql_lit(b)})" for a, b in rule.params["allowed_transitions"]
+                    f"({prev} <=> {_sql_lit(a)} AND {col} <=> {_sql_lit(b)})"
+                    for a, b in rule.params["allowed_transitions"]
                 )
                 start = rule.get("allowed_start")
                 ok_start = " OR ".join(f"{col} <=> {_sql_lit(v)}" for v in start) if start is not None else "true"
@@ -1275,8 +1275,7 @@ class ValidationEngine:
                 )
                 bad = _case([(is_first, f"NOT ({ok_start})")], f"NOT ({ok_trans})")
                 path = f"array({', '.join(_strings([*part, *rule.params['order_by']]))}, {_sql_lit(col_name)})"
-                structs.append(_when(bad, _struct(fields(sid, "instance_name", path, f"CAST({col} AS STRING)",
-                                                         rule_message(rule, msg)))))
+                viols.append((bad, fields(sid, "instance_name", path, f"CAST({col} AS STRING)", rule_message(rule, msg))))
                 continue
             if rule.kind == "ordering":
                 ref = f"_prev_{i}"
@@ -1296,14 +1295,15 @@ class ValidationEngine:
                     _sql_lit(f"'{col_name}' value "), f"CAST({col} AS STRING)", "' breaks contiguity (expected '",
                     f"CAST({ref} AS STRING)", "')'",
                 )
-            structs.append(_when(f"coalesce({bad}, false)", _struct(fields(
+            viols.append((f"coalesce({bad}, false)", fields(
                 sid, "instance_name", self._path(df.columns, col_name), f"CAST({col} AS STRING)", rule_message(rule, msg),
-            ))))
+            )))
+        orders = [o for r in rules if r.kind in ("ordering", "sequence") for o in r.params["order_by"] if o in df.columns]
         needed = list(dict.fromkeys([*part, *[r.params["column"] for r in rules if r.kind != "unique"], *unique_cols_all,
-                                     *[k for k in self.key_columns if k in df.columns],
-                                     *[o for r in rules if r.kind in ("ordering", "sequence") for o in r.params["order_by"] if o in df.columns]]))
+                                     *[k for k in self.key_columns if k in df.columns], *orders]))
         base = df.selectExpr(*map(_sql_ident, needed), f"{self._instance_sql(df)} AS instance_name", *aux)
-        return base.selectExpr(f"inline(array_compact(array({', '.join(structs)})))")
+        structs = ", ".join(_case([(cond, _struct(f))]) for cond, f in viols)
+        return base.selectExpr(f"inline(array_compact(array({structs})))")
 
     def _salted_group(self, df: DataFrame, rule: Rule, group: list[str], specs: list) -> DataFrame:
         """Two-phase salted aggregation for hot-key skew (north_rule):
@@ -1546,7 +1546,9 @@ def _row_violation_rows(engines: list[ValidationEngine], df: DataFrame) -> DataF
         # outer only adds the null rows the filter removes.
         .selectExpr("explode_outer(_v) AS v")
         .filter("v IS NOT NULL")
-        .selectExpr(*["'FAIL' AS result" if c == "result" else f"v.{c} AS {c}" for c in VIOLATION_COLUMNS], "v._mid AS _mid")
+        .selectExpr(
+            *["'FAIL' AS result" if c == "result" else f"v.{c} AS {c}" for c in VIOLATION_COLUMNS], "v._mid AS _mid"
+        )
     )
 
 
@@ -1577,8 +1579,9 @@ def _verdicts(engines: list[ValidationEngine], df: DataFrame, violations: DataFr
             f"{mids if len(group) == 1 else f'explode(array({mids}))'} AS _mid",
             f"{inst} AS instance_name", f"{_sql_lit(grain)} AS grain", "CAST(NULL AS INT) AS _marker",
         )
+        marked = [universe, *[e._verdicts_impl(df, violations) for e in group.values()]]
         out.append(
-            reduce(lambda a, b: a.unionByName(b), [universe, *[e._verdicts_impl(df, violations) for e in group.values()]])
+            reduce(lambda a, b: a.unionByName(b), marked)
             .groupBy("_mid", "instance_name", "grain")
             .agg(F.expr("count(_marker) AS n_violations"))
             .selectExpr(

@@ -41,7 +41,7 @@ pass, every violation row and the verdicts are SQL text (``F.expr``,
 ``selectExpr``) whose literals and identifiers go through
 ``compiler._sql_lit`` and ``compiler._sql_ident``: a pyspark call costs ~16
 py4j commands whatever its size, so one validate of the 15-rule transcripts
-manifest sends 134 of them instead of 5,043 (``tests/test_round_trips.py``).
+manifest sends 135 of them instead of 5,043 (``tests/test_round_trips.py``).
 """
 
 from __future__ import annotations
@@ -130,9 +130,8 @@ class _PlanMemo:
     Building a plan costs driver↔JVM round trips and Catalyst analysis,
     and depends only on its inputs' identities, so a repeat call over the
     same objects (bench trials, a report's several consumers) reuses the
-    built DataFrame or Column. Plans
-    only: the memoized value is lazy, every action still computes from the
-    input, and nothing is cached.
+    built DataFrame or Column. Plans only: the memoized value is lazy,
+    every action still computes from the input, and nothing is cached.
 
     A hit needs the same *tag* and every pinned object ``is``-identical; the
     entry holds its pins, so no id() is reused while it lives. At most

@@ -124,7 +124,7 @@ def format_sql(c: str, fmt: str) -> str:
     inputs are true (jsonschema format checks only apply to present string
     values; nullability is a separate `required` rule). The ``regex``
     format has no SQL form: 'is a valid regex' is a compiler check
-    (/root/reference/tests/conftest.py:19 uses re.compile), so it is the ONE
+    (the reference's test conftest uses re.compile), so it is the ONE
     format that drops to Python — :func:`_regex_valid_udf`, Arrow-batched
     with per-batch memoization, exact on pathological cases ('a{2,1}', lone
     '[') — and the row-rule compiler applies it as a Column."""

@@ -7,16 +7,33 @@ test counts the commands one ``validate`` of ``transcripts_base.yml`` sends
 on a fresh input frame (no plan memo applies), so the saved round trips
 cannot silently come back. Memory releases (first line ``m``) are left out:
 they follow the Python garbage collector. Every other command repeats
-exactly from build to build."""
+exactly from build to build.
+
+A second guard counts the commands of a whole resumed ``cli.main`` run:
+lineage read, pending set, validation, sinks, stats and lineage append."""
 
 from __future__ import annotations
 
-from py4j import clientserver
+import contextlib
+import io
+import os
+import shutil
 
+from py4j import clientserver
+from pyspark.sql import functions as F
+
+from schema_enforcer_spark.cli import main
 from schema_enforcer_spark.engine import ValidationEngine
+from schema_enforcer_spark.synth import gen_transcripts
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+MANIFEST = os.path.join(REPO, "manifests", "transcripts_base.yml")
 
 # measured: 135 on every build (the Column-built plan sent 5,043)
 PLAN_ROUND_TRIPS = 135
+# a resumed cli.main run with --output and --stats-columns (887 while the
+# checkpoint and merged-stats plans were Column chains)
+RESUME_ROUND_TRIPS = 520
 
 
 def _commands(monkeypatch, build):
@@ -43,3 +60,26 @@ def test_validate_plan_round_trips(spark, transcripts, base_manifest, monkeypatc
         counts.append(n)
     assert counts[0] == counts[1], f"round trips differ between two identical builds: {counts}"
     assert counts[0] <= PLAN_ROUND_TRIPS, f"one validate sent {counts[0]} py4j commands (guard {PLAN_ROUND_TRIPS})"
+
+
+def test_resume_round_trips(spark, tmp_path, monkeypatch):
+    """Day 1 (partitions 0-3) seeds a checkpoint; the day-2 resume runs
+    twice, each from its own copy of that checkpoint, and sends the same
+    number of commands both times."""
+    full = gen_transcripts(spark, n_convs=40, seed=7).withColumn("partition_id", F.pmod(F.hash("conv_id"), F.lit(8)))
+    day1, day2, seed = str(tmp_path / "day1"), str(tmp_path / "day2"), str(tmp_path / "seed")
+    full.filter(F.col("partition_id") < 4).write.parquet(day1)
+    full.write.parquet(day2)
+    args = ["--manifest", MANIFEST, "--stats-columns", "conv_id,role"]
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert main([*args, "--checkpoint", seed, "--input", day1]) == 0
+        counts = []
+        for i in range(2):
+            ckpt = str(tmp_path / f"ckpt{i}")
+            shutil.copytree(seed, ckpt)
+            argv = [*args, "--checkpoint", ckpt, "--input", day2, "--output", str(tmp_path / f"out{i}")]
+            n, rc = _commands(monkeypatch, lambda: main(argv))
+            assert rc == 0
+            counts.append(n)
+    assert counts[0] == counts[1], f"round trips differ between two identical resumes: {counts}"
+    assert counts[0] <= RESUME_ROUND_TRIPS, f"one resume sent {counts[0]} py4j commands (guard {RESUME_ROUND_TRIPS})"

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from schema_enforcer_spark.compiler import _sql_lit
 from schema_enforcer_spark.engine import ValidationEngine, ValidationReport
 
 LINEAGE_SCHEMA_DDL = (
@@ -39,8 +40,8 @@ LINEAGE_SCHEMA_DDL = (
 def _instance_counts(df: DataFrame, engine: ValidationEngine) -> dict:
     """Row count of *df* per engine instance (NULL included): one groupBy
     collect, partition-count-sized."""
-    inst = engine._instance_col(df).alias("_inst")
-    return {r[0]: r[1] for r in df.groupBy(inst).agg(F.count(F.lit(1))).collect()}
+    inst = F.expr(f"{engine._instance_sql(df)} AS _inst")
+    return {r[0]: r[1] for r in df.groupBy(inst).agg(F.expr("count(1)")).collect()}
 
 
 def _table_failed(latest: dict) -> bool:
@@ -80,7 +81,7 @@ class CheckpointManager:
                 return self.spark.createDataFrame([], LINEAGE_SCHEMA_DDL)
             raise
         # a file written before run_ns existed reads it as NULL
-        return df.withColumn("run_ns", F.coalesce(F.col("run_ns"), F.lit(0).cast("bigint")))
+        return df.withColumn("run_ns", F.expr("coalesce(run_ns, CAST(0 AS BIGINT))"))
 
     def latest_verdicts(self, rule_set_hash: str) -> dict:
         """partition_id → (verdict, n_rows) of the NEWEST lineage row under
@@ -89,13 +90,11 @@ class CheckpointManager:
         after a data change) maps to FAIL."""
         rows = (
             self.lineage()
-            .filter(F.col("rule_set_hash") == rule_set_hash)
+            .filter(f"rule_set_hash = {_sql_lit(rule_set_hash)}")
             .groupBy("partition_id")
-            .agg(
-                # run_ns breaks ties between two record() calls landing in
-                # the same validated_at microsecond
-                F.max_by(F.struct("verdict", "n_rows"), F.struct("validated_at", "run_ns")).alias("_latest")
-            )
+            # run_ns breaks ties between two record() calls landing in the
+            # same validated_at microsecond
+            .agg(F.expr("max_by(struct(verdict, n_rows), struct(validated_at, run_ns)) AS _latest"))
             .collect()
         )
         return {r["partition_id"]: (r["_latest"]["verdict"], r["_latest"]["n_rows"]) for r in rows}
@@ -129,8 +128,8 @@ class CheckpointManager:
             done = {p for p in done if current.get(p) == latest[p][1]}
         if not done:
             return df
-        inst = engine._instance_col(df)
-        return df.filter(inst.isNull() | ~inst.isin(sorted(done)))
+        inst = engine._instance_sql(df)
+        return df.filter(f"{inst} IS NULL OR NOT {inst} IN ({', '.join(map(_sql_lit, sorted(done)))})")
 
     def record(
         self,

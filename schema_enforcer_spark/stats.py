@@ -132,26 +132,23 @@ def merged_column_stats(spark, store_path: str) -> DataFrame:
     LATEST row per (partition_id, col_name) before merging: hll_union_agg
     for distincts, sums for null/row counts, min/max over the per-partition
     extremes (double form preferred, string form as display fallback)."""
-    from pyspark.sql.window import Window
-
-    st_df = spark.read.schema(STATS_SCHEMA_DDL).parquet(store_path)
-    w = Window.partitionBy("partition_id", "col_name").orderBy(F.col("run_ns").desc())
-    latest = st_df.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") == 1).drop("_rk")
-    return (
-        latest.groupBy("col_name")
-        .agg(
-            F.coalesce(
-                F.hll_sketch_estimate(F.hll_union_agg(F.col("hll"))), F.lit(0)
-            ).alias("approx_distinct"),
-            F.sum("n_nulls").alias("n_nulls"),
-            F.sum("n_rows").alias("n_rows"),
-            F.count(F.lit(1)).alias("n_partitions"),
-            F.min("min_n").alias("min_numeric"),
-            F.max("max_n").alias("max_numeric"),
-            F.min("min_s").alias("min_display"),
-            F.max("max_s").alias("max_display"),
+    latest = (
+        spark.read.schema(STATS_SCHEMA_DDL)
+        .parquet(store_path)
+        .selectExpr("*", "row_number() OVER (PARTITION BY partition_id, col_name ORDER BY run_ns DESC) AS _rk")
+        .filter("_rk = 1")
+    )
+    # one aggregate struct, expanded by name: SQL text, as eight Column
+    # aggregates cost about 16 py4j commands per pyspark call
+    merged = latest.groupBy("col_name").agg(
+        F.expr(
+            "named_struct('approx_distinct', coalesce(hll_sketch_estimate(hll_union_agg(hll)), 0), "
+            "'n_nulls', sum(n_nulls), 'n_rows', sum(n_rows), 'n_partitions', count(1), "
+            "'min_numeric', min(min_n), 'max_numeric', max(max_n), "
+            "'min_display', min(min_s), 'max_display', max(max_s)) AS s"
         )
     )
+    return merged.selectExpr("col_name", "s.*")
 
 
 def hll_accuracy_report(df: DataFrame, columns: list[str], rel_tol: float = 0.02) -> DataFrame:

@@ -31,9 +31,9 @@ MANIFEST = os.path.join(REPO, "manifests", "transcripts_base.yml")
 
 # measured: 135 on every build (the Column-built plan sent 5,043)
 PLAN_ROUND_TRIPS = 135
-# a resumed cli.main run with --output and --stats-columns (887 while the
-# checkpoint and merged-stats plans were Column chains)
-RESUME_ROUND_TRIPS = 520
+# measured: 465 on every resume below (887 while the checkpoint and
+# merged-stats plans were Column chains)
+RESUME_ROUND_TRIPS = 465
 
 
 def _commands(monkeypatch, build):

@@ -3,23 +3,30 @@
 Packaging (north_rule: ``spark-submit --py-files`` on a multi-executor
 cluster)::
 
-    cd /root/repo && zip -qr /tmp/sev.zip schema_enforcer_spark
-    spark-submit --py-files /tmp/sev.zip schema_enforcer_spark/cli.py \
+    zip -qr sev.zip schema_enforcer_spark
+    spark-submit --py-files sev.zip schema_enforcer_spark/cli.py \
         --manifest manifests/transcripts_base.yml \
         --input /data/transcripts \
         --output /data/validation_results \
         --checkpoint /data/validation_lineage \
         --ref-table conversations=/data/conversations
 
-Behavior mirrors the reference CLI (/root/reference/schema_enforcer/cli.py:49-107):
-validate everything the manifest binds, print FAIL lines + a green summary,
-exit 1 iff any violation exists. Adds: resumable checkpoint skip and
-violations/verdicts written to parquet sinks.
+Behavior mirrors the reference CLI's ``validate`` command (cli.py:49-107):
+load → validate → print → exit — validate everything the manifest binds,
+print FAIL lines + a green summary, exit 1 iff any violation exists. Adds:
+resumable checkpoint skip and violations/verdicts written to parquet sinks.
+
+``main`` checks the arguments against one flag table (:data:`FLAG_TABLE`,
+exit 2 before any Spark session starts), picks a mode function
+(:func:`mode_of`) and returns what the mode returns. The validate mode is a sequence of
+phases: load manifests → read input → pending (resume) → validate → sinks
+→ stats → record → print and exit.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 
@@ -223,7 +230,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "--dump-manifest",
         action="store_true",
         help="print the include-resolved manifest(s) as JSON and exit; with "
-        "--input, also print each compiled rule id + Catalyst expression "
+        "--input, also print each compiled rule id + its SQL predicate "
         "— the `schema --dump` analogue (reference cli.py:120, "
         "manager.py dump_schema)",
     )
@@ -244,12 +251,24 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
+class _Exit(Exception):
+    """Ends a mode early with an exit code (see :func:`_fail`)."""
+
+    def __init__(self, code: int):
+        super().__init__(code)
+        self.code = code
+
+
+def _fail(code: int, message: str):
+    print(f"ERROR | {message}", file=sys.stderr)
+    raise _Exit(code)
+
+
 def _manifest_paths(path: str) -> list[str]:
     """All manifest files under a directory (sorted), or the single resolved
     file — the SchemaManager search-path analogue (reference
     schemas/manager.py:36-60 loads every schema under a directory tree)."""
     import glob
-    import os
 
     from schema_enforcer_spark.manifest import find_manifest_file
 
@@ -260,6 +279,26 @@ def _manifest_paths(path: str) -> list[str]:
             for p in glob.glob(os.path.join(path, "**", f"*.{ext}"), recursive=True)
         )
     return [find_manifest_file(path)]
+
+
+def _load_manifests(path: str) -> list:
+    """(file, manifest) for the manifest at *path*, or for every manifest
+    under a directory. An invalid one prints its errors and exits 1 before
+    any Spark job, like the reference's InvalidJSONSchema exit
+    (cli.py:66-68)."""
+    from schema_enforcer_spark.manifest import InvalidManifest, load_manifest
+
+    loaded = []
+    for p in _manifest_paths(path):
+        try:
+            loaded.append((p, load_manifest(p)))
+        except InvalidManifest as e:
+            for err in e.errors:
+                print(f"ERROR | invalid manifest | {p}: {err}", file=sys.stderr)
+            raise _Exit(1) from None
+    if not loaded:
+        _fail(1, f"no manifests under {path}")
+    return loaded
 
 
 def _session(args, name: str):
@@ -273,12 +312,30 @@ def _session(args, name: str):
     return builder.getOrCreate()
 
 
+def _read_input(spark, args):
+    """The input table: the --inventory hosts' merged vars (one row per
+    host, keyed by ``host``), else the --input parquet."""
+    if args.inventory:
+        from schema_enforcer_spark.sources.defaults import load_inventory
+
+        return load_inventory(spark, args.inventory, key="host")
+    return spark.read.parquet(args.input)
+
+
+def _engine_kw(args) -> dict:
+    """ValidationEngine keyword args. With --inventory the hosts are the
+    instances: HOST grain, host-keyed paths (the reference ansible command
+    prints [HOST] lines, cli.py:227-265)."""
+    if args.inventory:
+        return dict(key_columns=["host"], instance_expr=args.instance_expr or "host", instance_type="HOST")
+    return dict(key_columns=[c for c in args.key_columns.split(",") if c], instance_expr=args.instance_expr)
+
+
 def _print_report(report, args, verdicts: list) -> None:
     """Print a report's FAIL lines, and its PASS lines with --show-pass, in
     the format of the reference's ValidationResult.print
-    (/root/reference/schema_enforcer/validation.py:53-91), at most
-    --show-failures of each. *verdicts* are the report's collected verdict
-    rows."""
+    (validation.py:53-91), at most --show-failures of each. *verdicts* are
+    the report's collected verdict rows."""
     failures = report.violations.orderBy("message").limit(args.show_failures).collect()
     for v in failures:
         # a NULL key column yields a NULL path element (cast preserves it);
@@ -305,28 +362,32 @@ def _print_report(report, args, verdicts: list) -> None:
             print(f"PASS | [{p['grain']}] {p['instance_name']} [SCHEMA ID] {p['schema_id']}")
 
 
+def _print_merged_stats(spark, checkpoint: str) -> None:
+    """The table-level stats merged from every run's sketches in the
+    checkpoint's stats store: zero data rescans."""
+    from schema_enforcer_spark.stats import merged_column_stats, stats_store_path
+
+    # one row per stats column: sorted on the driver, as a Spark sort would
+    # cost its own jobs
+    merged = merged_column_stats(spark, stats_store_path(checkpoint)).collect()
+    print(f"{'Column':<24} {'~distinct':>10} {'nulls':>10} {'rows':>12} {'parts':>6}  min..max")
+    print("-" * 92)
+    for r in sorted(merged, key=lambda r: r["col_name"]):
+        lo = r["min_numeric"] if r["min_numeric"] is not None else r["min_display"]
+        hi = r["max_numeric"] if r["max_numeric"] is not None else r["max_display"]
+        print(
+            f"{r['col_name']:<24} {r['approx_distinct']:>10} {r['n_nulls']:>10} "
+            f"{r['n_rows']:>12} {r['n_partitions']:>6}  {lo}..{hi}"
+        )
+
+
 def _schema_tools(args) -> int:
     """--list-manifests / --dump-manifest: pure driver-side manifest
     inspection (no Spark session unless --dump-manifest needs an --input
     schema to compile expressions against)."""
     import json
-    import os
 
-    from schema_enforcer_spark.manifest import InvalidManifest, load_manifest
-
-    paths = _manifest_paths(args.manifest)
-    loaded = []
-    for p in paths:
-        try:
-            loaded.append((p, load_manifest(p)))
-        except InvalidManifest as e:
-            for err in e.errors:
-                print(f"ERROR | invalid manifest | {p}: {err}", file=sys.stderr)
-            return 1
-    if not loaded:
-        print("ERROR | no manifests found", file=sys.stderr)
-        return 1
-
+    loaded = _load_manifests(args.manifest)
     if args.list_manifests:
         # reference print_schemas_list shape: ID / Type / Location / Filename,
         # with the cwd shortened to "." (manager.py:88-107)
@@ -356,12 +417,11 @@ def _schema_tools(args) -> int:
             )
         )
     if args.input:
-        # debugging aid: the Catalyst expression each row rule compiled to
-        # against the actual input schema (table rules print their kind/grain)
+        # debugging aid: the SQL predicate each row rule compiled to against
+        # the actual input schema (table rules print their kind/grain)
         from schema_enforcer_spark.compiler import compile_row_rules
 
-        spark = _session(args, "dump")
-        df = spark.read.parquet(args.input)
+        df = _read_input(_session(args, "dump"), args)
         print("\nCompiled rules:")
         for _, m in loaded:
             for cr in compile_row_rules(df, m):
@@ -379,28 +439,14 @@ def _automap_main(args) -> int:
     exit 1 on any failure."""
     from schema_enforcer_spark.binding import ManifestRegistry
     from schema_enforcer_spark.engine import ValidationEngine
-    from schema_enforcer_spark.manifest import InvalidManifest, load_manifest
-    from schema_enforcer_spark.sources.defaults import load_inventory
 
-    if not args.inventory:
-        print("ERROR | --automap requires --inventory", file=sys.stderr)
-        return 2
-    reg = ManifestRegistry()
-    try:
-        for p in _manifest_paths(args.manifest):
-            reg.add(load_manifest(p))
-    except InvalidManifest as e:
-        for err in e.errors:
-            print(f"ERROR | invalid manifest | {err}", file=sys.stderr)
-        return 1
-    spark = _session(args, "automap")
-    df = load_inventory(spark, args.inventory, key="host")
+    reg = ManifestRegistry([m for _, m in _load_manifests(args.manifest)])
+    df = _read_input(_session(args, "automap"), args)
     if args.limit:
         df = df.filter(df["host"] == args.limit)
     bound = reg.automap_hosts(df, key="host")
     if not bound:
-        print("ERROR | no manifest binds to any host's vars", file=sys.stderr)
-        return 1
+        _fail(1, "no manifest binds to any host's vars")
     any_fail = False
     for m, sub in bound:
         eng = ValidationEngine(m, key_columns=["host"], instance_expr="host", instance_type="HOST")
@@ -418,11 +464,7 @@ def _automap_main(args) -> int:
 def _infer_main(args) -> int:
     from schema_enforcer_spark.infer import write_inferred_manifest
 
-    if not args.input:
-        print("ERROR | --infer-manifest requires --input", file=sys.stderr)
-        return 2
-    spark = _session(args, "infer")
-    df = spark.read.parquet(args.input)
+    df = _read_input(_session(args, "infer"), args)
     draft = write_inferred_manifest(
         df, args.infer_id, args.infer_manifest,
         enum_max=args.infer_enum_max, fds=args.infer_fds,
@@ -458,11 +500,7 @@ def _diff_main(args) -> int:
 def _profile_main(args) -> int:
     from schema_enforcer_spark.infer import profile_for_inference
 
-    if not args.input:
-        print("ERROR | --profile requires --input", file=sys.stderr)
-        return 2
-    spark = _session(args, "profile")
-    df = spark.read.parquet(args.input)
+    df = _read_input(_session(args, "profile"), args)
     prof = profile_for_inference(df, enum_max=args.infer_enum_max)
     print(f"{'Column':<24} {'type':<10} {'rows':>10} {'nulls':>8} {'~distinct':>10}  detail")
     print("-" * 92)
@@ -496,293 +534,235 @@ def _profile_main(args) -> int:
     return 0
 
 
-def main(argv: list[str] | None = None) -> int:
-    args = parse_args(argv)
-    if args.diff_manifests:
-        return _diff_main(args)
-    if args.profile:
-        return _profile_main(args)
-    if args.infer_manifest:
-        return _infer_main(args)
-    if not args.manifest:
-        print("ERROR | --manifest is required", file=sys.stderr)
-        return 2
-    if args.list_manifests or args.dump_manifest:
-        return _schema_tools(args)
-    if args.automap:
-        return _automap_main(args)
-    from pyspark.sql.functions import col as F_col
-    from pyspark.sql.functions import count as F_count
-    from pyspark.sql.functions import coalesce as F_coalesce
-    from pyspark.sql.functions import lit as F_lit
+# -- the modes that read data: load manifests → session → read input -------
 
-    from schema_enforcer_spark.checkpoint import CheckpointManager
-    from schema_enforcer_spark.engine import ValidationEngine, validate_many
-    from schema_enforcer_spark.manifest import InvalidManifest, load_manifest
 
-    import os as _os
+def _data_manifests(args) -> list:
+    """The manifests of a data mode (the --manifest file, or every manifest
+    under a --manifest DIR), made strict under --strict."""
+    manifests = [m for _, m in _load_manifests(args.manifest)]
+    return _strict(args, manifests) if args.strict else manifests
 
-    # --manifest DIR = the reference's `validate` semantics: EVERY schema
-    # runs against every data unit it automaps to (cli.py:75-96 iterates
-    # all instances × their matching schemas). Incremental checkpointing,
-    # baselines, and the golden-corpus tools are single-manifest concerns.
-    multi = _os.path.isdir(args.manifest)
-    if multi and (
-        args.checkpoint or args.write_baseline or args.baseline or args.selftest or args.generate_invalid
-    ):
-        print(
-            "ERROR | --manifest DIR (multi-manifest automap) cannot be combined "
-            "with --checkpoint/--write-baseline/--baseline/--selftest/"
-            "--generate-invalid — run those per manifest",
-            file=sys.stderr,
-        )
-        return 2
-    try:
-        if multi:
-            manifests = [load_manifest(p) for p in _manifest_paths(args.manifest)]
-            if not manifests:
-                print(f"ERROR | no manifests under {args.manifest}", file=sys.stderr)
-                return 1
-        else:
-            manifests = [load_manifest(args.manifest)]
-    except InvalidManifest as e:
-        # fail before any Spark job, like the reference's InvalidJSONSchema
-        # exit (/root/reference/schema_enforcer/cli.py:66-68)
-        for err in e.errors:
-            print(f"ERROR | invalid manifest | {err}", file=sys.stderr)
-        return 1
 
-    if args.strict:
-        # the reference's --strict rewrites every schema with
-        # additionalProperties: false (validation.py via cli.py:34-41); here
-        # the declared column set plays that role, so strict without one
-        # would silently check nothing — fail loudly (single manifest) or
-        # warn-and-skip (dir mode, where sibling manifests may still apply)
-        import dataclasses
+def _strict(args, manifests: list) -> list:
+    """The reference's --strict rewrites every schema with
+    additionalProperties: false (validation.py via cli.py:34-41); here the
+    declared column set plays that role, so strict without one would
+    silently check nothing — fail loudly (single manifest) or warn and skip
+    (dir mode, where sibling manifests may still apply)."""
+    import dataclasses
 
-        no_columns = [m.id for m in manifests if not m.strict and not m.columns]
-        if no_columns and not multi:
-            print(
-                "ERROR | --strict needs the manifest to declare 'columns' "
-                "(the additionalProperties universe)",
-                file=sys.stderr,
-            )
-            return 1
-        if len(no_columns) == len(manifests) and all(not m.strict for m in manifests):
-            print(
-                "ERROR | --strict: no manifest declares 'columns' "
-                "(the additionalProperties universe)",
-                file=sys.stderr,
-            )
-            return 1
-        for mid in no_columns:
-            print(f"WARN | --strict skipped for {mid} (no 'columns' declared)", file=sys.stderr)
-        strictened = []
-        for m in manifests:
-            if m.strict or not m.columns:
-                strictened.append(m)
-                continue
-            # with --inventory the loader injects the 'host' key column —
-            # it's part of the engine's plumbing, not an undeclared user var
-            cols = (*m.columns, "host") if args.inventory and "host" not in m.columns else m.columns
-            strictened.append(dataclasses.replace(m, strict=True, columns=cols))
-        manifests = strictened
-    manifest = manifests[0]
+    no_columns = [m.id for m in manifests if not m.strict and not m.columns]
+    if no_columns and not os.path.isdir(args.manifest):
+        _fail(1, "--strict needs the manifest to declare 'columns' (the additionalProperties universe)")
+    if len(no_columns) == len(manifests) and all(not m.strict for m in manifests):
+        _fail(1, "--strict: no manifest declares 'columns' (the additionalProperties universe)")
+    for mid in no_columns:
+        print(f"WARN | --strict skipped for {mid} (no 'columns' declared)", file=sys.stderr)
 
-    spark = _session(args, manifest.id)
+    def strict(m):
+        if m.strict or not m.columns:
+            return m
+        # with --inventory the loader injects the 'host' key column — it's
+        # part of the engine's plumbing, not an undeclared user var
+        cols = (*m.columns, "host") if args.inventory and "host" not in m.columns else m.columns
+        return dataclasses.replace(m, strict=True, columns=cols)
 
-    eng_kw = dict(
-        key_columns=[c for c in args.key_columns.split(",") if c],
-        instance_expr=args.instance_expr,
-    )
-    if args.selftest or args.generate_invalid:
-        from schema_enforcer_spark.engine import ValidationEngine as _VE
-        from schema_enforcer_spark.selftest import generate_invalid, test_manifest
+    return [strict(m) for m in manifests]
 
-        eng = _VE(manifest, **eng_kw)
-        if args.generate_invalid:
-            written = generate_invalid(spark, eng, args.generate_invalid)
-            print(f"wrote {len(written)} golden file(s)")
-            return 0
-        res = test_manifest(spark, eng, args.selftest)
-        for case in res.passed:
-            print(f"PASS | {case} [{manifest.id}]")
-        for case, reason in res.failed:
-            print(f"FAIL | {case} [{manifest.id}] {reason}")
-        return 0 if res.ok else 1
 
+def _open_data(args) -> tuple:
+    """(manifests, session, input) of a data mode. An --inventory input
+    prints its host count, and a --limit that matches no host exits 2 (the
+    reference ansible --limit errors on an unmatched host pattern) — it must
+    not green-light a host that was never checked."""
+    manifests = _data_manifests(args)
+    spark = _session(args, manifests[0].id)
+    df = _read_input(spark, args)
     if args.inventory:
-        from schema_enforcer_spark.sources.defaults import load_inventory
-
-        df = load_inventory(spark, args.inventory, key="host")
-        n_hosts = df.count()
-        print(f"Found {n_hosts} hosts in the inventory")
+        print(f"Found {df.count()} hosts in the inventory")
         if args.limit:
             df = df.filter(df["host"] == args.limit)
             if df.count() == 0:
-                # a typo'd --limit must not green-light a host that was
-                # never checked (the reference ansible --limit errors on an
-                # unmatched host pattern)
-                print(f"ERROR | --limit {args.limit!r} matches no host in the inventory",
-                      file=sys.stderr)
-                return 2
-        # hosts are the instances: HOST grain, host-keyed paths (reference
-        # ansible command prints [HOST] lines, cli.py:227-265)
-        if not eng_kw.get("instance_expr"):
-            eng_kw["instance_expr"] = "host"
-        eng_kw["key_columns"] = ["host"]
-        eng_kw["instance_type"] = "HOST"
-    elif not args.input:
-        print("ERROR | --input is required", file=sys.stderr)
-        return 2
-    else:
-        df = spark.read.parquet(args.input)
-    if args.show_checks:
-        from schema_enforcer_spark.binding import ManifestRegistry
+                _fail(2, f"--limit {args.limit!r} matches no host in the inventory")
+    return manifests, spark, df
 
-        reg = ManifestRegistry(manifests)
-        bound = reg.automap(df.columns)
-        print(f"{'Instance':<40} Schema ID")
-        print("-" * 80)
-        print(f"{args.inventory or args.input:<40} {[m.id for m in bound]}")
+
+def _selftest_main(args) -> int:
+    """--selftest / --generate-invalid: the manifest's golden corpus, the
+    `schema --check` / `--generate-invalid` analogues (manager.py:128-287)."""
+    from schema_enforcer_spark.engine import ValidationEngine
+    from schema_enforcer_spark.selftest import generate_invalid, test_manifest
+
+    manifest = _data_manifests(args)[0]
+    spark = _session(args, manifest.id)
+    eng = ValidationEngine(manifest, **_engine_kw(args))
+    if args.generate_invalid:
+        written = generate_invalid(spark, eng, args.generate_invalid)
+        print(f"wrote {len(written)} golden file(s)")
         return 0
+    res = test_manifest(spark, eng, args.selftest)
+    for case in res.passed:
+        print(f"PASS | {case} [{manifest.id}]")
+    for case, reason in res.failed:
+        print(f"FAIL | {case} [{manifest.id}] {reason}")
+    return 0 if res.ok else 1
+
+
+def _show_checks_main(args) -> int:
+    """--show-checks: which manifests bind to the input's columns (the
+    reference's --show-checks, cli.py:86-88)."""
+    from schema_enforcer_spark.binding import ManifestRegistry
+
+    manifests, _, df = _open_data(args)
+    bound = ManifestRegistry(manifests).automap(df.columns)
+    print(f"{'Instance':<40} Schema ID")
+    print("-" * 80)
+    print(f"{args.inventory or args.input:<40} {[m.id for m in bound]}")
+    return 0
+
+
+def _write_baseline_main(args) -> int:
+    from schema_enforcer_spark.stats import baseline_store_path, write_drift_baselines
+
+    manifests, spark, df = _open_data(args)
+    store = baseline_store_path(args.checkpoint)
+    written = write_drift_baselines(spark, df, manifests[0], store)
+    print(f"wrote {len(written)} drift baseline(s) to {store}")
+    return 0
+
+
+# -- the validate mode's phases ----------------------------------------------
+
+
+def _validate_main(args) -> int:
+    """Validate the input against the manifest(s); exit 1 iff any
+    violation."""
+    manifests, spark, df = _open_data(args)
+    df, ref_tables = _prepare_input(spark, args, df)
+    engines = _engines(spark, args, manifests, df)
+    if args.quarantine:
+        _quarantine(spark, args, df, engines)
+    cm, report, verdicts = _validate(spark, args, df, engines, ref_tables)
+    _write_sinks(spark, args, report, verdicts)
+    if args.stats_columns:
+        _write_stats(spark, args, cm, engines[0])
+    if cm is not None:
+        # the verdict collect materialized the report, so lineage never
+        # claims unfinished work; row counts come from the PENDING subset
+        # run() already counted
+        cm.record(cm.last_pending, engines[0], report, cm.last_counts, verdicts)
+    return _print_and_exit(args, report, verdicts, engines)
+
+
+def _prepare_input(spark, args, df) -> tuple:
+    """Check the --stats-columns names against the input (before any
+    validation, so a bad name leaves no sink and no lineage), read the
+    --ref-table tables, and apply --sample-fraction. Returns (input,
+    ref tables)."""
+    if args.stats_columns:
+        columns = set(df.columns)
+        missing = [c for c in args.stats_columns.split(",") if c and c not in columns]
+        if missing:
+            _fail(2, f"--stats-columns not in the input: {missing}")
     ref_tables = {}
     for spec in args.ref_table:
         name, _, path = spec.partition("=")
         ref_tables[name] = spark.read.parquet(path)
+    if args.sample_fraction is None:
+        return df, ref_tables
+    from pyspark.sql import functions as F
 
-    if args.write_baseline or args.baseline:
-        from schema_enforcer_spark.stats import (
-            baseline_store_path,
-            load_drift_baselines,
-            write_drift_baselines,
-        )
+    from schema_enforcer_spark.functions.sampling import split_bucket
 
-        if not args.checkpoint:
-            print("ERROR | --write-baseline/--baseline require --checkpoint "
-                  "(baselines live under the checkpoint dir)", file=sys.stderr)
-            return 2
-        store = baseline_store_path(args.checkpoint)
-        if args.write_baseline:
-            written = write_drift_baselines(spark, df, manifest, store)
-            print(f"wrote {len(written)} drift baseline(s) to {store}")
-            return 0
-        eng_kw["drift_baselines"] = load_drift_baselines(spark, store)
+    # sample at the GROUP grain (first key column): row-grain sampling
+    # would puncture turn_idx sequences and misfire every ordering/
+    # contiguity/uniqueness rule on perfectly clean data
+    unit = _engine_kw(args)["key_columns"][0]
+    # coalesce NULL keys to a sentinel group: split_bucket(NULL) is NULL
+    # (md5 of NULL), and a NULL comparison filters the row out — rows
+    # violating a required rule ON the key column would otherwise be
+    # unsampleable even at fraction 1.0
+    df = df.filter(
+        split_bucket(F.coalesce(F.col(unit).cast("string"), F.lit("\x00NULL")), args.sample_seed)
+        < int(round(args.sample_fraction * 10000))
+    )
+    print(
+        f"sampled validation: fraction={args.sample_fraction} seed={args.sample_seed} "
+        f"(deterministic md5 buckets over {unit} groups)"
+    )
+    return df, ref_tables
 
-    if args.stats_columns and not args.checkpoint:
-        print("ERROR | --stats-columns requires --checkpoint (the stats "
-              "store lives under the checkpoint dir)", file=sys.stderr)
-        return 2
 
-    if args.sample_fraction is not None:
-        if not (0.0 < args.sample_fraction <= 1.0):
-            print(f"ERROR | --sample-fraction must be in (0, 1], got {args.sample_fraction}",
-                  file=sys.stderr)
-            return 2
-        if args.quarantine:
-            # --quarantine's contract is a COMPLETE row-grain split of the
-            # input; run on the sampled subset it would silently overwrite
-            # the quarantine dirs with a (1-F)-incomplete copy
-            print("ERROR | --quarantine cannot be combined with "
-                  "--sample-fraction (the quarantine split must cover every "
-                  "input row, not an audit sample)", file=sys.stderr)
-            return 2
-        if args.checkpoint:
-            # lineage from a sample would mark partitions PASS that were
-            # only fractionally checked — permanently skipping real rows
-            print("ERROR | --sample-fraction is an audit mode and cannot be "
-                  "combined with --checkpoint", file=sys.stderr)
-            return 2
-        from schema_enforcer_spark.functions.sampling import split_bucket
+def _engines(spark, args, manifests: list, df) -> list:
+    """One ValidationEngine per manifest to validate: the --manifest file,
+    or each manifest under a --manifest DIR that shares a column with the
+    input. --baseline loads the stored drift baselines into each."""
+    from schema_enforcer_spark.binding import ManifestRegistry
+    from schema_enforcer_spark.engine import ValidationEngine
 
-        # sample at the GROUP grain (first key column): row-grain sampling
-        # would puncture turn_idx sequences and misfire every ordering/
-        # contiguity/uniqueness rule on perfectly clean data
-        unit = eng_kw["key_columns"][0]
-        # coalesce NULL keys to a sentinel group: split_bucket(NULL) is NULL
-        # (md5 of NULL), and a NULL comparison filters the row out — rows
-        # violating a required rule ON the key column would otherwise be
-        # unsampleable even at fraction 1.0
-        df = df.filter(
-            split_bucket(
-                F_coalesce(F_col(unit).cast("string"), F_lit("\x00NULL")),
-                args.sample_seed,
-            )
-            < int(round(args.sample_fraction * 10000))
-        )
-        print(
-            f"sampled validation: fraction={args.sample_fraction} seed={args.sample_seed} "
-            f"(deterministic md5 buckets over {unit} groups)"
-        )
+    eng_kw = _engine_kw(args)
+    if args.baseline:
+        from schema_enforcer_spark.stats import baseline_store_path, load_drift_baselines
 
-    def _print_merged_stats() -> None:
-        from schema_enforcer_spark.stats import merged_column_stats, stats_store_path
+        eng_kw["drift_baselines"] = load_drift_baselines(spark, baseline_store_path(args.checkpoint))
+    if not os.path.isdir(args.manifest):
+        return [ValidationEngine(manifests[0], **eng_kw)]
+    bound = ManifestRegistry(manifests).automap(df.columns)
+    bound_ids = {b.id for b in bound}
+    for m in manifests:
+        if m.id not in bound_ids:
+            print(f"WARN | manifest {m.id} shares no columns with the input — skipped")
+    if not bound:
+        _fail(2, "no manifest binds to the input's columns")
+    print(f"validating against {len(bound)} manifest(s): {sorted(bound_ids)}")
+    return [ValidationEngine(m, **eng_kw) for m in bound]
 
-        # one row per stats column: sorted on the driver, as a Spark sort
-        # would cost its own jobs
-        merged = merged_column_stats(spark, stats_store_path(args.checkpoint)).collect()
-        print(f"{'Column':<24} {'~distinct':>10} {'nulls':>10} {'rows':>12} {'parts':>6}  min..max")
-        print("-" * 92)
-        for r in sorted(merged, key=lambda r: r["col_name"]):
-            lo = r["min_numeric"] if r["min_numeric"] is not None else r["min_display"]
-            hi = r["max_numeric"] if r["max_numeric"] is not None else r["max_display"]
-            print(
-                f"{r['col_name']:<24} {r['approx_distinct']:>10} {r['n_nulls']:>10} "
-                f"{r['n_rows']:>12} {r['n_partitions']:>6}  {lo}..{hi}"
-            )
 
-    if multi:
-        from schema_enforcer_spark.binding import ManifestRegistry
+def _quarantine(spark, args, df, engines: list) -> None:
+    """Row-grain quarantine: ONE scan of the full input, the validity flag
+    is a codegen expression (row_fail_count == 0), and partitionBy splits
+    the write — no shuffle, no second pass, no driver data. At 100 TB this
+    is the same cost as a copy of the table. The flag column is 'row_valid'
+    (NOT '_row_valid': Spark's file index skips underscore-prefixed paths,
+    so partition dirs named _row_valid=... would be invisible to
+    spark.read)."""
+    from pyspark.sql import functions as F
 
-        bound = ManifestRegistry(manifests).automap(df.columns)
-        bound_ids = {b.id for b in bound}
-        for m in manifests:
-            if m.id not in bound_ids:
-                print(f"WARN | manifest {m.id} shares no columns with the input — skipped")
-        if not bound:
-            print("ERROR | no manifest binds to the input's columns", file=sys.stderr)
-            return 2
-        engines = [ValidationEngine(m, **eng_kw) for m in bound]
-        print(f"validating against {len(bound)} manifest(s): {sorted(bound_ids)}")
-    else:
-        engines = [ValidationEngine(manifest, **eng_kw)]
-    eng = engines[0]
+    if "row_valid" in df.columns:
+        _fail(2, "--quarantine needs the column name 'row_valid' but the input already has one")
+    qroot = args.quarantine.rstrip("/")
+    # multi-manifest: a row is quarantined iff it fails ANY bound
+    # manifest's row rules — still one codegen expression, one pass
+    total_fails = engines[0].row_fail_count(df)
+    for e2 in engines[1:]:
+        total_fails = total_fails + e2.row_fail_count(df)
+    df.withColumn("row_valid", total_fails == F.lit(0)).write.mode("overwrite").partitionBy("row_valid").parquet(qroot)
+    # count via the written files' footers (partition column + count =
+    # metadata-only aggregate, no data columns re-read). Partition-dir
+    # values read back as STRINGS (partition type inference covers
+    # numerics/dates, not booleans) — cast, or the True/False lookups
+    # below silently print 0
+    q_counts = {
+        r["rv"]: r["n"]
+        for r in spark.read.parquet(qroot)
+        .groupBy(F.col("row_valid").cast("boolean").alias("rv"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    print(f"quarantine: {q_counts.get(True, 0)} valid row(s) -> {qroot}/row_valid=true")
+    print(f"quarantine: {q_counts.get(False, 0)} violating row(s) -> {qroot}/row_valid=false")
 
-    if args.quarantine:
-        # Row-grain quarantine: ONE scan of the full input, the validity
-        # flag is a codegen expression (row_fail_count == 0), and
-        # partitionBy splits the write — no shuffle, no second pass, no
-        # driver data. At 100 TB this is the same cost as a copy of the
-        # table. The flag column is 'row_valid' (NOT '_row_valid': Spark's
-        # file index skips underscore-prefixed paths, so partition dirs
-        # named _row_valid=... would be invisible to spark.read).
-        if "row_valid" in df.columns:
-            print("ERROR | --quarantine needs the column name 'row_valid' "
-                  "but the input already has one", file=sys.stderr)
-            return 2
-        qroot = args.quarantine.rstrip("/")
-        # multi-manifest: a row is quarantined iff it fails ANY bound
-        # manifest's row rules — still one codegen expression, one pass
-        total_fails = engines[0].row_fail_count(df)
-        for e2 in engines[1:]:
-            total_fails = total_fails + e2.row_fail_count(df)
-        df.withColumn("row_valid", total_fails == F_lit(0)).write.mode(
-            "overwrite"
-        ).partitionBy("row_valid").parquet(qroot)
-        # count via the written files' footers (partition column + count =
-        # metadata-only aggregate, no data columns re-read). Partition-dir
-        # values read back as STRINGS (partition type inference covers
-        # numerics/dates, not booleans) — cast, or the True/False lookups
-        # below silently print 0
-        q_counts = {
-            r["rv"]: r["n"]
-            for r in spark.read.parquet(qroot)
-            .groupBy(F_col("row_valid").cast("boolean").alias("rv"))
-            .agg(F_count("*").alias("n"))
-            .collect()
-        }
-        print(f"quarantine: {q_counts.get(True, 0)} valid row(s) -> {qroot}/row_valid=true")
-        print(f"quarantine: {q_counts.get(False, 0)} violating row(s) -> {qroot}/row_valid=false")
+
+def _validate(spark, args, df, engines: list, ref_tables: dict) -> tuple:
+    """Validate the input — under --checkpoint only its pending partitions
+    — and collect the verdict rows, one per instance and manifest: the ONE
+    action that fills the persisted report. The sink deletes, the verdict
+    sink, the PASS lines, the lineage rows and the exit code all read them.
+    Returns (checkpoint manager or None, report, verdict rows); exits 0
+    when a resume finds nothing pending."""
+    from schema_enforcer_spark.checkpoint import CheckpointManager
+    from schema_enforcer_spark.engine import validate_many
 
     cm = None
     if args.checkpoint:
@@ -790,102 +770,93 @@ def main(argv: list[str] | None = None) -> int:
         # defer_record: lineage is appended only AFTER the --output writes
         # succeed — recording first would mark partitions complete whose
         # violation rows never landed (permanently absent from the output)
-        report, n_pending = cm.run(df, eng, ref_tables, defer_record=True)
+        report, n_pending = cm.run(df, engines[0], ref_tables, defer_record=True)
         if report is None:
             # sound because only PASS verdicts complete a partition: FAILed
             # partitions always re-validate, so nothing-pending ⇒ all PASS
-            print(f"ALL PARTITIONS ALREADY VALIDATED (PASS) [{manifest.id}] — nothing pending")
+            print(f"ALL PARTITIONS ALREADY VALIDATED (PASS) [{engines[0].manifest.id}] — nothing pending")
             if args.stats_columns:
                 # stats for every partition are already in the store — the
                 # merged view costs one read of the sketch rows, zero data
-                _print_merged_stats()
-            return 0
+                _print_merged_stats(spark, args.checkpoint)
+            raise _Exit(0)
         print(f"validated {n_pending} pending rows")
     else:
         # ONE scan for every bound manifest's row rules; verdict rows carry
         # schema_id, so per-manifest results stay separable
         report = validate_many(engines, df, ref_tables)
+    return cm, report, report.verdicts.collect()
 
-    # ONE action fills the persisted report (report.cached): the verdict
-    # rows, one per instance and manifest. The sink deletes, the verdict
-    # sink, the PASS lines, the lineage rows and the exit code all read them
-    verdicts = report.verdicts.collect()
 
+def _write_sinks(spark, args, report, verdicts: list) -> None:
+    """--output: the violations (capped per rule and instance under
+    --max-violations-per-rule) and the collected verdicts, as parquet
+    under <output>/violations and <output>/verdicts."""
+    if not args.output:
+        return
     # the SINK view of violations: optionally capped per (rule, instance).
     # Verdicts/rule_summary/exit code keep reading the full persisted set —
     # counts stay exact; only what lands on disk is sampled.
     sink_violations = report.violations
-    if args.max_violations_per_rule:
-        from pyspark.sql.functions import row_number as F_row_number
-        from pyspark.sql.window import Window as _Window
+    if args.max_violations_per_rule is not None:
+        from pyspark.sql import functions as F
+        from pyspark.sql.window import Window
 
-        _w = _Window.partitionBy("schema_id", "instance_name").orderBy("absolute_path", "message")
+        w = Window.partitionBy("schema_id", "instance_name").orderBy("absolute_path", "message")
         sink_violations = (
-            report.violations.withColumn("_rn", F_row_number().over(_w))
-            .filter(F_col("_rn") <= args.max_violations_per_rule)
+            report.violations.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= args.max_violations_per_rule)
             .drop("_rn")
         )
+    root = args.output.rstrip("/")
+    verdict_sink = spark.createDataFrame(verdicts, report.verdicts.schema)
+    if not args.checkpoint:
+        sink_violations.write.mode("overwrite").parquet(f"{root}/violations")
+        verdict_sink.write.mode("overwrite").parquet(f"{root}/verdicts")
+        return
+    # a resumed run covers only the PENDING subset, and a FAILed partition
+    # re-validates on EVERY resume — plain append would re-append its
+    # identical rows each retry (double-counting), and dynamic partition
+    # overwrite alone leaves stale violations when a partition goes
+    # FAIL→(now-empty) PASS. So: REPLACE exactly this run's instance
+    # partitions — delete their subdirs (a partition-count-sized driver op
+    # via the Hadoop FS API, any filesystem), then append partitioned by
+    # instance_name. Dir names use Spark's Hive path escaping — deleting the
+    # RAW instance value would silently miss any name with ':'/'/'/'%' etc.
+    # and re-append duplicates on every resume.
+    insts = {v["instance_name"] for v in verdicts}
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(root).getFileSystem(spark._jsc.hadoopConfiguration())
+    for sub in ("violations", "verdicts"):
+        for inst in insts:
+            fs.delete(hpath(f"{root}/{sub}/instance_name={escape_partition_value(inst)}"), True)
+    sink_violations.write.mode("append").partitionBy("instance_name").parquet(f"{root}/violations")
+    verdict_sink.write.mode("append").partitionBy("instance_name").parquet(f"{root}/verdicts")
 
-    if args.output:
-        root = args.output.rstrip("/")
-        verdict_sink = spark.createDataFrame(verdicts, report.verdicts.schema)
-        if args.checkpoint:
-            # a resumed run covers only the PENDING subset, and a FAILed
-            # partition re-validates on EVERY resume — plain append would
-            # re-append its identical rows each retry (double-counting), and
-            # dynamic partition overwrite alone leaves stale violations when
-            # a partition goes FAIL→(now-empty) PASS. So: REPLACE exactly
-            # this run's instance partitions — delete their subdirs (a
-            # partition-count-sized driver op via the Hadoop FS API, any
-            # filesystem), then append partitioned by instance_name. Dir
-            # names use Spark's Hive path escaping — deleting the RAW
-            # instance value would silently miss any name with ':'/'/'/'%'
-            # etc. and re-append duplicates on every resume.
-            insts = {v["instance_name"] for v in verdicts}
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path
-            fs = hpath(root).getFileSystem(spark._jsc.hadoopConfiguration())
-            for sub in ("violations", "verdicts"):
-                for inst in insts:
-                    fs.delete(hpath(f"{root}/{sub}/instance_name={escape_partition_value(inst)}"), True)
-            sink_violations.write.mode("append").partitionBy("instance_name").parquet(f"{root}/violations")
-            verdict_sink.write.mode("append").partitionBy("instance_name").parquet(f"{root}/verdicts")
-        else:
-            sink_violations.write.mode("overwrite").parquet(f"{root}/violations")
-            verdict_sink.write.mode("overwrite").parquet(f"{root}/verdicts")
 
-    if args.stats_columns:
-        from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
+def _write_stats(spark, args, cm, eng) -> None:
+    """--stats-columns: sketch only what this run validated (earlier
+    partitions' rows are already in the store — that's the incremental
+    contract), then print the stats merged across every run. Runs BEFORE
+    the lineage record, so the lazy pending frame still holds the rows the
+    record is about to mark done."""
+    from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
 
-        cols = [c for c in args.stats_columns.split(",") if c]
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            print(f"ERROR | --stats-columns not in the input: {missing}", file=sys.stderr)
-            return 2
-        # sketch only what this run validated; earlier partitions' rows are
-        # already in the store — that's the incremental contract. Runs
-        # BEFORE cm.record(), so a bad column name exits 2 with no lineage
-        # claiming the run's partitions done
-        stats_df = cm.last_pending if cm is not None else df
-        write_partition_stats(
-            stats_df, cols, stats_store_path(args.checkpoint), eng._instance_col(stats_df)
-        )
-        _print_merged_stats()
+    cols = [c for c in args.stats_columns.split(",") if c]
+    pending = cm.last_pending
+    write_partition_stats(pending, cols, stats_store_path(args.checkpoint), eng._instance_col(pending))
+    _print_merged_stats(spark, args.checkpoint)
 
-    if cm is not None:
-        # the verdict collect materialized the report, so lineage never
-        # claims unfinished work; row counts come from the PENDING subset
-        # run() already counted
-        cm.record(cm.last_pending, eng, report, cm.last_counts, verdicts)
 
+def _print_and_exit(args, report, verdicts: list, engines: list) -> int:
+    """FAIL/PASS lines, the --summary table and the last line; releases the
+    persisted report and returns 1 iff any violation."""
     _print_report(report, args, verdicts)
-
     if args.summary:
         print(f"{'Rule':<60} {'Violations':>10} {'Instances':>10}")
         print("-" * 82)
         for r in report.rule_summary().collect():
             print(f"{r['schema_id']:<60} {r['n_violations']:>10} {r['n_instances']:>10}")
-
     # every violation counts in exactly one verdict
     n = sum(v["n_violations"] for v in verdicts)
     # release the persisted report — a long-lived session (tests, notebooks)
@@ -899,11 +870,100 @@ def main(argv: list[str] | None = None) -> int:
     return 0
 
 
+def mode_of(args):
+    """The mode function the arguments select: the first mode flag set, in
+    this order, else the validate mode."""
+    if args.diff_manifests:
+        return _diff_main
+    if args.profile:
+        return _profile_main
+    if args.infer_manifest:
+        return _infer_main
+    if args.list_manifests or args.dump_manifest:
+        return _schema_tools
+    if args.automap:
+        return _automap_main
+    if args.selftest or args.generate_invalid:
+        return _selftest_main
+    if args.show_checks:
+        return _show_checks_main
+    if args.write_baseline:
+        return _write_baseline_main
+    return _validate_main
+
+
+# the modes that read --manifest, and those of them that read data through
+# one session
+_DATA_MODES = (_selftest_main, _show_checks_main, _write_baseline_main, _validate_main)
+_MANIFEST_MODES = (_schema_tools, _automap_main, *_DATA_MODES)
+
+# --automap validates and prints per host only: it writes no sink, keeps no
+# checkpoint and has no summary, strict or sample form
+_AUTOMAP_UNUSED = ("output", "checkpoint", "quarantine", "stats_columns", "summary", "strict", "sample_fraction")
+
+# Every flag combination the CLI refuses, one row each: (the modes the row
+# applies to, a condition on the parsed args, the error message, formatted
+# with the args). main() checks the rows in order before any Spark session
+# starts; the first row that holds prints its message and exits 2.
+FLAG_TABLE = [
+    (_MANIFEST_MODES, lambda a: not a.manifest, "--manifest is required"),
+    ((_automap_main,), lambda a: not a.inventory, "--automap requires --inventory"),
+    *[
+        ((_automap_main,), lambda a, f=f: getattr(a, f) not in (None, False),
+         f"--automap does not support --{f.replace('_', '-')} (it prints per-host results only)")
+        for f in _AUTOMAP_UNUSED
+    ],
+    # --manifest DIR = the reference's `validate` semantics: EVERY schema
+    # runs against every data unit it automaps to (cli.py:75-96).
+    # Incremental checkpointing, baselines, and the golden-corpus tools are
+    # single-manifest concerns.
+    (_DATA_MODES,
+     lambda a: os.path.isdir(a.manifest)
+     and bool(a.checkpoint or a.write_baseline or a.baseline or a.selftest or a.generate_invalid),
+     "--manifest DIR (multi-manifest automap) cannot be combined with --checkpoint/--write-baseline/"
+     "--baseline/--selftest/--generate-invalid — run those per manifest"),
+    ((_profile_main,), lambda a: not a.input, "--profile requires --input"),
+    ((_infer_main,), lambda a: not a.input, "--infer-manifest requires --input"),
+    ((_show_checks_main, _write_baseline_main, _validate_main), lambda a: not (a.input or a.inventory),
+     "--input is required"),
+    ((_write_baseline_main, _validate_main), lambda a: (a.write_baseline or a.baseline) and not a.checkpoint,
+     "--write-baseline/--baseline require --checkpoint (baselines live under the checkpoint dir)"),
+    ((_validate_main,), lambda a: a.stats_columns and not a.checkpoint,
+     "--stats-columns requires --checkpoint (the stats store lives under the checkpoint dir)"),
+    ((_validate_main,), lambda a: a.sample_fraction is not None and not 0.0 < a.sample_fraction <= 1.0,
+     "--sample-fraction must be in (0, 1], got {sample_fraction}"),
+    # --quarantine's contract is a COMPLETE row-grain split of the input;
+    # run on the sampled subset it would silently overwrite the quarantine
+    # dirs with a (1-F)-incomplete copy
+    ((_validate_main,), lambda a: a.sample_fraction is not None and a.quarantine,
+     "--quarantine cannot be combined with --sample-fraction (the quarantine split must cover "
+     "every input row, not an audit sample)"),
+    # lineage from a sample would mark partitions PASS that were only
+    # fractionally checked — permanently skipping real rows
+    ((_validate_main,), lambda a: a.sample_fraction is not None and a.checkpoint,
+     "--sample-fraction is an audit mode and cannot be combined with --checkpoint"),
+    # a cap of 0 would read as unset and write every violation, a negative
+    # one would write none
+    ((_validate_main,), lambda a: a.max_violations_per_rule is not None and a.max_violations_per_rule < 1,
+     "--max-violations-per-rule must be at least 1, got {max_violations_per_rule}"),
+]
+
+
+def main(argv: list[str] | None = None) -> int:
+    args = parse_args(argv)
+    mode = mode_of(args)
+    try:
+        for modes, broken, message in FLAG_TABLE:
+            if mode in modes and broken(args):
+                _fail(2, message.format(**vars(args)))
+        return mode(args)
+    except _Exit as e:
+        return e.code
+
+
 if __name__ == "__main__":
     # direct `python schema_enforcer_spark/cli.py` puts the package dir (not
     # its parent) on sys.path; under spark-submit --py-files the zip already
     # provides the package
-    import os
-
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     sys.exit(main())

@@ -18,9 +18,9 @@ resumable checkpoint skip and violations/verdicts written to parquet sinks.
 
 ``main`` checks the arguments against one flag table (:data:`FLAG_TABLE`,
 exit 2 before any Spark session starts), picks a mode function
-(:func:`mode_of`) and returns what the mode returns. The validate mode is a sequence of
-phases: load manifests → read input → pending (resume) → validate → sinks
-→ stats → record → print and exit.
+(:func:`mode_of`) and returns what the mode returns. The validate mode is
+a sequence of phases: load manifests → read input → pending (resume) →
+validate → sinks → stats → record → print and exit.
 """
 
 from __future__ import annotations
@@ -623,6 +623,8 @@ def _show_checks_main(args) -> int:
 
 
 def _write_baseline_main(args) -> int:
+    """--write-baseline: store the drift rules' baseline histograms of the
+    input under the checkpoint dir."""
     from schema_enforcer_spark.stats import baseline_store_path, write_drift_baselines
 
     manifests, spark, df = _open_data(args)
@@ -909,7 +911,8 @@ FLAG_TABLE = [
     (_MANIFEST_MODES, lambda a: not a.manifest, "--manifest is required"),
     ((_automap_main,), lambda a: not a.inventory, "--automap requires --inventory"),
     *[
-        ((_automap_main,), lambda a, f=f: getattr(a, f) not in (None, False),
+        # `is not`: a --sample-fraction of 0 is set, though it equals False
+        ((_automap_main,), lambda a, f=f: getattr(a, f) is not None and getattr(a, f) is not False,
          f"--automap does not support --{f.replace('_', '-')} (it prints per-host results only)")
         for f in _AUTOMAP_UNUSED
     ],

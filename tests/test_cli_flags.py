@@ -37,7 +37,8 @@ CASES = [
     *[
         (["--manifest", "{manifest}", "--inventory", "{inv}", "--automap", *flag], f"--automap does not support {flag[0]}")
         for flag in (["--output", "{root}/o"], ["--checkpoint", "{root}/c"], ["--quarantine", "{root}/q"],
-                     ["--stats-columns", "role"], ["--summary"], ["--strict"], ["--sample-fraction", "0.5"])
+                     ["--stats-columns", "role"], ["--summary"], ["--strict"], ["--sample-fraction", "0.5"],
+                     ["--sample-fraction", "0"])
     ],
     (["--manifest", "{manifests}", "--input", "{data}", "--checkpoint", "{root}/c"], "--manifest DIR (multi-manifest"),
     (["--manifest", "{manifests}", "--selftest", "{root}/corpus"], "--manifest DIR (multi-manifest"),

@@ -335,8 +335,15 @@ def _print_report(report, args, verdicts: list) -> None:
     """Print a report's FAIL lines, and its PASS lines with --show-pass, in
     the format of the reference's ValidationResult.print
     (validation.py:53-91), at most --show-failures of each. *verdicts* are
-    the report's collected verdict rows."""
-    failures = report.violations.orderBy("message").limit(args.show_failures).collect()
+    the report's collected verdict rows. The FAIL lines are ordered on
+    every field they print, so which ones a run prints is reproducible."""
+    from pyspark.sql import functions as F
+
+    # one struct key (fields compare in order, NULLs first, as separate
+    # ascending keys would): each extra sort column costs py4j round trips
+    failures = report.violations.orderBy(
+        F.expr("struct(message, instance_type, instance_location, instance_name, absolute_path)")
+    ).limit(args.show_failures).collect()
     for v in failures:
         # a NULL key column yields a NULL path element (cast preserves it);
         # print it as 'None' (py_repr parity) instead of crashing the join

@@ -49,7 +49,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -136,9 +136,9 @@ class _PlanMemo:
     A hit needs the same *tag* and every pinned object ``is``-identical; the
     entry holds its pins, so no id() is reused while it lives. At most
     ``SIZE`` entries, the oldest evicted first. A plan over a manifest with
-    an eager rule kind (its evaluator runs Spark jobs at plan build:
-    equals_table's hash precompare, drift's histogram collect) is never
-    memoized — that would reuse computed DATA, not a plan."""
+    an eager rule kind (its evaluator runs Spark jobs at plan build: drift's
+    histogram collect) is never memoized — that would reuse computed DATA,
+    not a plan."""
 
     SIZE = 8
 
@@ -707,7 +707,9 @@ class ValidationEngine:
             f"array({', '.join(_strings(cols))})", key_str, message,
         )
 
-    def _equals_table_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
+    def _equals_table_violations(
+        self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame], how: str = "full_outer"
+    ) -> DataFrame:
         """The north-star per-row invariant (BASELINE.json input_hint:
         'per-turn text equality under stable turn ordering'): diff the
         input against a reference table on the key columns. Emits three
@@ -717,59 +719,18 @@ class ValidationEngine:
         comparison keys on (conv_id, turn_idx), never on file or partition
         order. No window; no unbounded collect.
 
-        Two physical strategies, picked by ``compare_mode``:
-
-        - ``direct``: ONE full-outer equi-join shuffle on the keys, value
-          comparison on the join projection. Right when the compared
-          columns are narrow (numerics/timestamps): the hash detour would
-          shuffle just as many bytes plus a second scan.
-        - ``hash``: two-phase. Pass 1 shuffles only (keys, instance,
-          xxhash64 per compared column) through the full-outer join — for
-          a transcripts-scale ``text`` column that cuts shuffle bytes
-          ~5-20x, which is exactly the cross-executor traffic that breaks
-          N→4N scaling — and keeps only missing/mismatched rows (tiny at
-          the 1/1000 tamper rates a diff exists to catch), materialized
-          via localCheckpoint. Pass 2 fetches the real values for the
-          mismatch keys with a broadcast join-back against each table and
-          RECOMPARES the actual values, so the emitted violations are
-          byte-identical to direct mode (a hash collision can only mask a
-          real mismatch, at ~n*2^-64 odds; it can never invent one).
-          NOTE: hash mode triggers pass 1 eagerly at plan-build time (the
-          mismatch count decides broadcast vs fallback).
-        - ``auto`` (default): ``hash`` when any compared column is
-          string/binary/nested (wide values), else ``direct``.
-
-        If the mismatch key set exceeds ``max_fetch_keys`` (default 2e6 —
-        past any plausible drift, the tables are simply different), hash
-        mode abandons the detour and falls back to the direct join."""
-        ref = self._equals_table_ref(df, rule, ref_tables)
-        keys, comp = list(rule.params["columns"]), list(rule.params["compare"])
-        mode = rule.get("compare_mode", "auto")
-        if mode == "auto":
-            mode = (
-                "hash"
-                if any(
-                    _dtype_of(df, c).simpleString() in ("string", "binary")
-                    or _dtype_of(df, c).simpleString().startswith(("array", "struct", "map"))
-                    for c in comp
-                )
-                else "direct"
-            )
-        if mode == "hash":
-            j = self._equals_table_hash_join(df, ref, keys, comp, rule)
-        else:
-            j = self._equals_table_join(df, ref, keys, comp, "full_outer")
-        return self._equals_table_emit(j, df, ref, rule)
-
-    def _equals_table_ref(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
-        """The rule's reference table, once the checks the batch rule and
-        its streaming twin share hold: the table is given, and both sides
-        carry every key and compared column with the same dtype."""
+        One plan: an equi-join shuffle on the keys, with the value
+        comparison on the join projection. *how* is ``full_outer`` for the
+        batch rule; the streaming twin (``stream_equals_table``) passes
+        ``left_outer``, so it never emits the reference-only shape. Both
+        sides must carry every key and compared column with the same
+        dtype."""
         ref_name = rule.params["ref_table"]
         if ref_name not in ref_tables:
             raise KeyError(f"equals_table rule needs ref table {ref_name!r} in ref_tables")
         ref = ref_tables[ref_name]
-        for c in [*rule.params["columns"], *rule.params["compare"]]:
+        keys, comp = list(rule.params["columns"]), list(rule.params["compare"])
+        for c in [*keys, *comp]:
             if c not in df.columns:
                 raise ValueError(f"equals_table: input lacks column {c!r}")
             if c not in ref.columns:
@@ -783,137 +744,11 @@ class ValidationEngine:
                     f"equals_table: column {c!r} dtype mismatch — input is {lt}, "
                     f"{ref_name} is {rt}; cast the tables to agree before validating"
                 )
-        return ref
-
-    def _equals_table_join(self, df: DataFrame, ref: DataFrame, keys: list[str], comp: list[str], how: str) -> DataFrame:
-        """The value join of equals_table: keys, compared values and their
-        ``_r_*`` twins, ``_inst`` and the ``_l``/``_r`` side markers."""
         left = df.select(*keys, *comp, self._instance_col(df).alias("_inst"), F.lit(1).alias("_l"))
         right = ref.select(*keys, *[F.col(c).alias(f"_r_{c}") for c in comp], F.lit(1).alias("_r"))
-        return left.join(right, on=keys, how=how)
-
-    def _equals_table_hash_join(
-        self, df: DataFrame, ref: DataFrame, keys: list[str], comp: list[str], rule: Rule
-    ) -> DataFrame:
-        """Hash-precompare pass for equals_table (see the rule docstring):
-        returns a frame with the same columns the direct full-outer join
-        produces (keys, compared values, ``_r_*`` twins, ``_inst``,
-        ``_l``/``_r`` side markers) but containing ONLY the rows that can
-        emit a violation — built by joining 8-byte xxhash64 digests instead
-        of the values, then fetching real values for the (tiny) mismatch
-        key set via broadcast join-backs. NULL values hash to NULL (not the
-        seed constant) so NULL-vs-'' and NULL-vs-present stay distinct."""
-
-        def _h(c: str) -> Column:
-            return F.when(F.col(c).isNull(), F.lit(None).cast("bigint")).otherwise(
-                F.xxhash64(F.col(c))
-            )
-
-        lh = df.select(
-            *keys,
-            self._instance_col(df).alias("_inst"),
-            *[_h(c).alias(f"_h_{c}") for c in comp],
-            F.lit(1).alias("_l"),
-        )
-        rh = ref.select(
-            *keys,
-            *[_h(c).alias(f"_rh_{c}") for c in comp],
-            F.lit(1).alias("_r"),
-        )
-        pre = lh.join(rh, on=keys, how="full_outer")
-        flagged = F.col("_l").isNull() | F.col("_r").isNull()
-        for c in comp:
-            flagged = flagged | ~F.col(f"_h_{c}").eqNullSafe(F.col(f"_rh_{c}"))
-        # materialize the mismatch set once: it feeds the side-missing
-        # branch, the fetch-back key list, AND the broadcast-vs-fallback
-        # decision — without the checkpoint each consumer would re-run the
-        # whole pass-1 join (the derived-table-reuse trap, CLAUDE.md r4)
-        max_fetch = int(rule.get("max_fetch_keys", 2_000_000))
-        # ZERO extra jobs for the fallback decision AND the fetch range
-        # bounds: every separate action is a full scheduler barrier whose
-        # wall time is set by the slowest executor (this host's steal
-        # bursts amplify exactly these barriers — BENCH/BASELINE.md r6), so
-        # the count and min/max ride an Observation on the checkpoint's own
-        # materialization job (the same trick the CC loop's convergence
-        # probe uses; verified the metrics fire on localCheckpoint). Bounds
-        # cover only both-present rows (the fetch set); side-missing rows
-        # need no values.
-        _bp = F.col("_l").isNotNull() & F.col("_r").isNotNull()
-        obs = Observation("equals_hash_stats")
-        mis = (
-            pre.filter(flagged)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("_n"),
-                *[F.min(F.when(_bp, F.col(c))).alias(f"lo_{c}") for c in keys],
-                *[F.max(F.when(_bp, F.col(c))).alias(f"hi_{c}") for c in keys],
-            )
-            .localCheckpoint(eager=True)
-        )
-        _stats = obs.get
-        if _stats["_n"] > max_fetch:
-            return self._equals_table_join(df, ref, keys, comp, "full_outer")
-
-        null_comp = [F.lit(None).cast(_dtype_of(df, c)).alias(c) for c in comp]
-        null_rcomp = [F.lit(None).cast(_dtype_of(ref, c)).alias(f"_r_{c}") for c in comp]
-        # side-missing rows need no values: the message is built from keys
-        miss_side = mis.filter(F.col("_l").isNull() | F.col("_r").isNull()).select(
-            *keys, *null_comp, *null_rcomp, "_inst", "_l", "_r"
-        )
-        # both-present hash mismatches: fetch the real values. The key list
-        # is DISTINCT so duplicate join keys multiply exactly as the direct
-        # full-outer join would (each input row matches each ref row once),
-        # and the pair join recompares actual values — equal-value sibling
-        # pairs under a duplicated key emit nothing, same as direct mode.
-        mk = (
-            mis.filter(F.col("_l").isNotNull() & F.col("_r").isNotNull())
-            .select(*keys)
-            .distinct()
-        )
-        # Range-prune the fetch-back scans: the broadcast probe alone still
-        # DECODES every row's compared columns before discarding 99.9% of
-        # them. A min/max bound per key column is implied by membership in
-        # mk, rides the fallback-decision aggregate above for free, and —
-        # unlike the 10k-literal IN set — is parquet-PUSHABLE, so row
-        # groups/pages outside the bounds are skipped before any value
-        # decode. Uniformly-spread tampering prunes nothing (bounds span
-        # the table), but real corruption clusters (a bad ingest day, one
-        # broken partition), and then the fetch-back reads only the
-        # affected key range instead of re-scanning 100 TB.
-        fetch_filter = None
-        for c in keys:
-            lo, hi = _stats[f"lo_{c}"], _stats[f"hi_{c}"]
-            if lo is None or hi is None:  # all-null key column — no bound
-                continue
-            cl = F.col(c).between(F.lit(lo), F.lit(hi))
-            fetch_filter = cl if fetch_filter is None else (fetch_filter & cl)
-        fetch_in = df.select(
-            *keys, *comp, self._instance_col(df).alias("_inst")
-        )
-        fetch_ref = ref.select(*keys, *[F.col(c).alias(f"_r_{c}") for c in comp])
-        if fetch_filter is not None:
-            fetch_in = fetch_in.filter(fetch_filter)
-            fetch_ref = fetch_ref.filter(fetch_filter)
-        fetch_in = fetch_in.join(F.broadcast(mk), on=keys, how="inner")
-        fetch_ref = fetch_ref.join(F.broadcast(mk), on=keys, how="inner")
-        pairs = fetch_in.join(fetch_ref, on=keys, how="inner").select(
-            *keys,
-            *comp,
-            *[f"_r_{c}" for c in comp],
-            "_inst",
-            F.lit(1).alias("_l"),
-            F.lit(1).alias("_r"),
-        )
-        return miss_side.unionByName(pairs)
-
-    def _equals_table_emit(self, j: DataFrame, df: DataFrame, ref: DataFrame, rule: Rule) -> DataFrame:
-        """Shared violation-shaping tail of equals_table and its streaming
-        twin: ``j`` carries keys, compared values + ``_r_*`` twins, ``_inst``
-        and the ``_l``/``_r`` side markers (from the direct join or the
-        hash-precompare fetch-back)."""
-        ref_name = rule.params["ref_table"]
-        key_cols = ", ".join(_strings(rule.params["columns"]))
-        key_str = _key_string(rule.params["columns"])
+        j = left.join(right, on=keys, how=how)
+        key_cols = ", ".join(_strings(keys))
+        key_str = _key_string(keys)
 
         def viol(cond: str, path: str, failing: str, message: str) -> str:
             return _case([(cond, _struct([
@@ -926,7 +761,7 @@ class ValidationEngine:
             viol("_l IS NULL", key_cols, key_str, _concat(
                 _Q, key_str, _sql_lit(f"' is missing from the input (present in {ref_name})"))),
         ]
-        for c in rule.params["compare"]:
+        for c in comp:
             lc, rc = _sql_ident(c), _sql_ident(f"_r_{c}")
             # ref dtype equals the input dtype (checked above) — but source
             # the repr from the ref schema so the message stays honest if

@@ -91,8 +91,6 @@ def _key(rule: dict[str, Any]) -> tuple:
 _PHYSICAL_PARAMS = (
     "suggest",        # enum: message-only repair hint
     "broadcast",      # referential: join strategy
-    "compare_mode",   # equals_table: digest vs direct strategy
-    "max_fetch_keys",
     "salt",           # aggregate: skew defense
     "exact",          # outlier: sketch vs exact estimator of the same fence
     "bins",           # drift: histogram grain

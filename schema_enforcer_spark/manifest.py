@@ -174,9 +174,8 @@ RULE_KIND_TABLE: dict[str, RuleKind] = {k.name: k for k in (
     # `dependent` (NULL counts as a value); one violation per offending group
     RuleKind("functional_dependency", TABLE, ("columns", "dependent"), "_fd_violations"),
     # full diff vs a reference table on the key columns: value mismatches
-    # per compared column and rows missing on either side; hash mode runs a
-    # precompare job at plan build
-    RuleKind("equals_table", TABLE, ("columns", "ref_table", "compare"), "_equals_table_violations", eager=True),
+    # per compared column and rows missing on either side, one full-outer join
+    RuleKind("equals_table", TABLE, ("columns", "ref_table", "compare"), "_equals_table_violations"),
 )}
 
 ROW_RULE_KINDS = frozenset(k.name for k in RULE_KIND_TABLE.values() if k.grain == ROW)
@@ -283,11 +282,6 @@ MANIFEST_META_SCHEMA: dict[str, Any] = {
                     "additional_items": {"type": ["boolean", "object"]},
                     "value_pattern": {"type": "string"},
                     "right_expr": {"type": "string"},
-                    # equals_table physical strategy: direct = one full-outer
-                    # value join; hash = xxhash64 precompare + broadcast
-                    # fetch-back (wide columns); auto picks by compare dtype
-                    "compare_mode": {"enum": ["auto", "direct", "hash"]},
-                    "max_fetch_keys": {"type": "integer", "minimum": 1},
                 },
                 "additionalProperties": False,
             },

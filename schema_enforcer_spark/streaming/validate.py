@@ -227,10 +227,7 @@ def stream_equals_table(
     only provable once the stream is complete, so reference-only rows are
     a batch reconciliation concern (run the batch rule over the landed
     table); Spark enforces the same physics by rejecting full-outer
-    stream-static joins. Compare mode is ``direct`` only — hash mode's
-    eager pass-1 (localCheckpoint + count actions) cannot run on an
-    unbounded stream, and a micro-batch is small enough that shuffling its
-    values is the cheap side of the trade anyway.
+    stream-static joins.
 
     Reference analogue: schema-enforcer validates each file as it is
     encountered (/root/reference/schema_enforcer/cli.py:60-88, the
@@ -243,13 +240,13 @@ def stream_equals_table(
             f"manifest, found {len(eq_rules)}"
         )
     rule = eq_rules[0]
-    eng = ValidationEngine(manifest, **engine_kw)
-    # the batch rule's checks: ref table given, columns present, dtypes agree
-    ref = eng._equals_table_ref(stream_df, rule, ref_tables)
-    if ref.isStreaming:
+    # the batch rule's plan and checks (ref table given, columns present,
+    # dtypes agree) over a left-outer join; a lazy plan, so the static-side
+    # check below still runs before any query starts
+    out = ValidationEngine(manifest, **engine_kw)._equals_table_violations(stream_df, rule, ref_tables, "left_outer")
+    if ref_tables[rule.params["ref_table"]].isStreaming:
         raise ValueError("the reference side must be a static table")
-    j = eng._equals_table_join(stream_df, ref, list(rule.params["columns"]), list(rule.params["compare"]), "left_outer")
-    return eng._equals_table_emit(j, stream_df, ref, rule)
+    return out
 
 
 def stream_outlier(

@@ -199,6 +199,44 @@ def test_cli_show_pass(spark, data, capsys):
     assert "FAIL | [ERROR]" in out and "PASS | [PARTITION] " in out
 
 
+def test_cli_fail_lines_reproducible(spark, tmp_path, capsys):
+    """Violations that share one message are printed in a total order over
+    every printed field (message, instance type, location and name,
+    property path), so a small --show-failures picks the same lines on
+    every run, whatever order the input partitions' tasks finish in."""
+    from pyspark.sql import functions as F
+
+    src = str(tmp_path / "in")
+    (
+        spark.range(400)
+        .select(
+            F.format_string("conv-%04d", (F.col("id") / 4).cast("int")).alias("conv_id"),
+            (F.col("id") % 4).cast("int").alias("turn_idx"),
+            F.lit("bad").alias("x"),
+        )
+        .repartition(4)
+        .write.parquet(src)
+    )
+    man = tmp_path / "m.yml"
+    man.write_text(
+        "id: schemas/ties\ntable: t\nrules:\n  - {kind: enum, column: x, values: [ok]}\n"
+    )
+    out = str(tmp_path / "out")
+    assert main(["--manifest", str(man), "--input", src, "--output", out, "--show-failures", "7"]) == 1
+    printed = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("FAIL |")]
+    rows = spark.read.parquet(out + "/violations").collect()
+    assert len(rows) == 400 and len({r["message"] for r in rows}) == 1
+    assert len({r["instance_name"] for r in rows}) > 1
+    rows.sort(key=lambda v: (
+        v["message"], v["instance_type"], v["instance_location"], v["instance_name"], v["absolute_path"]
+    ))
+    assert printed == [
+        f"FAIL | [ERROR] {v['message']} [{v['instance_type']}] {v['instance_location']}/{v['instance_name']} "
+        f"[PROPERTY] {':'.join(v['absolute_path'])}"
+        for v in rows[:7]
+    ]
+
+
 def test_cli_list_manifests(tmp_path, capsys):
     """--list-manifests on a directory enumerates every manifest file with
     the reference table columns (manager.py print_schemas_list); an invalid

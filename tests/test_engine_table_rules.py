@@ -479,17 +479,13 @@ def test_equals_table_diff(spark, transcripts):
         ValidationEngine(m).violations(df, ref_tables={"reference": bad_ref})
 
 
-def test_equals_table_hash_mode_parity(spark):
-    """The hash-precompare strategy (xxhash64 join + broadcast fetch-back)
-    must emit violations BYTE-IDENTICAL to the direct full-outer value
-    join, on every tricky shape at once: a value mismatch, NULL-vs-empty
-    (xxhash64 of NULL must stay distinct from any real value's hash),
-    NULL-vs-NULL (clean under eqNullSafe), rows missing from either side,
-    and a DUPLICATED join key (the fetch-back keys are distinct, so pair
-    multiplicity matches the direct join). The max_fetch_keys=1 run forces
-    the too-many-mismatches fallback to the direct join and must also
-    agree. `value` (a double) rides along to prove multi-column compare
-    with a narrow second column works in hash mode."""
+def test_equals_table_every_diff_shape(spark):
+    """Every tricky shape of the full-outer value join at once, pinned to
+    the exact violation rows: a value mismatch, NULL-vs-empty (a
+    mismatch), NULL-vs-NULL (clean under <=>), rows missing from either
+    side, a DUPLICATED join key (each input row pairs with each reference
+    row: one clean pair, one mismatching pair) and a two-column compare
+    (`value`, a double, matches everywhere, so it emits nothing)."""
     rows = [
         ("a", 1, "x", 1.0),
         ("a", 2, "x", 1.0),      # text mismatch vs ref 'y'
@@ -510,83 +506,30 @@ def test_equals_table_hash_mode_parity(spark):
     schema = "conv_id string, turn_idx int, text string, value double"
     df = spark.createDataFrame(rows, schema)
     ref = spark.createDataFrame(ref_rows, schema)
-
-    def run(**params):
-        m = _m([
-            ("equals_table", dict({
-                "columns": ["conv_id", "turn_idx"],
-                "ref_table": "reference",
-                "compare": ["text", "value"],
-            }, **params))
-        ])
-        out = ValidationEngine(m).violations(df, ref_tables={"reference": ref})
-        return sorted(tuple(r) for r in out.collect())
-
-    direct = run(compare_mode="direct")
-    hashed = run(compare_mode="hash")
-    fallback = run(compare_mode="hash", max_fetch_keys=1)
-    auto = run()  # string compare column present -> auto resolves to hash
-    assert hashed == direct
-    assert fallback == direct
-    assert auto == direct
-    # the fixture exercises every shape: a2 text, b1 NULL-vs-'', c missing
-    # from ref, d missing from input, e1 dup-key pair, a2/b1 value rides
-    msgs = [v[-1] for v in direct]
-    assert sum("does not equal reference.text" in m_ for m_ in msgs) == 3  # a2, b1, e1-q
-    assert sum("is missing from reference" in m_ for m_ in msgs) == 1
-    assert sum("is missing from the input" in m_ for m_ in msgs) == 1
-    assert len(direct) == 5
-
-
-def test_equals_table_hash_fetch_range_pushdown(spark, tmp_path):
-    """The hash fetch-back range-prunes its re-scans: min/max bounds of the
-    mismatch key set (implied by broadcast-join membership, but — unlike a
-    10k-literal IN — parquet-PUSHABLE) must reach the parquet scan as
-    PushedFilters, and the violations must stay byte-identical to direct
-    mode on a CLUSTERED corruption pattern (the case the pruning exists
-    for: one bad ingest range, the rest of the table untouched)."""
-    from pyspark.sql import functions as F
-
-    n = 2000
-    base = spark.range(n).select(
-        F.concat(F.lit("conv-"), F.format_string("%06d", F.col("id"))).alias("conv_id"),
-        F.lit(1).alias("turn_idx"),
-        F.concat(F.lit("text-"), F.col("id").cast("string")).alias("text"),
-    )
-    # corruption clustered in conv-000100..conv-000119
-    ref = base.withColumn(
-        "text",
-        F.when(
-            F.col("conv_id").between("conv-000100", "conv-000119"),
-            F.concat(F.lit("TAMPERED-"), F.col("text")),
-        ).otherwise(F.col("text")),
-    )
-    ipath, rpath = str(tmp_path / "in"), str(tmp_path / "ref")
-    base.write.parquet(ipath)
-    ref.write.parquet(rpath)
-    df, rdf = spark.read.parquet(ipath), spark.read.parquet(rpath)
-
-    def run(mode):
-        m = _m([
-            ("equals_table", {
-                "columns": ["conv_id", "turn_idx"],
-                "ref_table": "reference",
-                "compare": ["text"],
-                "compare_mode": mode,
-            })
-        ])
-        return ValidationEngine(m).violations(df, ref_tables={"reference": rdf})
-
-    hashed = run("hash")
-    direct = run("direct")
-    assert sorted(map(tuple, hashed.collect())) == sorted(map(tuple, direct.collect()))
-    assert hashed.count() == 20
-    plan = hashed._sc._jvm.PythonSQLUtils.explainString(
-        hashed._jdf.queryExecution(), "formatted"
-    )
-    # both fetch-back scans carry the pushed key range
-    assert plan.count("GreaterThanOrEqual(conv_id,conv-000100)") >= 2, plan
-    assert plan.count("LessThanOrEqual(conv_id,conv-000119)") >= 2, plan
+    m = _m([
+        ("equals_table", {
+            "columns": ["conv_id", "turn_idx"],
+            "ref_table": "reference",
+            "compare": ["text", "value"],
+        })
+    ])
+    out = ValidationEngine(m).violations(df, ref_tables={"reference": ref})
+    # instance_name is the default bucket pmod(hash(conv_id), 32) of the
+    # input row; a reference-only row is attributed to its key
+    sid = "schemas/t/equals_table/reference"
+    expected = [
+        (sid, "FAIL", "1", "transcripts", "PARTITION", ["b", "1", "text"], None,
+         "None does not equal reference.text ''"),
+        (sid, "FAIL", "18", "transcripts", "PARTITION", ["a", "2", "text"], "x",
+         "'x' does not equal reference.text 'y'"),
+        (sid, "FAIL", "26", "transcripts", "PARTITION", ["c", "1"], "c|1",
+         "'c|1' is missing from reference"),
+        (sid, "FAIL", "6", "transcripts", "PARTITION", ["e", "1", "text"], "q",
+         "'q' does not equal reference.text 'p'"),
+        (sid, "FAIL", "d|1", "transcripts", "PARTITION", ["d", "1"], "d|1",
+         "'d|1' is missing from the input (present in reference)"),
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == expected
 
 
 def test_functional_dependency_rule(spark):

@@ -1,7 +1,7 @@
-"""Property test: equals_table (both physical strategies) vs a pure-Python
-full-outer multiset differ on GENERATED tables — duplicate join keys, NULL
-keys/values, empty sides, multi-column compare. The python model defines
-the rule's semantics independently of any join plan:
+"""Property test: equals_table vs a pure-Python full-outer multiset differ
+on GENERATED tables — duplicate join keys, NULL keys/values, empty sides,
+multi-column compare. The python model defines the rule's semantics
+independently of any join plan:
 
 - per key, every input row pairs with every reference row (full-outer
   equi-join multiplicity); a pair emits one violation per compared column
@@ -12,8 +12,7 @@ the rule's semantics independently of any join plan:
 
 Structure (absolute_path, failing_value, violation kind) is compared as a
 multiset; exact message text is covered by the unit tests and the q46
-oracle. `hash` mode must agree with `direct` byte-for-byte — including on
-empty mismatch sets (the fetch-bounds None edge) and empty inputs."""
+oracle."""
 
 from __future__ import annotations
 
@@ -85,7 +84,7 @@ def _kind(msg):
     return "neq"
 
 
-def _run(spark, rows, ref_rows, mode):
+def _run(spark, rows, ref_rows):
     m = Manifest(
         id="schemas/eq_prop",
         rules=(
@@ -95,7 +94,6 @@ def _run(spark, rows, ref_rows, mode):
                     "columns": KEYS,
                     "ref_table": "reference",
                     "compare": COMP,
-                    "compare_mode": mode,
                 },
             ),
         ),
@@ -113,11 +111,6 @@ def _run(spark, rows, ref_rows, mode):
 )
 @given(rows=_tbl, ref_rows=_tbl)
 def test_equals_table_matches_python_model(spark, rows, ref_rows):
-    direct = _run(spark, rows, ref_rows, "direct")
-    hashed = _run(spark, rows, ref_rows, "hash")
-    # repr-canonicalize before sorting: rows mix None and str in the same
-    # position (None < 'x' is a TypeError under Python 3 sort)
-    assert sorted(map(repr, hashed)) == sorted(map(repr, direct))
     got = Counter(
         (
             tuple(v["absolute_path"]),
@@ -125,6 +118,6 @@ def test_equals_table_matches_python_model(spark, rows, ref_rows):
             v["failing_value"] if v["failing_value"] is not None else "",
             _kind(v["message"]),
         )
-        for v in direct
+        for v in _run(spark, rows, ref_rows)
     )
     assert got == _model(rows, ref_rows)

@@ -212,3 +212,26 @@ def test_items_rejects_checks_compile_check_cannot_run(check):
 def test_sub_checks_that_cannot_build_a_plan_fail_at_load(rule, error):
     # each used to pass meta-validation and then fail at plan build
     assert validate_manifest_dict({"id": "m", "rules": [rule]}) == [error]
+
+
+# -- equals_table strategy knobs that no longer exist: the rule is one
+# full-outer join, so a manifest that still sets one fails loudly
+
+
+@pytest.mark.parametrize("field,value", [("compare_mode", "hash"), ("max_fetch_keys", 10)])
+def test_removed_equals_table_knobs_rejected(tmp_path, capsys, field, value):
+    from schema_enforcer_spark.cli import main
+
+    rule = {"kind": "equals_table", "columns": ["k"], "ref_table": "r", "compare": ["v"], field: value}
+    assert validate_manifest_dict({"id": "m", "rules": [rule]}) == [
+        f"rules/0: Additional properties are not allowed ({field!r} was unexpected)"
+    ]
+    path = tmp_path / "m.yml"
+    path.write_text(
+        f"id: schemas/m\ntable: t\nrules:\n  - {{kind: equals_table, columns: [k], ref_table: r, "
+        f"compare: [v], {field}: {value}}}\n"
+    )
+    assert main(["--manifest", str(path), "--input", str(tmp_path / "none")]) == 1
+    err = capsys.readouterr().err
+    assert f"ERROR | invalid manifest | {path}: rules/0: " in err
+    assert repr(field) in err

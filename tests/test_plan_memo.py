@@ -105,19 +105,13 @@ def test_different_inputs_rebuild(transcripts, conversations, refs, builds):
     assert builds["row_array"] == before["row_array"] + 1  # only `other`'s
 
 
-@pytest.mark.parametrize("kind", ["equals_table", "drift"])
-def test_eager_kinds_never_memoized(spark, transcripts, builds, kind):
-    if kind == "equals_table":
-        rule = {"kind": "equals_table", "columns": ["conv_id", "turn_idx"], "ref_table": "reference",
-                "compare": ["text"], "compare_mode": "direct"}
-        ref_tables = {"reference": transcripts}
-    else:
-        from schema_enforcer_spark.stats import compute_histogram
+def test_eager_kinds_never_memoized(spark, transcripts, builds):
+    from schema_enforcer_spark.stats import compute_histogram
 
-        baseline = compute_histogram(transcripts, "turn_idx", 0.0, 20.0, 10)
-        rule = {"kind": "drift", "column": "turn_idx", "metric": "psi", "threshold": 0.2, "baseline": baseline}
-        ref_tables = {}
-    eng = _engine({"id": f"schemas/memo_{kind}", "table": "transcripts", "rules": [rule]})
+    baseline = compute_histogram(transcripts, "turn_idx", 0.0, 20.0, 10)
+    rule = {"kind": "drift", "column": "turn_idx", "metric": "psi", "threshold": 0.2, "baseline": baseline}
+    ref_tables = {}
+    eng = _engine({"id": "schemas/memo_drift", "table": "transcripts", "rules": [rule]})
     eng.violations(transcripts, ref_tables)
     eng.violations(transcripts, ref_tables)
     assert builds["violations"] == 2
@@ -126,6 +120,23 @@ def test_eager_kinds_never_memoized(spark, transcripts, builds, kind):
     assert builds["violations"] == 4
     assert builds["verdicts"] == 2
     assert len(eng._plan_memo) == 0
+
+
+def test_equals_table_is_memoized(transcripts, builds):
+    """equals_table builds a lazy plan (one full-outer join, no job at plan
+    build), so a repeat over the same frames is a memo hit."""
+    rule = {"kind": "equals_table", "columns": ["conv_id", "turn_idx"], "ref_table": "reference", "compare": ["text"]}
+    ref_tables = {"reference": transcripts}
+    eng = _engine({"id": "schemas/memo_equals", "table": "transcripts", "rules": [rule]})
+    v = eng.violations(transcripts, ref_tables)
+    assert eng.violations(transcripts, ref_tables) is v
+    assert builds["violations"] == 1
+    first = eng.validate(transcripts, ref_tables, cache_violations=False)
+    after_first = dict(builds)
+    second = eng.validate(transcripts, ref_tables, cache_violations=False)
+    assert builds == after_first
+    assert second.verdicts is first.verdicts
+    assert second.violations.count() == 0
 
 
 def test_stores_stay_bounded(transcripts, refs):
@@ -168,7 +179,7 @@ def test_plan_memo_contract():
 
     eager = manifest_from_dict({
         "id": "schemas/memo_eager", "table": "t",
-        "rules": [{"kind": "equals_table", "columns": ["k"], "ref_table": "r", "compare": ["v"]}],
+        "rules": [{"kind": "drift", "column": "v", "metric": "psi", "threshold": 0.2, "lo": 0, "hi": 1}],
     })
     n = len(memo)
     assert memo.get(("e",), (a,), build("x"), (eager,)) == "x"

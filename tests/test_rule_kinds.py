@@ -82,7 +82,7 @@ def test_sub_check_roles():
     element = {k for k, s in RULE_KIND_TABLE.items() if s.element}
     assert composable < element <= ROW_RULE_KINDS
     assert not {k for k, s in RULE_KIND_TABLE.items() if s.evaluator == ENTRY_ARRAYS} & element
-    assert {k for k, s in RULE_KIND_TABLE.items() if s.eager} == {"equals_table", "drift"}
+    assert {k for k, s in RULE_KIND_TABLE.items() if s.eager} == {"drift"}
 
 
 def test_items_accepts_every_compile_check_kind(spark):

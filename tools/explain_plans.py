@@ -538,10 +538,6 @@ def main() -> None:
                     "columns": ["conv_id", "turn_idx"],
                     "ref_table": "reference",
                     "compare": ["text"],
-                    # direct join on purpose: this section proves the
-                    # bucketed => exchange-free claim for the one-pass value
-                    # join; the hash-precompare strategy has its own section
-                    "compare_mode": "direct",
                 }
             ],
         }
@@ -568,94 +564,6 @@ def main() -> None:
         problems.append("staged equals_table is not a full-outer sort-merge equi-join")
     sections.append(
         ("equals_table on co-partitioned inputs (north-star diff, zero exchanges)", p22, notes22)
-    )
-
-    # 22b. equals_table HASH-PRECOMPARE (the strategy `auto` picks for wide
-    # compare columns — the one the 23M-turn north-star text diff runs).
-    # Pass 1 must shuffle only (keys, instance, xxhash64 digests) through
-    # the full-outer join — never the text values (cross-executor shuffle
-    # bytes are what break N->4N scaling); pass 2 (the final violations
-    # plan) must fetch real values for the mismatch keys with BROADCAST
-    # joins against the big tables, never a second all-row shuffle. The
-    # engine runs pass 1 eagerly behind a localCheckpoint, so the audit
-    # replicates its projection shape for the pass-1 plan and takes the
-    # engine's own plan for pass 2.
-    _keys22 = ["conv_id", "turn_idx"]
-    _hcol = lambda c: F.when(  # noqa: E731 — mirror of engine._equals_table_hash_join._h
-        F.col(c).isNull(), F.lit(None).cast("bigint")
-    ).otherwise(F.xxhash64(F.col(c)))
-    lh22 = tdf.select(
-        *_keys22,
-        F.concat_ws("|", "conv_id", "turn_idx").alias("_inst"),
-        _hcol("text").alias("_h_text"),
-        F.lit(1).alias("_l"),
-    )
-    rh22 = ref22.select(*_keys22, _hcol("text").alias("_rh_text"), F.lit(1).alias("_r"))
-    pre22 = (
-        lh22.join(rh22, on=_keys22, how="full_outer")
-        .filter(
-            F.col("_l").isNull()
-            | F.col("_r").isNull()
-            | ~F.col("_h_text").eqNullSafe(F.col("_rh_text"))
-        )
-    )
-    p22b_pre = _formatted(pre22)
-    notes22b = []
-    if "xxhash64" in p22b_pre and re.search(r"SortMergeJoin[^\n]*FullOuter", p22b_pre):
-        notes22b.append("OK: pass 1 is a full-outer equi-join of xxhash64 digests")
-    else:
-        problems.append("hash-precompare pass 1 is not a full-outer digest join")
-    # every Exchange must carry digests, not values: no bare `text#NN`
-    # column in any Exchange block's Input list (`_h_text#NN` is fine —
-    # \b can't match inside the preceding word char '_')
-    ex_blocks = [
-        b for b in re.split(r"\n\n", p22b_pre) if re.match(r"\(\d+\) Exchange", b)
-    ]
-    if ex_blocks and not any(re.search(r"\btext#", b) for b in ex_blocks):
-        notes22b.append(
-            f"OK: {len(ex_blocks)} Exchange(s) carry keys+digests only — the text column never shuffles"
-        )
-    else:
-        problems.append("hash-precompare pass 1 shuffles the text column (digest-only claim failed)")
-    eq_hash_m = manifest_from_dict(
-        {
-            "id": "schemas/transcripts_equals_ref_hash",
-            "table": "transcripts",
-            "rules": [
-                {
-                    "kind": "equals_table",
-                    "columns": ["conv_id", "turn_idx"],
-                    "ref_table": "reference",
-                    "compare": ["text"],
-                    "compare_mode": "hash",
-                }
-            ],
-        }
-    )
-    p22b = _formatted(
-        ValidationEngine(eq_hash_m).violations(tdf, ref_tables={"reference": ref22})
-    )
-    n_bhj22 = len(re.findall(r"\(\d+\) BroadcastHashJoin", p22b))
-    if n_bhj22 >= 2:
-        notes22b.append(
-            f"OK: pass 2 fetches mismatch values via {n_bhj22} broadcast joins (no all-row re-shuffle)"
-        )
-    else:
-        problems.append("hash-precompare pass 2 does not broadcast the mismatch key set")
-    if re.search(r"(SortMergeJoin|ShuffledHashJoin)[^\n]*FullOuter", p22b):
-        problems.append(
-            "hash-precompare final plan re-runs a full-outer value join (pass 1 should be checkpointed)"
-        )
-    else:
-        notes22b.append("OK: the digest join ran eagerly behind the checkpoint — not re-executed")
-    if "CartesianProduct" in p22b or "BroadcastNestedLoopJoin" in p22b:
-        problems.append("hash-precompare pass 2 planned a nested-loop/cartesian join")
-    sections.append(
-        (
-            "equals_table hash-precompare (pass-1 digest shuffle + broadcast fetch-back)",
-            p22b_pre + "\n\n--- pass 2 (final violations plan) ---\n\n" + p22b,
-            notes22b,
-        )
     )
 
     # 23. incremental dedup (q33): batch-vs-stored-index match must be an

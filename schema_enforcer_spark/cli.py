@@ -655,7 +655,7 @@ def _validate_main(args) -> int:
     cm, report, verdicts = _validate(spark, args, df, engines, ref_tables)
     _write_sinks(spark, args, report, verdicts)
     if args.stats_columns:
-        _write_stats(spark, args, cm, engines[0])
+        _write_stats(spark, args, cm)
     if cm is not None:
         # the verdict collect materialized the report, so lineage never
         # claims unfinished work; row counts come from the PENDING subset
@@ -779,7 +779,8 @@ def _validate(spark, args, df, engines: list, ref_tables: dict) -> tuple:
         # defer_record: lineage is appended only AFTER the --output writes
         # succeed — recording first would mark partitions complete whose
         # violation rows never landed (permanently absent from the output)
-        report, n_pending = cm.run(df, engines[0], ref_tables, defer_record=True)
+        cols = [c for c in (args.stats_columns or "").split(",") if c]
+        report, n_pending = cm.run(df, engines[0], ref_tables, defer_record=True, stats_columns=cols)
         if report is None:
             # sound because only PASS verdicts complete a partition: FAILed
             # partitions always re-validate, so nothing-pending ⇒ all PASS
@@ -843,17 +844,20 @@ def _write_sinks(spark, args, report, verdicts: list) -> None:
     verdict_sink.write.mode("append").partitionBy("instance_name").parquet(f"{root}/verdicts")
 
 
-def _write_stats(spark, args, cm, eng) -> None:
-    """--stats-columns: sketch only what this run validated (earlier
-    partitions' rows are already in the store — that's the incremental
-    contract), then print the stats merged across every run. Runs BEFORE
-    the lineage record, so the lazy pending frame still holds the rows the
-    record is about to mark done."""
-    from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
+def _write_stats(spark, args, cm) -> None:
+    """--stats-columns: append the store rows of only what this run
+    validated (earlier partitions' rows are already in the store — that's
+    the incremental contract), then print the stats merged across every
+    run. The rows come from run()'s per-instance count aggregate over the
+    pending rows, so the append is one write of driver-held rows and
+    rescans no input."""
+    import time
 
-    cols = [c for c in args.stats_columns.split(",") if c]
-    pending = cm.last_pending
-    write_partition_stats(pending, cols, stats_store_path(args.checkpoint), eng._instance_col(pending))
+    from schema_enforcer_spark.checkpoint import append_rows
+    from schema_enforcer_spark.stats import STATS_SCHEMA_DDL, stats_store_path
+
+    run_ns = time.time_ns()
+    append_rows(spark, [(*r, run_ns) for r in cm.last_stats], STATS_SCHEMA_DDL, stats_store_path(args.checkpoint))
     _print_merged_stats(spark, args.checkpoint)
 
 

@@ -89,6 +89,26 @@ def stats_store_path(checkpoint_dir: str) -> str:
     return checkpoint_dir.rstrip("/") + "/_column_stats"
 
 
+def column_sketches_sql(columns: list[str]) -> str:
+    """One aggregate expression (SQL text): an array with one struct per
+    column, each struct that column's store row minus partition_id and
+    run_ns — the one definition of a store row's aggregates, shared by
+    :func:`write_partition_stats` and the checkpoint's per-instance count
+    aggregate. ``inline()`` turns it into the store's long rows."""
+    from schema_enforcer_spark.compiler import _sql_ident, _sql_lit
+
+    structs = []
+    for name in columns:
+        c = _sql_ident(name)
+        structs.append(
+            f"named_struct('col_name', {_sql_lit(name)}, 'hll', hll_sketch_agg(CAST({c} AS STRING)), "
+            f"'n_nulls', sum(CAST({c} IS NULL AS BIGINT)), 'n_rows', count(1), "
+            f"'min_s', CAST(min({c}) AS STRING), 'max_s', CAST(max({c}) AS STRING), "
+            f"'min_n', min(TRY_CAST({c} AS DOUBLE)), 'max_n', max(TRY_CAST({c} AS DOUBLE)))"
+        )
+    return f"array({', '.join(structs)})"
+
+
 def write_partition_stats(
     df: DataFrame,
     columns: list[str],
@@ -104,23 +124,9 @@ def write_partition_stats(
     shuffle is #partitions × #columns × KB regardless of table size)."""
     import time
 
-    from schema_enforcer_spark.compiler import _sql_ident, _sql_lit
-
     run_ns = run_ns if run_ns is not None else time.time_ns()
-    # one aggregate expression: an array with one struct per column, each
-    # struct holding that column's aggregates; inline() then turns it into
-    # the store's long rows (SQL text: two pyspark calls, not ~30 per column)
-    structs = []
-    for name in columns:
-        c = _sql_ident(name)
-        structs.append(
-            f"named_struct('col_name', {_sql_lit(name)}, 'hll', hll_sketch_agg(CAST({c} AS STRING)), "
-            f"'n_nulls', sum(CAST({c} IS NULL AS BIGINT)), 'n_rows', count(1), "
-            f"'min_s', CAST(min({c}) AS STRING), 'max_s', CAST(max({c}) AS STRING), "
-            f"'min_n', min(TRY_CAST({c} AS DOUBLE)), 'max_n', max(TRY_CAST({c} AS DOUBLE)))"
-        )
     wide = df.groupBy(instance_col.cast("string").alias("partition_id")).agg(
-        F.expr(f"array({', '.join(structs)}) AS s")
+        F.expr(f"{column_sketches_sql(columns)} AS s")
     )
     long_rows = wide.selectExpr("partition_id", "inline(s)", f"CAST({run_ns} AS BIGINT) AS run_ns")
     long_rows.write.mode("append").parquet(store_path)
@@ -131,10 +137,17 @@ def merged_column_stats(spark, store_path: str) -> DataFrame:
     partition re-validates on resume and re-appends its rows, so take the
     LATEST row per (partition_id, col_name) before merging: hll_union_agg
     for distincts, sums for null/row counts, min/max over the per-partition
-    extremes (double form preferred, string form as display fallback)."""
+    extremes (double form preferred, string form as display fallback).
+
+    The store is read as ONE partition: it holds partitions × columns
+    rows, a few KB each, and under adaptive execution every Exchange of a
+    collected plan is a Spark job of its own. A single partition satisfies
+    both the window's and the aggregate's distribution, so the merge plans
+    no Exchange and runs as one task in one job."""
     latest = (
         spark.read.schema(STATS_SCHEMA_DDL)
         .parquet(store_path)
+        .coalesce(1)
         .selectExpr("*", "row_number() OVER (PARTITION BY partition_id, col_name ORDER BY run_ns DESC) AS _rk")
         .filter("_rk = 1")
     )

@@ -148,12 +148,14 @@ def test_null_instance_violation_fails_its_verdict(spark, days):
 # Spark jobs of the day-2 resume below, as measured (43 while the pending set
 # was a broadcast anti-join against the lineage path, 22 while the merged
 # stats were sorted by Spark, 20 while the verdicts deduplicated their
-# universe and joined it to the violation counts): the input read, one
-# lineage collect, one pending-count collect, one verdict collect that
-# fills the persisted report, the two sink writes, the stats write and
-# merge collect, one lineage append and one FAIL-line collect, some of them
+# universe and joined it to the violation counts, 17 while the lineage and
+# stats-store reads shuffled and the stats write re-aggregated the pending
+# rows): the input read, one lineage collect, one pending-count collect
+# that also computes the stats sketches, one verdict collect that fills
+# the persisted report, the two sink writes, the stats append and merge
+# collect, one lineage append and one FAIL-line collect, some of them
 # several jobs under adaptive execution.
-RESUME_JOBS = 17
+RESUME_JOBS = 13
 
 
 def test_resume_job_count(spark, days, tmp_path, capsys):
@@ -173,3 +175,57 @@ def test_resume_job_count(spark, days, tmp_path, capsys):
     capsys.readouterr()
     n = len(sc.statusTracker().getJobIdsForGroup("resume-job-guard"))
     assert n <= RESUME_JOBS, f"day-2 resume ran {n} Spark jobs (guard {RESUME_JOBS})"
+
+
+def _store_rows(spark, store: str) -> list:
+    """The stats store's rows without run_ns, HLL bytes as bytes, sorted."""
+    from schema_enforcer_spark.stats import STATS_SCHEMA_DDL
+
+    rows = spark.read.schema(STATS_SCHEMA_DDL).parquet(store).drop("run_ns").collect()
+    return sorted((tuple(bytes(v) if isinstance(v, bytearray) else v for v in r) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("null_instance", [False, True], ids=["partition_id", "null-instance"])
+def test_resume_stats_rows_match_write_partition_stats(spark, days, tmp_path, capsys, null_instance):
+    """The stats rows a --stats-columns resume appends come from the
+    pending-count aggregate; they must equal, HLL bytes included, the rows
+    write_partition_stats writes over the same pending subset. The input's
+    partition_id column is an integer; the NULL-instance case puts the
+    first conversations in a NULL instance, which is pending on every
+    resume. A resume with nothing pending appends no stats row and prints
+    the merged stats."""
+    from schema_enforcer_spark.stats import stats_store_path, write_partition_stats
+
+    (conv, _), = INJECTION_KEYS["invalid_enum"]
+    expr = f"CASE WHEN conv_id <= '{conv}' THEN NULL ELSE partition_id END" if null_instance else None
+    cols = ["conv_id", "role", "turn_idx", "partition_id"]
+    ckpt = str(tmp_path / "ckpt")
+    args = ["--manifest", MANIFEST, "--checkpoint", ckpt, "--stats-columns", ",".join(cols)]
+    if expr:
+        args += ["--instance-expr", expr]
+    assert main([*args, "--input", days["day1"]]) == 0
+    store = stats_store_path(ckpt)
+    day1_rows = _store_rows(spark, store)
+
+    eng = ValidationEngine(load_manifest(MANIFEST), instance_expr=expr)
+    pend = CheckpointManager(spark, ckpt).pending(spark.read.parquet(days["day2"]), eng)
+    want = str(tmp_path / "want")
+    write_partition_stats(pend, cols, want, eng._instance_col(pend))
+    want_rows = _store_rows(spark, want)
+    assert {r[0] for r in want_rows} == {"4", "5", "6", "7"} | ({None} if null_instance else set())
+
+    assert main([*args, "--input", days["day2"]]) == 0
+    capsys.readouterr()
+    appended = _store_rows(spark, store)
+    for r in day1_rows:
+        appended.remove(r)
+    assert appended == want_rows
+
+    if null_instance:
+        return  # NULL-instance rows are pending on every resume
+    n_before = spark.read.parquet(store).count()
+    assert main([*args, "--input", days["day2"]]) == 0
+    out = capsys.readouterr().out
+    assert "nothing pending" in out
+    assert [ln.split()[0] for ln in out.splitlines() if ln.split() and ln.split()[0] in cols] == sorted(cols)
+    assert spark.read.parquet(store).count() == n_before

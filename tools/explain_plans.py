@@ -17,7 +17,9 @@ Checked properties:
 - verdicts: one aggregate over the union of the input's instances and the
   persisted violations, with no join and one Exchange; two manifests with
   the same instance expression and grain share that aggregate and its one
-  input scan.
+  input scan;
+- lineage latest verdicts and merged column stats: each store is read as
+  one partition, so each plans one file scan and no Exchange.
 """
 
 from __future__ import annotations
@@ -841,6 +843,39 @@ def main() -> None:
     else:
         problems.append(f"two-manifest verdicts: {n_scan30b} input scans (want 1)")
     sections.append(("Verdicts of two manifests (one shared aggregate, one input scan)", p30b, notes30b))
+
+    # 31-32. the checkpoint's two stores are partition-count-sized: each is
+    # read as ONE partition, which satisfies every grouping and window
+    # distribution above it, so no Exchange (under adaptive execution each
+    # is a Spark job of its own) and one file scan. The store paths are
+    # fixed, as they appear in the plan.
+    from schema_enforcer_spark.stats import merged_column_stats, write_partition_stats
+
+    ckpt31, store32 = "/tmp/plans_lineage", "/tmp/plans_column_stats"
+    for d in (ckpt31, store32):
+        shutil.rmtree(d, ignore_errors=True)
+    cm31 = CheckpointManager(spark, ckpt31)
+    for verdict in ("FAIL", "PASS"):
+        cm31.record(tdf, eng, ValidationReport(None, spark.createDataFrame(
+            [(m.id, str(q), "PARTITION", verdict, 0) for q in range(16)],
+            "schema_id string, instance_name string, grain string, result string, n_violations bigint",
+        )))
+    p31 = _formatted(cm31._latest(m.rule_set_hash()))
+    inst32 = eng._instance_col(tdf)
+    for wave in ("turn_idx < 5", "turn_idx >= 5", "turn_idx < 5"):
+        write_partition_stats(tdf.filter(wave), ["conv_id", "role"], store32, inst32)
+    p32 = _formatted(merged_column_stats(spark, store32))
+    for n, (title, plan) in enumerate([("Lineage latest verdicts", p31), ("Merged column stats", p32)], 31):
+        notes = []
+        n_ex = len(re.findall(r"^\(\d+\) Exchange\s*$", plan, re.M))
+        n_scan = len(re.findall(r"\(\d+\) Scan parquet", plan))
+        if n_ex == 0 and n_scan == 1:
+            notes.append("OK: one file scan, read as one partition (Coalesce 1), and no Exchange")
+        else:
+            problems.append(f"{title}: {n_ex} Exchanges and {n_scan} file scans (want 0 and 1)")
+        sections.append((f"{title} (the store read as one partition)", plan, notes))
+    for d in (ckpt31, store32):
+        shutil.rmtree(d, ignore_errors=True)
 
     out = io.StringIO()
     out.write("# PLANS — physical-plan audit (generated by tools/explain_plans.py)\n\n")

@@ -336,7 +336,7 @@ def write_drift_baselines(spark, df: DataFrame, manifest, path: str) -> dict[str
         baselines[rule.rule_id(manifest.id, rule.params["column"])] = compute_histogram(
             df, rule.params["column"], lo, hi, bins
         )
-    _hadoop_write_text(spark, path, json.dumps(baselines, indent=2))
+    _hadoop_write_bytes(*_hadoop_paths(spark, path), json.dumps(baselines, indent=2).encode("utf-8"))
     return baselines
 
 
@@ -346,24 +346,31 @@ def load_drift_baselines(spark, path: str) -> dict[str, dict]:
     return json.loads(_hadoop_read_text(spark, path))
 
 
-def _hadoop_write_text(spark, path: str, text: str) -> None:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
+def _hadoop_paths(spark, *paths: str) -> tuple:
+    """The Hadoop FileSystem of *paths* (the first one's) and each of them
+    as a Hadoop Path: any filesystem URI the session can reach, not just
+    the local disk."""
+    hadoop_path = spark._jvm.org.apache.hadoop.fs.Path
+    hadoop = [hadoop_path(p) for p in paths]
+    return (hadoop[0].getFileSystem(spark._jsc.hadoopConfiguration()), *hadoop)
+
+
+def _hadoop_write_bytes(fs, path, data: bytes) -> None:
+    """Write *data* as the file at the Hadoop Path *path* of *fs*,
+    replacing one there and creating missing parent directories. The
+    bytes cross to the JVM in one py4j command whatever their size."""
+    out = fs.create(path, True)
     try:
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
 
 
 def _hadoop_read_text(spark, path: str) -> str:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = _hadoop_paths(spark, path)
     stream = fs.open(p)
     try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
 

@@ -150,12 +150,13 @@ def test_null_instance_violation_fails_its_verdict(spark, days):
 # stats were sorted by Spark, 20 while the verdicts deduplicated their
 # universe and joined it to the violation counts, 17 while the lineage and
 # stats-store reads shuffled and the stats write re-aggregated the pending
-# rows): the input read, one lineage collect, one pending-count collect
-# that also computes the stats sketches, one verdict collect that fills
-# the persisted report, the two sink writes, the stats append and merge
-# collect, one lineage append and one FAIL-line collect, some of them
-# several jobs under adaptive execution.
-RESUME_JOBS = 13
+# rows, 13 while the stats and lineage appends were Spark writes): the
+# input's schema read, one lineage collect, one pending-count collect
+# that also computes the stats sketches (2 jobs), one verdict collect that
+# fills the persisted report (4 jobs), the two sink writes and the merged
+# stats collect. The stats and lineage appends are written on the driver,
+# and this clean input prints no FAIL line.
+RESUME_JOBS = 11
 
 
 def test_resume_job_count(spark, days, tmp_path, capsys):

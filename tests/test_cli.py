@@ -171,6 +171,74 @@ def test_cli_checkpoint_output_escaped_instance_names(spark, data, capsys):
     assert subdirs and all("%3A" in d for d in subdirs)
 
 
+# instance names that Spark's escapePathName leaves raw but are glob syntax
+# (',', '}'), that it %-escapes, and their raw-name decoys
+HOSTILE = ["a,b", "x}y", "{", "*", "?", "[", "%", "/", "=", "\\", "a-b", "é q"]
+DECOYS = ["a", "b", "x", "y", "x}", "ab", "%25", "plain"]
+
+
+def test_delete_instance_dirs_hostile_names(spark, tmp_path):
+    """The sink delete removes exactly the named instances' directories,
+    whatever their names, under an output root that is glob syntax itself,
+    and leaves every other directory, raw-name decoys included."""
+    from schema_enforcer_spark.cli import _delete_instance_dirs, escape_partition_value
+
+    root = str(tmp_path / "out [1] {a,b}*")
+    names = [*HOSTILE, *DECOYS, None]
+    df = spark.createDataFrame([(n, i) for i, n in enumerate(names)], "instance_name string, v int")
+    for sink in ("violations", "verdicts"):
+        df.write.partitionBy("instance_name").parquet(f"{root}/{sink}")
+    _delete_instance_dirs(spark, root, ("violations", "verdicts"), {*HOSTILE, None})
+    for sink in ("violations", "verdicts"):
+        left = {d for d in os.listdir(f"{root}/{sink}") if d.startswith("instance_name=")}
+        assert left == {f"instance_name={escape_partition_value(n)}" for n in DECOYS}
+    # nothing to delete, or no sink yet: no error
+    _delete_instance_dirs(spark, root, ("violations",), {"nope"})
+    _delete_instance_dirs(spark, str(tmp_path / "never"), ("violations",), set(HOSTILE))
+
+
+def test_cli_checkpoint_output_hostile_instance_names(spark, data, tmp_path, capsys):
+    """Every instance re-validated into an existing --output replaces its
+    rows, whatever its name: a second run from a fresh checkpoint (every
+    partition pending again) leaves the same rows in both sinks."""
+    names = ", ".join("'" + n.replace("\\", "\\\\").replace("'", "\\'") + "'" for n in HOSTILE)
+    expr = f"element_at(array({names}, CAST(NULL AS STRING)), CAST(partition_id % {len(HOSTILE) + 1} AS INT) + 1)"
+    out = str(tmp_path / "out")
+    args = ["--manifest", MANIFEST, "--input", data["bad"], "--output", out, "--instance-expr", expr]
+
+    def sinks():
+        return [sorted(map(repr, spark.read.parquet(f"{out}/{s}").collect())) for s in ("violations", "verdicts")]
+
+    assert main([*args, "--checkpoint", str(tmp_path / "c1")]) == 1
+    first = sinks()
+    assert main([*args, "--checkpoint", str(tmp_path / "c2")]) == 1
+    capsys.readouterr()
+    assert sinks() == first
+    verdicts = [r["instance_name"] for r in spark.read.parquet(f"{out}/verdicts").collect()]
+    assert len(verdicts) == len(set(verdicts)) and set(verdicts) - {None} <= set(HOSTILE)
+
+
+def test_cli_checkpoint_output_fail_then_pass_drops_stale_rows(spark, data, tmp_path, capsys):
+    """A FAILed partition that re-validates as PASS on fixed data loses its
+    violation rows in the --output sink, and its verdict row turns PASS."""
+    import pyarrow.dataset as ds
+
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    args = ["--manifest", MANIFEST, "--checkpoint", ckpt, "--output", out]
+    assert main([*args, "--input", data["bad"]]) == 1
+    failed = {r["instance_name"] for r in spark.read.parquet(f"{out}/verdicts").filter("result = 'FAIL'").collect()}
+    assert failed and ds.dataset(f"{out}/violations", format="parquet").count_rows() >= 1
+    fixed = str(tmp_path / "fixed")
+    gen_transcripts(spark, n_convs=15, seed=42).write.parquet(fixed)
+    assert main([*args, "--input", fixed]) == 0
+    capsys.readouterr()
+    assert ds.dataset(f"{out}/violations", format="parquet").count_rows() == 0
+    verdicts = spark.read.parquet(f"{out}/verdicts").collect()
+    assert {r["result"] for r in verdicts} == {"PASS"}
+    assert {r["instance_name"] for r in verdicts} >= failed
+    assert len(verdicts) == len({r["instance_name"] for r in verdicts})
+
+
 def test_checkpoint_empty_dir_is_first_run(spark, tmp_path):
     """A pre-created EMPTY checkpoint dir (ops mkdir -p, or a run that died
     before any commit) is first-run, not corruption."""

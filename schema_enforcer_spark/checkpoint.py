@@ -30,10 +30,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StructType
+from pyspark.sql.types import DataType
 
 from schema_enforcer_spark.compiler import _sql_lit
-from schema_enforcer_spark.engine import ValidationEngine, ValidationReport
+from schema_enforcer_spark.engine import ValidationEngine, ValidationReport, arrow_table, local_frame
 
 LINEAGE_SCHEMA_DDL = (
     "partition_id string, rule_set_hash string, schema_id string, verdict string, "
@@ -59,18 +59,6 @@ def _instance_rows(df: DataFrame, engine: ValidationEngine, stats_columns=()) ->
 def _instance_counts(df: DataFrame, engine: ValidationEngine) -> dict:
     """Row count of *df* per engine instance (NULL included)."""
     return {r[0]: r[1] for r in _instance_rows(df, engine)}
-
-
-def arrow_table(rows: list, schema: StructType):
-    """Driver-held *rows* (tuples or Rows in the field order of *schema*)
-    as one pyarrow table with Spark's Arrow form of *schema* (TIMESTAMP
-    as UTC-adjusted microseconds)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow = to_arrow_schema(schema)
-    columns = list(zip(*rows)) or [()] * len(arrow)
-    return pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow)
 
 
 def append_rows(spark: SparkSession, rows: list, ddl: str, path: str) -> None:
@@ -141,7 +129,7 @@ class CheckpointManager:
         except AnalysisException as e:
             cls = e.getCondition() if hasattr(e, "getCondition") else None
             if cls == "PATH_NOT_FOUND" or "[PATH_NOT_FOUND]" in str(e):
-                return self.spark.createDataFrame([], LINEAGE_SCHEMA_DDL)
+                return local_frame(self.spark, [], LINEAGE_SCHEMA_DDL)
             raise
         # a file written before run_ns existed reads it as NULL
         return df.withColumn("run_ns", F.expr("coalesce(run_ns, CAST(0 AS BIGINT))"))

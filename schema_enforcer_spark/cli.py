@@ -820,14 +820,13 @@ def _write_sinks(spark, args, report, verdicts: list) -> None:
             .filter(F.col("_rn") <= args.max_violations_per_rule)
             .drop("_rn")
         )
-    from schema_enforcer_spark.checkpoint import arrow_table
+    from schema_enforcer_spark.engine import local_frame
 
     root = args.output.rstrip("/")
     # from an Arrow table, not the list of Rows: a list is converted by
     # Python worker tasks (an 8-row sink write took 0.51 s from a list,
     # 0.24 s from Arrow, on a 4-core host)
-    schema = report.verdicts.schema
-    verdict_sink = spark.createDataFrame(arrow_table(verdicts, schema), schema)
+    verdict_sink = local_frame(spark, verdicts, report.verdicts.schema)
     if not args.checkpoint:
         sink_violations.write.mode("overwrite").parquet(f"{root}/violations")
         verdict_sink.write.mode("overwrite").parquet(f"{root}/verdicts")

@@ -21,17 +21,18 @@ Catalyst rules needed):
 One validation path: :func:`validate_many` checks an input against every
 engine in one row-rule scan, and ``ValidationEngine.validate`` is its
 one-engine call; the row explode (:func:`_row_violation_rows`) is the one
-place the InferFiltersFromGenerate defense lives. Every plan memo goes
-through :class:`_PlanMemo` (bounded, identity-pinned, never for a manifest
-with an eager rule kind).
+place the InferFiltersFromGenerate defense lives. Every evaluator builds a
+lazy plan and starts no Spark job (drift's histogram and KS/PSI are one
+global aggregate and SQL over its counts), so every plan memo goes through
+:class:`_PlanMemo` (bounded, identity-pinned).
 
 One violation shape. The row schema (``VIOLATION_COLUMNS``) mirrors the
 reference's ValidationResult (/root/reference/schema_enforcer/validation.py:11-32),
 the one type every validator's errors go through, and each part of it is
 built in one place: table evaluators project their rows through
 ``ValidationEngine._violation_rows``, every violation struct is a
-:func:`_violation`, the schema-level rows of strict_columns and drift come
-from ``_table_violations``, every ``schema_id`` is ``Rule.rule_id`` and
+:func:`_violation`, the table-grain rows of strict_columns and drift are
+``_table_violations`` projections, every ``schema_id`` is ``Rule.rule_id`` and
 every custom-message override is ``compiler.rule_message``. The four
 entry-array kinds share one loop (``_entry_violation_arrays``), in a fixed
 kind order.
@@ -42,6 +43,8 @@ pass, every violation row and the verdicts are SQL text (``F.expr``,
 ``compiler._sql_lit`` and ``compiler._sql_ident``: a pyspark call costs ~16
 py4j commands whatever its size, so one validate of the 15-rule transcripts
 manifest sends 135 of them instead of 5,043 (``tests/test_round_trips.py``).
+Driver-held rows (strict_columns' extra columns, the table verdict row, an
+empty violation set) become frames through Arrow (:func:`local_frame`).
 """
 
 from __future__ import annotations
@@ -58,7 +61,7 @@ from schema_enforcer_spark.compiler import (
     _Q, CompiledRule, _case, _concat, _dtype_in, _dtype_of, _failed, _lambda_var, _sql_ident, _sql_lit, compile_check,
     compile_row_rules, has_column_path, py_repr, rule_message,
 )
-from schema_enforcer_spark.manifest import FUSED_WINDOW, SCHEMA_PASS, SHARED_PATHS, Manifest, Rule
+from schema_enforcer_spark.manifest import FUSED_WINDOW, SCHEMA_PASS, SHARED_PATHS, Manifest, Rule, drift_baseline_errors
 
 VIOLATION_COLUMNS = [
     "schema_id",
@@ -75,6 +78,26 @@ _VIOLATION_SCHEMA_DDL = (
     "schema_id string, result string, instance_name string, instance_location string, "
     "instance_type string, absolute_path array<string>, failing_value string, message string"
 )
+
+
+def arrow_table(rows: list, schema: T.StructType):
+    """Driver-held *rows* (tuples or Rows in the field order of *schema*)
+    as one pyarrow table with Spark's Arrow form of *schema* (TIMESTAMP
+    as UTC-adjusted microseconds)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    return pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow)
+
+
+def local_frame(spark, rows: list, schema: T.StructType | str) -> DataFrame:
+    """Driver-held *rows* as a DataFrame of *schema* (a StructType or DDL),
+    through Arrow: Spark plans a LocalTableScan. ``createDataFrame(list)``
+    would plan a pickled-list RDD, converted by Python worker tasks."""
+    schema = T.DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
 
 
 def _strings(cols: list[str]) -> list[str]:
@@ -135,10 +158,7 @@ class _PlanMemo:
 
     A hit needs the same *tag* and every pinned object ``is``-identical; the
     entry holds its pins, so no id() is reused while it lives. At most
-    ``SIZE`` entries, the oldest evicted first. A plan over a manifest with
-    an eager rule kind (its evaluator runs Spark jobs at plan build: drift's
-    histogram collect) is never memoized — that would reuse computed DATA,
-    not a plan."""
+    ``SIZE`` entries, the oldest evicted first."""
 
     SIZE = 8
 
@@ -148,9 +168,7 @@ class _PlanMemo:
     def __len__(self) -> int:
         return len(self._store)
 
-    def get(self, tag: tuple, pins: tuple, build, manifests: tuple[Manifest, ...] = ()):
-        if any(r.rule_kind.eager for m in manifests for r in m.table_rules):
-            return build()
+    def get(self, tag: tuple, pins: tuple, build):
         key = (tag, tuple(map(id, pins)))
         hit = self._store.get(key)
         if hit is not None and all(a is b for a, b in zip(hit[0], pins)):
@@ -350,14 +368,13 @@ class ValidationEngine:
             *[f"{v} AS {n}" for n, v in self._violation_fields(schema_id, instance, path, failing, message)]
         )
 
-    def _table_violations(self, df: DataFrame, rid: str, rows: list[tuple[list[str], str, str]]) -> DataFrame:
+    def _table_violations(self, frame: DataFrame, rid: str, path: str, failing: str, message: str) -> DataFrame:
         """Violations of the input's schema or distribution as a whole
-        (strict_columns, drift), built on the driver from (absolute_path,
-        failing_value, message) rows, on the synthetic 'table' instance at
-        grain TABLE."""
-        return df.sparkSession.createDataFrame(
-            [(rid, "FAIL", "table", self.manifest.table, "TABLE", *row) for row in rows], _VIOLATION_SCHEMA_DDL
-        )
+        (strict_columns, drift): *frame* projected like
+        :meth:`_violation_rows`, on the synthetic 'table' instance at grain
+        TABLE."""
+        fields = dict(self._violation_fields(_sql_lit(rid), "'table'", path, failing, message), instance_type="'TABLE'")
+        return frame.selectExpr(*[f"{v} AS {n}" for n, v in fields.items()])
 
     # -- row rules ---------------------------------------------------------
 
@@ -1202,10 +1219,40 @@ class ValidationEngine:
         )
 
     def _drift_violations(self, df: DataFrame, rule: Rule, ref_tables: dict[str, DataFrame]) -> DataFrame:
-        """A8: KS/PSI of the column's histogram against its baseline."""
-        from schema_enforcer_spark.stats import drift_violations
+        """A8: KS or PSI of the histogram of the rule's column (a SQL
+        expression, e.g. ``length(text)``) against its baseline histogram;
+        one violation row iff the statistic exceeds the threshold. The
+        baseline is the rule's inline ``baseline``, else the stored one of
+        the rule id (the --write-baseline/--baseline lifecycle); with
+        neither, or a malformed one, the plan build raises.
 
-        return drift_violations(self, df, rule)
+        One lazy plan: the histogram is one global aggregate over the input
+        (:func:`stats.histogram_sql`) and the statistic is SQL over its
+        bins + 2 counts, so nothing row-sized reaches the driver and no job
+        runs at plan build. The statistic is rendered as Python's
+        ``f"{x:.6f}"`` would: ``format_number`` rounds the double's exact
+        binary value half-even."""
+        from schema_enforcer_spark.stats import drift_statistic_sql, histogram_sql
+
+        expr, metric = rule.params["column"], rule.params["metric"]
+        rid = rule.rule_id(self.manifest.id, expr)
+        base = rule.get("baseline") or self.drift_baselines.get(rid)
+        if base is None:
+            raise RuntimeError(f"drift rule {rid!r} has no baseline: inline one in the manifest or run the CLI "
+                               "with --checkpoint + --write-baseline first, then validate with --baseline")
+        if errors := drift_baseline_errors(base):
+            raise ValueError(f"drift rule {rid!r}: {'; '.join(errors)}")
+        threshold = float(rule.params["threshold"])
+        hist = df.agg(F.expr(f"{histogram_sql(expr, base['lo'], base['hi'], base['bins'])} AS _h"))
+        # the aggregate's one column is `_h`, so the statistic's lambda
+        # variables shadow nothing
+        stat = f"{drift_statistic_sql(metric, base['counts'], '_h')} AS _stat"
+        drifted = hist.selectExpr(stat).filter(f"_stat > {_sql_lit(threshold)}")
+        shown = "format_number(_stat, '0.000000')"
+        message = rule_message(rule, _concat(
+            _sql_lit(f"distribution drift on {expr}: {metric}="), shown, _sql_lit(f" exceeds threshold {threshold}"),
+        ))
+        return self._table_violations(drifted, rid, f"array({_sql_lit(expr)})", shown, message)
 
     def _strict_violations(self, df: DataFrame, rule: Rule | None) -> DataFrame | None:
         # additionalProperties:false — compile-time set diff over the SCHEMA,
@@ -1247,7 +1294,9 @@ class ValidationEngine:
         if not extras:
             return None
         rows = [([*path_prefix, c], c, f"Additional properties are not allowed ('{c}' was unexpected)") for c in extras]
-        return self._table_violations(df, (rule or Rule("strict_columns")).rule_id(self.manifest.id), rows)
+        rid = (rule or Rule("strict_columns")).rule_id(self.manifest.id)
+        frame = local_frame(df.sparkSession, rows, "path array<string>, failing string, message string")
+        return self._table_violations(frame, rid, "path", "failing", "message")
 
     # -- orchestration -----------------------------------------------------
 
@@ -1259,14 +1308,13 @@ class ValidationEngine:
     ) -> DataFrame:
         """Assemble the full violations frame. Construction is memoized per
         (input identity, ref-table identities, include_row_rules) through
-        :class:`_PlanMemo`; manifests with an eager rule kind never are."""
+        :class:`_PlanMemo`."""
         ref_tables = ref_tables or {}
         names, refs = _ref_pins(ref_tables)
         return self._plan_memo.get(
             ("violations", include_row_rules, names),
             (df, *refs),
             lambda: self._violations_impl(df, ref_tables, include_row_rules),
-            (self.manifest,),
         )
 
     def _violations_impl(
@@ -1320,12 +1368,12 @@ class ValidationEngine:
                 raise NotImplementedError(f"table rule kind {rule.kind!r} has no evaluator")
             parts.append(fn(df, rule, ref_tables))
         if not parts:
-            return df.sparkSession.createDataFrame([], _VIOLATION_SCHEMA_DDL)
+            return local_frame(df.sparkSession, [], _VIOLATION_SCHEMA_DDL)
         return reduce(lambda a, b: a.unionByName(b), parts)
 
     def verdicts(self, df: DataFrame, violations: DataFrame) -> DataFrame:
-        # construction-only memo: the verdict plan is always lazy (no eager
-        # evaluator runs here), so the exact (df, violations) pair keys it
+        # construction-only memo: the verdict plan is lazy, so the exact
+        # (df, violations) pair keys it
         return self._plan_memo.get(("verdicts",), (df, violations), lambda: _verdicts(
             [self], df, violations.selectExpr("*", f"{_sql_lit(self.manifest.id)} AS _mid")
         ))
@@ -1342,9 +1390,8 @@ class ValidationEngine:
             "_mid", "instance_name", "instance_type AS grain", "1 AS _marker"
         )
         if self.manifest.strict or any(r.rule_kind.table_verdict for r in self.manifest.table_rules):
-            rows = rows.unionByName(df.sparkSession.createDataFrame(
-                [(mid, "table", "TABLE", None)], "_mid string, instance_name string, grain string, _marker int"
-            ))
+            marker = "_mid string, instance_name string, grain string, _marker int"
+            rows = rows.unionByName(local_frame(df.sparkSession, [(mid, "table", "TABLE", None)], marker))
         return rows
 
     def validate(
@@ -1445,7 +1492,7 @@ def _validate_plan(
             )
         )
     if not parts:
-        parts.append(df.sparkSession.createDataFrame([], f"{_VIOLATION_SCHEMA_DDL}, _mid string"))
+        parts.append(local_frame(df.sparkSession, [], f"{_VIOLATION_SCHEMA_DDL}, _mid string"))
     all_v = reduce(lambda a, b: a.unionByName(b), parts)
     return all_v, _verdicts(engines, df, all_v)
 
@@ -1495,7 +1542,6 @@ def validate_many(
         ("validate_many", names),
         (df, *engines, *refs),
         lambda: _validate_plan(engines, df, ref_tables),
-        tuple(e.manifest for e in engines),
     )
     if cache_violations:
         from pyspark.storagelevel import StorageLevel

@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -63,9 +64,6 @@ class RuleKind:
     composable: bool = False
     # may be the `check` of an items rule (compiler.compile_check handles it)
     element: bool = False
-    # the evaluator runs Spark jobs while the plan is built, so the engine's
-    # plan memo must never reuse its output
-    eager: bool = False
     # a missing column fails every row as a missing required property
     missing_fails: bool = False
     # violations land on the synthetic 'table' instance, so the verdicts
@@ -154,10 +152,7 @@ RULE_KIND_TABLE: dict[str, RuleKind] = {k.name: k for k in (
     # A8: KS/PSI vs a baseline histogram; the baseline may instead come from
     # a stored baseline file, so inline baseline or lo+hi bounds are checked
     # separately
-    RuleKind(
-        "drift", TABLE, ("column", "metric", "threshold"), "_drift_violations",
-        eager=True, table_verdict=True,
-    ),
+    RuleKind("drift", TABLE, ("column", "metric", "threshold"), "_drift_violations", table_verdict=True),
     # J4 extension: FK multiplicity — key matches [min_count, max_count]
     # rows of ref_table
     RuleKind("cardinality", TABLE, ("columns", "ref_table", "ref_columns"), "_cardinality_violations"),
@@ -263,7 +258,7 @@ MANIFEST_META_SCHEMA: dict[str, Any] = {
                     "baseline": {},
                     "lo": {"type": "number"},
                     "hi": {"type": "number"},
-                    "bins": {"type": "integer"},
+                    "bins": {"type": "integer", "minimum": 1},
                     "message": {"type": "string"},
                     "id": {"type": "string"},
                     "field": {"type": "string"},
@@ -430,6 +425,27 @@ def _sub_check_errors(at: str, site: str, sub: Any, spec: dict[str, Any], lam, b
     return errors
 
 
+def drift_baseline_errors(base: Any) -> list[str]:
+    """What is wrong with a drift baseline histogram (the
+    ``stats.compute_histogram`` dict): ``lo < hi`` numbers, an integer
+    ``bins >= 1`` and ``bins + 2`` non-negative integer ``counts``. Checked
+    for an inline baseline at load and for a stored one at plan build: a
+    count list of another length would be compared bucket by bucket
+    against the wrong buckets."""
+    if not isinstance(base, dict):
+        return ["baseline must be an object with lo, hi, bins and counts"]
+    lo, hi, bins, counts = (base.get(k) for k in ("lo", "hi", "bins", "counts"))
+    errors = []
+    # type(), not isinstance(): a bool is an int
+    if not (type(lo) in (int, float) and type(hi) in (int, float) and math.isfinite(hi - lo) and lo < hi):
+        errors.append(f"baseline lo and hi must be numbers with lo < hi, got {lo!r} and {hi!r}")
+    if not (type(bins) is int and bins >= 1):
+        errors.append(f"baseline bins must be an integer >= 1, got {bins!r}")
+    elif not (type(counts) is list and len(counts) == bins + 2 and all(type(c) is int and c >= 0 for c in counts)):
+        errors.append(f"baseline counts must be a list of bins + 2 = {bins + 2} non-negative integers")
+    return errors
+
+
 def _cross_field_errors(at: str, kind: str, rule: dict[str, Any]) -> list[str]:
     """Kind-specific constraints between a rule's fields."""
     errors: list[str] = []
@@ -481,7 +497,9 @@ def _cross_field_errors(at: str, kind: str, rule: dict[str, Any]) -> list[str]:
                 "'value_pattern' (the rule's own 'pattern' matches KEYS; "
                 "reusing it for values is almost never intended)"
             )
-    elif kind == "drift" and "baseline" not in rule and not ({"lo", "hi"} <= rule.keys()):
+    elif kind == "drift" and "baseline" in rule:
+        errors += [f"{at}: drift {e}" for e in drift_baseline_errors(rule["baseline"])]
+    elif kind == "drift" and not ({"lo", "hi"} <= rule.keys()):
         errors.append(
             f"{at}: drift rule needs an inline 'baseline' histogram or "
             "'lo'+'hi' bucket bounds (for the stored-baseline flow)"

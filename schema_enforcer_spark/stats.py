@@ -7,18 +7,15 @@ the reference validates one document at a time and has no stats layer):
   HyperLogLog sketches per (partition, column) via Spark's built-in
   ``hll_sketch_agg``, persisted under the checkpoint dir so a resumed run
   merges them with ``hll_union_agg`` instead of rescanning.
-- ``compute_histogram`` / ``ks_statistic`` / ``psi``: fixed-edge histograms
-  via ``width_bucket`` + groupBy (distributed), drift math on the tiny
-  histogram itself (driver or single-stage — never on raw rows).
-- ``drift_violations``: manifest rule adapter — KS/PSI of the current table
-  vs a stored baseline histogram on e.g. ``length(text)`` (turn length) or
-  a ts-gap column the caller adds with a ``lag`` window, emitting violation
-  rows compatible with the engine.
+- ``histogram_sql`` / ``drift_statistic_sql``: a fixed-edge histogram as
+  one global aggregate (``count_if`` per ``width_bucket``), and KS/PSI as
+  SQL over its ``bins+2`` counts — the drift rule (``engine``'s
+  ``_drift_violations``) is one lazy plan, never math on raw rows.
+  ``compute_histogram`` collects the histogram for a stored baseline
+  (``write_drift_baselines``, the ``--write-baseline`` CLI lifecycle).
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -255,51 +252,56 @@ def quantile_accuracy_report(
 # ---------------------------------------------------------------------------
 
 
-def histogram_df(df: DataFrame, expr: str, lo: float, hi: float, bins: int = 32) -> DataFrame:
-    """Distributed fixed-edge histogram: (bucket int, n long). Bucket 0 is
-    underflow, bins+1 overflow (width_bucket semantics); NULLs are dropped."""
-    x = F.expr(expr).cast("double")
-    return (
-        df.select(F.width_bucket(x, F.lit(float(lo)), F.lit(float(hi)), F.lit(bins)).alias("bucket"))
-        .filter(F.col("bucket").isNotNull())
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+def histogram_sql(expr: str, lo: float, hi: float, bins: int) -> str:
+    """The fixed-edge histogram of the SQL expression *expr* as ONE global
+    aggregate (SQL text): an array of the ``bins + 2`` bucket counts,
+    bucket 0 the underflow and ``bins + 1`` the overflow (width_bucket
+    semantics); NULLs count nowhere. The one definition of a histogram,
+    shared by :func:`compute_histogram` and the drift rule's plan."""
+    from schema_enforcer_spark.compiler import _sql_lit
+
+    # the caller's SQL on lines of its own, so a trailing `--` comment ends
+    # before the generated text resumes
+    bucket = f"width_bucket(CAST((\n{expr}\n) AS DOUBLE), {_sql_lit(float(lo))}, {_sql_lit(float(hi))}, {int(bins)})"
+    return f"array({', '.join(f'count_if({bucket} = {i})' for i in range(bins + 2))})"
 
 
 def compute_histogram(df: DataFrame, expr: str, lo: float, hi: float, bins: int = 32) -> dict:
     """Collect a histogram to a plain dict — the stored-baseline format.
-    Only `bins+2` rows ever reach the driver."""
-    rows = histogram_df(df, expr, lo, hi, bins).collect()
-    counts = [0] * (bins + 2)
-    for r in rows:
-        counts[int(r["bucket"])] = int(r["n"])
-    return {"expr": expr, "lo": lo, "hi": hi, "bins": bins, "counts": counts}
+    One aggregate row of `bins+2` counts reaches the driver."""
+    counts = df.agg(F.expr(histogram_sql(expr, lo, hi, bins))).collect()[0][0]
+    return {"expr": expr, "lo": lo, "hi": hi, "bins": bins, "counts": list(counts)}
 
 
-def _normalize(counts: list[int], eps: float = 1e-6) -> list[float]:
-    total = sum(counts)
-    if total == 0:
-        return [eps] * len(counts)
-    return [max(c / total, eps) for c in counts]
+def drift_statistic_sql(metric: str, baseline_counts: list[int], counts: str) -> str:
+    """KS or PSI (SQL text) of the histogram *counts* (SQL, an array of
+    bucket counts) against *baseline_counts*, both normalized to shares
+    with a 1e-6 floor (an empty histogram is 1e-6 everywhere).
 
+    KS is the largest |CDF_baseline - CDF_current| over the running sums;
+    PSI is ``sum((p - q) * ln(p / q))``. Both fold the buckets left to
+    right, as a Python loop over the two lists would, so KS matches such a
+    loop bit for bit and PSI to the last place of ``ln``. The arrays must
+    have the same length: ``zip_with`` pads the shorter with NULLs."""
 
-def ks_statistic(p_counts: list[int], q_counts: list[int]) -> float:
-    """Two-sample KS on binned data: max |CDF_p - CDF_q|."""
-    p, q = _normalize(p_counts), _normalize(q_counts)
-    sp = sq = 0.0
-    best = 0.0
-    for a, b in zip(p, q):
-        sp += a
-        sq += b
-        best = max(best, abs(sp - sq))
-    return best
+    def shares(arr: str) -> str:
+        # the total is the aggregate's own result, bound as `_n` in the
+        # finish lambda, so it is summed once, not once per bucket
+        return (
+            f"aggregate({arr}, 0L, (_n, _c) -> _n + _c, _n -> transform({arr}, _c -> "
+            "CASE WHEN _n = 0 THEN 1.0E-6D ELSE greatest(CAST(_c AS DOUBLE) / _n, 1.0E-6D) END))"
+        )
 
-
-def psi(p_counts: list[int], q_counts: list[int]) -> float:
-    """Population Stability Index: sum((p-q) * ln(p/q)) over bins."""
-    p, q = _normalize(p_counts), _normalize(q_counts)
-    return sum((a - b) * math.log(a / b) for a, b in zip(p, q))
+    baseline = f"array({', '.join(f'{int(c)}L' for c in baseline_counts)})"
+    pairs = f"{shares(baseline)}, {shares(counts)}"
+    if metric == "ks":
+        return (
+            f"aggregate(zip_with({pairs}, (_p, _q) -> named_struct('p', _p, 'q', _q)), "
+            "named_struct('sp', 0.0D, 'sq', 0.0D, 'best', 0.0D), "
+            "(_s, _x) -> named_struct('sp', _s.sp + _x.p, 'sq', _s.sq + _x.q, "
+            "'best', greatest(_s.best, abs((_s.sp + _x.p) - (_s.sq + _x.q)))), _s -> _s.best)"
+        )
+    return f"aggregate(zip_with({pairs}, (_p, _q) -> (_p - _q) * ln(_p / _q)), 0.0D, (_s, _x) -> _s + _x)"
 
 
 # ---------------------------------------------------------------------------
@@ -373,35 +375,3 @@ def _hadoop_read_text(spark, path: str) -> str:
         return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
-
-
-def drift_violations(engine, df: DataFrame, rule) -> DataFrame:
-    """Manifest `drift` rule: compare df's histogram of rule.column (a SQL
-    expression, e.g. 'length(text)') against the baseline histogram
-    ({lo, hi, bins, counts}) using KS or PSI; one violation row iff the
-    statistic exceeds rule.threshold. The baseline is the rule's inline
-    ``baseline`` when present, else the engine's stored baselines (the
-    --write-baseline/--baseline lifecycle) keyed by rule id; neither
-    existing raises loudly rather than silently passing.
-
-    The raw-data pass is a distributed histogram; the drift statistic is
-    computed on ≤ bins+2 numbers. At 10^12 rows the scan dominates and
-    parallelizes perfectly; nothing row-sized ever reaches the driver.
-    """
-    rid = rule.rule_id(engine.manifest.id, rule.params["column"])
-    base = rule.get("baseline") or getattr(engine, "drift_baselines", {}).get(rid)
-    if base is None:
-        raise RuntimeError(
-            f"drift rule {rid!r} has no baseline: inline one in the "
-            "manifest or run the CLI with --checkpoint + --write-baseline "
-            "first, then validate with --baseline"
-        )
-    metric = rule.params["metric"]
-    threshold = float(rule.params["threshold"])
-    expr = rule.params["column"]
-    cur = compute_histogram(df, expr, float(base["lo"]), float(base["hi"]), int(base["bins"]))
-    stat = ks_statistic(base["counts"], cur["counts"]) if metric == "ks" else psi(base["counts"], cur["counts"])
-    if stat <= threshold:
-        return engine._table_violations(df, rid, [])
-    message = rule.message_or(f"distribution drift on {expr}: {metric}={stat:.6f} exceeds threshold {threshold}")
-    return engine._table_violations(df, rid, [([expr], f"{stat:.6f}", message)])

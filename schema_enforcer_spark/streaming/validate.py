@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from schema_enforcer_spark.engine import ValidationEngine
+from schema_enforcer_spark.engine import ValidationEngine, local_frame
 from schema_enforcer_spark.manifest import Manifest
 
 
@@ -137,12 +137,12 @@ def stream_drift(
     Each micro-batch's distribution of every ``drift`` rule's column is
     compared against the SAME stored baselines the batch path uses
     (``--write-baseline`` → ``_drift_baselines.json``,
-    stats.baseline_store_path), with the same KS/PSI math
-    (stats.drift_violations — the histogram is a distributed pass, the
-    statistic is computed on ≤ bins+2 numbers, so per-batch driver state is
-    tiny and bounded). Violations for a drifting batch go to
-    ``on_violations(batch_id, violations_df)``; a batch matching the
-    baseline emits nothing.
+    stats.baseline_store_path), by the batch evaluator itself
+    (``ValidationEngine._drift_violations``: one histogram aggregate per
+    rule, KS/PSI over its ≤ bins+2 counts). The batch's drift plan runs
+    once: its rows (at most one per rule) are collected, and a drifting
+    batch's go to ``on_violations(batch_id, violations_df)`` as a frame of
+    those rows; a batch matching the baseline emits nothing.
 
     Returns a started-ready ``DataStreamWriter`` (caller sets
     checkpointLocation/trigger and calls ``start()``), foreachBatch over
@@ -151,8 +151,7 @@ def stream_drift(
     """
     from functools import reduce
 
-    from schema_enforcer_spark.engine import ValidationEngine as _VE
-    from schema_enforcer_spark.stats import drift_violations, load_drift_baselines
+    from schema_enforcer_spark.stats import load_drift_baselines
 
     rules = [r for r in manifest.table_rules if r.kind == "drift"]
     if not rules:
@@ -166,11 +165,10 @@ def stream_drift(
             # late-bound so the baseline written batch-side just before
             # start() is picked up; loaded once, then reused every batch
             resolved = load_drift_baselines(batch_df.sparkSession, baselines_path)
-        eng = _VE(manifest, drift_baselines=resolved, **engine_kw)
-        parts = [drift_violations(eng, batch_df, r) for r in rules]
-        viols = reduce(lambda a, b: a.unionByName(b), parts)
-        if viols.limit(1).count() > 0:
-            on_violations(batch_id, viols)
+        eng = ValidationEngine(manifest, drift_baselines=resolved, **engine_kw)
+        viols = reduce(lambda a, b: a.unionByName(b), [eng._drift_violations(batch_df, r, {}) for r in rules])
+        if rows := viols.collect():
+            on_violations(batch_id, local_frame(batch_df.sparkSession, rows, viols.schema))
 
     if resolved is None and baselines_path is None:
         raise ValueError("stream_drift needs `baselines` or `baselines_path`")

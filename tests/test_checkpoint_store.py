@@ -17,7 +17,8 @@ import pyarrow.dataset as ds
 import pytest
 from pyspark.sql.types import DataType, TimestampType
 
-from schema_enforcer_spark.checkpoint import LINEAGE_SCHEMA_DDL, CheckpointManager, append_rows, arrow_table
+from schema_enforcer_spark.checkpoint import LINEAGE_SCHEMA_DDL, CheckpointManager, append_rows
+from schema_enforcer_spark.engine import arrow_table
 from schema_enforcer_spark.stats import STATS_SCHEMA_DDL, merged_column_stats
 
 HASH = "h'1\\"

@@ -31,6 +31,7 @@ _RANGE = "rules/0: range rule needs at least one bound"
 _LENGTH = "rules/0: length rule needs min_length or max_length"
 _SCALAR = "must be a scalar row-rule kind, got"
 _PP = {"kind": "pattern_properties", "column": "a", "pattern": "^x"}
+_DRIFT = {"kind": "drift", "column": "a", "metric": "ks", "threshold": 0.1}
 
 CASES = [
     # -- items ---------------------------------------------------------------
@@ -135,6 +136,20 @@ CASES = [
     ("drift_half_bounds", {"kind": "drift", "column": "a", "metric": "psi", "threshold": 0.1, "lo": 0},
      ["rules/0: drift rule needs an inline 'baseline' histogram or 'lo'+'hi' bucket bounds "
       "(for the stored-baseline flow)"]),
+    ("drift_baseline_short_counts", {**_DRIFT, "baseline": {"lo": 0, "hi": 10, "bins": 16, "counts": [5, 5, 5]}},
+     ["rules/0: drift baseline counts must be a list of bins + 2 = 18 non-negative integers"]),
+    ("drift_baseline_lo_over_hi", {**_DRIFT, "baseline": {"lo": 5, "hi": 1, "bins": 1, "counts": [1, 2, 3]}},
+     ["rules/0: drift baseline lo and hi must be numbers with lo < hi, got 5 and 1"]),
+    ("drift_baseline_negative_bins", {**_DRIFT, "baseline": {"lo": 0, "hi": 1, "bins": -3, "counts": []}},
+     ["rules/0: drift baseline bins must be an integer >= 1, got -3"]),
+    ("drift_baseline_counts_not_list", {**_DRIFT, "baseline": {"lo": 0, "hi": 1, "bins": 1, "counts": "x"}},
+     ["rules/0: drift baseline counts must be a list of bins + 2 = 3 non-negative integers"]),
+    ("drift_baseline_negative_count", {**_DRIFT, "baseline": {"lo": 0, "hi": 1, "bins": 1, "counts": [1, -2, 0]}},
+     ["rules/0: drift baseline counts must be a list of bins + 2 = 3 non-negative integers"]),
+    ("drift_baseline_not_object", {**_DRIFT, "baseline": [1, 2, 3]},
+     ["rules/0: drift baseline must be an object with lo, hi, bins and counts"]),
+    ("drift_zero_bins", {**_DRIFT, "lo": 0, "hi": 1, "bins": 0},
+     ["rules/0/bins: 0 is less than the minimum of 1"]),
     ("cardinality_no_counts",
      {"kind": "cardinality", "columns": ["a"], "ref_table": "t", "ref_columns": ["b"]},
      ["rules/0: cardinality rule needs min_count and/or max_count"]),

@@ -1,7 +1,6 @@
 """Plan-assembly memo (engine._PlanMemo): repeating a validation over the
 same inputs builds each plan once; a different input, ref table or engine
-list rebuilds; a manifest with an eager rule kind is never memoized; every
-store stays bounded."""
+list rebuilds; every store stays bounded."""
 
 from __future__ import annotations
 
@@ -105,29 +104,23 @@ def test_different_inputs_rebuild(transcripts, conversations, refs, builds):
     assert builds["row_array"] == before["row_array"] + 1  # only `other`'s
 
 
-def test_eager_kinds_never_memoized(spark, transcripts, builds):
-    from schema_enforcer_spark.stats import compute_histogram
+@pytest.mark.parametrize("kind", ["equals_table", "drift"])
+def test_equals_table_is_memoized(transcripts, builds, kind):
+    """equals_table and drift build lazy plans (one full-outer join; one
+    global histogram aggregate), no job at plan build, so a repeat over
+    the same frames is a memo hit."""
+    if kind == "drift":
+        from schema_enforcer_spark.stats import compute_histogram
 
-    baseline = compute_histogram(transcripts, "turn_idx", 0.0, 20.0, 10)
-    rule = {"kind": "drift", "column": "turn_idx", "metric": "psi", "threshold": 0.2, "baseline": baseline}
-    ref_tables = {}
-    eng = _engine({"id": "schemas/memo_drift", "table": "transcripts", "rules": [rule]})
-    eng.violations(transcripts, ref_tables)
-    eng.violations(transcripts, ref_tables)
-    assert builds["violations"] == 2
-    eng.validate(transcripts, ref_tables, cache_violations=False)
-    eng.validate(transcripts, ref_tables, cache_violations=False)
-    assert builds["violations"] == 4
-    assert builds["verdicts"] == 2
-    assert len(eng._plan_memo) == 0
-
-
-def test_equals_table_is_memoized(transcripts, builds):
-    """equals_table builds a lazy plan (one full-outer join, no job at plan
-    build), so a repeat over the same frames is a memo hit."""
-    rule = {"kind": "equals_table", "columns": ["conv_id", "turn_idx"], "ref_table": "reference", "compare": ["text"]}
-    ref_tables = {"reference": transcripts}
-    eng = _engine({"id": "schemas/memo_equals", "table": "transcripts", "rules": [rule]})
+        baseline = compute_histogram(transcripts, "turn_idx", 0.0, 20.0, 10)
+        rule = {"kind": "drift", "column": "turn_idx", "metric": "psi", "threshold": 0.2, "baseline": baseline}
+        ref_tables = {}
+    else:
+        rule = {
+            "kind": "equals_table", "columns": ["conv_id", "turn_idx"], "ref_table": "reference", "compare": ["text"],
+        }
+        ref_tables = {"reference": transcripts}
+    eng = _engine({"id": f"schemas/memo_{kind}", "table": "transcripts", "rules": [rule]})
     v = eng.violations(transcripts, ref_tables)
     assert eng.violations(transcripts, ref_tables) is v
     assert builds["violations"] == 1
@@ -150,7 +143,7 @@ def test_stores_stay_bounded(transcripts, refs):
 
 
 def test_plan_memo_contract():
-    """No Spark: identity pins, oldest-first eviction, eager manifests."""
+    """No Spark: identity pins, oldest-first eviction."""
     built = []
 
     def build(v):
@@ -176,12 +169,3 @@ def test_plan_memo_contract():
     # the oldest entries went first: ("t", a) is gone, the newest survive
     assert memo.get(("t",), (a,), build("again")) == "again"
     assert memo.get((), (pins[-1],), build("miss")) == _PlanMemo.SIZE - 1
-
-    eager = manifest_from_dict({
-        "id": "schemas/memo_eager", "table": "t",
-        "rules": [{"kind": "drift", "column": "v", "metric": "psi", "threshold": 0.2, "lo": 0, "hi": 1}],
-    })
-    n = len(memo)
-    assert memo.get(("e",), (a,), build("x"), (eager,)) == "x"
-    assert memo.get(("e",), (a,), build("y"), (eager,)) == "y"
-    assert len(memo) == n

@@ -1,17 +1,76 @@
 """Stats layer: exact column stats, HLL sketch persistence/merge,
-histograms, KS/PSI math, and the drift manifest rule end-to-end."""
+histograms, the SQL KS/PSI against a Python reference, and the drift
+manifest rule end-to-end."""
 
 from __future__ import annotations
 
 import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from schema_enforcer_spark import stats
 from schema_enforcer_spark.engine import ValidationEngine
-from schema_enforcer_spark.manifest import Manifest, Rule
+from schema_enforcer_spark.manifest import Manifest, Rule, manifest_from_dict
 from schema_enforcer_spark.synth import gen_transcripts
+
+
+# -- the Python reference the SQL statistics are checked against ------------
+
+
+def _normalize(counts: list[int], eps: float = 1e-6) -> list[float]:
+    total = sum(counts)
+    if total == 0:
+        return [eps] * len(counts)
+    return [max(c / total, eps) for c in counts]
+
+
+def ks_statistic(p_counts: list[int], q_counts: list[int]) -> float:
+    """Two-sample KS on binned data: max |CDF_p - CDF_q|."""
+    p, q = _normalize(p_counts), _normalize(q_counts)
+    sp = sq = 0.0
+    best = 0.0
+    for a, b in zip(p, q):
+        sp += a
+        sq += b
+        best = max(best, abs(sp - sq))
+    return best
+
+
+def psi(p_counts: list[int], q_counts: list[int]) -> float:
+    """Population Stability Index: sum((p-q) * ln(p/q)) over bins."""
+    p, q = _normalize(p_counts), _normalize(q_counts)
+    return sum((a - b) * math.log(a / b) for a, b in zip(p, q))
+
+
+def _counts(n: int):
+    return st.one_of(st.just([0] * n), st.lists(st.integers(0, 10**6), min_size=n, max_size=n))
+
+
+_PAIRS = st.lists(
+    st.integers(3, 34).flatmap(lambda n: st.tuples(_counts(n), _counts(n), st.floats(0.0, 2.0))),
+    min_size=1, max_size=16,
+)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(pairs=_PAIRS)
+def test_sql_drift_statistics_match_reference(spark, pairs):
+    """KS bit for bit; PSI to 1e-15 relative (``ln`` and ``math.log`` may
+    differ in the last place), with the same `> threshold` decision."""
+    exprs = []
+    for i, (base, cur, _) in enumerate(pairs):
+        cur_sql = f"array({', '.join(f'{c}L' for c in cur)})"
+        for metric in ("ks", "psi"):
+            exprs.append(f"{stats.drift_statistic_sql(metric, base, cur_sql)} AS {metric}{i}")
+    row = spark.range(1).selectExpr(*exprs).collect()[0]
+    for i, (base, cur, threshold) in enumerate(pairs):
+        assert row[f"ks{i}"] == ks_statistic(base, cur)
+        want = psi(base, cur)
+        assert row[f"psi{i}"] == pytest.approx(want, rel=1e-15, abs=0.0)
+        assert (row[f"psi{i}"] > threshold) == (want > threshold)
 
 
 def test_exact_stats_native_type_order(spark):
@@ -22,12 +81,56 @@ def test_exact_stats_native_type_order(spark):
 
 def test_histogram_and_ks_psi(spark, transcripts):
     hist = stats.compute_histogram(transcripts, "length(text)", lo=0.0, hi=400.0, bins=16)
-    assert sum(hist["counts"]) == transcripts.count()
-    assert stats.ks_statistic(hist["counts"], hist["counts"]) == 0.0
-    assert stats.psi(hist["counts"], hist["counts"]) == pytest.approx(0.0)
+    lengths = [r[0] for r in transcripts.selectExpr("length(text)").collect()]
+    want = [0] * 18
+    for x in lengths:
+        want[0 if x < 0 else 17 if x >= 400 else int(x // 25) + 1] += 1
+    assert hist["counts"] == want
+    assert ks_statistic(hist["counts"], hist["counts"]) == 0.0
+    assert psi(hist["counts"], hist["counts"]) == pytest.approx(0.0)
     shifted = [0, 0] + hist["counts"][:-2]
-    assert stats.ks_statistic(hist["counts"], shifted) > 0.05
-    assert stats.psi(hist["counts"], shifted) > 0.05
+    assert ks_statistic(hist["counts"], shifted) > 0.05
+    assert psi(hist["counts"], shifted) > 0.05
+
+
+def _drift_manifest(baseline=None, **rule) -> Manifest:
+    spec = {"kind": "drift", "column": "v", "metric": "ks", "threshold": 0.0, **rule}
+    if baseline is not None:
+        spec["baseline"] = baseline
+    return manifest_from_dict({"id": "schemas/drift_sql", "table": "t", "rules": [spec]})
+
+
+def test_drift_message_renders_ties_as_python(spark):
+    """KS is exactly 1/128 here: the message rounds it half-even, as
+    Python's f"{x:.6f}" does (Java's %.6f gives 0.007813)."""
+    df = spark.range(128).selectExpr(
+        "CASE WHEN id < 32 THEN -1.0D WHEN id < 63 THEN 0.5D WHEN id < 96 THEN 1.5D ELSE 5.0D END AS v"
+    )
+    base = {"lo": 0.0, "hi": 2.0, "bins": 2, "counts": [32, 32, 32, 32]}
+    assert ks_statistic(base["counts"], [32, 31, 33, 32]) == 1 / 128
+    rows = ValidationEngine(_drift_manifest(base)).violations(df).collect()
+    assert [r.asDict() for r in rows] == [{
+        "schema_id": "schemas/drift_sql/drift/v", "result": "FAIL", "instance_name": "table",
+        "instance_location": "t", "instance_type": "TABLE", "absolute_path": ["v"], "failing_value": "0.007812",
+        "message": "distribution drift on v: ks=0.007812 exceeds threshold 0.0",
+    }]
+
+
+def test_drift_plan_build_starts_no_job(spark, transcripts):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    base = {"lo": 0.0, "hi": 20.0, "bins": 10, "counts": [0] * 12}
+    eng = ValidationEngine(_drift_manifest(base, column="turn_idx", metric="psi"))
+    eng.violations(transcripts)
+    eng.validate(transcripts, cache_violations=False)
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_malformed_stored_baseline_names_the_rule(spark, transcripts):
+    m = _drift_manifest(lo=0, hi=10, bins=16)
+    bad = {"schemas/drift_sql/drift/v": {"lo": 0, "hi": 10, "bins": 16, "counts": [5, 5, 5]}}
+    with pytest.raises(ValueError, match=r"drift rule 'schemas/drift_sql/drift/v': baseline counts must be"):
+        ValidationEngine(m, drift_baselines=bad).violations(transcripts)
 
 
 def test_drift_rule_end_to_end(spark, transcripts):

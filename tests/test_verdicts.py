@@ -86,3 +86,14 @@ def test_verdicts_match_violations(spark, via, empty):
             assert verdict[("bad", "PARTITION")] == ("FAIL", 2)
     finally:
         report.unpersist()
+
+
+def test_strict_rows_plan_no_python_rdd(spark):
+    """strict_columns' rows and the ('table', 'TABLE') verdict row are
+    driver-held: they reach the plan through Arrow (a local scan), never a
+    pickled-list RDD converted by Python worker tasks."""
+    df = spark.range(6).selectExpr("CAST(id % 3 AS STRING) AS part", "id AS k", "id - 2 AS v", "'x' AS extra")
+    report = _engine(STRICT).validate(df, cache_violations=False)
+    for frame in (report.violations, report.verdicts):
+        assert "PythonRDD" not in frame._jdf.queryExecution().toRdd().toDebugString()
+    assert ("table", "FAIL", 1) in {(r[1], r[3], r[4]) for r in report.verdicts.collect()}

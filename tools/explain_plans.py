@@ -877,6 +877,37 @@ def main() -> None:
     for d in (ckpt31, store32):
         shutil.rmtree(d, ignore_errors=True)
 
+    # 33. drift rule: the histogram is ONE global aggregate over the input
+    # and KS/PSI are SQL over its counts — no join, and building the plan
+    # starts no Spark job
+    from schema_enforcer_spark.stats import compute_histogram
+
+    baseline33 = compute_histogram(tdf, "length(text)", 0.0, 400.0, 16)
+    drift_m = manifest_from_dict({"id": "schemas/plans_drift", "table": "transcripts", "rules": [
+        {"kind": "drift", "column": "length(text)", "metric": "psi", "threshold": 0.1, "baseline": baseline33},
+    ]})
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
+    drift_v = ValidationEngine(drift_m).violations(tdf)
+    jobs33 = set(tracker.getJobIdsForGroup(None)) - jobs_before
+    p33 = _formatted(drift_v)
+    notes33 = []
+    n_scan33 = len(re.findall(r"\(\d+\) Scan parquet", p33))
+    n_agg33 = len(re.findall(r"^\(\d+\) HashAggregate", p33, re.M))
+    if n_scan33 == 1 and n_agg33 == 2 and _n_real_exchanges(p33) == 1:
+        notes33.append("OK: one file scan and one aggregate (partial and final around one Exchange)")
+    else:
+        problems.append(f"drift: {n_scan33} file scans, {n_agg33} HashAggregates (want 1 and 2)")
+    if "Join" in p33:
+        problems.append("drift plan contains a join")
+    else:
+        notes33.append("OK: no join")
+    if jobs33:
+        problems.append(f"drift plan build started {len(jobs33)} Spark job(s)")
+    else:
+        notes33.append("OK: building the plan started no Spark job")
+    sections.append(("Drift rule (one global aggregate, no job at plan build)", p33, notes33))
+
     out = io.StringIO()
     out.write("# PLANS — physical-plan audit (generated by tools/explain_plans.py)\n\n")
     out.write("Each section: the `.explain('formatted')` output for one engine path plus\nthe assertions the design makes about it (SURVEY.md §4.2).\n\n")
